@@ -1667,11 +1667,7 @@ object Similarity {
     graft.store.IndexCommit.recoverForRead(s, indexPath)
     // cast probe keys to the scan's inferred partition-column types so
     // the join keys are bare partition attributes (DPP-eligible)
-    val qsig = queries.select(col("q_id"),
-      posexplode(graft.functions.SketchExpressions.hyperplaneBands(
-        col("q_emb"), planes, bands)).as(Seq("band", "bucket")))
-      .select(col("q_id"), col("band").cast("int").as("band"),
-        col("bucket").cast("int").as("bucket"))
+    val qsig = lshPostings(queries, "q_id", "q_emb", planes, bands)
     val cands = s.read.parquet(s"$indexPath/postings")
       .join(probeHint(qsig, broadcastProbes), Seq("band", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -1801,11 +1797,8 @@ object Similarity {
         // cast to the partitioned read's inferred types (int/int) so the
         // merge union and the staged write target identical partition
         // values
-        val newPostings = fresh.select(col("vec_id"),
-          posexplode(graft.functions.SketchExpressions.hyperplaneBands(
-            col("embedding"), planes, bands)).as(Seq("band", "bucket")))
-          .select(col("vec_id"), col("band").cast("int").as("band"),
-            col("bucket").cast("int").as("bucket"))
+        val newPostings = lshPostings(fresh, "vec_id", "embedding", planes,
+          bands)
         val touched0 = newPostings.select("band", "bucket").distinct()
           .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
         if (touched0.isEmpty) { IndexCommit.abort(txn); return Seq.empty }
@@ -2669,33 +2662,51 @@ object Similarity {
   }
 
   /** [[writeLshIndex]]'s layout over a multi-table
-    * [[graft.store.ManifestStore]]: the `(band, bucket)`-keyed postings
-    * table (key rendered `band_bucket`, layout-only — band and bucket
-    * ride as data columns, nothing redundant stored) plus the
-    * append-only narrow vectors table, initialized in ONE atomic
-    * version-1 commit. */
+    * [[graft.store.ManifestStore]]: the postings table keyed by `band`
+    * (one partition per band, so a commit or probe touches at most
+    * `bands` leaf dirs however many buckets it hits; `bucket` rides as
+    * a data column and the probe's `(band, bucket)` join selects inside
+    * a band) plus the append-only narrow vectors table, initialized in
+    * ONE atomic version-1 commit. */
   def writeLshIndexManifest(s: SparkSession, emb: DataFrame,
       rootPath: String, planes: Int = 4, bands: Int = 8): Unit = {
     import graft.store.ManifestStore
-    val postings = emb.select(col("vec_id"),
-      posexplode(graft.functions.SketchExpressions.hyperplaneBands(
-        col("embedding"), planes, bands)).as(Seq("band", "bucket")))
-      .select(col("vec_id"), col("band").cast("int").as("band"),
-        col("bucket").cast("int").as("bucket"))
-      .withColumn("bb", concat(col("band"), lit("_"), col("bucket")))
     ManifestStore.createTables(s, rootPath, Seq(
-      (ManifestStore.TableDef("postings", "bb", keyInData = false),
-        postings),
+      (ManifestStore.TableDef("postings", "band"),
+        lshPostings(emb, "vec_id", "embedding", planes, bands)),
       (ManifestStore.TableDef("vectors", ""),
         emb.select(col("vec_id"), col("embedding")))))
   }
 
+  /** `(idCol, band, bucket)` postings: one row per vector and band. */
+  private def lshPostings(df: DataFrame, idCol: String, embCol: String,
+      planes: Int, bands: Int): DataFrame =
+    df.select(col(idCol),
+      posexplode(graft.functions.SketchExpressions.hyperplaneBands(
+        col(embCol), planes, bands)).as(Seq("band", "bucket")))
+      .select(col(idCol), col("band").cast("int").as("band"),
+        col("bucket").cast("int").as("bucket"))
+
+  /** Refuse a manifest LSH index whose postings table is not keyed by
+    * `band` — a store built with the earlier `(band, bucket)` key. Its
+    * band-keyed reads would match no entry and its upserts would not
+    * find their key column, so both fail here instead, by name. */
+  private def requireBandKeyed(s: SparkSession, rootPath: String): Long = {
+    val (v, key, _, _) = graft.store.ManifestStore.tableLayout(s, rootPath,
+      "postings", None)
+    if (key != "band") throw new IllegalStateException(
+      s"LSH index at $rootPath keys its postings by '$key', not 'band' " +
+        "(the earlier one-partition-per-(band, bucket) layout) — " +
+        "rebuild the index with buildLshIndex")
+    v
+  }
+
   /** [[lshCompact]] over the manifest store — incremental LSH
-    * maintenance where the touched `(band, bucket)` posting partitions
-    * AND the vectors append land in ONE atomic manifest commit: a
-    * reader sees postings-new with vectors-new or postings-old with
-    * vectors-old, never the mixed state, with no redo log, no healing
-    * protocol, and no mid-swap window (snapshot isolation — the
+    * maintenance where the touched band partitions AND the vectors
+    * append land in ONE atomic manifest commit: a reader sees
+    * postings-new with vectors-new or postings-old with vectors-old,
+    * never the mixed state, with no redo log, no healing protocol, and
+    * no mid-swap window (snapshot isolation — the
     * [[graft.store.ManifestStore]] claims). Semantics identical to
     * [[lshCompact]]: frozen hyperplanes, per-batch work bounded by
     * batch × bands, `upsertById` re-delivery idempotence via the
@@ -2704,67 +2715,60 @@ object Similarity {
     * lease, the same guard-read discipline lshCompact gets from
     * opening its transaction first.
     *
-    * Returns the touched (band, bucket) pairs (bounded metadata). */
+    * Returns the touched (band, bucket) pairs (bounded metadata: the
+    * distinct signatures of the fresh postings, at most batch × bands
+    * rows). Fails with an IllegalStateException on an index whose
+    * postings are not band-keyed ([[requireBandKeyed]]). */
   def lshCompactManifest(s: SparkSession, rootPath: String,
       arriving: DataFrame, planes: Int = 4, bands: Int = 8,
       upsertById: Boolean = false): Seq[(Int, Int)] = {
     import graft.store.ManifestStore
-    val touched = ManifestStore.commitTables(s, rootPath) {
+    requireBandKeyed(s, rootPath)
+    var pairs = Seq.empty[(Int, Int)]
+    ManifestStore.commitTables(s, rootPath) {
       val fresh =
         if (upsertById)
           arriving.join(
             ManifestStore.readTable(s, rootPath, "vectors")
               .select("vec_id"), Seq("vec_id"), "left_anti")
         else arriving
-      val newPostings = fresh.select(col("vec_id"),
-        posexplode(graft.functions.SketchExpressions.hyperplaneBands(
-          col("embedding"), planes, bands)).as(Seq("band", "bucket")))
-        .select(col("vec_id"), col("band").cast("int").as("band"),
-          col("bucket").cast("int").as("bucket"))
-        .withColumn("bb", concat(col("band"), lit("_"), col("bucket")))
+      val newPostings = lshPostings(fresh, "vec_id", "embedding", planes,
+        bands)
+      pairs = newPostings.select("band", "bucket").distinct().collect()
+        .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
       Seq(
-        ManifestStore.Upsert("postings", newPostings,
-          // bb is layout-only (derivable): restore it on the live
-          // touched slice with the same derivation as the write side
-          rekey = Some(df => df.withColumn("bb",
-            concat(col("band"), lit("_"), col("bucket"))))),
+        ManifestStore.Upsert("postings", newPostings),
         ManifestStore.Append("vectors",
           fresh.select(col("vec_id"), col("embedding"))))
     }
-    touched.getOrElse("postings", Seq.empty).map { bb =>
-      val Array(b, k) = bb.split('_'); (b.toInt, k.toInt)
-    }.sorted
+    pairs
   }
 
   /** [[lshProbeIndexed]] over the manifest store: the probe signatures
     * are computed by the SAME distributed expression (bit-identical
-    * buckets), their distinct `(band, bucket)` keys collected (bounded
-    * by queries × bands — the probe relation is already a driver-side
-    * batch in this lane family), and ONLY those keys' manifest entries
-    * reach the postings scan — manifest-level pruning standing in for
-    * the hive lane's DPP. Candidates dedup before any vector byte is
-    * read; the exact-cosine rerank hydrates from the vectors table by
-    * `vec_id` join, exactly the stored lane's plan. */
+    * buckets) and broadcast-joined on `(band, bucket)` against the
+    * band-keyed postings. Every query hashes into every band, so the
+    * scan covers the table's `bands` entries and needs no key collect;
+    * the join keeps only the probed buckets. Candidates dedup before
+    * any vector byte is read; the exact-cosine rerank hydrates from the
+    * vectors table of the SAME manifest version by `vec_id` join,
+    * exactly the stored lane's plan. Fails with an
+    * IllegalStateException on an index whose postings are not
+    * band-keyed ([[requireBandKeyed]]). */
   def lshProbeManifest(s: SparkSession, rootPath: String,
       queries: DataFrame, k: Int = 10, planes: Int = 4,
       bands: Int = 8): DataFrame = {
     import graft.store.ManifestStore
-    val qsig = queries.select(col("q_id"),
-      posexplode(graft.functions.SketchExpressions.hyperplaneBands(
-        col("q_emb"), planes, bands)).as(Seq("band", "bucket")))
-      .select(col("q_id"), col("band").cast("int").as("band"),
-        col("bucket").cast("int").as("bucket"))
-    val probeKeys = qsig.select("band", "bucket").distinct()
-      .collect().map(r => s"${r.getInt(0)}_${r.getInt(1)}").toSeq.sorted
-    val cands = ManifestStore
-      .readTable(s, rootPath, "postings", parts = Some(probeKeys))
+    val v = Some(requireBandKeyed(s, rootPath))
+    val qsig = lshPostings(queries, "q_id", "q_emb", planes, bands)
+    val cands = ManifestStore.readTable(s, rootPath, "postings", version = v)
       .join(broadcast(qsig), Seq("band", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
       .distinct()
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
-    cands.join(ManifestStore.readTable(s, rootPath, "vectors"),
+    cands.join(ManifestStore.readTable(s, rootPath, "vectors", version = v),
         Seq("vec_id"))
       .join(broadcast(queries), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
@@ -2778,10 +2782,10 @@ object Similarity {
     * over the multi-table manifest store: base index via
     * [[writeLshIndexManifest]], arriving batch (held-out slice +
     * planted copies) merged through ONE atomic postings+vectors
-    * commit, probed manifest-pruned. Reference: the in-memory batch
-    * lane over the full corpus (the lshCompactPlanted argument —
-    * identical frozen hyperplanes ⇒ identical signatures ⇒ a rebuild
-    * holds exactly these postings). Same closed form: planted copies
+    * commit, probed through the band-keyed postings. Reference: the
+    * in-memory batch lane over the full corpus (the lshCompactPlanted
+    * argument — identical frozen hyperplanes ⇒ identical signatures ⇒
+    * a rebuild holds exactly these postings). Same closed form: planted copies
     * exist only in the arriving batch, rank-1 at cosine ~1.0 proves
     * the batch reached the index through the commit, `agrees_rebuild`
     * pins compaction ≡ rebuild row-for-row. */
@@ -3064,7 +3068,9 @@ object Similarity {
   /** Incremental LSH maintenance under the selected protocol —
     * [[lshCompactManifest]] (default) or [[lshCompact]]. Identical
     * frozen-hyperplane semantics and `upsertById` contract; returns
-    * the touched (band, bucket) pairs. */
+    * the touched (band, bucket) pairs. A manifest index whose postings
+    * are not band-keyed (built by an earlier layout) fails with an
+    * IllegalStateException asking for a rebuild. */
   def maintainLshIndex(s: SparkSession, rootPath: String,
       arriving: DataFrame, planes: Int = 4, bands: Int = 8,
       upsertById: Boolean = false,
@@ -3078,8 +3084,10 @@ object Similarity {
     }
 
   /** LSH probe under the selected protocol — [[lshProbeManifest]]
-    * (default, manifest-pruned) or [[lshProbeIndexed]] (DPP-pruned
-    * hive scan). Row-identical on the same index content. */
+    * (default, band-keyed postings) or [[lshProbeIndexed]] (DPP-pruned
+    * hive scan). Row-identical on the same index content. A manifest
+    * index whose postings are not band-keyed fails with an
+    * IllegalStateException asking for a rebuild. */
   def probeLshIndex(s: SparkSession, rootPath: String,
       queries: DataFrame, k: Int = 10, planes: Int = 4, bands: Int = 8,
       protocol: IndexProtocol = IndexProtocol.Default): DataFrame =

@@ -25,11 +25,11 @@ import graft.store.ManifestStore
   *   spark.read.format("graft-manifest")
   *     .option("table", "postings")     // default "t" (single-table)
   *     .option("version", 3)            // default: newest
-  *     .option("parts", "0_1,0_2")      // explicit manifest pruning
+  *     .option("parts", "1,2")          // explicit manifest pruning
   *     .load(rootPath)
   *     .createOrReplaceTempView("postings_v3")
   *   // WHERE-driven pruning needs no option at all:
-  *   spark.sql("SELECT * FROM postings_v3 WHERE band_bucket = '0_1'")
+  *   spark.sql("SELECT * FROM postings_v3 WHERE band = 1")
   *
   *   df.write.format("graft-manifest")
   *     .option("key", "day")            // fresh root: creates the store

@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * A manifest file IS a store version: the authoritative list of
   * (table, partition key → segment leaf directory) making up that
   * snapshot. A store holds one or more named TABLES — e.g. the LSH
-  * index's `(band,bucket)`-keyed postings table and its append-only
-  * vectors table — and one commit covers ALL of them atomically:
+  * index's `band`-keyed postings table and its append-only vectors
+  * table — and one commit covers ALL of them atomically:
   * writers stage new immutable segments (only the touched partitions'
   * merged rows, plus any append segments), then publish manifest
   * N+1 = untouched entries of N ++ the new entries, across every
@@ -69,13 +69,16 @@ import org.apache.spark.sql.functions._
   *    which must at least enumerate the partition dirs).
   *
   * Partitioned tables are keyed by ONE key column (`TableDef.partCol`);
-  * a composite key — the LSH `(band, bucket)` — is a caller-synthesized
-  * rendering (`concat(band, '_', bucket)`). `keyInData` controls
+  * a composite key is a caller-synthesized rendering (e.g.
+  * `concat(a, '_', b)`). Keep keys coarse: every touched key is one
+  * leaf dir to list, read back and rewrite per commit, so the LSH
+  * postings table is keyed by `band` alone (8 partitions) and its
+  * probes select buckets inside a band by join. `keyInData` controls
   * whether the key column is duplicated into the data files (the
-  * single-table default — a multi-root scan keeps the column without
-  * partition inference) or carried by the layout only (`false` — right
-  * when the key is derivable from other data columns, as the synthetic
-  * LSH key is from band+bucket; nothing redundant is stored).
+  * default — a multi-root scan keeps the column without partition
+  * inference) or carried by the layout only (`false` — right when the
+  * key is derivable from other data columns, as a synthesized
+  * composite is; nothing redundant is stored).
   * Append-only tables (`partCol = ""`) take whole segments as entries
   * and are never partition-pruned or merged — the narrow vector store
   * shape, hydrated by id join.
@@ -107,8 +110,8 @@ import org.apache.spark.sql.functions._
   * index stores here hold k-to-thousands of cells/buckets.
   *
   * Partition keys must be non-null and are matched by their hive
-  * directory rendering (for the integer cell keys and the `b_b`
-  * composite renderings the ANN lanes use, the plain string).
+  * directory rendering (for the integer cell and band keys the ANN
+  * lanes use, the plain string).
   *
   * Beyond the commit/read core, the store carries the rest of what a
   * lakehouse table needs at 100 TB, each documented on its member:
@@ -216,8 +219,8 @@ object ManifestStore {
     * `rekey`: REQUIRED for layout-only-key tables (`keyInData =
     * false`) — the live slice read back for merging lacks the key
     * column (it was never stored, being derivable), so the caller
-    * restores it with the same derivation used at write time (the LSH
-    * lane's `concat(band, '_', bucket)`). One scan over the touched
+    * restores it with the same derivation used at write time (e.g. a
+    * composite `concat(a, '_', b)`). One scan over the touched
     * slice, no per-partition plan branching. */
   final case class Upsert(table: String, df: DataFrame,
       idCol: Option[String] = None,
@@ -598,9 +601,10 @@ object ManifestStore {
   private def freshSegRel(): String =
     s"$SegDirName/seg-" + java.util.UUID.randomUUID().toString.take(13)
 
-  /** Harvest one freshly written segment leaf: total data-file bytes
-    * plus min/max [[ColStat]]s for the declared `cols`, read from the
-    * parquet FOOTERS the write just produced. Cost shape: one footer
+  /** Harvest one freshly written segment leaf: total data-file bytes,
+    * row count (with `countRows`; -1 otherwise) and min/max
+    * [[ColStat]]s for the declared `cols`, read from the parquet
+    * FOOTERS the write just produced. Cost shape: one footer
     * open per NEW file — bounded by what this very commit staged (the
     * keyCollect bound: ~one file per touched partition), never a
     * second scan of the batch, and never any read-time cost; at read
@@ -612,13 +616,14 @@ object ManifestStore {
     * contributes nothing (min/max ignore nulls; null-matching
     * predicates never consult stats). */
   private def harvestLeaf(s: SparkSession, fs: FileSystem, dir: Path,
-      cols: Seq[String]): (Long, Seq[ColStat]) = {
+      cols: Seq[String], countRows: Boolean = false)
+      : (Long, Long, Seq[ColStat]) = {
     val files = fs.listStatus(dir).toSeq.filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
     val bytes = files.map(_.getLen).sum
-    if (cols.isEmpty) return (bytes, Nil)
+    if (cols.isEmpty && !countRows) return (bytes, -1L, Nil)
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.{LogicalTypeAnnotation,
@@ -637,6 +642,7 @@ object ManifestStore {
     // min/max describe the non-null values, which is already sound
     // for the null-false filter shapes)
     val nullOnly = scala.collection.mutable.Set.empty[String]
+    var rows = 0L
     def tagOf(pt: PrimitiveType): Option[String] = {
       import PrimitiveType.PrimitiveTypeName._
       (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
@@ -680,6 +686,7 @@ object ManifestStore {
         ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try {
         reader.getFooter.getBlocks.forEach { block =>
+          rows += block.getRowCount
           block.getColumns.forEach { cc =>
             val name = cc.getPath.toDotString
             if (cols.contains(name) && !dead.contains(name)) {
@@ -716,7 +723,7 @@ object ManifestStore {
         !dead.contains(c))
       .map(c => ColStat(c, "n", "", ""))
     val stats = (ranged ++ allNullStats).sortBy(_.col)
-    (bytes, stats)
+    (bytes, rows, stats)
   }
 
   /** Zero-cost rendering guard for freshly staged entries, used where
@@ -745,8 +752,9 @@ object ManifestStore {
         s"(${bad.take(4).mkString(";")}) — manifest-store keys must be " +
         "non-null and render verbatim (no characters hive escapes, no " +
         "commas — the SQL facade's parts delimiter). Pre-render the " +
-        "key into a safe string column (the LSH lanes' band_bucket " +
-        "discipline) and key the table by that. Nothing was committed.")
+        "key into a safe string column (e.g. concat(a, '_', b) for a " +
+        "composite key) and key the table by that. Nothing was " +
+        "committed.")
   }
 
   /** Enforce the documented key contract (object doc: partition keys
@@ -787,9 +795,9 @@ object ManifestStore {
         s"matching dir: ${missing.mkString(",")}; dirs with no matching " +
         s"value: ${extra.mkString(",")}). Manifest-store keys must be " +
         "non-null and render verbatim (no characters hive escapes) — " +
-        "pre-render the key into a safe string column (the LSH lanes' " +
-        "band_bucket discipline) and key the table by that. Nothing " +
-        "was committed."
+        "pre-render the key into a safe string column (e.g. " +
+        "concat(a, '_', b) for a composite key) and key the table by " +
+        "that. Nothing was committed."
     })
   }
 
@@ -1171,7 +1179,7 @@ object ManifestStore {
         st.getPath.getName.startsWith(layoutCol + "="))
       .map { st =>
         val name = st.getPath.getName
-        val (bytes, stats) = harvestLeaf(s, fs, st.getPath, statsCols)
+        val (bytes, _, stats) = harvestLeaf(s, fs, st.getPath, statsCols)
         Entry(table, name.stripPrefix(layoutCol + "="), s"$segRel/$name",
           sid, bytes, stats)
       }
@@ -1179,12 +1187,14 @@ object ManifestStore {
   }
 
   /** Write `df` as one whole append segment of `table`; one entry.
-    * An EMPTY batch is detected from the WRITTEN files (no data files
-    * landed → segment deleted, no entry) rather than a pre-write
-    * `isEmpty` probe — the probe re-evaluates the batch's whole plan
-    * (for the streaming maintenance lanes that is the upsert anti-join
-    * per micro-batch), while the written listing is file-count
-    * metadata the write already produced. */
+    * An EMPTY batch is detected from the WRITTEN files' parquet footers
+    * (zero rows — no data file, or only a schema-only file — → segment
+    * deleted, no entry) rather than a pre-write `isEmpty` probe or a
+    * post-write count job: the probe re-evaluates the batch's whole
+    * plan (for the streaming maintenance lanes that is the upsert
+    * anti-join per micro-batch), while the footers are metadata read
+    * once per file, without a Spark job, in the same pass that
+    * harvests the entry's bytes and stats. */
   private def writeAppendSegment(s: SparkSession, fs: FileSystem,
       root: Path, table: String, df: DataFrame,
       statsCols: Seq[String] = Nil): Seq[Entry] = phased("stageWrite") {
@@ -1193,17 +1203,11 @@ object ManifestStore {
     df.write.mode("errorifexists")
       .option("compression", "zstd")
       .parquet(segPath.toString)
-    val dataFiles = fs.listStatus(segPath).exists(st =>
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-    // the count is parquet-footer-only metadata over the segment just
-    // written (never the batch plan), guarding the schema-only-file case
-    val hasData = dataFiles &&
-      s.read.parquet(segPath.toString).count() > 0
-    if (hasData) {
-      val (bytes, stats) = harvestLeaf(s, fs, segPath, statsCols)
+    val (bytes, rows, stats) = harvestLeaf(s, fs, segPath, statsCols,
+      countRows = true)
+    if (rows > 0)
       Seq(Entry(table, "", segRel, schemaIdOf(df.schema), bytes, stats))
-    } else { fs.delete(segPath, true); Seq.empty }
+    else { fs.delete(segPath, true); Seq.empty }
   }
 
   /** Initialize a multi-table manifest store at `root`: one atomic

@@ -293,8 +293,8 @@ class ManifestStoreSpec extends AnyFunSuite {
   // ---- multi-table commits (the LSH postings+vectors shape) ----
 
   /** Two-table fixture: a partitioned "postings" table (layout-only
-    * composite key, like LSH's band_bucket) and an append-only
-    * "vectors" table. */
+    * composite `bb` key — also the LSH index's earlier postings layout)
+    * and an append-only "vectors" table. */
   private def twoTableStore(root: String): Unit = {
     import spark.implicits._
     val postings = (0 until 24)
@@ -422,6 +422,48 @@ class ManifestStoreSpec extends AnyFunSuite {
       assert(r.getBoolean(3), s"planted copy not exact at q=${r.getLong(0)}")
       assert(r.getBoolean(4), s"manifest compaction != rebuild at q=${r.getLong(0)}")
     }
+  }
+
+  test("LSH postings are keyed by band: 8 entries, a commit replaces " +
+      "each once, and returns the batch's (band, bucket) signatures") {
+    import graft.operators.Similarity
+    val emb = Tables.load(spark, sf, "embeddings")
+    val isBatch = col("vec_id") % 10 === 3
+    val root = tempDir("mf-lsh-bands")
+    Similarity.buildLshIndex(spark, emb.filter(!isBatch), root)
+    val built = ManifestStore.tableEntries(spark, root, "postings")
+    assert(built.map(_.part).sorted === (0 until 8).map(_.toString))
+    val pairs = Similarity.maintainLshIndex(spark, root, emb.filter(isBatch))
+    val after = ManifestStore.tableEntries(spark, root, "postings")
+    assert(after.map(_.part).sorted === (0 until 8).map(_.toString))
+    // every band partition was rewritten by the commit, none carried over
+    assert(after.map(_.dir).toSet.intersect(built.map(_.dir).toSet).isEmpty)
+    val batchIds = emb.filter(isBatch).select("vec_id")
+    val expected = ManifestStore.readTable(spark, root, "postings")
+      .join(batchIds, Seq("vec_id"))
+      .select("band", "bucket").distinct().collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
+    assert(pairs.nonEmpty)
+    assert(pairs === expected)
+  }
+
+  test("an LSH index with the earlier (band, bucket)-keyed postings " +
+      "fails loudly on probe and maintain, asking for a rebuild") {
+    import graft.operators.Similarity
+    import spark.implicits._
+    val root = tempDir("mf-lsh-old-layout")
+    twoTableStore(root)
+    val queries = Seq((1L, Seq.fill(4)(1f))).toDF("q_id", "q_emb")
+    val e1 = intercept[IllegalStateException] {
+      Similarity.probeLshIndex(spark, root, queries)
+    }
+    assert(e1.getMessage.contains("rebuild"))
+    val arriving = Seq((100L, Seq.fill(4)(1f))).toDF("vec_id", "embedding")
+    val e2 = intercept[IllegalStateException] {
+      Similarity.maintainLshIndex(spark, root, arriving)
+    }
+    assert(e2.getMessage.contains("rebuild"))
+    assert(ManifestStore.currentVersion(spark, root) === Some(1L))
   }
 
   test("publish verification: a commit whose manifest was overwritten " +
