@@ -77,6 +77,37 @@ object SketchExpressions {
   def wordGramMd5s(tokens: Column, n: Int): Column =
     CB.column(WordGramMd5s(CB.expression(tokens), n))
 
+  def keptTokens(tokens: Column, starts: Column, n: Int): Column =
+    CB.column(KeptTokens(CB.expression(tokens), CB.expression(starts), n))
+
+  def spanRuns(starts: Column, n: Int): Column =
+    CB.column(SpanRuns(CB.expression(starts), n))
+
+  /** Coverage mask of the union of the spans `[p, p+n)` over `starts`,
+    * on positions `[0, len)` — the shared kernel of [[KeptTokens]] and
+    * [[SpanRuns]]. One pass marks each start, one sweep carries the
+    * furthest span end forward: O(len + starts), no sort. Starts outside
+    * `[0, len)` and a null `starts` cover nothing. */
+  def spanCover(starts: ArrayData, n: Int, len: Int): Array[Boolean] = {
+    val cover = new Array[Boolean](len)
+    if (starts != null) {
+      var i = 0
+      while (i < starts.numElements()) {
+        val p = starts.getInt(i)
+        if (p >= 0 && p < len) cover(p) = true
+        i += 1
+      }
+    }
+    var end = 0
+    var pos = 0
+    while (pos < len) {
+      if (cover(pos)) end = pos + n
+      cover(pos) = pos < end
+      pos += 1
+    }
+    cover
+  }
+
   def repetitionStats(tokens: Column): Column =
     CB.column(RepetitionStats(CB.expression(tokens)))
 
@@ -462,15 +493,16 @@ case class TokenFingerprint(child: Expression)
   * token sequence, in position order (index i = the gram starting at
   * token i) — the single-pass feed of the span-dedup family
   * ([[graft.operators.Dedup.dupSpans]] / spanScrub /
-  * winnowFingerprints), where gram IDENTITY must ride a fixed-width
-  * digest but positions must survive (unlike [[WordShingles]]' distinct
-  * set). Bit-compatible with the composed form it replaces
-  * (`transform(sequence(0, size-n), i -> md5(concat_ws(' ',
-  * slice(w, i+1, n))))`): same UTF8 bytes into the same md5, same hex
-  * rendering — only the per-gram interpreted-lambda round trips and
-  * the intermediate slice allocations are gone. Inputs shorter than
-  * `n` yield an empty array (the composed form's descending-sequence
-  * hazard simply cannot arise). */
+  * winnowFingerprints; the first two reduce a document's repeated-gram
+  * positions through [[SpanRuns]] / [[KeptTokens]]), where gram
+  * IDENTITY must ride a fixed-width digest but positions must survive
+  * (unlike [[WordShingles]]' distinct set). Bit-compatible with the
+  * composed form it replaces (`transform(sequence(0, size-n), i ->
+  * md5(concat_ws(' ', slice(w, i+1, n))))`): same UTF8 bytes into the
+  * same md5, same hex rendering — only the per-gram interpreted-lambda
+  * round trips and the intermediate slice allocations are gone. Inputs
+  * shorter than `n` yield an empty array (the composed form's
+  * descending-sequence hazard simply cannot arise). */
 case class WordGramMd5s(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
   require(n > 0)
@@ -497,6 +529,83 @@ case class WordGramMd5s(child: Expression, n: Int)
   }
 
   override protected def withNewChildInternal(c: Expression): WordGramMd5s =
+    copy(child = c)
+}
+
+/** The tokens of an array<string> sequence that lie outside every span
+  * `[p, p+n)` of an array<int> of span starts, in original order — the
+  * per-document rebuild of [[graft.operators.Dedup.spanScrub]]: one
+  * linear sweep over [[SketchExpressions.spanCover]]'s mask. A null
+  * `starts` (a document no removal reached, via the left join) keeps
+  * every token. */
+case class KeptTokens(left: Expression, right: Expression, n: Int)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with CodegenFallback {
+  require(n > 0)
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = left.nullable
+  override def prettyName: String = "kept_tokens"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val arr = left.eval(input).asInstanceOf[ArrayData]
+    if (arr == null) return null
+    val cnt = arr.numElements()
+    val cover = SketchExpressions.spanCover(
+      right.eval(input).asInstanceOf[ArrayData], n, cnt)
+    val out = new java.util.ArrayList[Any](cnt)
+    var i = 0
+    while (i < cnt) {
+      if (!cover(i)) out.add(arr.getUTF8String(i))
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression,
+      r: Expression): KeptTokens = copy(left = l, right = r)
+}
+
+/** Maximal runs of the union of the spans `[p, p+n)` over an array<int>
+  * of span starts: `n_spans` counts the runs (overlapping and adjacent
+  * spans merge) and `dup_tokens` is the union's size — the per-document
+  * summary of [[graft.operators.Dedup.dupSpans]], on the same
+  * [[SketchExpressions.spanCover]] mask. A null `starts` is (0, 0). */
+case class SpanRuns(child: Expression, n: Int)
+    extends UnaryExpression with CodegenFallback {
+  require(n > 0)
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_spans", LongType, nullable = false),
+    StructField("dup_tokens", LongType, nullable = false)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "span_runs"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val starts = child.eval(input).asInstanceOf[ArrayData]
+    var len = 0
+    if (starts != null) {
+      var i = 0
+      while (i < starts.numElements()) {
+        len = math.max(len, starts.getInt(i) + n)
+        i += 1
+      }
+    }
+    val cover = SketchExpressions.spanCover(starts, n, len)
+    var runs = 0L
+    var covered = 0L
+    var pos = 0
+    while (pos < len) {
+      if (cover(pos)) {
+        covered += 1
+        if (pos == 0 || !cover(pos - 1)) runs += 1
+      }
+      pos += 1
+    }
+    org.apache.spark.sql.catalyst.InternalRow(runs, covered)
+  }
+
+  override protected def withNewChildInternal(c: Expression): SpanRuns =
     copy(child = c)
 }
 

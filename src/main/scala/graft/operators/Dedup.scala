@@ -101,14 +101,19 @@ object Dedup {
   // ---- MinHash + LSH ----
 
   /** (doc_id, band, bucket) rows — the LSH index. Only 16 longs per doc
-    * are shuffled, never text. */
+    * are shuffled, never text. `posexplode_outer` plus the null filter
+    * yields the same rows as `posexplode` (the sketch is never empty)
+    * without the generator filter Spark infers for `posexplode`, which
+    * would evaluate the sketch a second time per row. */
   private[graft] def bandIndex(docs: DataFrame, k: Int, bands: Int): DataFrame =
     docs
       .select(col("doc_id"),
         SketchExpressions.minhashBands(
           SketchExpressions.wordShingles(tokens(col("text"))), k, bands)
           .as("buckets"))
-      .select(col("doc_id"), posexplode(col("buckets")).as(Seq("band", "bucket")))
+      .select(col("doc_id"),
+        posexplode_outer(col("buckets")).as(Seq("band", "bucket")))
+      .filter(col("band").isNotNull)
 
   /** Candidate pairs from LSH banding (doc_a < doc_b), deduplicated across
     * bands.
@@ -590,18 +595,17 @@ object Dedup {
     *
     * Shape: positioned n-grams keyed by the md5 of the joined window
     * (128-bit digest — collision-free at any corpus size, and 16 bytes
-    * on the wire instead of the window text); gram occurrence counts are
-    * one partial+final aggregate on the digest, and repeated-gram
-    * positions come back via a LEFT SEMI join on the same key — the
-    * gram stream is shuffled once and duplicated grams are never
-    * collected. Overlapping/adjacent hits merge into maximal spans with
-    * the standard gaps-and-islands window (per-doc partitions: a new
-    * island starts where the gap to the previous hit exceeds `n`, and
-    * since every hit covers exactly `n` tokens, an island's coverage is
-    * `last - first + n`). Zero-hit documents surface with zeroed
-    * counters via the final left join against the narrow per-doc token
-    * counts (no second tokenization: `n_tokens` rides along the gram
-    * scan's sibling projection). */
+    * on the wire instead of the window text); repeated-gram positions
+    * are the occurrences whose per-gram count (a window partitioned on
+    * the digest) reaches two — the gram stream is shuffled once and
+    * duplicated grams are never collected. Each document's repeated-gram
+    * starts are collected to one small array and reduced by
+    * [[SketchExpressions.spanRuns]]: the union of `[p, p+n)`, linear in
+    * the document's covered length, where overlapping and adjacent hits
+    * merge into maximal spans. Zero-hit documents surface with zeroed
+    * counters via the left join against the narrow per-doc token counts
+    * (no second tokenization: `n_tokens` rides along the gram scan's
+    * sibling projection). */
   def dupSpans(s: SparkSession, dir: String, n: Int = 8): DataFrame =
     dupSpansOn(t(s, dir, "documents"), n)
 
@@ -610,36 +614,32 @@ object Dedup {
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("w"))
     val lens = toks.select(col("doc_id"),
       size(col("w")).cast("long").as("n_tokens"))
-    val grams = toks
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"),
-        posexplode(SketchExpressions.wordGramMd5s(col("w"), n))
-          .as(Seq("p", "g")))
-    val dup = grams.groupBy(col("g"))
-      .agg(count(lit(1)).as("cnt"))
+    val starts = positionedGrams(toks, n)
+      .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("g"))))
       .filter(col("cnt") >= 2)
-      .select(col("g"))
-    val hits = grams.join(dup, Seq("g"), "left_semi")
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-    val prev = lag(col("p"), 1).over(wDoc)
-    val spans = hits
-      .withColumn("new_isl",
-        when(prev.isNull || col("p") - prev > n, 1).otherwise(0))
-      .withColumn("isl", sum(col("new_isl")).over(
-        wDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("doc_id"), col("isl"))
-      .agg((max(col("p")) - min(col("p")) + n).cast("long").as("covered"))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(col("covered")).as("dup_tokens"))
-    lens.join(spans, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_spans", "dup_tokens"))
-      .select(col("doc_id"), col("n_tokens"), col("n_spans"),
-        col("dup_tokens"),
-        Num.t6(col("dup_tokens").cast("double") /
+      .agg(collect_list(col("p")).as("starts"))
+    lens.join(starts, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_tokens"),
+        SketchExpressions.spanRuns(col("starts"), n).as("r"))
+      .select(col("doc_id"), col("n_tokens"), col("r.n_spans"),
+        col("r.dup_tokens"),
+        Num.t6(col("r.dup_tokens").cast("double") /
           col("n_tokens").cast("double")).as("dup_frac"))
       .orderBy("doc_id")
   }
+
+  /** (doc_id, p, g): every positioned word `n`-gram digest of a
+    * (doc_id, w) token frame. `posexplode_outer` plus the null filter
+    * yields the same rows as `posexplode` without the generator filter
+    * Spark infers for `posexplode`, which would compute the digests a
+    * second time per row. */
+  private def positionedGrams(toks: DataFrame, n: Int): DataFrame =
+    toks
+      .select(col("doc_id"),
+        posexplode_outer(SketchExpressions.wordGramMd5s(col("w"), n))
+          .as(Seq("p", "g")))
+      .filter(col("p").isNotNull)
 
   /** Span-level dedup REMOVAL — the action half of [[dupSpans]]'s
     * report (Lee et al. '22 §4: delete all but one occurrence of any
@@ -658,53 +658,31 @@ object Dedup {
     * Scale shape: occurrence ranking is a row_number window partitioned
     * on the 128-bit gram digest (per-gram partitions are occurrence
     * counts — tiny; the shuffle is the same single gram-keyed exchange
-    * [[dupSpans]] pays). Removal positions explode each non-kept
-    * occurrence to its `n` covered (doc, pos) rows — O(hits × n), never
-    * corpus²; the kept-sequence rebuild is a per-doc anti-join plus one
-    * bounded per-doc sort. */
+    * [[dupSpans]] pays). The non-first occurrences collapse to one
+    * `starts: array<int>` per document (removed-span start positions,
+    * bounded by the document's own gram count), which joins back to the
+    * document's token row; [[SketchExpressions.keptTokens]] then rebuilds
+    * the kept sequence in one sweep — per-document work is linear in
+    * tokens plus starts, and nothing is pinned in executor memory. */
   def spanScrub(s: SparkSession, dir: String, n: Int = 8): DataFrame =
     spanScrubOn(t(s, dir, "documents"), n)
 
   /** Same pipeline over an arbitrary (doc_id, text) frame. */
   def spanScrubOn(docs: DataFrame, n: Int): DataFrame = {
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("w"))
-    val lens = toks.select(col("doc_id"),
-      size(col("w")).cast("long").as("n_tokens"))
-    val tokPos = toks.select(col("doc_id"),
-      posexplode(col("w")).as(Seq("pos", "tok")))
-    val grams = toks
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"),
-        posexplode(SketchExpressions.wordGramMd5s(col("w"), n))
-          .as(Seq("p", "g")))
     val wg = Window.partitionBy(col("g")).orderBy(col("doc_id"), col("p"))
-    // the removal plan is materialized ONCE: both consumers below (the
-    // per-doc removal counts and the kept-sequence anti-join) otherwise
-    // re-run the gram-keyed shuffle + occurrence-rank window — the
-    // pipeline's one corpus-sized exchange — a second time. Removal
-    // positions are (doc_id, pos) longs bounded by the duplicated-span
-    // volume (the table a deployed scrub materializes anyway before
-    // rewriting shards).
-    val covered = grams
+    val starts = positionedGrams(toks, n)
       .withColumn("rn", row_number().over(wg))
       .filter(col("rn") > 1)
-      .select(col("doc_id"),
-        explode(sequence(col("p"), col("p") + (n - 1))).as("pos"))
-      .distinct()
-      .localCheckpoint(true)
-    val removed = covered.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_removed"))
-    val kept = tokPos.join(covered, Seq("doc_id", "pos"), "left_anti")
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_kept"),
-        md5(concat_ws(" ",
-          transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-            _.getField("tok")))).as("kept_hash"))
-    lens.join(removed, Seq("doc_id"), "left")
-      .join(kept, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_removed", "n_kept"))
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        col("n_kept"), col("kept_hash"))
+      .agg(collect_list(col("p")).as("starts"))
+    val nKept = size(col("kept")).cast("long")
+    toks.join(starts, Seq("doc_id"), "left")
+      .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
+        SketchExpressions.keptTokens(col("w"), col("starts"), n).as("kept"))
+      .select(col("doc_id"), col("n_tokens"),
+        (col("n_tokens") - nKept).as("n_removed"), nKept.as("n_kept"),
+        when(nKept > 0, md5(concat_ws(" ", col("kept")))).as("kept_hash"))
       .orderBy("doc_id")
   }
 
@@ -747,11 +725,7 @@ object Dedup {
       w: Int): DataFrame = {
     val toks = docs
       .select(col("doc_id"), tokens(col("text")).as("w"))
-    val grams = toks
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"),
-        posexplode(SketchExpressions.wordGramMd5s(col("w"), n))
-          .as(Seq("p", "g")))
+    val grams = positionedGrams(toks, n)
       .select(col("doc_id"), col("p"),
         conv(substring(col("g"), 1, 15), 16, 10).cast("long").as("h"))
     val winMin = Window.partitionBy(col("doc_id")).orderBy(col("p"))

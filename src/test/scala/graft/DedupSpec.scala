@@ -258,6 +258,121 @@ class DedupSpec extends AnyFunSuite {
     assert(rows(2L)._4 === bHash)
   }
 
+  private def words(text: String): Array[String] =
+    text.split(" ").filter(_.nonEmpty)
+
+  /** Seeded small corpus with every span shape the kernels merge:
+    * overlapping planted runs (a copied run longer than `n`), adjacent
+    * (gap 0) and gap-1 copied runs, an exact later copy, natural repeats
+    * from a small vocabulary, docs shorter than `n`, and empty docs. Ids
+    * are shuffled so "first" is by doc_id, not by row. */
+  private def spanCorpus(seed: Int, n: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    def fresh(len: Int) = Seq.fill(len)(s"v${rnd.nextInt(12)}")
+    val base = Seq.fill(6)(fresh(2 * n + rnd.nextInt(20)))
+    def run(len: Int): Seq[String] = {
+      val d = base(rnd.nextInt(base.size))
+      val at = rnd.nextInt(d.length - len + 1)
+      d.slice(at, at + len)
+    }
+    val planted = Seq(
+      fresh(3) ++ run(n + 1 + rnd.nextInt(n)) ++ fresh(2),
+      fresh(2) ++ run(n) ++ run(n) ++ fresh(3),
+      run(n) ++ fresh(1) ++ run(n),
+      base(rnd.nextInt(base.size)),
+      fresh(n - 1),
+      fresh(1),
+      Seq.empty[String],
+      Seq.empty[String])
+    val texts = (base ++ planted)
+      .map(_.mkString(if (rnd.nextBoolean()) " " else "  "))
+    rnd.shuffle(texts.indices.map(i => 3L * i + seed)).zip(texts)
+  }
+
+  /** Driver-side reference of [[Dedup.spanScrubOn]] and
+    * [[Dedup.dupSpansOn]]: per doc, the scrub's (n_tokens, n_removed,
+    * n_kept, kept_hash) and the span report's (n_tokens, n_spans,
+    * dup_tokens, dup_frac). */
+  private def spanReference(docs: Seq[(Long, String)], n: Int) = {
+    val toks = docs.map { case (id, t) => id -> words(t) }.sortBy(_._1)
+    def grams(w: Array[String]) =
+      (0 to w.length - n).map(p => p -> w.slice(p, p + n).toSeq)
+    val counts = toks.flatMap(d => grams(d._2).map(_._2))
+      .groupBy(identity).map { case (g, v) => g -> v.size }
+    val seen = scala.collection.mutable.HashSet[Seq[String]]()
+    toks.map { case (id, w) =>
+      val removed = scala.collection.mutable.BitSet()
+      val dup = scala.collection.mutable.BitSet()
+      for ((p, g) <- grams(w)) {
+        if (!seen.add(g)) removed ++= p until p + n
+        if (counts(g) >= 2) dup ++= p until p + n
+      }
+      val kept = w.indices.filterNot(removed).map(w(_))
+      val hash = if (kept.isEmpty) null else md5Hex(kept.mkString(" "))
+      val runs = dup.count(i => !dup.contains(i - 1)).toLong
+      val frac = math.floor(dup.size.toDouble / w.length * 1000000.0) / 1000000.0
+      id -> ((w.length.toLong, removed.size.toLong, kept.size.toLong, hash),
+        (w.length.toLong, runs, dup.size.toLong, frac))
+    }
+  }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  test("span scrub and dup spans equal a driver-side reference on seeded " +
+      "random corpora (overlapping, adjacent, gap-1, exact copies, short)") {
+    for (seed <- 1 to 4) {
+      val n = 2 + seed % 3
+      val docs = spanCorpus(seed, n)
+      val ref = spanReference(docs, n)
+      val scrub = Dedup.spanScrubOn(docs.toDF("doc_id", "text"), n).collect()
+        .map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toSeq
+      assert(scrub === ref.map(d => d._1 -> d._2._1), s"scrub, seed $seed")
+      // dup_frac divides by n_tokens: empty docs are the scrub's case only
+      val nonEmpty = docs.filter(d => words(d._2).nonEmpty)
+      val spans = Dedup.dupSpansOn(nonEmpty.toDF("doc_id", "text"), n)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toSeq
+      assert(spans === spanReference(nonEmpty, n).map(d => d._1 -> d._2._2),
+        s"dup spans, seed $seed")
+    }
+  }
+
+  test("sketches are evaluated once per row: no optimized Filter holds " +
+      "minhash_band_buckets or word_gram_md5s") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import graft.functions.{MinHashBandBuckets, WordGramMd5s}
+    val isSketch: Expression => Boolean = {
+      case _: MinHashBandBuckets | _: WordGramMd5s => true
+      case _ => false
+    }
+    // a scanned frame: over a local Seq the optimizer folds the sketches
+    val docs = Tables.load(spark, TestSpark.sf, "documents")
+    for (df <- Seq(Dedup.bandIndex(docs, 64, 16), Dedup.spanScrubOn(docs, 8))) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.exists(_.expressions.exists(_.exists(isSketch))))
+      val filters = plan.collect { case f: Filter => f.condition }
+        .filter(_.exists(isSketch))
+      assert(filters.isEmpty, s"sketch re-evaluated in $filters")
+    }
+  }
+
+  test("span scrub plans no checkpoint scan and at most 3 shuffle exchanges") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_scrub_").toString
+    Seq((0L, "a b c d e f"), (1L, "x a b c d y"), (2L, "a b"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val df = Dedup.spanScrub(spark, dir, n = 3)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    assert(!plan.contains("Scan ExistingRDD"), plan)
+    val shuffles = "(?<!Broadcast)Exchange".r.findAllIn(plan).length
+    assert(shuffles <= 3, s"$shuffles shuffle exchanges:\n$plan")
+  }
+
   test("winnowing: identical docs collide on fp_digest, selection is " +
       "bounded by the window count, short docs zero out") {
     val a = (1 to 40).map(i => s"w$i").mkString(" ")

@@ -91,8 +91,13 @@ class PlanLintSpec extends AnyFunSuite {
       "by the event-type DOMAIN (a handful of values), not the corpus"),
     "split_leakage" -> ("collect_set(split) per digest: split domain is " +
       "{train,val,test}, 3 values max per group"),
-    "span_scrub" -> ("collect_list(pos,tok) per doc_id: buffer bounded " +
-      "by max document length, a corpus-format constant"),
+    "span_scrub" -> ("collect_list(p) per doc_id: removed-span starts, " +
+      "bounded by the document's own gram count (max document length, a " +
+      "corpus-format constant)"),
+    "dup_spans" -> ("collect_list(p) per doc_id: repeated-gram starts, " +
+      "bounded by the document's own gram count"),
+    "dup_spans_planted" -> ("collect_list(p) per doc_id: as dup_spans, " +
+      "over the corpus plus 5 planted documents"),
     "winnow_fingerprints" -> ("collect_set(minhash) per doc_id: bounded " +
       "by windows-per-document, a corpus-format constant"))
 
@@ -170,7 +175,9 @@ class PlanLintSpec extends AnyFunSuite {
     "SimHash64" -> "O(tokens x 64) bit votes per row",
     "HyperplaneBands" -> "O(bands x planes x dim) projections per row",
     "RepetitionStats" -> "O(tokens) hash-set passes per row",
-    "TokenEntropy" -> "O(tokens) hash-map passes per row")
+    "TokenEntropy" -> "O(tokens) hash-map passes per row",
+    "KeptTokens" -> "O(tokens + starts) span-mask sweep per document",
+    "SpanRuns" -> "O(covered length + starts) span-mask sweep per document")
 
   /** Spark BUILT-IN classes that are CodegenFallback by upstream design
     * and admissible here: higher-order functions + their lambda plumbing
