@@ -94,7 +94,7 @@ object Bench {
     * bounded collects) before their final gate relation: last-action
     * capture read `scan_bytes=0` for all of them, blind to exactly the
     * regression the column exists for — a lost touched-partition
-    * pruning inside the lane (round 10's `ivfCompactPlanted` bug
+    * pruning inside the lane (an earlier IVF compaction gate's bug
     * class). Accumulated, the column covers the rep the same way
     * shuffle_records always did. */
   final class CaptureQEListener

@@ -297,13 +297,11 @@ object SparkEntry {
     "ann_ivfpq_batch" -> ((s: SparkSession, d: String) =>
       Similarity.annIvfPqBatch(s, d)),
     // incremental PQ-index maintenance: arriving batch encoded under
-    // frozen centroids+codebooks, touched-cell-only merge; the stored
-    // probe must reproduce the full math replay over the planted corpus
+    // frozen centroids+codebooks, touched-cell-only manifest commit;
+    // the stored probe must reproduce the full math replay over the
+    // planted corpus. Both names run this one lane and share its oracle
     "ann_ivfpq_compact" -> ((s: SparkSession, d: String) =>
-      Similarity.ivfPqCompactPlanted(s, d)),
-    // the same PQ compaction lifecycle over the versioned-manifest
-    // codes store (the round-13 DEFAULT protocol) — identical oracle:
-    // the commit protocol must not change one row
+      Similarity.ivfPqCompactManifestPlanted(s, d)),
     "ann_ivfpq_compact_mf" -> ((s: SparkSession, d: String) =>
       Similarity.ivfPqCompactManifestPlanted(s, d)),
     "ann_filtered_topk" -> ((s: SparkSession, d: String) => Similarity.filteredTopK(s, d)),
@@ -345,10 +343,11 @@ object SparkEntry {
     "ann_lsh_indexed" -> ((s: SparkSession, d: String) =>
       Similarity.annLshIndexedPlanted(s, d)),
     // incremental LSH index maintenance: arriving batch merged into the
-    // frozen-hyperplane postings by touched-(band,bucket) rewrite only;
-    // stored probes must equal the in-memory full-corpus lane
+    // frozen-hyperplane band postings and the vectors table in one
+    // manifest commit; stored probes must equal the in-memory
+    // full-corpus lane (the same lane as ann_lsh_compact_mf)
     "ann_lsh_compact" -> ((s: SparkSession, d: String) =>
-      Similarity.lshCompactPlanted(s, d)),
+      Similarity.lshCompactManifestPlanted(s, d)),
     "ann_ivf_planted" -> ((s: SparkSession, d: String) =>
       Similarity.ivfTopKPlanted(s, d)),
     // JL random-sign projection: 16 t6 components + norm-preservation
@@ -380,12 +379,11 @@ object SparkEntry {
     "ann_ivf_batch" -> ((s: SparkSession, d: String) =>
       Similarity.annIvfBatchPlanted(s, d)),
     // incremental index maintenance: arriving batch merged into frozen
-    // cells by per-cell rewrite; probes must equal a from-scratch rebuild
+    // cells (immutable segments, one-file manifest commit,
+    // manifest-level pruning); probes must equal a from-scratch
+    // rebuild. One lane under both names
     "ann_ivf_compact" -> ((s: SparkSession, d: String) =>
-      Similarity.ivfCompactPlanted(s, d)),
-    // the same maintenance lifecycle over the versioned-manifest store
-    // (immutable segments, one-file commit, manifest-level pruning) —
-    // the object-store-honest deployment of index maintenance
+      Similarity.ivfCompactManifestPlanted(s, d)),
     "ann_ivf_compact_mf" -> ((s: SparkSession, d: String) =>
       Similarity.ivfCompactManifestPlanted(s, d)),
     // LSH maintenance over the MULTI-TABLE manifest store: touched
@@ -442,16 +440,14 @@ object SparkEntry {
     "stream_ann_indexed" -> ((s: SparkSession, d: String) =>
       graft.streaming.VectorStream.runAnnIndexedOnce(s, d)),
     // streaming index MAINTENANCE: arriving vector drops merge into the
-    // stored index per micro-batch (idempotent touched-cell upsert);
-    // post-drain probes must equal the from-scratch rebuild
+    // stored index, one atomic manifest commit per micro-batch; replay
+    // commits an identical version (upsertById anti-join); post-drain
+    // probes must equal the from-scratch rebuild. One lane, two names
     "stream_ivf_compact" -> ((s: SparkSession, d: String) =>
-      graft.streaming.VectorStream.runIvfCompactOnce(s, d)),
-    // streamed maintenance over the versioned-manifest store: each
-    // micro-batch is one atomic manifest commit; replay commits an
-    // identical version (upsertById anti-join), probes keep snapshots
+      graft.streaming.VectorStream.runIvfCompactManifestOnce(s, d)),
     "stream_ivf_compact_mf" -> ((s: SparkSession, d: String) =>
       graft.streaming.VectorStream.runIvfCompactManifestOnce(s, d)),
-    // streamed CODES-level maintenance on the default protocol: one
+    // streamed CODES-level maintenance: one
     // manifest commit per micro-batch under frozen centroids+codebooks;
     // streamed compaction == one-shot compaction == rebuild, so the
     // lane shares ann_ivfpq_compact's full math-replay oracle
@@ -891,8 +887,7 @@ object SparkEntry {
     // database side (assign + enc) reads the planted corpus — which is
     // exactly what compaction ≡ rebuild promises the stored lane holds
     ("ann_ivfpq_compact" -> ivfPqCompactSql) +
-    // the manifest-protocol twin replays the IDENTICAL math — the
-    // commit protocol must not change one row
+    // the _mf name runs the same lane, hence the same replay
     ("ann_ivfpq_compact_mf" -> ivfPqCompactSql) +
     // and the STREAMED manifest twin: per-micro-batch commits under
     // frozen model state compose to the one-shot compaction (upsertById
@@ -915,9 +910,9 @@ object SparkEntry {
   /** The PQ compaction gates' oracle: [[ivfPqBatchSql]] with the
     * database side (assign + enc) swapped to the planted corpus while
     * the frozen centroids/codebooks stay on the natural table — shared
-    * verbatim by `ann_ivfpq_compact` (rename protocol) and
-    * `ann_ivfpq_compact_mf` (manifest protocol, the round-13 default):
-    * compaction ≡ rebuild under EITHER commit protocol. */
+    * verbatim by `ann_ivfpq_compact`, `ann_ivfpq_compact_mf` and
+    * `stream_ivfpq_compact_mf`, the one-shot and streamed runs of the
+    * same manifest-store lane: compaction ≡ rebuild. */
   private lazy val ivfPqCompactSql: String = ivfPqBatchSql
     .replaceFirst("WITH ",
       "WITH embp AS (SELECT vec_id, embedding FROM embeddings" +
@@ -2778,8 +2773,7 @@ object SparkEntry {
         | TRUE AS agrees_rebuild
         | FROM (SELECT unnest(range(0, 5)) AS q_id)
         | ORDER BY q_id""".stripMargin.replace("\n", ""),
-    // streamed manifest-commit maintenance: identical closed form —
-    // the storage protocol must not change one probed row
+    // the same streamed lane under its _mf name: identical closed form
     "stream_ivf_compact_mf" ->
       """SELECT CAST(q_id AS BIGINT) AS q_id,
         | CAST(q_id + 1000000 AS BIGINT) AS vec_id,
@@ -2827,8 +2821,8 @@ object SparkEntry {
         | TRUE AS agrees_rebuild
         | FROM (SELECT unnest(range(0, 5)) AS q_id)
         | ORDER BY q_id""".stripMargin.replace("\n", ""),
-    // multi-table manifest-store LSH maintenance: identical closed form
-    // to ann_lsh_compact — the commit protocol must not change one row
+    // the same LSH maintenance lane under its _mf name: identical
+    // closed form to ann_lsh_compact
     "ann_lsh_compact_mf" ->
       """SELECT CAST(q_id AS BIGINT) AS q_id,
         | CAST(q_id + 1000000 AS BIGINT) AS vec_id,
@@ -2836,8 +2830,8 @@ object SparkEntry {
         | TRUE AS agrees_rebuild
         | FROM (SELECT unnest(range(0, 5)) AS q_id)
         | ORDER BY q_id""".stripMargin.replace("\n", ""),
-    // manifest-store maintenance: identical closed form — the commit
-    // protocol must not change one probed row
+    // the same IVF maintenance lane under its _mf name: identical
+    // closed form
     "ann_ivf_compact_mf" ->
       """SELECT CAST(q_id AS BIGINT) AS q_id,
         | CAST(q_id + 1000000 AS BIGINT) AS vec_id,

@@ -605,7 +605,7 @@ object Dedup {
     * merge into maximal spans. Zero-hit documents surface with zeroed
     * counters via the left join against the narrow per-doc token counts
     * (no second tokenization: `n_tokens` rides along the gram scan's
-    * sibling projection). */
+    * sibling projection); a 0-token document reports `dup_frac` 0.0. */
   def dupSpans(s: SparkSession, dir: String, n: Int = 8): DataFrame =
     dupSpansOn(t(s, dir, "documents"), n)
 
@@ -624,8 +624,12 @@ object Dedup {
         SketchExpressions.spanRuns(col("starts"), n).as("r"))
       .select(col("doc_id"), col("n_tokens"), col("r.n_spans"),
         col("r.dup_tokens"),
-        Num.t6(col("r.dup_tokens").cast("double") /
-          col("n_tokens").cast("double")).as("dup_frac"))
+        // a 0-token document has no duplicated tokens: 0.0, like the
+        // zeroed counters of a zero-hit document (and no ANSI division
+        // by zero)
+        when(col("n_tokens") === 0L, lit(0.0)).otherwise(
+          Num.t6(col("r.dup_tokens").cast("double") /
+            col("n_tokens").cast("double"))).as("dup_frac"))
       .orderBy("doc_id")
   }
 

@@ -27,8 +27,9 @@ package graft.operators
   * lease release), and that cleanup must not race a still-running `b`
   * writing into the directories being removed. The join is bounded so
   * a side stuck in non-interruptible I/O cannot convert one failure
-  * into a hang; next-run healing covers that corner as it does for a
-  * crashed process. */
+  * into a hang; a segment such a side stages afterwards is referenced
+  * by no manifest and is reaped by the store's vacuum, as for a crashed
+  * process. */
 private[graft] object Par {
 
   def two[A, B](a: => A, b: => B): (A, B) = {

@@ -4,30 +4,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Versioned-manifest table layout — the "table-format answer" the
-  * [[IndexCommit]] protocol's scaladoc points at, built library-sized.
-  *
-  * [[IndexCommit]] mutates a live tree in place behind a redo-logged
-  * transaction; its commit point is an atomic file RENAME and its apply
-  * phase MOVES partition directories. That buys crash-atomicity for
-  * heal-then-scan readers, but two limits are structural:
-  *
-  *  - a scan already in flight during the apply can observe a partition
-  *    mid-swap (absent / FileNotFound) — the same window Spark's own
-  *    dynamic partition overwrite has;
-  *  - the protocol dies on flat-namespace object stores (`s3a`/`gs`),
-  *    where rename is a per-object COPY and the marker rename loses its
-  *    atomicity — hence IndexCommit's fail-fast capability gate.
-  *
-  * This module removes both by never mutating published data at all
-  * (the Iceberg/Delta idea, reduced to what an index store needs):
+/** Versioned-manifest table store — the one storage and commit
+  * protocol behind every maintained table and ANN index in this
+  * library (the Iceberg/Delta idea, reduced to what an index store
+  * needs). Published data is never mutated:
   *
   * {{{
   *   <root>/_manifests/v00000001.mf     immutable, line-oriented
   *   <root>/_manifests/v00000002.mf
   *   <root>/seg/<segId>/<key>=<v>/...   immutable data segments
-  *   <root>/_WRITER                     writer lease (IndexCommit's
-  *                                      lock machinery, same seams)
+  *   <root>/_WRITER                     writer lease
   * }}}
   *
   * A manifest file IS a store version: the authoritative list of
@@ -44,16 +30,16 @@ import org.apache.spark.sql.functions._
   * one small-file rename on rename-atomic schemes, and a single PUT on
   * object stores (an object is invisible until its PUT completes, and
   * the only rename here is of one manifest-sized file, never data).
-  * There is deliberately NO [[IndexCommit.requireAtomicRename]] gate.
+  * No scheme is refused: `s3a`/`gs`/`wasb` work as well as `file` and
+  * `hdfs`.
   *
   * What readers get, stated precisely:
   *
   *  - SNAPSHOT ISOLATION, lock-free: a reader resolves the newest
   *    manifest once and scans immutable directories. A concurrent
   *    commit cannot perturb it — there is no mid-swap window to
-  *    observe, which retires the in-flight-scan caveat IndexCommit has
-  *    to document. No reader-side healing exists because none is
-  *    needed: a writer crash before the manifest create leaves only an
+  *    observe. No reader-side healing exists because none is needed:
+  *    a writer crash before the manifest create leaves only an
   *    unreferenced segment (invisible; [[vacuum]] reaps it), and after
   *    the create the commit is simply durable. Multi-table commits are
   *    atomic BY the same token: a reader sees postings-new with
@@ -76,38 +62,39 @@ import org.apache.spark.sql.functions._
   * probes select buckets inside a band by join. `keyInData` controls
   * whether the key column is duplicated into the data files (the
   * default — a multi-root scan keeps the column without partition
-  * inference) or carried by the layout only (`false` — right when the
-  * key is derivable from other data columns, as a synthesized
-  * composite is; nothing redundant is stored).
+  * inference, and every op can read a partition back and merge it) or
+  * carried by the layout only (`false` — nothing redundant is stored,
+  * but the read-merge ops [[Upsert]], [[Merge]] and [[Delete]] cannot
+  * restore the key on the live slice and refuse such a table once it
+  * holds rows to merge; [[Append]], [[Replace]] and [[DeleteKeys]]
+  * never read live rows and work on it).
   * Append-only tables (`partCol = ""`) take whole segments as entries
   * and are never partition-pruned or merged — the narrow vector store
   * shape, hydrated by id join.
   *
-  * Concurrency: ONE writer at a time via the same per-root writer
-  * lease as [[IndexCommit]] (write-then-verify, lease-steal, the
-  * `WriterLeaseMs`/`WriterWaitMs` seams). [[commitTables]] runs the
-  * caller's planning closure UNDER the lease, so guard reads (e.g. the
-  * upsert-dedup anti-join against the live vectors table) and the
-  * staged writes see a store no concurrent writer can move — the same
-  * guarantee lshCompact gets from opening its IndexCommit transaction
-  * before its guard reads. The manifest create is the backstop: it
-  * refuses to overwrite an existing version file (loser loud on
-  * rename-atomic schemes) and verifies its own publish by read-back
-  * (which NARROWS — not closes — the double-grant window on
-  * overwriting stores; see [[writeManifest]] for the precise
-  * statement). [[vacuum]] runs under the same lease, which is what
-  * makes "unreferenced segment" mean "dead" (no writer can be
-  * mid-stage while the lease is held); retention (`keepLast`) is the
-  * reader contract — vacuum only against a horizon older than the
+  * Concurrency: ONE writer at a time via a per-root writer lease
+  * (exclusive create, lease-steal after `WriterLeaseMs` of silence,
+  * loud failure after `WriterWaitMs` of waiting). [[commitTables]] runs
+  * the caller's planning closure UNDER the lease, so guard reads (e.g.
+  * the upsert-dedup anti-join against the live vectors table) and the
+  * staged writes see a store no concurrent writer can move. The
+  * manifest create is the backstop: it refuses to overwrite an
+  * existing version file (loser loud on rename-atomic schemes) and
+  * verifies its own publish by read-back (which NARROWS — not closes —
+  * the double-grant window on overwriting stores; see [[writeManifest]]
+  * for the precise statement). [[vacuum]] runs under the same lease,
+  * which is what makes "unreferenced segment" mean "dead" (no writer
+  * can be mid-stage while the lease is held); retention (`keepLast`) is
+  * the reader contract — vacuum only against a horizon older than the
   * longest-running scan, exactly Delta's VACUUM discipline.
   *
   * Cost shape at scale: a commit writes the touched partitions' bytes
-  * (the same bytes IndexCommit staged) plus ONE manifest file — O(live
-  * partitions) lines of driver-side metadata, no data moves, no apply
-  * phase, no healing. Reads pay one small-file GET to resolve the
-  * newest manifest. Manifest size is the honest limit: at millions of
-  * partitions a real table format's manifest TREES take over; the
-  * index stores here hold k-to-thousands of cells/buckets.
+  * plus ONE manifest file — O(live partitions) lines of driver-side
+  * metadata, no data moves, no apply phase, no healing. Reads pay one
+  * small-file GET to resolve the newest manifest. Manifest size is the
+  * honest limit: at millions of partitions a real table format's
+  * manifest TREES take over; the index stores here hold
+  * k-to-thousands of cells/buckets.
   *
   * Partition keys must be non-null and are matched by their hive
   * directory rendering (for the integer cell and band keys the ANN
@@ -175,6 +162,18 @@ object ManifestStore {
     raw.split('|').head.stripPrefix("~")
   /** Whether the raw spec says the key is duplicated into the data. */
   private def keyInDataOf(raw: String): Boolean = !raw.startsWith("~")
+
+  /** The read-merge ops ([[Upsert]], [[Merge]], [[Delete]]) read live
+    * rows back and rewrite them; a layout-only key is not in those
+    * rows, so they refuse such a table instead of staging keyless
+    * partitions. */
+  private def refuseReadMerge(table: String, pc: String): Nothing =
+    throw new IllegalArgumentException(
+      s"table '$table' keeps its key '$pc' in the layout only " +
+        "(keyInData = false): its live rows read back without the key, " +
+        "so Upsert, Merge and Delete cannot rewrite them — use Append, " +
+        "Replace or DeleteKeys, or create the table with the key in " +
+        "the data")
   /** The declared stats columns of a raw header spec. */
   private def statsColsOf(raw: String): Seq[String] =
     raw.split('|').toSeq.drop(1).headOption
@@ -214,17 +213,11 @@ object ManifestStore {
   /** Merge `df` into the partitioned `table`: touched partitions (the
     * batch's distinct keys) are read back manifest-pruned, merged
     * (rows whose `idCol` appears in the batch replaced when set), and
-    * re-staged; untouched entries carry over by reference.
-    *
-    * `rekey`: REQUIRED for layout-only-key tables (`keyInData =
-    * false`) — the live slice read back for merging lacks the key
-    * column (it was never stored, being derivable), so the caller
-    * restores it with the same derivation used at write time (e.g. a
-    * composite `concat(a, '_', b)`). One scan over the touched
-    * slice, no per-partition plan branching. */
+    * re-staged; untouched entries carry over by reference. Refused on
+    * a layout-only-key table (`keyInData = false`) once a touched
+    * partition holds live rows: they read back without the key. */
   final case class Upsert(table: String, df: DataFrame,
-      idCol: Option[String] = None,
-      rekey: Option[DataFrame => DataFrame] = None) extends TableOp
+      idCol: Option[String] = None) extends TableOp
   /** REPLACE the touched partitions of `table` wholesale: every key
     * present in `df` gets exactly `df`'s rows — live rows of those
     * partitions are dropped from the new version without ever being
@@ -294,7 +287,6 @@ object ManifestStore {
     * that column for the touched partitions). */
   final case class Merge(table: String, source: DataFrame, idCol: String,
       deleteWhen: Option[Column] = None,
-      rekey: Option[DataFrame => DataFrame] = None,
       envelope: Seq[String] = Nil) extends TableOp
 
   /** Row-level DELETE WHERE over `table`, copy-on-write at SEGMENT
@@ -311,12 +303,11 @@ object ManifestStore {
     * At 100 TB this is the difference between a predicate delete that
     * rewrites a table and one that rewrites a day: name the delete
     * axis in `statsCols` (GDPR user-id, retention date) and only the
-    * overlapping segments move. Layout-only-key tables need `rekey`
-    * (the [[Upsert]] discipline). For whole-partition deletes by KEY,
-    * [[DeleteKeys]] is pure metadata — prefer it when the predicate is
-    * key-membership. */
-  final case class Delete(table: String, cond: Column,
-      rekey: Option[DataFrame => DataFrame] = None) extends TableOp
+    * overlapping segments move. Refused on a layout-only-key table
+    * with live rows (the [[Upsert]] rule). For whole-partition deletes
+    * by KEY, [[DeleteKeys]] is pure metadata — prefer it when the
+    * predicate is key-membership. */
+  final case class Delete(table: String, cond: Column) extends TableOp
 
   /** Drop whole partitions of the keyed `table` by key value — PURE
     * METADATA: the superseded entries simply don't carry into the new
@@ -394,10 +385,11 @@ object ManifestStore {
   /** Table name the single-table sugar API stores under. */
   private val DefaultTable = "t"
 
-  /** Kill-point hook for the crash spec — same seam discipline as
-    * [[IndexCommit.killPoint]]: "staged" fires after every new segment
-    * is fully written (manifest not yet published), "committed" after
-    * the manifest create. Never set outside specs. */
+  /** Kill-point hook for the crash specs: "create-preflight" fires
+    * before a create takes the lease, "staged" after every new segment
+    * of a commit is fully written (manifest not yet published), and
+    * "committed" after the manifest create. A hook that throws models
+    * a writer dying at that point. Never set outside specs. */
   private[graft] var killPoint: String => Unit = _ => ()
 
   /** Race seam for the publish-verification spec: fires between the
@@ -429,20 +421,94 @@ object ManifestStore {
   private def manifestDir(root: Path) = new Path(root, ManifestDirName)
   private def manifestPath(root: Path, v: Long) =
     new Path(manifestDir(root), f"v$v%08d.mf")
-  private def writerLock(root: Path) =
-    new Path(root, IndexCommit.WriterLockName)
+  /** Writer-lease file name at the store root. */
+  private[graft] val WriterLockName = "_WRITER"
 
+  /** Lease on the writer lock: a holder silent for this long is presumed
+    * crashed and the next writer steals its lock. Every commit takes
+    * and releases the lease around one planning closure and its staged
+    * writes, so the term must out-live the longest commit; a commit
+    * that overlaps a pair of staged writes (`Par.two`) holds it for
+    * max(side a, side b). `var` as a test seam; never set outside specs. */
+  private[graft] var WriterLeaseMs: Long = 15 * 60 * 1000L
+
+  /** Bound on waiting for a concurrent writer to release the lease
+    * before failing loudly. Schedulers that queue long commits behind
+    * one another should serialize upstream; this bound turns an
+    * unexpected overlap into a visible error instead of a hang. Same
+    * test-seam discipline as [[WriterLeaseMs]]. */
+  private[graft] var WriterWaitMs: Long = 60 * 1000L
+
+  private def writerLock(root: Path) = new Path(root, WriterLockName)
+
+  /** Take the writer lease at `root`; returns the owner token. A stale
+    * lock (mtime older than [[WriterLeaseMs]]) is stolen by atomic
+    * rename — one stealer wins and deletes the renamed-aside husk.
+    * Throws after [[WriterWaitMs]] if the lock stays busy and fresh: a
+    * writer that can neither acquire nor steal must not proceed.
+    *
+    * The claim is an atomic exclusive create per scheme: on `file:`
+    * Hadoop's `create(overwrite=false)` is check-then-act (a GC pause
+    * between one racer's existence check and its write once produced
+    * TWO owners under test-suite heap pressure), so the local path goes
+    * through `java.nio.Files.createFile` (O_EXCL); elsewhere the file
+    * system arbitrates `create(overwrite=false)` and its result is
+    * trusted. The token lands AFTER the claim; a concurrent content
+    * read in that window sees an empty owner, which only the owner's
+    * own release consults (strictly after the write). */
   private def acquireLease(fs: FileSystem, root: Path): String = {
     // a fresh store root may not exist yet (create()'s first act is
     // taking the lease) — the lock file needs its parent in place
     if (!fs.exists(root)) fs.mkdirs(root)
-    IndexCommit.acquireLock(fs, writerLock(root), () => true,
-      IndexCommit.WriterLeaseMs, IndexCommit.WriterWaitMs)
-      .getOrElse(throw new IllegalStateException(
-        s"writer-lease acquisition under $root returned empty — " +
-          "the store root cannot be retired"))
+    val lock = writerLock(root)
+    val me = java.util.UUID.randomUUID().toString
+    val scheme = Option(lock.toUri.getScheme).getOrElse(fs.getScheme)
+    val deadline = System.currentTimeMillis() + WriterWaitMs
+    def claim(): Boolean =
+      if (scheme == "file") {
+        try {
+          java.nio.file.Files.createFile(
+            java.nio.file.Paths.get(lock.toUri.getPath))
+          val out = fs.create(lock, true)
+          try out.write(me.getBytes("UTF-8")) finally out.close()
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+          case _: java.io.IOException => false // parent gone: busy/retry
+        }
+      } else {
+        try {
+          val out = fs.create(lock, false)
+          try out.write(me.getBytes("UTF-8")) finally out.close()
+          true
+        } catch { case _: java.io.IOException => false }
+      }
+    while (!claim()) {
+      // busy: steal only a lease-expired lock, then retry the claim
+      val stale =
+        try {
+          val st = fs.getFileStatus(lock)
+          System.currentTimeMillis() - st.getModificationTime >
+            WriterLeaseMs
+        } catch { case _: java.io.IOException => false }
+      if (stale) {
+        val aside = new Path(lock.getParent,
+          lock.getName + ".stale-" + me.take(8))
+        try { if (fs.rename(lock, aside)) fs.delete(aside, false) }
+        catch { case _: java.io.IOException => () }
+      }
+      if (System.currentTimeMillis() > deadline)
+        throw new IllegalStateException(
+          s"lock ${lock.getName} busy past ${WriterWaitMs}ms at " +
+            s"${lock.getParent} — the holder is alive (wait) or its " +
+            "lease has not expired")
+      Thread.sleep(50)
+    }
+    me
   }
 
+  /** Best-effort ownership-checked release: delete only a lock we still
+    * own; a stolen lease belongs to the thief now. */
   private def releaseLease(fs: FileSystem, root: Path,
       token: String): Unit = {
     val lock = writerLock(root)
@@ -808,13 +874,16 @@ object ManifestStore {
     * evolution: Spark's union coercion would "handle" it by silently
     * rewriting values (a decimal column read as double loses
     * precision, numerics read as strings, with no error anywhere), so
-    * [[readEntries]] and the upsert merge refuse it loudly instead. */
+    * [[readEntries]] and the upsert merge refuse it loudly instead.
+    * Types that differ only in nullability (an `array<float>` whose
+    * elements may or may not be null) are the same type: the union
+    * takes the nullable side and no value changes. */
   private val WidenChains = Seq(
     Seq("tinyint", "smallint", "int", "bigint"),
     Seq("float", "double"))
   private def widenOk(a: org.apache.spark.sql.types.DataType,
       b: org.apache.spark.sql.types.DataType): Boolean =
-    a == b || WidenChains.exists(c =>
+    a.catalogString == b.catalogString || WidenChains.exists(c =>
       c.contains(a.simpleString) && c.contains(b.simpleString))
 
   /** Conservative segment-skip evaluation of one data-source filter
@@ -1270,10 +1339,9 @@ object ManifestStore {
   /** One ATOMIC commit across any number of tables. The `plan` closure
     * runs UNDER the writer lease — its reads (e.g. [[readTable]] for an
     * upsert-dedup guard) see a store no concurrent writer can move
-    * before this commit lands, the same guarantee the IndexCommit lanes
-    * get by opening their transaction before their guard reads. An
-    * empty plan (or one whose ops all reduce to nothing: empty upsert
-    * batches, empty appends) commits nothing and bumps no version.
+    * before this commit lands. An empty plan (or one whose ops all
+    * reduce to nothing: empty upsert batches, empty appends) commits
+    * nothing and bumps no version.
     *
     * Returns the touched partition keys per upserted table (hive
     * rendering, sorted; append tables report no keys). */
@@ -1308,8 +1376,7 @@ object ManifestStore {
       // with `deleteWhen` set — tombstone rows retire their idCol's
       // live rows and are never written
       def stageUpsert(table: String, df: DataFrame,
-          idCol: Option[String], rekey: Option[DataFrame => DataFrame],
-          deleteWhen: Option[Column],
+          idCol: Option[String], deleteWhen: Option[Column],
           envelope: Seq[String] = Nil): Unit = {
           val raw = m.partCols(table)
           val pc = keyColOf(raw)
@@ -1335,18 +1402,10 @@ object ManifestStore {
             val merged =
               if (liveE.isEmpty) arriving
               else {
+                if (!keyInDataOf(raw)) refuseReadMerge(table, pc)
                 // fingerprint-grouped read: added columns null-fill,
                 // widened types read widened ([[readEntries]])
-                val liveRaw = readEntries(s, r, liveE, forceMerge = false)
-                // layout-only key: restore it on the live slice with
-                // the caller's derivation (Upsert doc)
-                val live =
-                  if (liveRaw.columns.contains(pc)) liveRaw
-                  else rekey.map(_(liveRaw)).getOrElse(
-                    throw new IllegalArgumentException(
-                      s"table '$table' stores its key '$pc' layout-" +
-                        "only; Upsert needs a rekey function to " +
-                        "restore it on the live slice"))
+                val live = readEntries(s, r, liveE, forceMerge = false)
                 // evolution ADDS columns and WIDENS types, never drops:
                 // a batch missing a live column would silently lose it
                 // for the touched partitions while the untouched keep
@@ -1405,16 +1464,16 @@ object ManifestStore {
           }
       }
       ops.foreach {
-        case Upsert(table, df, idCol, rekey) =>
-          stageUpsert(table, df, idCol, rekey, deleteWhen = None)
-        case Merge(table, src, idCol, deleteWhen, rekey, envelope) =>
-          stageUpsert(table, src, Some(idCol), rekey, deleteWhen,
-            envelope)
-        case Delete(table, cond, rekey) =>
+        case Upsert(table, df, idCol) =>
+          stageUpsert(table, df, idCol, deleteWhen = None)
+        case Merge(table, src, idCol, deleteWhen, envelope) =>
+          stageUpsert(table, src, Some(idCol), deleteWhen, envelope)
+        case Delete(table, cond) =>
           val raw = m.partCols(table)
           val pc = keyColOf(raw)
           val liveE = m.entries.filter(_.table == table)
           if (liveE.nonEmpty) {
+            if (!keyInDataOf(raw)) refuseReadMerge(table, pc)
             // resolve `cond` against the table's UNION schema (one
             // representative entry per fingerprint — metadata only, no
             // scan) and translate its pushable conjuncts; entries whose
@@ -1422,23 +1481,13 @@ object ManifestStore {
             val byId = liveE.groupBy(_.schemaId)
             val reps = liveE.map(_.schemaId).distinct.map(id =>
               byId(id).head)
-            val frame0 = readEntries(s, r, reps, forceMerge = false)
-            val frameR =
-              if (pc.isEmpty || frame0.columns.contains(pc)) frame0
-              else rekey.map(_(frame0)).getOrElse(frame0)
-            val filters = pruneFilters(frameR, cond)
+            val filters = pruneFilters(
+              readEntries(s, r, reps, forceMerge = false), cond)
             val candidates = liveE.filter(e =>
               filters.forall(f => mayMatch(e.stats, f)))
             if (candidates.nonEmpty) {
-              val liveRaw = readEntries(s, r, candidates,
+              val live = readEntries(s, r, candidates,
                 forceMerge = false)
-              val live =
-                if (pc.isEmpty || liveRaw.columns.contains(pc)) liveRaw
-                else rekey.map(_(liveRaw)).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"table '$table' stores its key '$pc' layout-only; " +
-                      "Delete needs a rekey function to restore it on " +
-                      "the rewritten slice"))
               // SQL DELETE semantics: remove rows where cond IS TRUE —
               // a NULL verdict keeps the row
               val keptRows = live.filter(!coalesce(cond, lit(false)))
@@ -1581,9 +1630,8 @@ object ManifestStore {
     * cost model). Returns the rewritten partition keys (empty for
     * append-only tables, whose retired segments have no keys). */
   def deleteWhere(s: SparkSession, root: String, cond: Column,
-      table: String = DefaultTable,
-      rekey: Option[DataFrame => DataFrame] = None): Seq[String] =
-    commitTables(s, root)(Seq(Delete(table, cond, rekey)))
+      table: String = DefaultTable): Seq[String] =
+    commitTables(s, root)(Seq(Delete(table, cond)))
       .getOrElse(table, Seq.empty)
 
   /** Whole-partition delete by key — PURE METADATA ([[DeleteKeys]]).
@@ -1601,10 +1649,9 @@ object ManifestStore {
   def mergeInto(s: SparkSession, root: String, source: DataFrame,
       idCol: String, deleteWhen: Option[Column] = None,
       table: String = DefaultTable,
-      rekey: Option[DataFrame => DataFrame] = None,
       envelope: Seq[String] = Nil): Seq[String] =
     commitTables(s, root)(Seq(Merge(table, source, idCol, deleteWhen,
-      rekey, envelope))).getOrElse(table, Seq.empty)
+      envelope))).getOrElse(table, Seq.empty)
 
   /** Snapshot read of one table. `parts` prunes at the MANIFEST level —
     * only the named partitions' leaf dirs reach the scan (object doc);
@@ -1703,14 +1750,12 @@ object ManifestStore {
     *
     * Schema evolution inside the window is handled the usual way
     * ([[readEntries]]): pre-evolution rows read null-filled/widened,
-    * and the feed's columns are the union across steps. Layout-only
-    * keys are restored per step when `rekey` is given (the [[Upsert]]
-    * discipline). Requires every version in [from, to] retained —
+    * and the feed's columns are the union across steps (a layout-only
+    * key is not among them). Requires every version in [from, to] retained —
     * vacuum against a horizon older than the slowest consumer, the
     * same contract as any snapshot read. */
   def changeFeed(s: SparkSession, root: String, table: String,
-      fromVersion: Long, toVersion: Long,
-      rekey: Option[DataFrame => DataFrame] = None): DataFrame = {
+      fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion < toVersion,
       s"changeFeed needs fromVersion < toVersion " +
         s"(got $fromVersion, $toVersion)")
@@ -1724,8 +1769,6 @@ object ManifestStore {
       .map(v => v -> readManifest(fs, r, v)).toMap
     manifests.values.foreach(m => require(m.partCols.contains(table),
       s"store at $root has no table '$table' throughout the window"))
-    def restore(df: DataFrame): DataFrame =
-      rekey.map(_(df)).getOrElse(df)
     val steps = (fromVersion until toVersion).flatMap { v =>
       val ea = manifests(v).entries.filter(_.table == table)
       val eb = manifests(v + 1).entries.filter(_.table == table)
@@ -1737,11 +1780,11 @@ object ManifestStore {
       else {
         val reps = (added ++ removed)
         def readSide(es: Seq[Entry]): DataFrame =
-          if (es.nonEmpty) restore(readEntries(s, r, es, false))
+          if (es.nonEmpty) readEntries(s, r, es, false)
           else {
             val byId = reps.groupBy(_.schemaId)
             val one = reps.map(_.schemaId).distinct.map(id => byId(id).head)
-            restore(readEntries(s, r, one, false)).filter(lit(false))
+            readEntries(s, r, one, false).filter(lit(false))
           }
         val newRows = readSide(added)
         val oldRows = readSide(removed)

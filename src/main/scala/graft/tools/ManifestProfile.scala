@@ -4,21 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 import graft.store.ManifestStore
 
-/** Scoped A/B of the ANN maintenance lifecycles under the two commit
-  * protocols, with a DRIVER-PHASE profile of the manifest lanes — the
-  * round-12 verdict's open evidence item: the driver bench read
-  * `ann_ivf_compact_mf` at 11.8 s vs its rename twin's 6.8 s with
-  * BIT-IDENTICAL plan columns, so the gap (if real) is driver-side
-  * commit planning that task metrics cannot see. This tool attributes
-  * it: per-rep walls for both twins, plus per-phase driver nanos from
+/** DRIVER-PHASE profile of the manifest-store maintenance lanes: per-rep
+  * walls plus per-phase driver nanos from
   * [[graft.store.ManifestStore.phaseHook]] ("lease", "manifestRead",
   * "keyCollect", "stageWrite", "publish" — stageWrite contains the
-  * staged Spark write job; the others are pure driver metadata work).
+  * staged Spark write job; the others are pure driver metadata work),
+  * i.e. the per-commit driver overhead task metrics cannot see.
   *
-  * Run:  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+  * Run:  SPARK_GRAFT_SF_DIR=<sf0.1 data dir> \
   *       java -cp ... graft.tools.ManifestProfile [reps]
-  * Results recorded in BASELINE.md ("Manifest-lane driver-side commit
-  * cost" section). */
+  * Earlier results are recorded in BASELINE.md ("Manifest-lane
+  * driver-side commit cost" section). */
 object ManifestProfile {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(5)
@@ -51,9 +47,8 @@ object ManifestProfile {
     }
 
     // untimed warmup (codegen/scan init)
-    runOnce("ann_ivf_compact", "warm"); runOnce("ann_ivf_compact_mf", "warm")
-    Seq("ann_ivf_compact", "ann_ivf_compact_mf",
-      "ann_lsh_compact", "ann_lsh_compact_mf").foreach { q =>
+    runOnce("ann_ivf_compact_mf", "warm")
+    Seq("ann_ivf_compact_mf", "ann_lsh_compact_mf").foreach { q =>
       val walls = (1 to reps).map(i => runOnce(q, s"rep$i"))
       val med = walls.sorted.apply(walls.size / 2)
       println(f"[prof] SUMMARY $q median=$med%.2fs best=${walls.min}%.2fs")

@@ -310,7 +310,9 @@ class DedupSpec extends AnyFunSuite {
       val kept = w.indices.filterNot(removed).map(w(_))
       val hash = if (kept.isEmpty) null else md5Hex(kept.mkString(" "))
       val runs = dup.count(i => !dup.contains(i - 1)).toLong
-      val frac = math.floor(dup.size.toDouble / w.length * 1000000.0) / 1000000.0
+      val frac =
+        if (w.isEmpty) 0.0
+        else math.floor(dup.size.toDouble / w.length * 1000000.0) / 1000000.0
       id -> ((w.length.toLong, removed.size.toLong, kept.size.toLong, hash),
         (w.length.toLong, runs, dup.size.toLong, frac))
     }
@@ -330,13 +332,12 @@ class DedupSpec extends AnyFunSuite {
         .map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toSeq
       assert(scrub === ref.map(d => d._1 -> d._2._1), s"scrub, seed $seed")
-      // dup_frac divides by n_tokens: empty docs are the scrub's case only
-      val nonEmpty = docs.filter(d => words(d._2).nonEmpty)
-      val spans = Dedup.dupSpansOn(nonEmpty.toDF("doc_id", "text"), n)
+      // empty docs included: their dup_frac is 0.0, not a division error
+      assert(docs.exists(d => words(d._2).isEmpty), s"no empty doc, seed $seed")
+      val spans = Dedup.dupSpansOn(docs.toDF("doc_id", "text"), n)
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toSeq
-      assert(spans === spanReference(nonEmpty, n).map(d => d._1 -> d._2._2),
-        s"dup spans, seed $seed")
+      assert(spans === ref.map(d => d._1 -> d._2._2), s"dup spans, seed $seed")
     }
   }
 

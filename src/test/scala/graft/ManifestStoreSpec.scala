@@ -4,18 +4,21 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{IndexCommit, ManifestStore}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
-/** Contract spec for the versioned-manifest store (round-12: the
-  * object-store-honest commit path [[graft.store.IndexCommit]]'s
-  * scaladoc points at). The protocol claims four things IndexCommit
-  * cannot give, and each gets a direct test:
+import graft.store.ManifestStore
+
+/** Contract spec for the versioned-manifest store, the one commit
+  * protocol of every maintained table and ANN index. Its claims each
+  * get a direct test:
   *
   *  - NO mid-swap window: a scan resolved BEFORE a commit collects the
   *    identical rows AFTER it — published data never moves;
   *  - crash-atomicity with NO healing protocol at all: a pre-commit
   *    crash leaves readers on the old version (orphan segment
-  *    invisible), a post-commit crash is simply durable;
+  *    invisible), a post-commit crash is simply durable — for random
+  *    op mixes over two tables too (the seeded kill property);
   *  - TIME TRAVEL: every retained version stays readable;
   *  - MANIFEST-LEVEL pruning: a parts-filtered read scans only the
   *    named partitions' leaf dirs (asserted on `inputFiles`).
@@ -93,8 +96,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     // the commit landed (current reader sees it)...
     assert(contents(ManifestStore.read(spark, root)).size === 80)
     // ...and the in-flight scan still collects exactly the old snapshot
-    // — the guarantee IndexCommit's apply-phase directory swaps cannot
-    // give a scan that resolved before the marker
+    // — nothing it resolved was moved or deleted by the commit
     assert(contents(inflight) === contents(base))
   }
 
@@ -185,11 +187,11 @@ class ManifestStoreSpec extends AnyFunSuite {
     ManifestStore.create(spark, root, rows(0 until 8, "a"), "part")
     // model a crashed writer: a lease file nobody will release,
     // backdated past WriterLeaseMs so it is steal-eligible
-    val lock = java.nio.file.Paths.get(root, IndexCommit.WriterLockName)
+    val lock = java.nio.file.Paths.get(root, ManifestStore.WriterLockName)
     java.nio.file.Files.write(lock, "dead-writer".getBytes("UTF-8"))
     java.nio.file.Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - IndexCommit.WriterLeaseMs - 60000))
+        System.currentTimeMillis() - ManifestStore.WriterLeaseMs - 60000))
     ManifestStore.upsertPartitions(spark, root, rows(8 until 12, "b"), "part")
     assert(contents(ManifestStore.read(spark, root)).size === 12)
     assert(!java.nio.file.Files.exists(lock)) // released by the thief
@@ -198,10 +200,10 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("a live lease blocks a second writer loudly past the wait bound") {
     val root = tempDir("mf-lease-busy")
     ManifestStore.create(spark, root, rows(0 until 8, "a"), "part")
-    val lock = java.nio.file.Paths.get(root, IndexCommit.WriterLockName)
+    val lock = java.nio.file.Paths.get(root, ManifestStore.WriterLockName)
     java.nio.file.Files.write(lock, "live-writer".getBytes("UTF-8"))
-    val oldWait = IndexCommit.WriterWaitMs
-    IndexCommit.WriterWaitMs = 250
+    val oldWait = ManifestStore.WriterWaitMs
+    ManifestStore.WriterWaitMs = 250
     try {
       val e = intercept[IllegalStateException] {
         ManifestStore.upsertPartitions(spark, root,
@@ -209,7 +211,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("busy"))
     } finally {
-      IndexCommit.WriterWaitMs = oldWait
+      ManifestStore.WriterWaitMs = oldWait
       java.nio.file.Files.deleteIfExists(lock)
     }
   }
@@ -229,6 +231,162 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(contents(ManifestStore.read(spark, root)) === contents(
       rows(0 until 20, "a").unionByName(rows(20 until 30, "b"))
         .unionByName(rows(30 until 40, "c"))))
+  }
+
+  test("a NonFatal failure in the plan closure releases the writer " +
+      "lease at once") {
+    val root = tempDir("mf-fail-release")
+    ManifestStore.create(spark, root, rows(0 until 8, "a"), "part")
+    val e = intercept[RuntimeException] {
+      ManifestStore.commitTables(spark, root) {
+        throw new RuntimeException("transient")
+      }
+    }
+    assert(e.getMessage === "transient")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, ManifestStore.WriterLockName)))
+    // a second writer with a 250 ms wait bound commits: it never waits
+    // out the failed writer's lease term
+    val oldWait = ManifestStore.WriterWaitMs
+    ManifestStore.WriterWaitMs = 250
+    try ManifestStore.upsertPartitions(spark, root, rows(8 until 12, "b"),
+      "part")
+    finally ManifestStore.WriterWaitMs = oldWait
+    assert(ManifestStore.currentVersion(spark, root) === Some(2L))
+    assert(contents(ManifestStore.read(spark, root)).size === 12)
+  }
+
+  /** One random commit of the kill property: an optional op on the
+    * keyed table `p` and an optional Append to the append-only `a`. */
+  private case class KillStep(op: String, pRows: List[(Long, Int, String)],
+      aRows: List[(Long, Int, String)], killAt: String)
+
+  private def killSteps(n: Int, seed: Long): List[KillStep] = {
+    val row = for {
+      id <- Gen.choose(0L, 15L)
+      part <- Gen.choose(0, 3)
+      tag <- Gen.oneOf("x", "y", "z")
+    } yield (id, part, s"$tag$id")
+    val step = for {
+      op <- Gen.oneOf("upsert", "upsertById", "replace", "deleteKeys",
+        "none")
+      nP <- Gen.choose(1, 4)
+      pRows <- Gen.listOfN(nP, row)
+      nA <- Gen.choose(0, 3)
+      aRows <- Gen.listOfN(nA, row)
+      killAt <- Gen.oneOf("staged", "committed", "none")
+    } yield KillStep(op, pRows, aRows, killAt)
+    Gen.listOfN(n, step).pureApply(Gen.Parameters.default, Seed(seed))
+  }
+
+  test("random two-table commits killed mid-commit leave old or new " +
+      "state") {
+    // killed at "staged": readers see exactly the old state; killed at
+    // "committed": exactly the modelled new one; the next commit lands
+    // on top of that state
+    import spark.implicits._
+    type R = (Long, Int, String)
+    val root = tempDir("mf-kill-property")
+    val p0 = (0 until 12).map(i => (i.toLong, i % 4, s"p$i")).toList
+    ManifestStore.createTables(spark, root, Seq(
+      (ManifestStore.TableDef("p", "part"), p0.toDF("id", "part", "v")),
+      (ManifestStore.TableDef("a", ""), Seq((0L, 0, "a0"))
+        .toDF("id", "part", "v"))))
+    def read(t: String): List[R] = ManifestStore.readTable(spark, root, t)
+      .select("id", "part", "v").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toList.sorted
+    // the in-memory model of each op, over the touched partitions only
+    def applyP(live: List[R], st: KillStep): List[R] = {
+      val keys = st.pRows.map(_._2).toSet
+      st.op match {
+        case "upsert" => live ++ st.pRows
+        case "upsertById" =>
+          val ids = st.pRows.map(_._1).toSet
+          live.filterNot(r => keys(r._2) && ids(r._1)) ++ st.pRows
+        case "replace" => live.filterNot(r => keys(r._2)) ++ st.pRows
+        case "deleteKeys" => live.filterNot(r => keys(r._2))
+        case "none" => live
+      }
+    }
+    var model = (p0.sorted, List[R]((0L, 0, "a0")))
+    var version = 1L
+    var kills = Map("staged" -> 0, "committed" -> 0)
+    val t0 = System.nanoTime()
+    killSteps(24, seed = 20261018L).zipWithIndex.foreach { case (st, i) =>
+      val pDf = st.pRows.toDF("id", "part", "v")
+      val ops = (st.op match {
+        case "upsert" => Some(ManifestStore.Upsert("p", pDf))
+        case "upsertById" =>
+          Some(ManifestStore.Upsert("p", pDf, idCol = Some("id")))
+        case "replace" => Some(ManifestStore.Replace("p", pDf))
+        case "deleteKeys" => Some(ManifestStore.DeleteKeys("p",
+          st.pRows.map(_._2.toString).distinct))
+        case _ => None
+      }).toSeq ++ (if (st.aRows.isEmpty) Nil
+        else Seq(ManifestStore.Append("a", st.aRows.toDF("id", "part", "v"))))
+      ManifestStore.killPoint = ev =>
+        if (ev == st.killAt) throw new RuntimeException(s"KILLED@$ev")
+      val killed =
+        try { ManifestStore.commitTables(spark, root)(ops); None }
+        catch {
+          case e: RuntimeException if e.getMessage.startsWith("KILLED@") =>
+            Some(st.killAt)
+        } finally ManifestStore.killPoint = _ => ()
+      val keys = st.pRows.map(_._2).toSet
+      val commits = st.aRows.nonEmpty || (st.op match {
+        case "none" => false
+        case "deleteKeys" => model._1.exists(r => keys(r._2))
+        case _ => true
+      })
+      if (killed.contains("staged")) {
+        // readers keep exactly the old version
+        assert(ManifestStore.currentVersion(spark, root) === Some(version),
+          s"step $i: $st")
+      } else {
+        model = (applyP(model._1, st).sorted, (model._2 ++ st.aRows).sorted)
+        if (commits) version += 1
+        assert(ManifestStore.currentVersion(spark, root) === Some(version),
+          s"step $i: $st")
+      }
+      assert(killed.isEmpty || commits, s"step $i: a no-op commit was killed")
+      killed.foreach(k => kills += k -> (kills(k) + 1))
+      // the next step's commit lands on top of exactly this state
+      assert((read("p"), read("a")) === model, s"step $i: $st")
+    }
+    assert(kills("staged") >= 3 && kills("committed") >= 3,
+      s"property exercised too few kills: $kills")
+    assert((System.nanoTime() - t0) / 1e9 < 60.0,
+      "the kill property must stay inside 60 s")
+  }
+
+  test("an empty arriving batch commits nothing on all three index " +
+      "facades") {
+    import graft.operators.Similarity
+    val emb = Tables.load(spark, sf, "embeddings")
+    val base = emb.filter(col("vec_id") % 10 =!= 3)
+    val none = emb.filter(col("vec_id") < 0)
+    val cents = Similarity.collectCentroids(
+      Similarity.labelCentroids(spark, sf), "label")
+    val cb = Similarity.pqCodebooks(spark, sf)
+    val lsh = tempDir("mf-empty-lsh")
+    Similarity.buildLshIndex(spark, base, lsh)
+    val ivf = tempDir("mf-empty-ivf")
+    Similarity.buildIvfIndex(spark, ivf, base.select(col("vec_id"),
+      col("embedding"),
+      Similarity.argmaxOver(cents).getField("cluster").as("cell")))
+    val pq = tempDir("mf-empty-pq")
+    Similarity.buildIvfPqIndex(spark, base, cents, cb, pq)
+    val before = Seq(lsh, ivf, pq).map(inventory)
+    assert(Similarity.maintainLshIndex(spark, lsh, none,
+      upsertById = true) === Seq.empty)
+    assert(Similarity.maintainIvfIndex(spark, ivf, none, cents,
+      upsertById = true) === Seq.empty)
+    assert(Similarity.maintainIvfPqIndex(spark, pq, none, cents, cb)
+      === Seq.empty)
+    Seq(lsh, ivf, pq).foreach(r =>
+      assert(ManifestStore.currentVersion(spark, r) === Some(1L), r))
+    assert(Seq(lsh, ivf, pq).map(inventory) === before,
+      "an empty batch must leave every store byte-identical")
   }
 
   test("manifest-level pruning: only the named partitions' dirs scan") {
@@ -330,12 +488,19 @@ class ManifestStoreSpec extends AnyFunSuite {
       "BOTH tables old; after, both new") {
     import spark.implicits._
     val root = tempDir("mf-multi-atomic")
-    twoTableStore(root)
+    // the postings key (`bb`) kept in the data files, so an Upsert can
+    // read its live partition back and merge it
+    val postings = (0 until 24)
+      .map(i => (i.toLong, i % 3, i % 2, s"${i % 3}_${i % 2}"))
+      .toDF("vec_id", "band", "bucket", "bb")
+    val vectors = (0 until 8).map(i => (i.toLong, Seq.fill(4)(i.toFloat)))
+      .toDF("vec_id", "embedding")
+    ManifestStore.createTables(spark, root, Seq(
+      (ManifestStore.TableDef("postings", "bb"), postings),
+      (ManifestStore.TableDef("vectors", ""), vectors)))
     def batchOps() = Seq(
       ManifestStore.Upsert("postings",
-        Seq((100L, 0, 0, "0_0")).toDF("vec_id", "band", "bucket", "bb"),
-        rekey = Some(df => df.withColumn("bb",
-          concat(col("band"), lit("_"), col("bucket"))))),
+        Seq((100L, 0, 0, "0_0")).toDF("vec_id", "band", "bucket", "bb")),
       ManifestStore.Append("vectors",
         Seq((100L, Seq.fill(4)(9f))).toDF("vec_id", "embedding")))
     ManifestStore.killPoint = p =>
@@ -378,17 +543,29 @@ class ManifestStoreSpec extends AnyFunSuite {
         Seq(ManifestStore.Append("nope", pdf)))
     }
     assert(e3.getMessage.contains("no table"))
+    // a layout-only key cannot be restored on read-back: the read-merge
+    // ops refuse a live partition of such a table, loudly and by name
+    val e4 = intercept[IllegalArgumentException] {
+      ManifestStore.commitTables(spark, root)(
+        Seq(ManifestStore.Upsert("postings", pdf)))
+    }
+    assert(e4.getMessage.contains("layout only"))
+    val e5 = intercept[IllegalArgumentException] {
+      ManifestStore.commitTables(spark, root)(
+        Seq(ManifestStore.Delete("postings", col("vec_id") === 1L)))
+    }
+    assert(e5.getMessage.contains("layout only"))
+    assert(ManifestStore.currentVersion(spark, root) === Some(1L))
   }
 
-  test("lshCompactManifest: replayed batch is a content no-op under " +
-      "upsertById, across BOTH tables") {
+  test("maintainLshIndex: a replayed batch is a no-op under upsertById") {
     val emb = Tables.load(spark, TestSpark.sf, "embeddings")
     val base = emb.filter(col("vec_id") % 10 =!= 3)
     val arriving = emb.filter(col("vec_id") % 10 === 3)
     val root = tempDir("mf-lsh-replay")
-    graft.operators.Similarity.writeLshIndexManifest(spark, base, root)
+    graft.operators.Similarity.buildLshIndex(spark, base, root)
     val t1 = graft.operators.Similarity
-      .lshCompactManifest(spark, root, arriving, upsertById = true)
+      .maintainLshIndex(spark, root, arriving, upsertById = true)
     assert(t1.nonEmpty)
     val postings1 = contents3(ManifestStore
       .readTable(spark, root, "postings"))
@@ -397,7 +574,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     // replay the SAME batch — the anti-join inside the lease-guarded
     // planning closure drops every row; nothing commits
     val t2 = graft.operators.Similarity
-      .lshCompactManifest(spark, root, arriving, upsertById = true)
+      .maintainLshIndex(spark, root, arriving, upsertById = true)
     assert(t2.isEmpty)
     assert(contents3(ManifestStore.readTable(spark, root, "postings"))
       === postings1)
@@ -864,6 +1041,10 @@ class ManifestStoreSpec extends AnyFunSuite {
       assert(r.getLong(1) === r.getLong(0) + graft.operators.Dedup.PlantOffset)
       assert(r.getBoolean(3) && r.getBoolean(4))
     }
+    val tmp = new java.io.File(
+      System.getProperty("java.io.tmpdir")).listFiles()
+    assert(tmp == null || !tmp.exists(_.getName.startsWith("graft_ivfmfs_")),
+      "maintenance stream lane must reap its scratch dirs")
   }
 
   test("streamed IVF-PQ manifest maintenance: per-micro-batch commits " +
@@ -888,12 +1069,9 @@ class ManifestStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("default-protocol facades: the library default IS the manifest " +
-      "store, and concurrent default-path maintenance serializes to " +
-      "the sequential result") {
+  test("concurrent maintainLshIndex calls serialize to the sequential " +
+      "result") {
     import graft.operators.Similarity
-    import graft.store.IndexProtocol
-    assert(IndexProtocol.Default === IndexProtocol.Manifest)
     val emb = Tables.load(spark, TestSpark.sf, "embeddings")
     val base = emb.filter(col("vec_id") % 10 =!= 3)
     val b1 = emb.filter(col("vec_id") % 20 === 3)
@@ -903,18 +1081,18 @@ class ManifestStoreSpec extends AnyFunSuite {
       contents3(ManifestStore.readTable(spark, root, "postings")),
       ManifestStore.readTable(spark, root, "vectors")
         .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq)
-    // sequential reference through the SAME default facades
+    // sequential reference through the SAME facades
     val seqRoot = tempDir("mf-facade-seq")
     Similarity.buildLshIndex(spark, base, seqRoot)
-    // the default facade laid out a manifest store, not a hive tree
+    // the facade laid out a manifest store
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(seqRoot, "_manifests")))
     Similarity.maintainLshIndex(spark, seqRoot, b1)
     Similarity.maintainLshIndex(spark, seqRoot, b2)
-    // concurrent maintenance on the default path: the writer lease
-    // serializes the two disjoint batches; both land, content equals
-    // the sequential run (the IndexCommitSpec serialization guarantee,
-    // re-pinned on the library default)
+    // concurrent maintenance: the writer lease serializes the two
+    // disjoint batches (the double-fired-maintenance picture: retry +
+    // zombie driver); both land, no posting or vector row is lost or
+    // duplicated, and the content equals the sequential run
     val conRoot = tempDir("mf-facade-con")
     Similarity.buildLshIndex(spark, base, conRoot)
     import scala.concurrent.{Await, Future}
@@ -927,14 +1105,35 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(snapshot(conRoot) === snapshot(seqRoot))
   }
 
-  test("ivfPqCompactManifestPlanted: the commit protocol changes no " +
-      "row — manifest gate equals the rename gate's relation") {
-    val rename = graft.operators.Similarity
-      .ivfPqCompactPlanted(spark, sf).collect().toSeq
-    val manifest = graft.operators.Similarity
-      .ivfPqCompactManifestPlanted(spark, sf).collect().toSeq
-    assert(manifest === rename)
-    assert(manifest.nonEmpty)
+  test("ivfPqCompactManifestPlanted equals a from-scratch rebuild's probe") {
+    // the oracle replays the IVF-PQ math over the planted corpus; a
+    // from-scratch index of that corpus, probed through the same ADC
+    // lane, is its in-Spark rendering
+    import graft.operators.Similarity
+    import spark.implicits._
+    def tuples(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3),
+        r.getInt(4))).toSeq
+    val gate = tuples(Similarity.ivfPqCompactManifestPlanted(spark, sf))
+    val emb = Tables.load(spark, sf, "embeddings")
+    val planted = emb.select($"vec_id", $"embedding").unionByName(
+      emb.filter($"vec_id" < 5)
+        .select($"vec_id" + graft.operators.Dedup.PlantOffset, $"embedding")
+        .toDF("vec_id", "embedding"))
+    val cents = Similarity.collectCentroids(
+      Similarity.labelCentroids(spark, sf), "label")
+    val cb = Similarity.pqCodebooks(spark, sf)
+    val root = tempDir("mf-pq-rebuild")
+    Similarity.buildIvfPqIndex(spark, planted, cents, cb, root)
+    val queries = emb.filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
+    val rebuilt = tuples(Similarity.probeIvfPqIndex(spark, sf, root,
+      queries, 10, 3, model = Some((cents, cb))))
+    assert(gate === rebuilt,
+      "maintenance must be row-for-row equivalent to a full rebuild")
+    assert(gate.map(_._1).distinct === Seq(0L, 1L, 2L, 3L, 4L))
+    assert(gate.groupBy(_._1).values.forall(_.map(_._5).sorted == (1 to 10)),
+      "each query must carry a dense rank 1..10")
   }
 
   test("segment column stats: footer-harvested min/max are exact, " +
@@ -1473,7 +1672,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   }
 
   /** Recursive (relative path → (length, content hash)) inventory —
-    * the IndexCommitSpec discipline for byte-level immutability. */
+    * byte-level immutability checks. */
   private def inventory(root: String): Map[String, (Long, Long)] = {
     val base = java.nio.file.Paths.get(root)
     if (!java.nio.file.Files.exists(base)) return Map.empty

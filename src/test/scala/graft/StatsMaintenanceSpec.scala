@@ -10,9 +10,9 @@ import graft.models.Catalog
   * proves the dual hazard — catalog stats DO NOT follow the data, so a
   * lifecycle that rewrites partitions leaves the CBO planning on the
   * pre-mutation cardinalities — and pins the repo's closing of it:
-  * [[Catalog.refreshStatsAfterMutation]], called by the lifecycle
-  * operators ([[graft.operators.Similarity.ivfCompact]]'s `statsTable`
-  * hook), restores exactly the decision fresh-stats planning makes.
+  * [[Catalog.refreshStatsAfterMutation]], called after a mutation of a
+  * catalog-registered table, restores exactly the decision fresh-stats
+  * planning makes.
   *
   * AQE stays off for the planning assertions (the CboSpec discipline):
   * runtime re-planning would mask the compile-time decision, and at
@@ -54,7 +54,7 @@ class StatsMaintenanceSpec extends AnyFunSuite {
         .queryExecution.sparkPlan.toString
       // lifecycle mutation through the store path: the table grows ~25x
       // (the compaction/incremental-merge shape — the catalog is not in
-      // the write path, exactly like ivfCompact writing cell= dirs)
+      // the write path, exactly like a rewrite of cell= dirs)
       (1 to 25).map(i => docs.withColumn("doc_id",
           col("doc_id") + lit(i * 1000000L)))
         .reduce(_.unionByName(_))
@@ -101,44 +101,6 @@ class StatsMaintenanceSpec extends AnyFunSuite {
         } finally spark.sql("DROP TABLE IF EXISTS stats_docs_fresh")
       }
     } finally spark.sql("DROP TABLE IF EXISTS stats_docs")
-  }
-
-  test("ivfCompact's statsTable hook re-ANALYZEs the index table: the " +
-      "catalog row count tracks the post-compaction reality") {
-    import graft.operators.Similarity
-    val s = spark
-    val emb = Tables.load(s, TestSpark.sf, "embeddings")
-    val base = emb.filter(col("vec_id") % 10 =!= 3)
-    val arriving = emb.filter(col("vec_id") % 10 === 3)
-    val trained = Similarity.collectCentroids(
-      Similarity.kmeansIterate(s, TestSpark.sf, 1), "cluster")
-    val scratch = Similarity.scratchDir(s, "graft-statsc-")
-    s.sql("DROP TABLE IF EXISTS stats_ivf")
-    try {
-      // catalog-registered index store: same hive cell= layout as the
-      // lifecycle gates, with the table tracking the path
-      base.select(col("vec_id"), col("embedding"),
-        Similarity.argmaxOver(trained).getField("cluster").as("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .option("path", s"$scratch/vectors").saveAsTable("stats_ivf")
-      s.sql("ANALYZE TABLE stats_ivf COMPUTE STATISTICS")
-      val nBase = base.count()
-      def catalogRowCount: Option[BigInt] = {
-        val t = s.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier("stats_ivf"))
-        t.stats.flatMap(_.rowCount)
-      }
-      assert(catalogRowCount.contains(BigInt(nBase)))
-      Similarity.ivfCompact(s, s"$scratch/vectors", arriving, trained,
-        statsTable = Some("stats_ivf"))
-      // the hook must leave the catalog describing the merged table
-      assert(catalogRowCount.contains(BigInt(nBase + arriving.count())),
-        "post-compaction stats must describe the compacted table")
-    } finally {
-      s.sql("DROP TABLE IF EXISTS stats_ivf")
-      Similarity.deleteScratch(s, scratch)
-    }
   }
 
   test("refreshStatsAfterMutation quotes identifiers: a reserved-word " +

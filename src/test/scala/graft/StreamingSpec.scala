@@ -655,27 +655,6 @@ class StreamingSpec extends AnyFunSuite {
       "indexed stream lane must reap its scratch dirs")
   }
 
-  test("streamed IVF index maintenance: planted copies reach the stored " +
-      "index only through micro-batch merges, probe equals rebuild") {
-    val rows = graft.streaming.VectorStream
-      .runIvfCompactOnce(spark, TestSpark.sf).collect()
-    assert(rows.length === 5)
-    rows.zipWithIndex.foreach { case (r, i) =>
-      assert(r.getLong(0) === i.toLong)
-      assert(r.getLong(1) === i.toLong + graft.operators.Dedup.PlantOffset,
-        "rank-1 hit must be the stream-merged planted copy")
-      assert(r.getInt(2) === 1)
-      assert(r.getBoolean(3), "planted copy must probe as exact")
-      assert(r.getBoolean(4),
-        "streamed maintenance top-k must equal the from-scratch rebuild")
-    }
-    val tmp = new java.io.File(
-      System.getProperty("java.io.tmpdir")).listFiles()
-    assert(tmp == null ||
-      !tmp.exists(_.getName.startsWith("graft_ivfcs_")),
-      "maintenance stream lane must reap its scratch dirs")
-  }
-
   test("streamed IVF maintenance survives an EMPTY micro-batch: an " +
       "empty drop file merges as a byte-identical no-op and the " +
       "stream goes on to land the real batch") {
@@ -687,12 +666,11 @@ class StreamingSpec extends AnyFunSuite {
       Similarity.kmeansIterate(spark, TestSpark.sf, 1), "cluster")
     val idxDir = java.nio.file.Files
       .createTempDirectory("graft_ivfce_idx_").toString
-    emb.filter(col("vec_id") % 10 =!= 3)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.argmaxOver(trained).getField("cluster").as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$idxDir/vectors")
+    val root = s"$idxDir/store"
+    Similarity.buildIvfIndex(spark, root,
+      emb.filter(col("vec_id") % 10 =!= 3)
+        .select(col("vec_id"), col("embedding"),
+          Similarity.argmaxOver(trained).getField("cluster").as("cell")))
     val dropDir = java.nio.file.Files
       .createTempDirectory("graft_ivfce_drop_").toString
     // drop 1: schema-correct but ZERO rows — the legitimate trigger
@@ -705,7 +683,7 @@ class StreamingSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(dropDir)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_ivfce_ckpt_").toString
-    val before = spark.read.parquet(s"$idxDir/vectors").count()
+    val before = graft.store.ManifestStore.read(spark, root).count()
     val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
     val q = graft.streaming.VectorStream
       .readVectorBatches(spark, dropDir)
@@ -713,18 +691,19 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, _: Long) =>
-        touched ++= Similarity.ivfCompact(spark, s"$idxDir/vectors", b,
+        touched ++= Similarity.maintainIvfIndex(spark, root, b,
           trained, upsertById = true)
         ()
       }
       .start()
     try q.awaitTermination() finally q.stop()
-    // the empty micro-batch contributed no touched cells and no crash
-    // (pre-fix lshCompact's sibling threw on empty.reduce); the real
-    // batch landed exactly once
+    // the empty micro-batch contributed no touched cells, no crash and
+    // no version; the real batch landed exactly once, as version 2
     val expected = emb.filter(col("vec_id") % 10 === 3).count()
-    assert(spark.read.parquet(s"$idxDir/vectors").count()
+    assert(graft.store.ManifestStore.read(spark, root).count()
       === before + expected)
+    assert(graft.store.ManifestStore.currentVersion(spark, root)
+      === Some(2L))
     assert(touched.nonEmpty, "the real batch must have touched cells")
     Seq(idxDir, dropDir, ckpt).foreach(d =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
