@@ -1105,6 +1105,183 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(snapshot(conRoot) === snapshot(seqRoot))
   }
 
+  /** Tiny deterministic 8-dim corpus for the facade-level index specs. */
+  private def vecs(ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i, (0 until 8).map(j => math.sin(i * 31 + j * 7).toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+
+  /** Postings, vector ids and probe answers of an LSH index. */
+  private def lshState(root: String) = {
+    val queries = vecs(Seq(1L, 4L, 13L))
+      .withColumnRenamed("vec_id", "q_id")
+      .withColumnRenamed("embedding", "q_emb")
+    (contents3(ManifestStore.readTable(spark, root, "postings")),
+      ManifestStore.readTable(spark, root, "vectors")
+        .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq,
+      graft.operators.Similarity.probeLshIndex(spark, root, queries, k = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getInt(3))).toSeq)
+  }
+
+  private def killedAt[T](point: String)(f: => T): Unit = {
+    ManifestStore.killPoint = p =>
+      if (p == point) throw new RuntimeException(s"kill@$point")
+    try {
+      val e = intercept[RuntimeException](f)
+      assert(e.getMessage === s"kill@$point")
+    } finally ManifestStore.killPoint = _ => ()
+  }
+
+  test("maintainLshIndex killed before publish: old index intact, a rerun " +
+      "commits") {
+    import graft.operators.Similarity
+    val base = vecs(0L until 12L)
+    val arriving = vecs(12L until 16L)
+    val root = tempDir("mf-lsh-kill-staged")
+    val ref = tempDir("mf-lsh-kill-staged-ref")
+    Similarity.buildLshIndex(spark, base, root)
+    Similarity.buildLshIndex(spark, base, ref)
+    val before = lshState(root)
+    val manifests = inventory(s"$root/${ManifestStore.ManifestDirName}")
+    killedAt("staged") {
+      Similarity.maintainLshIndex(spark, root, arriving)
+    }
+    // readers keep exactly the old version: not one manifest byte moved,
+    // and the lease was released for the rerun
+    assert(ManifestStore.currentVersion(spark, root) === Some(1L))
+    assert(inventory(s"$root/${ManifestStore.ManifestDirName}") === manifests)
+    assert(lshState(root) === before)
+    Similarity.maintainLshIndex(spark, root, arriving)
+    Similarity.maintainLshIndex(spark, ref, arriving)
+    assert(ManifestStore.currentVersion(spark, root) === Some(2L))
+    assert(lshState(root) === lshState(ref),
+      "the rerun must equal a clean run over an unkilled index")
+  }
+
+  test("maintainLshIndex killed after publish is durable and equals a clean " +
+      "run") {
+    import graft.operators.Similarity
+    val base = vecs(0L until 12L)
+    val arriving = vecs(12L until 16L)
+    val root = tempDir("mf-lsh-kill-committed")
+    val ref = tempDir("mf-lsh-kill-committed-ref")
+    Similarity.buildLshIndex(spark, base, root)
+    Similarity.buildLshIndex(spark, base, ref)
+    killedAt("committed") {
+      Similarity.maintainLshIndex(spark, root, arriving)
+    }
+    Similarity.maintainLshIndex(spark, ref, arriving)
+    // no recovery step: the first reader already sees the new version
+    assert(ManifestStore.currentVersion(spark, root) === Some(2L))
+    assert(lshState(root) === lshState(ref))
+    assert(lshState(root)._2 === (0L until 16L))
+  }
+
+  test("maintainIvfIndex killed after publish is durable and equals a clean " +
+      "run") {
+    import graft.operators.Similarity
+    import spark.implicits._
+    // 2-cell world: centroids on the axes
+    val trained = Array((0, Array(1.0, 0.0)), (1, Array(0.0, 1.0)))
+    val base = Seq((10L, Seq(0.9f, 0.1f), 0), (11L, Seq(0.1f, 0.9f), 1))
+      .toDF("vec_id", "embedding", "cell")
+    val arriving = Seq((12L, Seq(0.2f, 0.8f)), (13L, Seq(0.7f, 0.3f)))
+      .toDF("vec_id", "embedding")
+    val root = tempDir("mf-ivf-kill-committed")
+    val ref = tempDir("mf-ivf-kill-committed-ref")
+    Similarity.buildIvfIndex(spark, root, base)
+    Similarity.buildIvfIndex(spark, ref, base)
+    killedAt("committed") {
+      Similarity.maintainIvfIndex(spark, root, arriving, trained)
+    }
+    Similarity.maintainIvfIndex(spark, ref, arriving, trained)
+    def cells(d: String) = ManifestStore.read(spark, d)
+      .select("vec_id", "cell").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).sortBy(identity).toSeq
+    assert(ManifestStore.currentVersion(spark, root) === Some(2L))
+    assert(cells(root) === cells(ref))
+    assert(cells(root) === Seq((10L, 0), (11L, 1), (12L, 1), (13L, 0)))
+  }
+
+  test("maintainLshIndex on a busy lease fails loudly, then commits once " +
+      "freed") {
+    import graft.operators.Similarity
+    val root = tempDir("mf-lsh-lease-busy")
+    Similarity.buildLshIndex(spark, vecs(0L until 12L), root)
+    val before = lshState(root)
+    // a live writer's lease: fresh, so never steal-eligible
+    val lock = java.nio.file.Paths.get(root, ManifestStore.WriterLockName)
+    java.nio.file.Files.write(lock, "live-writer".getBytes("UTF-8"))
+    val oldWait = ManifestStore.WriterWaitMs
+    ManifestStore.WriterWaitMs = 250
+    try {
+      val e = intercept[IllegalStateException] {
+        Similarity.maintainLshIndex(spark, root, vecs(12L until 16L))
+      }
+      assert(e.getMessage.contains(
+        s"lock ${ManifestStore.WriterLockName} busy past"))
+      assert(ManifestStore.currentVersion(spark, root) === Some(1L))
+      assert(lshState(root) === before)
+      // the live writer finishes and releases: the next call proceeds
+      // inside the same short wait bound
+      java.nio.file.Files.delete(lock)
+      Similarity.maintainLshIndex(spark, root, vecs(12L until 16L))
+    } finally {
+      ManifestStore.WriterWaitMs = oldWait
+      java.nio.file.Files.deleteIfExists(lock)
+    }
+    assert(ManifestStore.currentVersion(spark, root) === Some(2L))
+    assert(lshState(root)._2 === (0L until 16L))
+  }
+
+  test("index facades build a manifest store at v1; each maintain adds a " +
+      "version") {
+    import graft.operators.Similarity
+    // the geometry of the SimilaritySpec IVF-PQ spec: two half-space
+    // cells, constant-c codebook entries
+    val cents = Array(
+      (0, Array.tabulate(64)(i => if (i < 32) 1.0 else 0.0)),
+      (1, Array.tabulate(64)(i => if (i < 32) 0.0 else 1.0)))
+    val cb = Array.fill(Similarity.PqM)(
+      Array.tabulate(Similarity.PqK)(c =>
+        Array.fill(Similarity.PqSub)(c.toDouble)))
+    def wide(ids: Seq[Long]): DataFrame = {
+      import spark.implicits._
+      ids.map(i => (i, (0 until 64).map(j =>
+        ((i * 7 + j * 3) % Similarity.PqK).toFloat)))
+        .toDF("vec_id", "embedding")
+    }
+    val lsh = tempDir("mf-facade-lsh")
+    val ivf = tempDir("mf-facade-ivf")
+    val pq = tempDir("mf-facade-pq")
+    Similarity.buildLshIndex(spark, vecs(0L until 12L), lsh)
+    Similarity.buildIvfIndex(spark, ivf, wide(0L until 12L).select(
+      col("vec_id"), col("embedding"),
+      Similarity.argmaxOver(cents).getField("cluster").as("cell")))
+    Similarity.buildIvfPqIndex(spark, wide(0L until 12L), cents, cb, pq)
+    val tables = Map(lsh -> Set("postings", "vectors"),
+      ivf -> Set("t"), pq -> Set("codes"))
+    tables.foreach { case (r, ts) =>
+      assert(java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(r, ManifestStore.ManifestDirName)), r)
+      assert(ManifestStore.currentVersion(spark, r) === Some(1L), r)
+      ts.foreach(t =>
+        assert(ManifestStore.readTable(spark, r, t).count() > 0, s"$r/$t"))
+    }
+    assert(Similarity.maintainLshIndex(spark, lsh, vecs(12L until 14L))
+      .nonEmpty)
+    assert(Similarity.maintainIvfIndex(spark, ivf, wide(12L until 14L), cents)
+      .nonEmpty)
+    assert(Similarity.maintainIvfPqIndex(spark, pq, wide(12L until 14L),
+      cents, cb).nonEmpty)
+    tables.keys.foreach(r =>
+      assert(ManifestStore.currentVersion(spark, r) === Some(2L), r))
+    assert(ManifestStore.read(spark, ivf).count() === 14L)
+    assert(ManifestStore.readTable(spark, pq, "codes").count() === 14L)
+  }
+
   test("ivfPqCompactManifestPlanted equals a from-scratch rebuild's probe") {
     // the oracle replays the IVF-PQ math over the planted corpus; a
     // from-scratch index of that corpus, probed through the same ADC

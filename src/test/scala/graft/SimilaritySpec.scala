@@ -632,6 +632,119 @@ class SimilaritySpec extends AnyFunSuite {
       "merged codes must be the full corpus under the frozen codebooks")
   }
 
+  test("maintainLshIndex upsertById: a replay leaves the store byte-identical") {
+    import spark.implicits._
+    val dim = 8
+    def vec(seed: Int): Seq[Float] =
+      (0 until dim).map(i => math.sin(seed * 31 + i * 7).toFloat)
+    val base = (0 until 6).map(i => (i.toLong, vec(i))).toDF("vec_id",
+      "embedding")
+    val arriving = (6 until 9).map(i => (i.toLong, vec(i)))
+      .toDF("vec_id", "embedding")
+    val queries = Seq((100L, vec(1)), (101L, vec(7)))
+      .toDF("q_id", "q_emb")
+    def inventory(root: String): Map[String, Seq[Byte]] = {
+      val base = java.nio.file.Paths.get(root)
+      val out = scala.collection.mutable.Map.empty[String, Seq[Byte]]
+      java.nio.file.Files.walk(base).forEach { p =>
+        if (java.nio.file.Files.isRegularFile(p))
+          out(base.relativize(p).toString) =
+            java.nio.file.Files.readAllBytes(p).toSeq
+      }
+      out.toMap
+    }
+    def probe(root: String) = Similarity.probeLshIndex(spark, root, queries)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
+    def vecIds(root: String) = graft.store.ManifestStore
+      .readTable(spark, root, "vectors").select("vec_id").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    val root = storeRoot("graft_lshu_spec_")
+    Similarity.buildLshIndex(spark, base, root)
+    assert(Similarity.maintainLshIndex(spark, root, arriving,
+      upsertById = true).nonEmpty)
+    val once = inventory(root)
+    val probed = probe(root)
+    // the streaming re-delivery: the exact same batch arrives again
+    assert(Similarity.maintainLshIndex(spark, root, arriving,
+      upsertById = true) === Seq.empty)
+    assert(inventory(root) === once, "a replay must not write a single byte")
+    assert(probe(root) === probed)
+    assert(vecIds(root) === (0L until 9L))
+    // without the flag the hazard is real: the replay duplicates vector
+    // rows, the documented reason the flag exists
+    val dup = storeRoot("graft_lshd_spec_")
+    Similarity.buildLshIndex(spark, base, dup)
+    Similarity.maintainLshIndex(spark, dup, arriving)
+    Similarity.maintainLshIndex(spark, dup, arriving)
+    assert(vecIds(dup).size > vecIds(dup).distinct.size,
+      "without upsertById a replay duplicates")
+  }
+
+  // The three compaction gates below run through their contract names;
+  // each name shares its lane with the `_mf` twin that ManifestStoreSpec
+  // drives through the operator function.
+
+  test("LSH compaction gate: planted copies arriving ONLY via the batch " +
+      "surface at rank 1, and every probe equals the in-memory rebuild") {
+    val got = graft.SparkEntry.queries("ann_lsh_compact")(spark,
+      TestSpark.sf).collect()
+    assert(got.length === 5)
+    got.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getLong(0) === i.toLong)
+      assert(r.getLong(1) === i.toLong + graft.operators.Dedup.PlantOffset,
+        "rank-1 hit must be the batch-arrived planted copy")
+      assert(r.getInt(2) === 1)
+      assert(r.getBoolean(3), "planted copy must probe as exact")
+      assert(r.getBoolean(4), "compacted top-k must equal rebuild top-k")
+    }
+  }
+
+  test("IVF-PQ compaction gate equals a from-scratch rebuild of the " +
+      "planted corpus probed through the identical batch lane") {
+    import spark.implicits._
+    val sf = TestSpark.sf
+    val gate = graft.SparkEntry.queries("ann_ivfpq_compact")(spark, sf)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        r.getDouble(3), r.getInt(4))).toSeq
+    val emb = graft.Tables.load(spark, sf, "embeddings")
+    val planted = emb.select($"vec_id", $"embedding").unionByName(
+      emb.filter($"vec_id" < 5)
+        .select($"vec_id" + graft.operators.Dedup.PlantOffset, $"embedding")
+        .toDF("vec_id", "embedding"))
+    val cents = Similarity.collectCentroids(
+      Similarity.labelCentroids(spark, sf), "label")
+    val cb = Similarity.pqCodebooks(spark, sf)
+    val root = storeRoot("graft_pqc_rebuild_")
+    Similarity.buildIvfPqIndex(spark, planted, cents, cb, root)
+    val queries = emb.filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
+    val rebuilt = Similarity.probeIvfPqIndex(spark, sf, root, queries, 10, 3,
+      model = Some((cents, cb))).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        r.getDouble(3), r.getInt(4))).toSeq
+    assert(gate === rebuilt,
+      "compaction must be row-for-row equivalent to a full rebuild")
+    assert(gate.map(_._1).distinct === Seq(0L, 1L, 2L, 3L, 4L))
+    assert(gate.groupBy(_._1).values.forall(_.map(_._5).sorted == (1 to 10)),
+      "each query must carry a dense rank 1..10")
+  }
+
+  test("IVF compaction gate: planted copies arriving ONLY via the batch " +
+      "surface at rank 1, and every probe equals the from-scratch rebuild") {
+    val got = graft.SparkEntry.queries("ann_ivf_compact")(spark,
+      TestSpark.sf).collect()
+    assert(got.length === 5)
+    got.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getLong(0) === i.toLong)
+      assert(r.getLong(1) === i.toLong + graft.operators.Dedup.PlantOffset,
+        "rank-1 hit must be the batch-arrived planted copy")
+      assert(r.getInt(2) === 1)
+      assert(r.getBoolean(3), "planted copy must probe as exact")
+      assert(r.getBoolean(4), "compacted top-k must equal rebuild top-k")
+    }
+  }
+
   test("cosine: ragged lengths and null elements propagate NULL") {
     import org.apache.spark.sql.functions._
     val df = Seq(

@@ -655,6 +655,29 @@ class StreamingSpec extends AnyFunSuite {
       "indexed stream lane must reap its scratch dirs")
   }
 
+  // through the contract name; ManifestStoreSpec drives the same lane
+  // through VectorStream.runIvfCompactManifestOnce
+  test("streamed IVF index maintenance: planted copies reach the stored " +
+      "index only through micro-batch merges, probe equals rebuild") {
+    val rows = graft.SparkEntry.queries("stream_ivf_compact")(spark,
+      TestSpark.sf).collect()
+    assert(rows.length === 5)
+    rows.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getLong(0) === i.toLong)
+      assert(r.getLong(1) === i.toLong + graft.operators.Dedup.PlantOffset,
+        "rank-1 hit must be the stream-merged planted copy")
+      assert(r.getInt(2) === 1)
+      assert(r.getBoolean(3), "planted copy must probe as exact")
+      assert(r.getBoolean(4),
+        "streamed maintenance top-k must equal the from-scratch rebuild")
+    }
+    val tmp = new java.io.File(
+      System.getProperty("java.io.tmpdir")).listFiles()
+    assert(tmp == null ||
+      !tmp.exists(_.getName.startsWith("graft_ivfmfs_")),
+      "maintenance stream lane must reap its scratch dirs")
+  }
+
   test("streamed IVF maintenance survives an EMPTY micro-batch: an " +
       "empty drop file merges as a byte-identical no-op and the " +
       "stream goes on to land the real batch") {
