@@ -287,12 +287,13 @@ object SparkEntry {
     // cells, ADC ranks 12-bit codes inside them — fully oracle-expressible
     "ann_ivfpq_topk" -> ((s: SparkSession, d: String) =>
       Similarity.ivfPqTopK(s, d)),
-    // materialized IVF-PQ: codes stored cell=-partitioned (no embedding
-    // column in the index), probe partition-pruned — same oracle
+    // stored IVF-PQ: a cell-keyed manifest codes store (no embedding
+    // column in the index), probe reads only the probed cells' entries —
+    // same oracle
     "ann_ivfpq_indexed" -> ((s: SparkSession, d: String) =>
       Similarity.ivfPqIndexed(s, d)),
     // the PQ bulk-retrieval shape: probes as a query RELATION (never
-    // collected), DPP-pruned codes join, column-side ADC — shares the
+    // collected), entry-pruned codes join, column-side ADC — shares the
     // driver-array lane's full math-replay oracle
     "ann_ivfpq_batch" -> ((s: SparkSession, d: String) =>
       Similarity.annIvfPqBatch(s, d)),
@@ -338,8 +339,9 @@ object SparkEntry {
     // plus per-query full-top-k equality with the driver-Seq lane
     "ann_lsh_batch" -> ((s: SparkSession, d: String) =>
       Similarity.annLshBatchPlanted(s, d)),
-    // materialized LSH index lifecycle: (band,bucket)-partitioned
-    // postings, DPP-pruned probe, equality with the in-memory lane
+    // stored LSH index lifecycle: band-keyed manifest postings + vectors,
+    // broadcast (band, bucket) probe join, equality with the in-memory
+    // lane
     "ann_lsh_indexed" -> ((s: SparkSession, d: String) =>
       Similarity.annLshIndexedPlanted(s, d)),
     // incremental LSH index maintenance: arriving batch merged into the
@@ -369,12 +371,13 @@ object SparkEntry {
     // theorem gate: recall@k non-decreasing in nProbe (nested probes)
     "ann_ivf_monotone" -> ((s: SparkSession, d: String) =>
       Similarity.ivfProbeMonotone(s, d)),
-    // full index lifecycle: kmeansIterate-trained centroids -> hive
-    // cell=-partitioned build -> partition-pruned ivfProbeIndexed probes
+    // full index lifecycle: kmeansIterate-trained centroids -> cell-keyed
+    // manifest build -> entry-pruned probeIvfIndex probes of a driver
+    // array
     "ann_ivf_indexed" -> ((s: SparkSession, d: String) =>
       Similarity.ivfIndexedPlanted(s, d)),
     // the bulk-retrieval shape: probes as a query RELATION (never
-    // collected) — distributed cell ranking, DPP-pruned candidate join,
+    // collected) — distributed cell ranking, entry-pruned candidate join,
     // in-plan rank-1 cut; same closed-form contract as ann_ivf_indexed
     "ann_ivf_batch" -> ((s: SparkSession, d: String) =>
       Similarity.annIvfBatchPlanted(s, d)),
@@ -391,8 +394,9 @@ object SparkEntry {
     // manifest commit — no redo log, no healing, no mixed state
     "ann_lsh_compact_mf" -> ((s: SparkSession, d: String) =>
       Similarity.lshCompactManifestPlanted(s, d)),
-    // metadata-filtered index probe: cell pruning + label row-group
-    // pushdown; top-k must be label-pure with the copy at rank 1
+    // metadata-filtered index probe: cell-entry pruning + the label
+    // predicate inside one probe plan; top-k must be label-pure with the
+    // copy at rank 1
     "ann_ivf_filtered" -> ((s: SparkSession, d: String) =>
       Similarity.ivfFilteredPlanted(s, d)),
     // SemDeDup planted gate: cluster-bounded embedding dedup must strip
@@ -435,8 +439,8 @@ object SparkEntry {
     // copies make rank-1 retrieval closed-form
     "stream_ann" -> ((s: SparkSession, d: String) =>
       graft.streaming.VectorStream.runAnnProbeOnce(s, d)),
-    // streaming probes against the stored cell=-partitioned IVF index:
-    // per-trigger cost is the probed partitions, never a corpus scan
+    // streaming probes against the stored cell-keyed IVF index:
+    // per-trigger cost is the probed cells' entries, never a corpus scan
     "stream_ann_indexed" -> ((s: SparkSession, d: String) =>
       graft.streaming.VectorStream.runAnnIndexedOnce(s, d)),
     // streaming index MAINTENANCE: arriving vector drops merge into the

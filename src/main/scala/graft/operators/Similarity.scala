@@ -18,8 +18,9 @@ import graft.functions.Num
   * scan — O(N·d) with a top-k TakeOrdered, no shuffle. The LSH variant
   * buckets vectors by an H-bit hyperplane signature; queries probe only
   * their own bucket (plus Hamming-1 neighbors at query time if recall
-  * demands), turning 100 TB scans into bucket-sized reads when the bucket
-  * table is hive-partitioned by signature.
+  * demands); the stored index ([[buildLshIndex]]) keys its postings by
+  * band, so a probe's candidate join reads `bands` postings entries and
+  * only the candidates reach the exact-cosine rerank.
   */
 object Similarity {
 
@@ -481,8 +482,8 @@ object Similarity {
     *
     * Scale shape: ONE corpus scan computes (cell, codes) as narrow
     * shuffle-free projections; the probed-cell filter rides that scan
-    * (and becomes hive partition PRUNING under [[writeIvfIndex]]'s
-    * `cell=` layout, where codes would be precomputed at build time —
+    * (and becomes manifest-entry pruning under [[buildIvfPqIndex]]'s
+    * cell-keyed store, where codes are precomputed at build time —
     * filter-then-encode here yields the same relation); the ADC ranking
     * never reads the embedding column of a database vector; the top-k is
     * TakeOrderedAndProject. Driver-side state is cells + codebooks —
@@ -553,31 +554,12 @@ object Similarity {
       .limit(k)
   }
 
-  /** The materialized IVF-PQ index lifecycle — build + store + probe as
-    * one contract query, value-checked against the SAME oracle as the
-    * in-memory [[ivfPqTopK]] (the relation must be identical, so the
-    * whole build/store/read chain is semantics-preserving by hash
-    * equality, the ann_ivf_compact discipline):
-    *
-    *  - BUILD: one corpus scan computes (home cell, 4 PQ codes) and
-    *    writes hive `cell=`-partitioned parquet. The embedding column is
-    *    NOT stored — the index payload is 12 bits of code + the id per
-    *    vector, the ~170× memory reduction that lets a billion-vector
-    *    index live on a handful of machines (Jégou et al. '11).
-    *  - PROBE: rank the centroid metadata driver-side, read ONLY the
-    *    `nProbe` probed `cell=` partitions (partition pruning by layout —
-    *    spec-asserted `selectedPartitions == nProbe`), ADC-rank the
-    *    stored codes, top-k. No embedding is touched at probe time.
-    *
-    * The scratch index is deleted before the query returns (the
-    * [[ivfIndexedPlanted]] lifecycle discipline); the returned k-row
-    * relation is collected first — k rows, not corpus. */
   /** IVF-PQ encode projection over ANY (vec_id, embedding) relation
     * under FROZEN centroids + codebooks: (vec_id, home cell, 4 codes)
-    * as one shuffle-free narrow scan — shared by the full builds
-    * ([[writeIvfPqIndexOn]], [[buildIvfPqIndex]]) and the incremental
-    * merge ([[maintainIvfPqIndex]]), so every path encodes
-    * bit-identically by construction. */
+    * as one shuffle-free narrow scan — shared by the full build
+    * ([[buildIvfPqIndex]]) and the incremental merge
+    * ([[maintainIvfPqIndex]]), so every path encodes bit-identically by
+    * construction. */
   private def pqEncodeOn(emb: DataFrame,
       cents: Array[(Int, Array[Double])],
       cb: Array[Array[Array[Double]]]): DataFrame = {
@@ -589,94 +571,14 @@ object Similarity {
         pqBestCodeCols(cb): _*)
   }
 
-  /** [[writeIvfPqIndex]] over an explicit relation and explicit frozen
-    * model state — lets a lifecycle that already collected the model
-    * build without re-aggregating the corpus. */
-  private[graft] def writeIvfPqIndexOn(emb: DataFrame,
-      cents: Array[(Int, Array[Double])],
-      cb: Array[Array[Array[Double]]], indexPath: String): Unit =
-    pqEncodeOn(emb, cents, cb)
-      .transform(graft.plans.Writers.byKeysN(_, cents.length, col("cell"))) // one writer task per cell
-      .write.mode("overwrite").partitionBy("cell")
-      .option("compression", "zstd").parquet(s"$indexPath/codes")
-
-  /** BUILD half: one corpus scan computes (home cell, 4 PQ codes) and
-    * writes hive `cell=`-partitioned parquet at `indexPath/codes`. The
-    * embedding column is NOT stored. */
-  def writeIvfPqIndex(s: SparkSession, dir: String,
-      indexPath: String): Unit =
-    writeIvfPqIndexOn(t(s, dir, "embeddings"),
-      collectCentroids(labelCentroids(s, dir), "label"),
-      pqCodebooks(s, dir), indexPath)
-
-  /** PROBE half: rank the centroid metadata driver-side, read ONLY the
-    * `nProbe` probed `cell=` partitions (partition pruning by layout —
-    * spec-asserted `selectedPartitions == nProbe`), ADC-rank the stored
-    * codes, top-k. No embedding is touched at probe time. */
-  def ivfPqProbeIndexed(s: SparkSession, dir: String, indexPath: String,
-      queryId: Long = 0L, k: Int = 10, nProbe: Int = 3,
-      model: Option[(Array[(Int, Array[Double])],
-        Array[Array[Array[Double]]])] = None): DataFrame = {
-    // model state is frozen per index: a lifecycle that already
-    // collected it passes it through instead of re-aggregating the
-    // corpus (one labelCentroids scan + one codebook collect saved)
-    val (cents, cb) = model.getOrElse(
-      (collectCentroids(labelCentroids(s, dir), "label"),
-        pqCodebooks(s, dir)))
-    val q = t(s, dir, "embeddings").filter(col("vec_id") === queryId)
-      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
-    val probed = pqProbeCells(q, cents, nProbe)
-    s.read.parquet(s"$indexPath/codes")
-      .filter(col("cell").isin(probed: _*) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("cell").cast("int").as("cell"),
-        Num.t6(pqAdcCol(cb, q.map(_.toDouble))).as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Query-RELATION probe of the materialized IVF-PQ index —
-    * [[ivfProbeIndexedBatch]]'s bulk-retrieval shape at the PQ level,
-    * the memory-efficient bulk path at 100 TB (codes are 12 bits per
-    * database vector; only the query side carries full precision).
-    * The probes arrive as a `(q_id, q_emb)` DataFrame and are never
-    * collected: per-query coarse-cell ranking runs as the
-    * [[cellRankingOn]] literal projection against the stored-centroid
-    * metadata, the (q_id, cell) pairs broadcast-hash-join the
-    * `cell=`-partitioned codes index (dynamic partition pruning drives
-    * the scan), and the ADC distance evaluates per candidate with the
-    * query SUBVECTOR as a column — same code-selected
-    * sum-of-squared-L2, same fold order as [[pqAdcCol]]'s literal
-    * form, so the two lanes are bit-identical on the same queries
-    * (spec-pinned). Per-query top-k is a WindowGroupLimit-prunable
-    * rank on (adc_dist asc, vec_id). */
-  def ivfPqProbeIndexedBatch(s: SparkSession, dir: String,
-      indexPath: String, queries: DataFrame, k: Int = 10,
-      nProbe: Int = 3, excludeSelf: Boolean = true,
-      broadcastProbes: Boolean = true,
-      model: Option[(Array[(Int, Array[Double])],
-        Array[Array[Array[Double]]])] = None): DataFrame = {
-    val (centsI, cb) = model.getOrElse(
-      (collectCentroids(labelCentroids(s, dir), "label"),
-        pqCodebooks(s, dir)))
-    val cents = centsI.map { case (cl, v) => (cl.toLong, v) }
-    val probes = pqProbesOf(queries, cents, nProbe)
-    pqAdcRank(s.read.parquet(s"$indexPath/codes"), probes, cb, k,
-      excludeSelf, broadcastProbes)
-  }
-
-  /** The batch lanes' per-query coarse-cell probe relation — a DELEGATE
-    * to [[rankedProbesOf]] (one body, compiler-enforced): the PQ lanes
-    * and the IVF lanes must rank probes identically for the
-    * bit-identity claims their specs pin, so the projection exists
-    * exactly once and this alias only keeps the PQ call sites legible. */
-  private def pqProbesOf(queries: DataFrame,
-      cents: Array[(Long, Array[Double])], nProbe: Int): DataFrame =
-    rankedProbesOf(queries, cents, nProbe)
-
-  /** ADC rank of a codes relation against a probe relation — the body
-    * of [[ivfPqProbeIndexedBatch]], parameterized by the codes SOURCE
-    * (hive-partitioned scan or manifest-pruned snapshot) so the two
-    * storage lanes share one plan shape and one set of semantics. */
+  /** ADC rank of a codes relation against a `(q_id, q_emb, cell)` probe
+    * relation — the body of [[probeIvfPqIndex]]. The ADC distance
+    * evaluates per candidate with the query SUBVECTOR as a column: the
+    * code-selected sum of squared L2 of [[pqAdcCol]]'s literal form, in
+    * the same fold order, so a probe of the stored codes is bit-identical
+    * to the in-memory [[ivfPqTopK]] on the same queries (spec-pinned).
+    * Per-query top-k is a WindowGroupLimit-prunable rank on
+    * (adc_dist asc, vec_id). */
   private def pqAdcRank(codes: DataFrame, probes: DataFrame,
       cb: Array[Array[Array[Double]]], k: Int, excludeSelf: Boolean,
       broadcastProbes: Boolean): DataFrame = {
@@ -705,53 +607,66 @@ object Similarity {
       .orderBy("q_id", "rn")
   }
 
-  /** [[writeIvfPqIndex]] + [[ivfPqProbeIndexedBatch]] composed with a
-    * scratch lifecycle, on the 5-seed query RELATION — the oracle is
-    * [[ivfPqIndexed]]'s full DuckDB IVF-PQ math replay generalized per
-    * q_id, so the driver hash-checks every query's ADC relation
-    * through the relation lane, not just one probe's. */
+  /** `ann_ivfpq_batch`: the IVF-PQ index probed with the 5-seed query
+    * RELATION (never collected). The oracle is [[ivfPqIndexed]]'s full
+    * DuckDB IVF-PQ math replay generalized per q_id, so the driver
+    * hash-checks every query's ADC relation, not just one probe's. */
   def annIvfPqBatch(s: SparkSession, dir: String, nQueries: Int = 5,
       k: Int = 10, nProbe: Int = 3): DataFrame = {
-    val scratch = scratchDir(s, "graft-ivfpqb-")
+    val emb = t(s, dir, "embeddings")
+    pqScratchProbe(s, dir, "graft-ivfpqb-",
+      emb.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+      k, nProbe) { (live, cents, cb) =>
+      buildIvfPqIndex(s, emb, cents, cb, live)
+    }
+  }
+
+  /** `ann_ivfpq_indexed`: the materialized IVF-PQ index lifecycle,
+    * value-checked against the SAME oracle as the in-memory
+    * [[ivfPqTopK]], so build, store and read must preserve the relation
+    * exactly. The store holds the id, home cell and 4 PQ codes per
+    * vector and NO embedding — 12 bits of code plus the id, the ~170×
+    * memory reduction that lets a billion-vector index live on a handful
+    * of machines (Jégou et al. '11). The one query vector is collected
+    * and probed as a local query relation; the probe reads only the
+    * `nProbe` probed cells' manifest entries and no embedding. */
+  def ivfPqIndexed(s: SparkSession, dir: String, queryId: Long = 0L,
+      k: Int = 10, nProbe: Int = 3): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val q = emb.filter(col("vec_id") === queryId)
+      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
+    import s.implicits._
+    pqScratchProbe(s, dir, "graft-ivfpq-",
+      Seq((queryId, q)).toDF("q_id", "q_emb"), k, nProbe) {
+      (live, cents, cb) => buildIvfPqIndex(s, emb, cents, cb, live)
+    }.select("vec_id", "cell", "adc_dist")
+  }
+
+  /** The IVF-PQ lanes' scratch lifecycle: collect the frozen model
+    * (label centroids + codebooks) ONCE, let `load` lay out a codes
+    * store under the scratch dir, probe it with `queries` through
+    * [[probeIvfPqIndex]], and collect the `(q_id, vec_id, cell,
+    * adc_dist, rn)` top-k (k rows per query) before the scratch dir is
+    * deleted. */
+  private def pqScratchProbe(s: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, k: Int, nProbe: Int)(
+      load: (String, Array[(Int, Array[Double])],
+        Array[Array[Array[Double]]]) => Unit): DataFrame = {
+    val scratch = scratchDir(s, prefix)
     try {
-      // frozen model state collected ONCE for build and probe
       val cents = collectCentroids(labelCentroids(s, dir), "label")
       val cb = pqCodebooks(s, dir)
-      writeIvfPqIndexOn(t(s, dir, "embeddings"), cents, cb,
-        scratch.toString)
-      val queries = t(s, dir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val topk = ivfPqProbeIndexedBatch(s, dir, scratch.toString,
-        queries, k, nProbe, model = Some((cents, cb)))
+      val live = s"$scratch/live"
+      load(live, cents, cb)
+      val topk = probeIvfPqIndex(s, dir, live, queries, k, nProbe,
+        model = Some((cents, cb)))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
           r.getDouble(3), r.getInt(4)))
       import s.implicits._
       topk.toSeq.toDF("q_id", "vec_id", "cell", "adc_dist", "rn")
         .orderBy("q_id", "rn")
-    } finally {
-      deleteScratch(s, scratch)
-    }
-  }
-
-  /** [[writeIvfPqIndex]] + [[ivfPqProbeIndexed]] composed with a scratch
-    * lifecycle (the [[ivfIndexedPlanted]] discipline: the k-row result
-    * is collected, then the index is deleted before the query returns). */
-  def ivfPqIndexed(s: SparkSession, dir: String, queryId: Long = 0L,
-      k: Int = 10, nProbe: Int = 3): DataFrame = {
-    val scratch = scratchDir(s, "graft-ivfpq-")
-    try {
-      // frozen model state collected ONCE for build and probe
-      val cents = collectCentroids(labelCentroids(s, dir), "label")
-      val cb = pqCodebooks(s, dir)
-      writeIvfPqIndexOn(t(s, dir, "embeddings"), cents, cb,
-        scratch.toString)
-      val topk = ivfPqProbeIndexed(s, dir, scratch.toString, queryId,
-        k, nProbe, model = Some((cents, cb))).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-      import s.implicits._
-      topk.toSeq.toDF("vec_id", "cell", "adc_dist")
     } finally {
       deleteScratch(s, scratch)
     }
@@ -1402,8 +1317,9 @@ object Similarity {
     * never embeddings; the few query rows broadcast; candidates dedup on
     * (q_id, vec_id) before the exact-cosine join pulls vectors. On
     * clustered real corpora buckets are dense exactly where neighbors
-    * are, so the candidate fraction stays small; hive-partitioning the
-    * index by (band, bucket) turns each probe into a pruned read. */
+    * are, so the candidate fraction stays small; the stored index
+    * ([[buildLshIndex]]) keys the postings by band, so a probe's
+    * candidate join reads `bands` postings entries. */
   def lshTopK(s: SparkSession, dir: String, queryIds: Seq[Long],
       k: Int = 10, planes: Int = 4, bands: Int = 8): DataFrame =
     lshTopKOn(t(s, dir, "embeddings"), queryIds, k, planes, bands)
@@ -1437,7 +1353,7 @@ object Similarity {
   /** Query-RELATION LSH lane — [[lshTopKOn]] with the queries arriving
     * as a DataFrame `(q_id: long, q_emb: array<float>)` instead of a
     * driver `Seq[Long]` (round-9 verdict item 2: the
-    * [[ivfProbeIndexedBatch]] shape for the banded-LSH index). Band
+    * [[probeIvfIndex]] shape for the banded-LSH index). Band
     * signatures for BOTH sides come from the same `hyperplaneBands`
     * expression evaluated distributively, the (q_id, band, bucket)
     * probe relation broadcasts against the signature index, candidates
@@ -1496,94 +1412,16 @@ object Similarity {
     val emb = plantedEmb(t(s, dir, "embeddings"), n)
     val queries = emb.filter(col("vec_id") < n)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def keyed(df: DataFrame): Map[Long, Seq[(Long, Double, Int)]] =
-      df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .groupBy(_._1)
-        .map { case (q, rows) =>
-          q -> rows.sortBy(_._4).map(t => (t._2, t._3, t._4)).toSeq
-        }
-    val (batch, seqLane) = Par.two(
-      keyed(lshTopKBatchOn(emb, queries, k)),
-      keyed(lshTopKOn(emb, 0L until n.toLong, k)))
-    val rows = (0L until n.toLong).map { qid =>
-      val b = batch(qid)
-      (qid, b.head._1, 1, b.head._2 >= 0.999999, b == seqLane(qid))
-    }
-    s.createDataFrame(rows)
-      .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_seq_lane")
-      .orderBy("q_id")
+    lshGate(s, n, lshTopKBatchOn(emb, queries, k),
+      lshTopKOn(emb, 0L until n.toLong, k), "agrees_seq_lane")
   }
 
-  /** Materialized LSH index — the storage layout [[lshTopK]]'s scaladoc
-    * promises: the banded signature POSTINGS written hive-partitioned
-    * by `(band, bucket)` (so a probe reads only its own buckets' files,
-    * by layout alone) with the narrow vector table alongside for the
-    * exact rerank. Postings are (vec_id) under band=/bucket= dirs —
-    * pure longs, ~1/30th the bytes of the vectors; the 100 TB shape is
-    * the same with coarser bucket sharding (`bucket % N` as the
-    * partition key) once 2^planes×bands outgrows a directory listing. */
-  def writeLshIndex(s: SparkSession, dir: String, indexPath: String,
-      planes: Int = 4, bands: Int = 8): Unit =
-    writeLshIndexOn(t(s, dir, "embeddings"), indexPath, planes, bands)
-
-  private[graft] def writeLshIndexOn(emb: DataFrame, indexPath: String,
-      planes: Int, bands: Int): Unit = {
-    // postings and vectors land in disjoint dirs from independent
-    // scans — overlap the two write jobs (guide §2.6)
-    Par.two(
-      emb.select(col("vec_id"),
-        posexplode(graft.functions.SketchExpressions.hyperplaneBands(
-          col("embedding"), planes, bands)).as(Seq("band", "bucket")))
-        .transform(graft.plans.Writers.byKeysN(_, bands << planes,
-          col("band"), col("bucket")))
-        .write.mode("overwrite").partitionBy("band", "bucket")
-        .option("compression", "zstd")
-        .parquet(s"$indexPath/postings"),
-      emb.select(col("vec_id"), col("embedding"))
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(s"$indexPath/vectors"))
-    ()
-  }
-
-  /** Query-relation probe of the materialized LSH index: distributed
-    * band signatures for the queries, a broadcast probe join on the
-    * `(band, bucket)` PARTITION columns (dynamic partition pruning
-    * reads only probed bucket dirs — the [[ivfProbeIndexedBatch]]
-    * discipline), candidate dedup before any vector byte is read, and
-    * the exact-cosine rerank over the hydrated candidates only. Row
-    * semantics are EXACTLY [[lshTopKBatchOn]]'s over the same corpus
-    * (identical signatures ⇒ identical candidates ⇒ identical t6
-    * rank) — value-pinned by `ann_lsh_indexed`'s agrees_memory gate. */
-  def lshProbeIndexed(s: SparkSession, indexPath: String,
-      queries: DataFrame, k: Int = 10, planes: Int = 4,
-      bands: Int = 8, broadcastProbes: Boolean = true): DataFrame = {
-    // cast probe keys to the scan's inferred partition-column types so
-    // the join keys are bare partition attributes (DPP-eligible)
-    val qsig = lshPostings(queries, "q_id", "q_emb", planes, bands)
-    val cands = s.read.parquet(s"$indexPath/postings")
-      .join(probeHint(qsig, broadcastProbes), Seq("band", "bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"))
-      .distinct()
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    cands.join(s.read.parquet(s"$indexPath/vectors"), Seq("vec_id"))
-      .join(probeHint(queries, broadcastProbes), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Num.t6(cosine(col("embedding"), col("q_emb"))).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .orderBy("q_id", "rn")
-  }
-
-  /** `ann_lsh_indexed` gate — [[writeLshIndex]] + [[lshProbeIndexed]]
+  /** `ann_lsh_indexed` gate — [[buildLshIndex]] + [[probeLshIndex]]
     * composed with a scratch lifecycle over the planted corpus: the
     * copies must probe back at rank 1 cosine ~1.0 THROUGH the stored
-    * layout, and the full top-k must equal the in-memory batch lane's
-    * ([[lshTopKBatchOn]]) row-for-row — a broken partition key,
-    * posting write, or pruned read erases rows and fails the hash. */
+    * index, and the full top-k must equal the in-memory batch lane's
+    * ([[lshTopKBatchOn]]) row-for-row — a broken band key, posting
+    * write, or entry selection erases rows and fails the hash. */
   def annLshIndexedPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10): DataFrame = {
     val emb = plantedEmb(t(s, dir, "embeddings"), n)
@@ -1591,29 +1429,38 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val scratch = scratchDir(s, "graft-lshidx-")
     try {
-      writeLshIndexOn(emb, scratch.toString, 4, 8)
-      def keyed(df: DataFrame): Map[Long, Seq[(Long, Double, Int)]] =
-        df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-          .groupBy(_._1)
-          .map { case (q, rows) =>
-            q -> rows.sortBy(_._4).map(t => (t._2, t._3, t._4)).toSeq
-          }
-      // stored-layout probe and in-memory reference are independent
-      // actions — overlap them (guide §2.6)
-      val (stored, memory) = Par.two(
-        keyed(lshProbeIndexed(s, scratch.toString, queries, k)),
-        keyed(lshTopKBatchOn(emb, queries, k)))
-      val rows = (0L until n.toLong).map { qid =>
-        val b = stored(qid)
-        (qid, b.head._1, 1, b.head._2 >= 0.999999, b == memory(qid))
-      }
-      s.createDataFrame(rows)
-        .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_memory")
-        .orderBy("q_id")
+      val live = s"$scratch/live"
+      buildLshIndex(s, emb, live, 4, 8)
+      lshGate(s, n, probeLshIndex(s, live, queries, k),
+        lshTopKBatchOn(emb, queries, k), "agrees_memory")
     } finally {
       deleteScratch(s, scratch)
     }
+  }
+
+  /** The LSH gates' relation: per query, the lane's rank-1 hit, whether
+    * it is exact (t6 cosine ~1.0), and whether the lane's full top-k
+    * equals the reference lane's row for row (`agreeCol`). Both
+    * arguments are `(q_id, vec_id, cos_sim, rn)` top-k relations; they
+    * run concurrently (guide §2.6) and only their k×n rows reach the
+    * driver, as gate metadata. */
+  private def lshGate(s: SparkSession, n: Int, lane: => DataFrame,
+      reference: => DataFrame, agreeCol: String): DataFrame = {
+    def keyed(df: DataFrame): Map[Long, Seq[(Long, Double, Int)]] =
+      df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .groupBy(_._1)
+        .map { case (q, rows) =>
+          q -> rows.sortBy(_._4).map(t => (t._2, t._3, t._4)).toSeq
+        }
+    val (got, ref) = Par.two(keyed(lane), keyed(reference))
+    val rows = (0L until n.toLong).map { qid =>
+      val b = got(qid)
+      (qid, b.head._1, 1, b.head._2 >= 0.999999, b == ref(qid))
+    }
+    s.createDataFrame(rows)
+      .toDF("q_id", "vec_id", "rn", "is_exact", agreeCol)
+      .orderBy("q_id")
   }
 
   /** IVF (inverted-file) coarse quantization: every vector is assigned to
@@ -1628,9 +1475,9 @@ object Similarity {
     * downstream — broadcast centroids, argmin assignment, cell-restricted
     * ranking — is unchanged). The centroid table is k rows: broadcast,
     * never shuffled; the assignment is a broadcast nested-loop over k
-    * cosines per vector, fully partition-parallel. Cell-partitioned
-    * storage (hive `cell=` layout) would make the probe a partition-pruned
-    * read. */
+    * cosines per vector, fully partition-parallel. The stored index
+    * ([[buildIvfIndex]]) keys vectors by cell, so a probe reads only the
+    * probed cells' manifest entries. */
   /** The k coarse centroids, materialized to the driver. k rows of
     * centroid METADATA (k * dim floats — same size class as a broadcast
     * dim table), not a data collect: at 100 TB the corpus is never
@@ -1682,9 +1529,9 @@ object Similarity {
   /** IVF ANN top-k: rank only vectors whose home cell is among the
     * query's `nProbe` nearest centroids. Two scans of the corpus (the
     * vector side and the pushed-filter query side), zero pre-join
-    * shuffles; at scale the vector side would be written once
-    * hive-partitioned by `cell` and the probe becomes a partition-pruned
-    * read. */
+    * shuffles; at scale the vector side is stored once keyed by `cell`
+    * ([[buildIvfIndex]]) and a probe reads only the probed cells'
+    * manifest entries ([[probeIvfIndex]]). */
   def ivfTopK(s: SparkSession, dir: String, queryIds: Seq[Long],
       k: Int = 10, cells: Int = 16, nProbe: Int = 4): DataFrame =
     ivfTopKOn(t(s, dir, "embeddings"), queryIds, k, cells, nProbe)
@@ -1717,131 +1564,12 @@ object Similarity {
       .orderBy("q_id", "rn")
   }
 
-  /** Materialized IVF index: the corpus written hive-partitioned by home
-    * cell (`cell=N/` directories) with the centroid table alongside. This
-    * is the storage layout the in-memory `ivfTopK` Scaladoc promises: at
-    * 100 TB a probe must not SCAN the corpus and filter — it must read
-    * only the probed cells' files, which hive partition pruning gives for
-    * free once the cell is a partition column (plan-asserted in
-    * `SimilaritySpec`). */
-  def writeIvfIndex(s: SparkSession, dir: String, indexPath: String,
-      cells: Int = 16): Array[(Long, Array[Float])] = {
-    val emb = t(s, dir, "embeddings")
-    val cents = ivfCentroids(emb, cells)
-    import s.implicits._
-    // vectors and centroids are disjoint outputs — overlap (guide §2.6)
-    Par.two(
-      emb.select(col("vec_id"), col("embedding"),
-        cellRanking(cents).getItem(0).getField("cent").as("cell"))
-        .transform(graft.plans.Writers.byKeysN(_, cents.length, col("cell"))) // one writer task per cell -> one file set
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .option("compression", "zstd")
-        .parquet(s"$indexPath/vectors"),
-      cents.toSeq.toDF("cent_id", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexPath/centroids"))
-    // the just-collected model, so build-then-probe harnesses need not
-    // re-read the one-file centroid table they just wrote (float→double
-    // widening downstream is exact — identical to reading the floats
-    // back and casting)
-    cents
-  }
-
-  /** Probe the materialized index: rank the stored centroids against the
-    * query vector (driver-side, k rows of metadata), then read ONLY the
-    * `nProbe` nearest cells' partitions and rank exact cosine inside
-    * them. The scan's PartitionFilters prune every other `cell=` dir —
-    * the 100 TB probe cost is `nProbe/cells` of one corpus scan, from
-    * layout alone. */
-  def ivfProbeIndexed(s: SparkSession, indexPath: String,
-      query: Array[Float], k: Int = 10, nProbe: Int = 4): DataFrame = {
-    // centroids may be stored float (sampled index) or double (trained
-    // index); widen to double — exact for floats, and the same values
-    // the build-side argmax expression saw
-    val cents = s.read.parquet(s"$indexPath/centroids")
-      .select(col("cent_id"), col("centroid").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    // identical accumulation order to the CosineSim expression, so the
-    // driver-side cell ranking agrees bit-for-bit with the build-side
-    // assignment
-    def cos(a: Array[Float], b: Array[Double]): Double = {
-      var xy = 0.0; var xx = 0.0; var yy = 0.0; var i = 0
-      while (i < a.length) {
-        val xi = a(i).toDouble; val yi = b(i)
-        xy += xi * yi; xx += xi * xi; yy += yi * yi; i += 1
-      }
-      xy / (math.sqrt(xx) * math.sqrt(yy))
-    }
-    val probeCells = cents.map { case (cid, v) => (-cos(query, v), cid) }
-      .sorted.take(nProbe).map(_._2)
-    s.read.parquet(s"$indexPath/vectors")
-      .filter(col("cell").isin(probeCells: _*)) // partition pruning
-      .select(col("vec_id"),
-        Num.t6(cosine(col("embedding"), typedlit(query))).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** One-JOB probe of a driver-side query batch against the
-    * materialized index: the stored centroid table is read ONCE (k×dim
-    * metadata) and the queries ride the SAME broadcast-join probe plan
-    * as the query-relation lane ([[probeBatchOn]] via a local dataset
-    * of the Seq — one join regardless of query count, instead of the
-    * former one-union-branch-per-query plan that grew linearly). Row
-    * semantics are EXACTLY [[ivfProbeIndexed]]'s: per query, top-k by
-    * (cos_sim desc, vec_id) — the per-q_id window rank equals
-    * orderBy + limit, and the rank is WindowGroupLimit-prunable
-    * (bounded k per bounded query set).
-    *
-    * `model`: optionally the PRE-COLLECTED centroid table — the
-    * streaming static-side / frozen-PQ-model discipline: a lifecycle
-    * gate that just TRAINED and WROTE the centroids passes them
-    * through instead of re-reading its own write (one fewer
-    * read+collect job; the stored table is the same doubles, so every
-    * probed row is identical). `None` keeps the stored-metadata read
-    * for independent probe sessions. */
-  def ivfProbeIndexedMulti(s: SparkSession, indexPath: String,
-      queries: Seq[(Long, Array[Float])], k: Int = 10,
-      nProbe: Int = 4,
-      model: Option[Array[(Long, Array[Double])]] = None): DataFrame = {
-    val cents = model.getOrElse(
-      s.read.parquet(s"$indexPath/centroids")
-        .select(col("cent_id"), col("centroid").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
-    multiProbeOn(s.read.parquet(s"$indexPath/vectors"), cents,
-      queries, k, nProbe)
-  }
-
-  /** The probe plan over ANY (vec_id, embedding, cell) relation for a
-    * driver-side query Seq — now a thin adapter onto [[probeBatchOn]]
-    * (round-9 verdict item 3: the former per-query union-branch
-    * rendering duplicated the batch lane's semantics with a plan LINEAR
-    * in query count; `createDataset` of the queries reuses the one
-    * broadcast-join plan regardless of how many probes ride it). Used
-    * against the hive-partitioned index scan ([[ivfProbeIndexedMulti]],
-    * where the broadcast's distinct cells prune partitions at runtime)
-    * or an in-memory assignment (the compaction gate's rebuild
-    * reference, where materializing a second index would add file I/O
-    * without changing one probed row). */
-  private def multiProbeOn(vectors: DataFrame,
-      cents: Array[(Long, Array[Double])],
-      queries: Seq[(Long, Array[Float])], k: Int,
-      nProbe: Int): DataFrame = {
-    val s = vectors.sparkSession
-    import s.implicits._
-    probeBatchOn(vectors, cents,
-      queries.toDF("q_id", "q_emb"), k, nProbe, excludeSelf = false)
-  }
-
   /** Per-row cell ranking for an ARBITRARY embedding column against
     * double-precision stored centroids — [[cellRanking]] generalized to
     * the query side of a batch probe. Same (neg_sim, cent) sort keys as
-    * the driver-side ranking in [[ivfProbeIndexedMulti]], and CosineSim
-    * widens floats exactly the way the driver replica does, so the two
-    * lanes agree bit-for-bit on every probe set. */
+    * [[argmaxOver]]'s build-side assignment, and CosineSim widens floats
+    * exactly, so a query identical to a stored vector ranks that
+    * vector's home cell first, bit for bit. */
   private def cellRankingOn(embCol: Column,
       cents: Array[(Long, Array[Double])]): Column =
     array_sort(array(cents.map { case (cid, v) =>
@@ -1849,71 +1577,6 @@ object Similarity {
         lit(cid).as("cent"))
     }: _*))
 
-  /** Query-RELATION probe of the materialized IVF index — the bulk
-    * retrieval shape (RAG inference over millions of queries): the
-    * queries arrive as a DataFrame `(q_id: long, q_emb: array<float>)`
-    * and NOTHING query-sized ever touches the driver — the only collect
-    * is the k-row centroid table (model metadata, same size class as a
-    * broadcast dim table).
-    *
-    * Plan shape, and why it survives a 1e6-query batch where
-    * [[ivfProbeIndexedMulti]]'s driver-collected `Seq` cannot:
-    *
-    *  1. Each query ranks the stored centroids DISTRIBUTIVELY — the
-    *     centroid list rides as k×dim literals inside one shuffle-free
-    *     projection ([[cellRankingOn]]), and `slice(..., 1, nProbe)`
-    *     explodes to exactly nProbe (q_id, cell) probe pairs per query.
-    *  2. The probe relation broadcasts and hash-joins the index scan on
-    *     the `cell` PARTITION column, so dynamic partition pruning
-    *     drives the scan: only the union of probed `cell=` dirs is
-    *     read (spec-asserted `dynamicpruning` PartitionFilters) — the
-    *     100 TB probe cost stays `≤ distinct probed cells / cells` of
-    *     the index regardless of query count.
-    *  3. Per-query top-k is a rank window on (t6-cosine desc, vec_id),
-    *     WindowGroupLimit-prunable to k rows per partition before the
-    *     one q_id shuffle.
-    *
-    * Row semantics are EXACTLY [[ivfProbeIndexedMulti]]'s on the same
-    * queries (spec-pinned equality): each vector lives in one home
-    * cell, so a (q, vec) pair joins through at most one probed cell —
-    * no dedup needed. `excludeSelf` drops vec_id == q_id BEFORE the
-    * rank (the lifecycle gates probe with stored vectors as queries;
-    * a real inference batch carries foreign q_ids and leaves it off). */
-  def ivfProbeIndexedBatch(s: SparkSession, indexPath: String,
-      queries: DataFrame, k: Int = 10, nProbe: Int = 4,
-      excludeSelf: Boolean = false,
-      broadcastProbes: Boolean = true,
-      model: Option[Array[(Long, Array[Double])]] = None): DataFrame = {
-    // `model`: pre-collected centroids (the ivfProbeIndexedMulti
-    // discipline) — gates that trained and wrote the table skip
-    // re-reading their own write; values identical either way.
-    val cents = model.getOrElse(
-      s.read.parquet(s"$indexPath/centroids")
-        .select(col("cent_id"), col("centroid").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
-    probeBatchOn(s.read.parquet(s"$indexPath/vectors"), cents, queries,
-      k, nProbe, excludeSelf, broadcastProbes)
-  }
-
-  /** [[probeBatchOn]] against a stored index with PRE-COLLECTED
-    * centroids — the streaming static-side discipline: a micro-batch
-    * harness collects the k-row centroid table ONCE and every batch
-    * rides the same broadcast-DPP probe plan without re-reading model
-    * metadata per trigger ([[graft.streaming.VectorStream]]'s indexed
-    * lane). Semantics identical to [[ivfProbeIndexedBatch]]. */
-  private[graft] def probeIndexBatchOn(vectors: DataFrame,
-      cents: Array[(Long, Array[Double])], queries: DataFrame,
-      k: Int, nProbe: Int, excludeSelf: Boolean,
-      broadcastProbes: Boolean = true): DataFrame =
-    probeBatchOn(vectors, cents, queries, k, nProbe, excludeSelf,
-      broadcastProbes)
-
-  /** The ONE batch probe plan, over ANY (vec_id, embedding, cell)
-    * relation — shared by the query-relation lane
-    * ([[ivfProbeIndexedBatch]], where the broadcast's distinct cells
-    * drive dynamic partition pruning of the hive `cell=` scan) and the
-    * driver-Seq adapter ([[multiProbeOn]]). */
   /** Broadcast hint iff the caller says the probe relation is
     * broadcast-sized — the mechanism behind every batch lane's
     * `broadcastProbes` switch. An explicit `broadcast()` hint is
@@ -1924,50 +1587,64 @@ object Similarity {
     * state. With the hint withheld the planner shuffles BOTH sides on
     * the same equi-keys (and AQE still upgrades back to broadcast at
     * runtime if the actual probe bytes fit) — the correct bulk shape,
-    * where partition pruning is moot anyway because a probe set that
-    * large touches every cell/bucket. Default stays `true`: the
-    * contract gates probe k-row seed relations, whose spec-pinned
-    * BroadcastHashJoin + dynamic-partition-pruning plan IS the
-    * needle-lookup story. (Not derived from plan statistics on purpose:
-    * without CBO a `filter` keeps its child's size estimate, so a
-    * 5-seed slice of a big corpus would mis-read as corpus-sized and
-    * silently drop the DPP plan.) */
+    * where entry pruning is moot anyway because a probe set that large
+    * touches every cell/bucket. Default stays `true`: the contract
+    * gates probe k-row seed relations, whose spec-pinned
+    * BroadcastHashJoin plan IS the needle-lookup story. (Not derived
+    * from plan statistics on purpose: without CBO a `filter` keeps its
+    * child's size estimate, so a 5-seed slice of a big corpus would
+    * mis-read as corpus-sized and silently drop the broadcast.) */
   private[graft] def probeHint(df: DataFrame, bcast: Boolean): DataFrame =
     if (bcast) broadcast(df) else df
 
-  /** The ranked probe relation [[probeBatchOn]] builds internally —
-    * (q_id, q_emb, probed cell), cell cast to the scan's inferred
-    * partition-column type so the join key is the bare partition
-    * attribute (a cast on the scan side would block dynamic partition
-    * pruning). Exposed separately so the manifest-pruned facade can
-    * rank ONCE: it localCheckpoints this relation, derives the pruning
-    * keys from it, and feeds the SAME materialized relation back in
-    * via `probesPre` — without that, the driver-side cells collect and
-    * the join would each evaluate the k×dim ranking projection over
-    * the full query relation. This is the ONLY probe projection in the
-    * file: the PQ lanes reach it through the [[pqProbesOf]] delegate,
-    * so the "both lanes rank bit-identically" invariant is enforced by
-    * the compiler, not by keeping two verbatim copies in sync. */
+  /** The ranked probe relation [[probeBatchOn]] joins on: every query
+    * column plus one probed `cell` (int) per row, nProbe rows per query.
+    * Exposed separately so the manifest-pruned facades can rank ONCE:
+    * they localCheckpoint this relation, derive the pruning keys from
+    * it, and feed the SAME materialized relation back in via
+    * `probesPre` — without that, the driver-side cells collect and the
+    * join would each evaluate the k×dim ranking projection over the full
+    * query relation. This is the ONLY probe projection in the file, so
+    * the IVF and IVF-PQ lanes rank probes identically by construction. */
   private def rankedProbesOf(queries: DataFrame,
       cents: Array[(Long, Array[Double])], nProbe: Int): DataFrame =
     queries
-      .select(col("q_id"), col("q_emb"),
+      .select(col("*"),
         explode(slice(cellRankingOn(col("q_emb"), cents), 1, nProbe))
           .as("probe"))
-      .select(col("q_id"), col("q_emb"),
-        col("probe").getField("cent").cast("int").as("cell"))
+      .select(queries.columns.map(col) :+
+        col("probe").getField("cent").cast("int").as("cell"): _*)
 
-  private def probeBatchOn(vectors: DataFrame,
+  /** The ONE IVF probe plan, over ANY (vec_id, embedding, cell)
+    * relation and a `(q_id, q_emb, ...)` query relation — the stored
+    * lanes ([[probeIvfIndex]]) and the in-memory rebuild references
+    * share it:
+    *
+    *  1. Each query ranks the centroids DISTRIBUTIVELY — the centroid
+    *     list rides as k×dim literals inside one shuffle-free projection
+    *     ([[cellRankingOn]]), exploded to nProbe (q_id, cell) pairs.
+    *  2. The probe relation hash-joins the vectors on `cell` (broadcast
+    *     unless `broadcastProbes = false`, see [[probeHint]]); each
+    *     vector lives in one home cell, so a (q, vec) pair joins through
+    *     at most one probed cell — no dedup needed.
+    *  3. `excludeSelf` drops vec_id == q_id and `where` (a predicate over
+    *     both sides' columns, e.g. a metadata filter) drops candidates
+    *     BEFORE the rank; per-query top-k is a rank window on
+    *     (t6-cosine desc, vec_id), WindowGroupLimit-prunable to k rows
+    *     per partition before the one q_id shuffle. */
+  private[graft] def probeBatchOn(vectors: DataFrame,
       cents: Array[(Long, Array[Double])], queries: DataFrame,
       k: Int, nProbe: Int, excludeSelf: Boolean,
       broadcastProbes: Boolean = true,
-      probesPre: Option[DataFrame] = None): DataFrame = {
+      probesPre: Option[DataFrame] = None,
+      where: Option[Column] = None): DataFrame = {
     val probes = probesPre.getOrElse(rankedProbesOf(queries, cents, nProbe))
     val candidates = vectors.join(probeHint(probes, broadcastProbes),
       Seq("cell"))
-    val filtered =
+    val selfless =
       if (excludeSelf) candidates.filter(col("vec_id") =!= col("q_id"))
       else candidates
+    val filtered = where.fold(selfless)(selfless.filter)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
     filtered
@@ -1984,23 +1661,21 @@ object Similarity {
     *  1. TRAIN: two full Lloyd rounds ([[kmeansIterate]]) from the label
     *     warm start; the trained centroids are cells×dim metadata.
     *  2. BUILD: every vector (corpus + the planted exact copies) is
-    *     assigned to its trained-argmax cell and written hive
-    *     `cell=`-partitioned with the centroid table alongside —
-    *     [[writeIvfIndex]]'s layout with trained instead of sampled
-    *     centroids.
-    *  3. PROBE: each planted query goes through [[ivfProbeIndexed]] —
-    *     driver-side cell ranking against the STORED centroids, then a
-    *     partition-pruned read of only the nProbe nearest cells
-    *     (PartitionFilters, spec-asserted).
+    *     assigned to its trained-argmax cell and stored cell-keyed
+    *     ([[buildIvfIndex]]).
+    *  3. PROBE: the planted queries, collected to the driver, go through
+    *     [[probeIvfIndex]] as one local query relation — cell ranking
+    *     against the trained centroids, then a read of only the probed
+    *     cells' manifest entries.
     *
     * The planted copy's home cell is by construction the probe's #1
-    * cell (identical vector, identical argmax — the driver cos replays
-    * CosineSim's accumulation order bit-for-bit, and ties break on the
-    * same (neg_sim, cell) order both sides), so the copy MUST come back
-    * at rank 1 with cosine ~1.0 under any nProbe >= 1: the relation is
-    * closed-form, the [[ivfTopKPlanted]] contract. Probes run eagerly so
-    * the scratch index can be deleted before returning (no tmpfs
-    * accumulation); the result is the 5-row gate relation. */
+    * cell (identical vector, identical argmax — the probe-side ranking
+    * and the build-side argmax evaluate the same CosineSim doubles, and
+    * ties break on the same (neg_sim, cell) order both sides), so the
+    * copy MUST come back at rank 1 with cosine ~1.0 under any
+    * nProbe >= 1: the relation is closed-form, the [[ivfTopKPlanted]]
+    * contract. Probes run eagerly so the scratch index can be deleted
+    * before returning; the result is the 5-row gate relation. */
   def ivfIndexedPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10, nProbe: Int = 4): DataFrame = {
     val emb = plantedEmb(t(s, dir, "embeddings"), n)
@@ -2012,86 +1687,43 @@ object Similarity {
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1))
-    val scratch = scratchDir(s, "graft-ivf-")
-    try {
-      val indexPath = scratch.toString
-      import s.implicits._
-      // vectors and centroids are disjoint outputs — overlap (§2.6)
-      Par.two(
-        emb.select(col("vec_id"), col("embedding"),
-          argmaxOver(trained).getField("cluster").as("cell"))
-          .transform(graft.plans.Writers.byKeysN(_, trained.length,
-            col("cell"))) // one writer task per cell
-          .write.mode("overwrite").partitionBy("cell")
-          .option("compression", "zstd")
-          .parquet(s"$indexPath/vectors"),
-        trained.toSeq.map { case (c, v) => (c.toLong, v.toSeq) }
-          .toDF("cent_id", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$indexPath/centroids"))
-      // all probes in ONE job; self-filter + head replayed per query on
-      // the collected (already rank-ordered) rows — identical semantics
-      // to the per-query ivfProbeIndexed loop it replaces; the just-
-      // trained centroids ride through `model` (no re-read of our own
-      // one-file write)
-      val probed = ivfProbeIndexedMulti(s, indexPath, queries.toSeq,
-        k, nProbe,
-        model = Some(trained.map { case (c, v) => (c.toLong, v) }))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .groupBy(_._1)
-      val rows = queries.map { case (qid, _) =>
-        val hit = probed(qid).filter(_._2 != qid).head
-        (qid, hit._2, 1, hit._3 >= 0.999999)
-      }
-      s.createDataFrame(rows.toSeq)
-        .toDF("q_id", "vec_id", "rn", "is_exact")
-        .orderBy("q_id")
-    } finally {
-      deleteScratch(s, scratch)
-    }
+    import s.implicits._
+    ivfPlantedGate(s, emb, trained, queries.toSeq.toDF("q_id", "q_emb"),
+      k, nProbe, "graft-ivf-")
   }
 
-  /** [[ivfIndexedPlanted]]'s lifecycle driven through the BATCH probe
-    * lane — same trained index, same planted-copy contract (the copy
-    * at rank 1, cosine ~1.0), but the probes flow as a query RELATION:
-    * the n lowest-vec_id embeddings become a (q_id, q_emb) DataFrame
-    * that is never collected — cell ranking, dynamic-partition-pruned
-    * candidate join, self-exclusion, and the rank-1 cut all run inside
-    * the one probe plan ([[ivfProbeIndexedBatch]] with excludeSelf).
-    * The only driver materialization is the n-row gate result, eager so
-    * the scratch index can be reaped before returning. Shares
-    * ann_ivf_indexed's closed-form oracle — which makes this a
-    * value-checked equality gate between the driver-Seq and
-    * query-relation probe lanes. */
+  /** [[ivfIndexedPlanted]]'s lifecycle driven with a query RELATION —
+    * same trained index, same planted-copy contract (the copy at rank 1,
+    * cosine ~1.0), but the n lowest-vec_id embeddings become a
+    * (q_id, q_emb) DataFrame that is never collected: cell ranking,
+    * entry pruning, self-exclusion and the rank-1 cut all run inside the
+    * one probe plan. Shares ann_ivf_indexed's closed-form oracle, which
+    * makes this a value-checked equality gate between the driver-array
+    * and query-relation probe lanes. */
   def annIvfBatchPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10, nProbe: Int = 4): DataFrame = {
     val emb = plantedEmb(t(s, dir, "embeddings"), n)
     val trained = collectCentroids(kmeansIterate(s, dir, 2), "cluster")
-    val scratch = scratchDir(s, "graft-ivfb-")
+    ivfPlantedGate(s, emb, trained,
+      emb.filter(col("vec_id") < n)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+      k, nProbe, "graft-ivfb-")
+  }
+
+  /** The IVF lanes' planted gate: store `emb` cell-keyed under the
+    * frozen `trained` centroids in a scratch dir, probe it with
+    * `queries` (self excluded), and collect each query's rank-1 hit as
+    * (q_id, vec_id, rn, is_exact) before the store is deleted. */
+  private def ivfPlantedGate(s: SparkSession, emb: DataFrame,
+      trained: Array[(Int, Array[Double])], queries: DataFrame, k: Int,
+      nProbe: Int, prefix: String): DataFrame = {
+    val scratch = scratchDir(s, prefix)
     try {
-      val indexPath = scratch.toString
-      import s.implicits._
-      // vectors and centroids are disjoint outputs — overlap (§2.6)
-      Par.two(
-        emb.select(col("vec_id"), col("embedding"),
-          argmaxOver(trained).getField("cluster").as("cell"))
-          .transform(graft.plans.Writers.byKeysN(_, trained.length,
-            col("cell"))) // one writer task per cell
-          .write.mode("overwrite").partitionBy("cell")
-          .option("compression", "zstd")
-          .parquet(s"$indexPath/vectors"),
-        trained.toSeq.map { case (c, v) => (c.toLong, v.toSeq) }
-          .toDF("cent_id", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$indexPath/centroids"))
-      val queries = emb.filter(col("vec_id") < n)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // the just-trained centroids ride through `model` (no re-read of
-      // our own one-file write); values identical
-      val gate = ivfProbeIndexedBatch(s, indexPath, queries, k, nProbe,
-        excludeSelf = true,
-        model = Some(trained.map { case (c, v) => (c.toLong, v) }))
+      val live = s"$scratch/live"
+      buildIvfIndex(s, live, emb.select(col("vec_id"), col("embedding"),
+        argmaxOver(trained).getField("cluster").as("cell")))
+      val gate = probeIvfIndex(s, live, queries, trained, k, nProbe,
+          excludeSelf = true)
         .filter(col("rn") === 1)
         .select(col("q_id"), col("vec_id"), col("rn"),
           (col("cos_sim") >= 0.999999).as("is_exact"))
@@ -2106,79 +1738,51 @@ object Similarity {
     }
   }
 
-  /** Metadata-filtered probe of the materialized IVF index —
-    * [[filteredTopK]] at the INDEX level (the vector-DB "filtered
-    * search" feature against storage instead of a corpus scan): the
-    * index stores the metadata column beside each vector, so a filtered
-    * probe prunes to the `nProbe` probed `cell=` partitions by layout
-    * AND pushes the label predicate into the surviving files' row
-    * groups (PushedFilters — min/max stats skip non-matching groups
-    * before any vector is read). Probe cost: `nProbe/cells` of the
-    * index by pruning, times the label selectivity by pushdown.
+  /** Metadata-filtered probe of the stored IVF index — [[filteredTopK]]
+    * at the INDEX level (the vector-DB "filtered search" feature against
+    * storage instead of a corpus scan): the index stores the label beside
+    * each vector, the probe reads only the probed cells' manifest
+    * entries, and the label predicate `label = q_label` drops candidates
+    * inside the ONE probe plan before the rank — a plan whose size does
+    * not grow with the number of queries.
     *
     * Gate: planted copies inherit their original's label, so the
     * filtered probe (query = original, predicate = original's label,
     * self excluded) must return the copy at rank 1 with cosine 1.0 AND
     * every returned top-k row must carry the query's label —
-    * `all_label_match` is the column that fails closed-form if an
-    * engine change drops the predicate. */
+    * `all_label_match` re-reads each hit's label from the corpus, so it
+    * fails closed-form if an engine change drops the predicate. */
   def ivfFilteredPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10, nProbe: Int = 4, cells: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpus = t(s, dir, "embeddings")
     val emb = plantedEmb(corpus, n)
-    val cents = ivfCentroids(corpus, cells)
+    val trained = ivfCentroids(corpus, cells)
+      .map { case (c, v) => (c.toInt, v.map(_.toDouble)) }
+    val queries = corpus.filter(col("vec_id") < n)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("label").as("q_label"))
     val scratch = scratchDir(s, "graft-ivff-")
     try {
-      val p = scratch.toString
-      emb.select(col("vec_id"), col("label"), col("embedding"),
-        cellRanking(cents).getItem(0).getField("cent").as("cell"))
-        .transform(graft.plans.Writers.byKeysN(_, cents.length,
-          col("cell")))
-        .write.mode("overwrite").partitionBy("cell")
-        .option("compression", "zstd").parquet(s"$p/vectors")
-      // driver replica of the build-side cosine (floats widened exactly,
-      // same accumulation order), so probe cells agree bit-for-bit with
-      // the stored assignment
-      def cos(a: Array[Float], b: Array[Float]): Double = {
-        var xy = 0.0; var xx = 0.0; var yy = 0.0; var i = 0
-        while (i < a.length) {
-          val xi = a(i).toDouble; val yi = b(i).toDouble
-          xy += xi * yi; xx += xi * xi; yy += yi * yi; i += 1
-        }
-        xy / (math.sqrt(xx) * math.sqrt(yy))
-      }
-      val queries = corpus.filter(col("vec_id") < n)
-        .select(col("vec_id"), col("label"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
-        .sortBy(_._1)
-      val vectors = s.read.parquet(s"$p/vectors")
-      val branches = queries.map { case (qid, lbl, qv) =>
-        val probeCells = cents.map { case (cid, v) => (-cos(qv, v), cid) }
-          .sorted.take(nProbe).map(_._2)
-        vectors
-          .filter(col("cell").isin(probeCells: _*) && // partition pruning
-            col("label") === lbl &&                   // row-group pushdown
-            col("vec_id") =!= qid)                    // self excluded
-          .select(lit(qid).as("q_id"), col("vec_id"), col("label"),
-            Num.t6(cosine(col("embedding"), typedlit(qv))).as("cos_sim"),
-            lit(lbl).as("q_label"))
-      }
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
+      val live = s"$scratch/live"
+      buildIvfIndex(s, live, emb.select(col("vec_id"), col("label"),
+        col("embedding"), argmaxOver(trained).getField("cluster").as("cell")))
       // eager: gate rows computed before the scratch index is deleted
-      val topk = branches.reduce(_.unionByName(_))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
+      val topk = probeIvfCells(s, live, queries, trained, k, nProbe,
+          excludeSelf = true, broadcastProbes = true,
+          where = Some(col("label") === col("q_label")))
+        .join(emb.select(col("vec_id"), col("label")), "vec_id")
+        .join(queries.select(col("q_id"), col("q_label")), "q_id")
+        .select(col("q_id"), col("vec_id"), col("cos_sim"), col("rn"),
+          col("label") === col("q_label"))
         .collect()
         .groupBy(_.getLong(0))
-      val rows = queries.map { case (qid, _, _) =>
+      val rows = (0L until n.toLong).map { qid =>
         val rs = topk(qid)
-        val r1 = rs.minBy(_.getInt(5))
-        (qid, r1.getLong(1), 1, r1.getDouble(3) >= 0.999999,
-          rs.forall(r => r.getInt(2) == r.getInt(4)))
+        val r1 = rs.minBy(_.getInt(3))
+        (qid, r1.getLong(1), 1, r1.getDouble(2) >= 0.999999,
+          rs.forall(_.getBoolean(4)))
       }
-      s.createDataFrame(rows.toSeq)
+      s.createDataFrame(rows)
         .toDF("q_id", "vec_id", "rn", "is_exact", "all_label_match")
         .orderBy("q_id")
     } finally {
@@ -2186,12 +1790,12 @@ object Similarity {
     }
   }
 
-  // ---- maintained ANN index lifecycles: build / maintain / probe ----
-  // Every maintained index lives in a [[graft.store.ManifestStore]]:
+  // ---- stored ANN indexes: build / maintain / probe ----
+  // Every stored index lives in a [[graft.store.ManifestStore]]:
   // immutable segments, one manifest publish per commit, snapshot
-  // reads, object-store safe. The write-once probe lanes above
+  // reads, object-store safe. The write-once lanes above
   // (`ann_lsh_indexed`, `ann_ivf_indexed`, `ann_ivfpq_indexed`, ...)
-  // keep their plain hive layouts; nothing ever rewrites those.
+  // build and probe through the same facades as the maintained ones.
 
   /** `(idCol, band, bucket)` postings: one row per vector and band. */
   private def lshPostings(df: DataFrame, idCol: String, embCol: String,
@@ -2216,13 +1820,15 @@ object Similarity {
     v
   }
 
-  /** Build an LSH index at `rootPath`: [[writeLshIndex]]'s postings and
-    * vectors as a two-table [[graft.store.ManifestStore]] — the postings
-    * table keyed by `band` (one partition per band, so a commit or probe
+  /** Build an LSH index at `rootPath`: the banded signature postings
+    * (`vec_id, band, bucket` — pure ints and longs, a fraction of the
+    * vectors' bytes) and the narrow vectors table for the exact rerank,
+    * as a two-table [[graft.store.ManifestStore]] — the postings table
+    * keyed by `band` (one partition per band, so a commit or probe
     * touches at most `bands` leaf dirs however many buckets it hits;
     * `bucket` rides as a data column and the probe's `(band, bucket)`
-    * join selects inside a band) plus the append-only narrow vectors
-    * table, initialized in ONE atomic version-1 commit. */
+    * join selects inside a band) plus the append-only vectors table,
+    * initialized in ONE atomic version-1 commit. */
   def buildLshIndex(s: SparkSession, emb: DataFrame, rootPath: String,
       planes: Int = 4, bands: Int = 8): Unit = {
     import graft.store.ManifestStore
@@ -2293,17 +1899,18 @@ object Similarity {
     * buckets. Candidates dedup before any vector byte is read; the
     * exact-cosine rerank hydrates from the vectors table of the SAME
     * manifest version by `vec_id` join. Row semantics are exactly
-    * [[lshTopKBatchOn]]'s over the same corpus. Fails with an
-    * IllegalStateException on an index whose postings are not
-    * band-keyed ([[requireBandKeyed]]). */
+    * [[lshTopKBatchOn]]'s over the same corpus. Past broadcast capacity
+    * pass `broadcastProbes = false` and both joins run as shuffles
+    * ([[probeHint]]). Fails with an IllegalStateException on an index
+    * whose postings are not band-keyed ([[requireBandKeyed]]). */
   def probeLshIndex(s: SparkSession, rootPath: String,
       queries: DataFrame, k: Int = 10, planes: Int = 4,
-      bands: Int = 8): DataFrame = {
+      bands: Int = 8, broadcastProbes: Boolean = true): DataFrame = {
     import graft.store.ManifestStore
     val v = Some(requireBandKeyed(s, rootPath))
     val qsig = lshPostings(queries, "q_id", "q_emb", planes, bands)
     val cands = ManifestStore.readTable(s, rootPath, "postings", version = v)
-      .join(broadcast(qsig), Seq("band", "bucket"))
+      .join(probeHint(qsig, broadcastProbes), Seq("band", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
       .distinct()
@@ -2311,7 +1918,7 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("vec_id"))
     cands.join(ManifestStore.readTable(s, rootPath, "vectors", version = v),
         Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
+      .join(probeHint(queries, broadcastProbes), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
         Num.t6(cosine(col("embedding"), col("q_emb"))).as("cos_sim"))
       .withColumn("rn", row_number().over(w))
@@ -2346,23 +1953,8 @@ object Similarity {
       val live = s"$scratch/live"
       buildLshIndex(s, base, live, 4, 8)
       maintainLshIndex(s, live, arriving, 4, 8)
-      def keyed(df: DataFrame): Map[Long, Seq[(Long, Double, Int)]] =
-        df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-          .groupBy(_._1)
-          .map { case (q, rows) =>
-            q -> rows.sortBy(_._4).map(t => (t._2, t._3, t._4)).toSeq
-          }
-      val (stored, memory) = Par.two(
-        keyed(probeLshIndex(s, live, queries, k)),
-        keyed(lshTopKBatchOn(plantedEmb(emb, n), queries, k)))
-      val rows = (0L until n.toLong).map { qid =>
-        val b = stored(qid)
-        (qid, b.head._1, 1, b.head._2 >= 0.999999, b == memory(qid))
-      }
-      s.createDataFrame(rows)
-        .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_rebuild")
-        .orderBy("q_id")
+      lshGate(s, n, probeLshIndex(s, live, queries, k),
+        lshTopKBatchOn(plantedEmb(emb, n), queries, k), "agrees_rebuild")
     } finally {
       deleteScratch(s, scratch)
     }
@@ -2412,11 +2004,22 @@ object Similarity {
   /** Query-relation probe of a [[buildIvfIndex]] index through the ONE
     * [[probeBatchOn]] plan. The probed cells' distinct set
     * (centroid-bounded driver metadata) prunes at the manifest level,
-    * so only those cells' entries reach the scan. */
+    * so only those cells' entries reach the scan. A driver-side query
+    * array probes as a local `toDF` relation through the same plan. */
   def probeIvfIndex(s: SparkSession, rootPath: String,
       queries: DataFrame, trained: Array[(Int, Array[Double])],
       k: Int = 10, nProbe: Int = 4, excludeSelf: Boolean = false,
-      broadcastProbes: Boolean = true): DataFrame = {
+      broadcastProbes: Boolean = true): DataFrame =
+    probeIvfCells(s, rootPath, queries, trained, k, nProbe, excludeSelf,
+      broadcastProbes, where = None)
+
+  /** [[probeIvfIndex]] with [[probeBatchOn]]'s candidate predicate —
+    * the metadata-filtered lane ([[ivfFilteredPlanted]]) probes through
+    * it. */
+  private def probeIvfCells(s: SparkSession, rootPath: String,
+      queries: DataFrame, trained: Array[(Int, Array[Double])], k: Int,
+      nProbe: Int, excludeSelf: Boolean, broadcastProbes: Boolean,
+      where: Option[Column]): DataFrame = {
     val centsL = trained.map { case (c, v) => (c.toLong, v) }
     // rank ONCE: localCheckpoint the ranked probes, derive the
     // manifest-pruning keys from the materialized relation, and feed
@@ -2429,7 +2032,7 @@ object Similarity {
       .collect().map(_.getInt(0).toString).toSeq.sorted
     val pruned = graft.store.ManifestStore.read(s, rootPath, Some(cells))
     probeBatchOn(pruned, centsL, queries, k, nProbe, excludeSelf,
-      broadcastProbes, probesPre = Some(probes))
+      broadcastProbes, probesPre = Some(probes), where = where)
   }
 
   /** `ann_ivf_compact` / `ann_ivf_compact_mf` gate — the multi-batch
@@ -2449,10 +2052,9 @@ object Similarity {
     * ~0.98).
     *
     * The probe is the manifest-pruning showcase: the per-query probe
-    * cells are ranked against the frozen centroids (the identical
-    * accumulation order as [[ivfProbeIndexed]]'s replica, so the two
-    * lanes agree bit-for-bit) and ONLY those cells' manifest entries
-    * reach the scan. */
+    * cells are ranked against the frozen centroids (the same CosineSim
+    * doubles and tie order as the build-side argmax) and ONLY those
+    * cells' manifest entries reach the scan. */
   def ivfCompactManifestPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10, nProbe: Int = 4): DataFrame = {
     val emb = t(s, dir, "embeddings")
@@ -2505,11 +2107,11 @@ object Similarity {
       // cells, so probing the cache IS probing the rebuild, minus file
       // I/O); independent of the live probe, so the two lanes overlap
       // (guide §2.6)
+      val qDf = queries.toSeq.toDF("q_id", "q_emb")
       val (liveTop, rebuildTop) = Par.two(
-        reduceTopk(probeIvfIndex(s, live,
-          queries.toSeq.toDF("q_id", "q_emb"), trained, k, nProbe)),
-        reduceTopk(multiProbeOn(assignedAll, centsL,
-          queries.toSeq, k, nProbe)))
+        reduceTopk(probeIvfIndex(s, live, qDf, trained, k, nProbe)),
+        reduceTopk(probeBatchOn(assignedAll, centsL, qDf, k, nProbe,
+          excludeSelf = false)))
       val rows = queries.map { case (qid, _) =>
         val a = liveTop(qid)
         val b = rebuildTop(qid)
@@ -2526,9 +2128,10 @@ object Similarity {
 
   /** Build an IVF-PQ codes index at `rootPath`: the PQ codes table
     * keyed by home cell in a [[graft.store.ManifestStore]], one
-    * version-1 commit. The SHARED [[pqEncodeOn]] projection encodes, so
-    * this store and [[writeIvfPqIndexOn]]'s hive tree hold
-    * bit-identical codes by construction. */
+    * version-1 commit. The table holds (vec_id, cell, c0..c3) and no
+    * embedding. The SHARED [[pqEncodeOn]] projection encodes, so a
+    * build and a [[maintainIvfPqIndex]] merge hold bit-identical codes
+    * by construction. */
   def buildIvfPqIndex(s: SparkSession, emb: DataFrame,
       cents: Array[(Int, Array[Double])],
       cb: Array[Array[Array[Double]]], rootPath: String): Unit =
@@ -2557,13 +2160,13 @@ object Similarity {
       .getOrElse("codes", Seq.empty).map(_.toInt).sorted
   }
 
-  /** Query-relation probe of a [[buildIvfPqIndex]] index: identical
-    * coarse ranking and ADC math to [[ivfPqProbeIndexedBatch]]
-    * ([[pqProbesOf]] / [[pqAdcRank]], shared verbatim — the two lanes
-    * are bit-identical on the same queries by construction); what
-    * changes is the scan source. The probed cells' DISTINCT set —
-    * bounded by the centroid count, never the query count — prunes at
-    * the MANIFEST level, so only those cells' entries reach the scan. */
+  /** Query-relation probe of a [[buildIvfPqIndex]] index: per-query
+    * coarse ranking by [[rankedProbesOf]] (the IVF probe projection),
+    * then [[pqAdcRank]]'s column-side ADC — bit-identical to the
+    * in-memory [[ivfPqTopK]] on the same query (spec-pinned). The probed
+    * cells' DISTINCT set — bounded by the centroid count, never the
+    * query count — prunes at the MANIFEST level, so only those cells'
+    * entries reach the scan; no embedding is read. */
   def probeIvfPqIndex(s: SparkSession, dir: String, rootPath: String,
       queries: DataFrame, k: Int = 10, nProbe: Int = 3,
       excludeSelf: Boolean = true, broadcastProbes: Boolean = true,
@@ -2575,7 +2178,7 @@ object Similarity {
     val cents = centsI.map { case (cl, v) => (cl.toLong, v) }
     // rank ONCE (the probeIvfIndex discipline): the cells collect and
     // the ADC join both read the materialized probes
-    val probes = pqProbesOf(queries, cents, nProbe).localCheckpoint(true)
+    val probes = rankedProbesOf(queries, cents, nProbe).localCheckpoint(true)
     val cells = probes.select("cell").distinct()
       .collect().map(_.getInt(0).toString).toSeq.sorted
     val codes = graft.store.ManifestStore.readTable(s, rootPath,
@@ -2605,25 +2208,12 @@ object Similarity {
     val arriving = emb.filter(isBatch).unionByName(
       emb.filter(col("vec_id") < n)
         .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
-    val cents = collectCentroids(labelCentroids(s, dir), "label")
-    val cb = pqCodebooks(s, dir)
-    val scratch = scratchDir(s, "graft-pqcmf-")
-    try {
-      val live = s"$scratch/live"
+    pqScratchProbe(s, dir, "graft-pqcmf-",
+      emb.filter(col("vec_id") < n)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+      k, nProbe) { (live, cents, cb) =>
       buildIvfPqIndex(s, emb.filter(!isBatch), cents, cb, live)
       maintainIvfPqIndex(s, live, arriving, cents, cb)
-      val queries = emb.filter(col("vec_id") < n)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val topk = probeIvfPqIndex(s, dir, live, queries, k, nProbe,
-        model = Some((cents, cb)))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-          r.getDouble(3), r.getInt(4)))
-      import s.implicits._
-      topk.toSeq.toDF("q_id", "vec_id", "cell", "adc_dist", "rn")
-        .orderBy("q_id", "rn")
-    } finally {
-      deleteScratch(s, scratch)
     }
   }
 

@@ -21,9 +21,10 @@ import graft.operators.Dedup
   * stream-side state). The aggregation forces `foreachBatch` (the
   * runNearDupOnce discipline: groupBy as a raw stream would be
   * stateful; the micro-batch boundary makes it stateless batch work).
-  * In production the corpus side is the hive `cell=`-partitioned IVF
-  * index and the scan prunes to each query's probe cells — the batch
-  * argmax below is the exact-baseline rendering of the same contract.
+  * In production the corpus side is the cell-keyed IVF index and the
+  * scan prunes to each query's probe cells ([[runAnnIndexedOnce]]) —
+  * the batch argmax below is the exact-baseline rendering of the same
+  * contract.
   * Results land through batchId-keyed dynamic partition overwrite
   * ([[CorpusStream.upsertSurvivors]]'s exactly-once discipline). */
 object VectorStream {
@@ -95,47 +96,50 @@ object VectorStream {
     out
   }
 
-  /** Streaming probes against the MATERIALIZED IVF index — the
-    * production shape [[annTop1]]'s scaladoc promises: the corpus side
-    * is the hive `cell=`-partitioned index on shared storage, and each
-    * micro-batch of arriving queries rides
-    * [[graft.operators.Similarity.ivfProbeIndexedBatch]]'s plan — the
-    * probe pairs broadcast-join the index scan on the `cell` partition
-    * column, so per-trigger read cost is the probed cells' partitions
-    * (`≤ distinct probed cells / cells` of the index), NEVER a corpus
-    * scan. Static sides honor the run-once discipline that the 10×
-    * rehearsal enforced on the other stream lanes: the index is built
-    * once before the stream starts, its centroid table is collected
-    * ONCE (k×dim model metadata), and the vectors relation is planned
-    * once outside the loop — per batch, only the pruned scan executes.
+  /** Streaming probes against the STORED IVF index — the production
+    * shape [[annTop1]]'s scaladoc promises: the corpus side is a
+    * cell-keyed index on shared storage
+    * ([[graft.operators.Similarity.buildIvfIndex]]), and each
+    * micro-batch of arriving queries goes through
+    * [[graft.operators.Similarity.probeIvfIndex]] — the batch's probed
+    * cells prune at the manifest level, so per-trigger read cost is
+    * those cells' entries (`≤ distinct probed cells / cells` of the
+    * index), NEVER a corpus scan. Static sides honor the run-once
+    * discipline that the 10× rehearsal enforced on the other stream
+    * lanes: the sampled centroids are collected ONCE (k×dim model
+    * metadata) and the index is built once before the stream starts.
     *
     * Closed-form contract as [[runAnnProbeOnce]]: each probe is an
     * exact copy of a stored original under a plant-offset q_id; the
-    * copy's centroid ranking is bit-identical to its original's
-    * build-side argmax (the [[graft.operators.Similarity.ivfIndexedPlanted]]
-    * argument), so the original's home cell is always probed and
-    * rank-1 recovery at cosine ~1.0 is deterministic for any
-    * nProbe >= 1. Results upsert batchId-keyed (exactly-once). */
+    * copy's centroid ranking evaluates the same doubles as its
+    * original's build-side argmax (the
+    * [[graft.operators.Similarity.ivfIndexedPlanted]] argument), so the
+    * original's home cell is always probed and rank-1 recovery at
+    * cosine ~1.0 is deterministic for any nProbe >= 1. Results upsert
+    * batchId-keyed (exactly-once). */
   def runAnnIndexedOnce(s: SparkSession, srcDir: String,
       n: Int = 5, nProbe: Int = 4): DataFrame = {
     import graft.operators.Similarity
+    val emb = graft.Tables.load(s, srcDir, "embeddings")
     val idxDir = HourlyStream.scratchDir("graft_annidx_")
     val probeDir = HourlyStream.scratchDir("graft_probeidx_drop_")
     // index build and probe-drop staging are disjoint outputs —
-    // overlap (guide §2.6); the build returns the centroid model it
-    // just collected and wrote, so the static side needs no re-read
-    // (float→double widening is exactly the stored-table cast)
-    val (centsF, _) = graft.operators.Par.two(
-      Similarity.writeIvfIndex(s, srcDir, idxDir),
-      graft.Tables.load(s, srcDir, "embeddings")
-        .filter(col("vec_id") < n)
+    // overlap (guide §2.6); the build side returns the centroid model
+    // it sampled, so the static side needs no re-read
+    val (cents, _) = graft.operators.Par.two(
+      {
+        val tr = Similarity.ivfCentroids(emb)
+          .map { case (c, v) => (c.toInt, v.map(_.toDouble)) }
+        Similarity.buildIvfIndex(s, idxDir,
+          emb.select(col("vec_id"), col("embedding"),
+            Similarity.argmaxOver(tr).getField("cluster").as("cell")))
+        tr
+      },
+      emb.filter(col("vec_id") < n)
         .select((col("vec_id") + Dedup.PlantOffset).as("q_id"),
           col("embedding"))
         .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
         .write.mode("overwrite").parquet(probeDir))
-    // static sides, planned/collected ONCE outside the trigger loop
-    val cents = centsF.map { case (cid, v) => (cid, v.map(_.toDouble)) }
-    val vectors = s.read.parquet(s"$idxDir/vectors")
     val whRoot = HourlyStream.scratchDir("graft_annidx_wh_")
     val warehouse = whRoot + "/top1"
     val ckpt = HourlyStream.scratchDir("graft_annidx_ckpt_")
@@ -144,9 +148,9 @@ object VectorStream {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val top1 = Similarity.probeIndexBatchOn(vectors, cents,
-            b.select(col("q_id"), col("embedding").as("q_emb")),
-            k = 1, nProbe = nProbe, excludeSelf = false)
+        val top1 = Similarity.probeIvfIndex(s, idxDir,
+            b.select(col("q_id"), col("embedding").as("q_emb")), cents,
+            k = 1, nProbe = nProbe)
           .select(col("q_id"), col("vec_id"),
             (col("cos_sim") >= 0.999999).as("is_exact"))
         CorpusStream.upsertSurvivors(top1, warehouse, batchId)
@@ -264,11 +268,11 @@ object VectorStream {
           qid -> rows.sortBy(_._4).map(t => (t._2, t._3)).toSeq
         }
     val (stored, rebuild) = graft.operators.Par.two(
-      keyed(Similarity.probeIndexBatchOn(
+      keyed(Similarity.probeBatchOn(
         ManifestStore.read(s, idxDir)
           .select("vec_id", "embedding", "cell"), centsL, queries,
         k, nProbe, excludeSelf = true)),
-      keyed(Similarity.probeIndexBatchOn(
+      keyed(Similarity.probeBatchOn(
         emb.filter(!isBatch).unionByName(arriving)
           .select(col("vec_id"), col("embedding"),
             Similarity.argmaxOver(trained).getField("cluster").as("cell")),

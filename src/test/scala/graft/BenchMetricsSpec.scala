@@ -84,8 +84,8 @@ class BenchMetricsSpec extends AnyFunSuite {
     val l = new Bench.TaskMetricsListener
     spark.sparkContext.addSparkListener(l)
     try {
-      // ann_lsh_indexed writes an index to scratch, then probes it —
-      // several actions before the final gate relation; last-action
+      // ann_lsh_indexed builds a manifest index in scratch, then probes
+      // it — several actions before the final gate relation; last-action
       // capture read scan_bytes=0 here, blind to a lost pruning inside
       val m = Bench.measuredRep(spark, l,
         s => SparkEntry.queries("ann_lsh_indexed")(s, TestSpark.sf))._2

@@ -54,8 +54,8 @@ class FsScratchSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF build/probe lifecycle (train -> hive cell= index write -> " +
-      "partition-pruned probe -> teardown) runs green through an " +
+  test("IVF build/probe lifecycle (train -> cell-keyed manifest build -> " +
+      "entry-pruned probe -> teardown) runs green through an " +
       "explicit file:-scheme FS handle") {
     val root = localRoot()
     withScratchConf(s"file:$root") {

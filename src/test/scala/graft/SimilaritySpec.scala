@@ -195,98 +195,133 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ivf.head.getLong(1) === 6666L)
   }
 
-  test("materialized IVF index: probe prunes to nProbe cell partitions") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfidx_").toString
-    Similarity.writeIvfIndex(spark, TestSpark.sf, idx)
-    // cell= dirs exist on disk (the prunable layout)
-    val dirs = new java.io.File(s"$idx/vectors").listFiles()
-      .count(_.getName.startsWith("cell="))
-    assert(dirs > 4, s"expected many cell partitions, got $dirs")
-    val q = graft.Tables.load(spark, TestSpark.sf, "embeddings")
-      .filter($"vec_id" === 0L).head.getSeq[Float](1).toArray
-    val probe = Similarity.ivfProbeIndexed(spark, idx, q, k = 11, nProbe = 4)
-    val rows = probe.collect()
-    // the scan must prune on the cell partition column
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.matches("(?s).*PartitionFilters: \\[.*cell.*"),
-      s"expected cell PartitionFilters in:\n${plan.take(1500)}")
-    // ...and prune to EXACTLY nProbe of the cell partitions: the 100 TB
-    // probe cost is nProbe/cells of one scan, from layout alone
-    val scans = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scans.nonEmpty)
-    assert(scans.head.selectedPartitions.partitionCount === 4,
-      s"expected 4 selected cell partitions, got " +
-        s"${scans.head.selectedPartitions.partitionCount} of $dirs")
-    // rank 1 is the query vector itself (it lives in a probed cell)
-    assert(rows.head.getLong(0) === 0L && rows.head.getDouble(1) >= 0.999999)
-    // dropping self, the result IS the in-memory IVF top-k (same
-    // centroids, same probed cells, same scores)
-    val mem = Similarity.ivfTopK(spark, TestSpark.sf, Seq(0L), k = 10)
-      .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
-    assert(rows.tail.map(_.getLong(0)).toSet === mem.keySet)
-    rows.tail.foreach(r => assert(mem(r.getLong(0)) === r.getDouble(1)))
+  // ---- stored ANN indexes: one store per family, built once ----
+
+  private lazy val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
+
+  /** The in-memory [[Similarity.ivfTopK]]'s sampled centroids, keyed by
+    * their vec_id as the in-memory lane keys them. */
+  private lazy val ivfModel: Array[(Int, Array[Double])] =
+    Similarity.ivfCentroids(emb, 16)
+      .map { case (c, v) => (c.toInt, v.map(_.toDouble)) }
+
+  private lazy val ivfRoot: String = {
+    val root = storeRoot("graft_ivfidx_")
+    Similarity.buildIvfIndex(spark, root, emb.select($"vec_id",
+      $"embedding", Similarity.argmaxOver(ivfModel).getField("cluster")
+        .as("cell")))
+    root
   }
 
-  test("batch probe lane: query-relation probes equal the driver-Seq " +
-      "lane row-for-row, broadcast-join with dynamic partition pruning, " +
-      "and the query relation is never collected") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfb_").toString
-    Similarity.writeIvfIndex(spark, TestSpark.sf, idx)
-    val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
-    val qDf = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-    val batch = Similarity.ivfProbeIndexedBatch(spark, idx, qDf,
-      k = 10, nProbe = 4)
-    val rowsBatch = batch.collect().toSeq
+  private lazy val pqModel = (
+    Similarity.collectCentroids(
+      Similarity.labelCentroids(spark, TestSpark.sf), "label"),
+    Similarity.pqCodebooks(spark, TestSpark.sf))
+
+  private lazy val pqRoot: String = {
+    val root = storeRoot("graft_pqidx_")
+    Similarity.buildIvfPqIndex(spark, emb, pqModel._1, pqModel._2, root)
+    root
+  }
+
+  private lazy val lshRoot: String = {
+    val root = storeRoot("graft_lshidx_")
+    Similarity.buildLshIndex(spark, emb, root)
+    root
+  }
+
+  private def queriesBelow(n: Long) = emb.filter($"vec_id" < n)
+    .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
+
+  /** The same queries collected to the driver and probed back as a
+    * local relation — the driver-array lane. */
+  private def localQueriesBelow(n: Long) = queriesBelow(n).collect()
+    .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    .toDF("q_id", "q_emb")
+
+  /** The `nProbe` cells a query probes, ranked by an independent
+    * driver-side cosine (the CosineSim fold order). */
+  private def probedCells(qIds: Seq[Long],
+      model: Array[(Int, Array[Double])], nProbe: Int): Set[String] = {
+    def cos(a: Seq[Float], b: Array[Double]): Double = {
+      var xy = 0.0; var xx = 0.0; var yy = 0.0; var i = 0
+      while (i < a.length) {
+        val x = a(i).toDouble; val y = b(i)
+        xy += x * y; xx += x * x; yy += y * y; i += 1
+      }
+      xy / (math.sqrt(xx) * math.sqrt(yy))
+    }
+    emb.filter($"vec_id".isin(qIds: _*)).select("embedding").collect()
+      .flatMap { r =>
+        val q = r.getSeq[Float](0)
+        model.map { case (c, v) => (-cos(q, v), c) }.sorted.take(nProbe)
+          .map(_._2.toString)
+      }.toSet
+  }
+
+  /** The manifest entry dirs of `table` whose key is in `parts`. */
+  private def entryPaths(root: String, table: String,
+      parts: String => Boolean = _ => true): Set[String] =
+    graft.store.ManifestStore.tableEntries(spark, root, table)
+      .filter(e => parts(e.part)).map(e => s"$root/${e.dir}").toSet
+
+  /** The leaf dirs a plan's scans read (its input files' parents). */
+  private def dirsRead(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f =>
+      new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath).toSet
+
+  test("materialized IVF index: probe prunes to nProbe cell partitions") {
+    assert(entryPaths(ivfRoot, "t").size > 4,
+      "expected many cell entries in the store")
+    val probe = Similarity.probeIvfIndex(spark, ivfRoot, queriesBelow(1),
+      ivfModel, k = 10, nProbe = 4, excludeSelf = true)
+    val rows = probe.collect().map(r => (r.getLong(1), r.getDouble(2)))
+    // the scan reads EXACTLY the query's 4 probed cells' entries: the
+    // 100 TB probe cost is nProbe/cells of one scan
+    val probed = probedCells(Seq(0L), ivfModel, 4)
+    assert(probed.size === 4)
+    assert(dirsRead(probe) === entryPaths(ivfRoot, "t", probed))
+    // the stored probe IS the in-memory IVF top-k (same centroids, same
+    // probed cells, same scores, same order)
+    val mem = Similarity.ivfTopK(spark, TestSpark.sf, Seq(0L), k = 10)
+      .collect().map(r => (r.getLong(1), r.getDouble(2)))
+    assert(rows.toSeq === mem.toSeq)
+  }
+
+  test("batch probe lane: query-relation probes equal the driver-array " +
+      "lane row-for-row, broadcast-join over the probed cells' entries " +
+      "only, and the query relation is never collected") {
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val qSeq = emb.filter($"vec_id" < 5)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val rowsMulti = Similarity.ivfProbeIndexedMulti(spark, idx,
-      qSeq.toSeq, k = 10, nProbe = 4).collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    // bit-exact lane equality: same probed cells (distributed vs driver
-    // centroid ranking), same t6 scores, same rank order
-    assert(rowsBatch === rowsMulti)
+    val batch = Similarity.probeIvfIndex(spark, ivfRoot, queriesBelow(5),
+      ivfModel, k = 10, nProbe = 4)
+    val local = Similarity.probeIvfIndex(spark, ivfRoot,
+      localQueriesBelow(5), ivfModel, k = 10, nProbe = 4)
+    // bit-exact lane equality: same probed cells, same t6 scores, same
+    // rank order
+    assert(rowsOf(batch) === rowsOf(local))
+    assert(dirsRead(batch) === entryPaths(ivfRoot, "t",
+      probedCells(0L until 5L, ivfModel, 4)))
     val plan = batch.queryExecution.executedPlan.toString
-    // the probe side broadcasts and the index scan is pruned at RUNTIME
-    // by the broadcast's distinct cells — the shape that keeps a 1e6-
-    // query batch at (probed cells / cells) of one index scan
     assert(plan.contains("BroadcastHashJoin"),
       s"expected BroadcastHashJoin in:\n${plan.take(1500)}")
-    assert(plan.contains("dynamicpruning"),
-      s"expected dynamicpruning PartitionFilters in:\n${plan.take(1500)}")
-    // no collect of the query relation: the query side is the embeddings
-    // FILE SCAN feeding the plan directly, never a driver-side local
-    // relation re-parallelized
+    // the query side is ranked distributively and checkpointed on the
+    // executors, never a driver-side local relation re-parallelized
     assert(!plan.contains("LocalTableScan"),
       "query relation must not pass through the driver")
-    // (string count, not a tree collect: AQE wraps the join stages so
-    // FileSourceScanExec nodes are not reachable by plan.collect here)
-    val nScans = "FileScan parquet".r.findAllIn(plan).size
-    assert(nScans >= 2,
-      s"expected index scan + query-relation scan, got $nScans")
   }
 
   test("driver-Seq probe lane is the batch plan: ONE broadcast join, " +
       "no per-query union branches") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfm_").toString
-    Similarity.writeIvfIndex(spark, TestSpark.sf, idx)
-    val qSeq = graft.Tables.load(spark, TestSpark.sf, "embeddings")
-      .filter($"vec_id" < 5)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val multi = Similarity.ivfProbeIndexedMulti(spark, idx, qSeq.toSeq,
-      k = 10, nProbe = 4)
+    val multi = Similarity.probeIvfIndex(spark, ivfRoot,
+      localQueriesBelow(5), ivfModel, k = 10, nProbe = 4)
     assert(multi.count() === 50)
     val optimized = multi.queryExecution.optimizedPlan
     val unions = optimized.collect {
       case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
     }
     assert(unions.isEmpty,
-      "the Seq lane must not build per-query union branches anymore")
+      "the driver-array lane must not build per-query union branches")
     val joins = optimized.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }
@@ -320,21 +355,17 @@ class SimilaritySpec extends AnyFunSuite {
     // the past-broadcast-capacity scenario: auto-broadcast disabled so
     // neither the planner nor AQE can pick a broadcast join — the lanes
     // must run as shuffles on the same equi-keys and change NOTHING
-    val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
-    val qDf = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfs_").toString
-    Similarity.writeIvfIndex(spark, TestSpark.sf, idx)
+    val qDf = queriesBelow(5)
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val ivfB = rowsOf(Similarity.ivfProbeIndexedBatch(spark, idx, qDf,
-      k = 10, nProbe = 4).select("q_id", "vec_id", "cos_sim"))
+    val ivfB = rowsOf(Similarity.probeIvfIndex(spark, ivfRoot, qDf,
+      ivfModel, k = 10, nProbe = 4).select("q_id", "vec_id", "cos_sim"))
     val lshB = rowsOf(Similarity.lshTopKBatchOn(emb, qDf, k = 10)
       .select("q_id", "vec_id", "cos_sim"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val ivfS = Similarity.ivfProbeIndexedBatch(spark, idx, qDf,
+      val ivfS = Similarity.probeIvfIndex(spark, ivfRoot, qDf, ivfModel,
         k = 10, nProbe = 4, broadcastProbes = false)
       val lshS = Similarity.lshTopKBatchOn(emb, qDf, k = 10,
         broadcastProbes = false)
@@ -354,25 +385,19 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("bulk-probe fallback covers the stored lanes too: IVF-PQ and " +
       "materialized-LSH probes shuffle when broadcastProbes=false") {
-    val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
-    val qDf = emb.filter($"vec_id" < 3)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-    val pqIdx = java.nio.file.Files.createTempDirectory("graft_pqs_").toString
-    Similarity.writeIvfPqIndex(spark, TestSpark.sf, pqIdx)
-    val lshIdx = java.nio.file.Files.createTempDirectory("graft_lshs_").toString
-    Similarity.writeLshIndex(spark, TestSpark.sf, lshIdx)
+    val qDf = queriesBelow(3)
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1)))
-    val pqB = rowsOf(Similarity.ivfPqProbeIndexedBatch(spark, TestSpark.sf,
-      pqIdx, qDf, k = 5).select("q_id", "vec_id"))
-    val lshB = rowsOf(Similarity.lshProbeIndexed(spark, lshIdx, qDf, k = 5)
+    val pqB = rowsOf(Similarity.probeIvfPqIndex(spark, TestSpark.sf,
+      pqRoot, qDf, k = 5, model = Some(pqModel)).select("q_id", "vec_id"))
+    val lshB = rowsOf(Similarity.probeLshIndex(spark, lshRoot, qDf, k = 5)
       .select("q_id", "vec_id"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val pqS = Similarity.ivfPqProbeIndexedBatch(spark, TestSpark.sf,
-        pqIdx, qDf, k = 5, broadcastProbes = false)
-      val lshS = Similarity.lshProbeIndexed(spark, lshIdx, qDf, k = 5,
+      val pqS = Similarity.probeIvfPqIndex(spark, TestSpark.sf, pqRoot,
+        qDf, k = 5, broadcastProbes = false, model = Some(pqModel))
+      val lshS = Similarity.probeLshIndex(spark, lshRoot, qDf, k = 5,
         broadcastProbes = false)
       assert(rowsOf(pqS.select("q_id", "vec_id")) === pqB)
       assert(rowsOf(lshS.select("q_id", "vec_id")) === lshB)
@@ -386,18 +411,13 @@ class SimilaritySpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("materialized LSH index: probe reads only the probed (band, " +
-      "bucket) partitions and equals the in-memory batch lane") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_lshidx_").toString
-    Similarity.writeLshIndex(spark, TestSpark.sf, idx)
-    // band=/bucket= hive dirs exist (the prunable layout)
-    val bandDirs = new java.io.File(s"$idx/postings").listFiles()
-      .count(_.getName.startsWith("band="))
-    assert(bandDirs === 8, s"expected 8 band partitions, got $bandDirs")
-    val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
-    val qDf = emb.filter($"vec_id" < 3)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-    val probe = Similarity.lshProbeIndexed(spark, idx, qDf, k = 10)
+  test("materialized LSH index: the probe reads the 8 band entries and " +
+      "equals the in-memory batch lane") {
+    // one postings entry per band, however many buckets it holds
+    val bands = entryPaths(lshRoot, "postings")
+    assert(bands.size === 8, s"expected 8 band entries, got $bands")
+    val qDf = queriesBelow(3)
+    val probe = Similarity.probeLshIndex(spark, lshRoot, qDf, k = 10)
     val rowsStored = probe.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     val rowsMem = Similarity.lshTopKBatchOn(emb, qDf, k = 10)
@@ -405,9 +425,14 @@ class SimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(rowsStored === rowsMem,
       "stored-index probe must equal the in-memory lane row-for-row")
+    // every query hashes into every band, so all 8 entries are read;
+    // the (band, bucket) join keeps only the probed buckets
+    val read = dirsRead(probe)
+    assert(bands.subsetOf(read),
+      s"expected all band entries among the scanned dirs: $read")
     val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      s"expected DPP on the postings scan in:\n${plan.take(1500)}")
+    assert(plan.contains("BroadcastHashJoin"),
+      s"expected a broadcast probe join in:\n${plan.take(1500)}")
     assert(!plan.contains("LocalTableScan"),
       "query relation must not pass through the driver")
   }
@@ -430,38 +455,24 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("PQ batch probe lane: query-relation ADC equals the driver-array " +
-      "lane per query, with broadcast join + dynamic partition pruning") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_pqb_").toString
-    try {
-      Similarity.writeIvfPqIndex(spark, TestSpark.sf, idx)
-      val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
-      val qDf = emb.filter($"vec_id" < 5)
-        .select($"vec_id".as("q_id"), $"embedding".as("q_emb"))
-      val batch = Similarity.ivfPqProbeIndexedBatch(spark, TestSpark.sf,
-        idx, qDf, k = 10, nProbe = 3)
-      val byQ = batch.collect().toSeq
-        .map(r => (r.getLong(0), (r.getLong(1), r.getInt(2),
-          r.getDouble(3))))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      (0L until 5L).foreach { qid =>
-        val single = Similarity.ivfPqProbeIndexed(spark, TestSpark.sf,
-          idx, qid, k = 10, nProbe = 3).collect().toSeq
-          .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-        assert(byQ(qid) === single,
-          s"query $qid: batch lane diverges from the driver-array lane")
-      }
-      val plan = batch.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin") &&
-        plan.contains("dynamicpruning") &&
-        !plan.contains("LocalTableScan"),
-        s"expected DPP broadcast probe without a query collect:\n" +
-          plan.take(1200))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(idx)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+      "lane per query, with a broadcast join over the probed cells' " +
+      "entries") {
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3),
+        r.getInt(4)))
+    val batch = Similarity.probeIvfPqIndex(spark, TestSpark.sf, pqRoot,
+      queriesBelow(5), k = 10, nProbe = 3, model = Some(pqModel))
+    val local = Similarity.probeIvfPqIndex(spark, TestSpark.sf, pqRoot,
+      localQueriesBelow(5), k = 10, nProbe = 3, model = Some(pqModel))
+    assert(rowsOf(batch) === rowsOf(local),
+      "batch lane diverges from the driver-array lane")
+    assert(dirsRead(batch) === entryPaths(pqRoot, "codes",
+      probedCells(0L until 5L, pqModel._1, 3)))
+    val plan = batch.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") &&
+      !plan.contains("LocalTableScan"),
+      s"expected a broadcast probe without a query collect:\n" +
+        plan.take(1200))
   }
 
   test("ann_ivf_batch lifecycle gate: planted copies at rank 1 via the " +
@@ -488,16 +499,20 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("IVF lifecycle (train -> build -> probe): every planted probe " +
       "recovers its copy at rank 1, and the scratch index is removed") {
+    // the scratch root the lane resolves (spark.graft.scratch.dir, else
+    // the warehouse dir), found the way the lane finds it
+    val probe = Similarity.scratchDir(spark, "graft-spec-")
+    val root = probe.getParent
+    Similarity.deleteScratch(spark, probe)
     val got = Similarity.ivfIndexedPlanted(spark, TestSpark.sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getBoolean(3)))
     assert(got.toSeq === (0L until 5L).map(q =>
       (q, q + graft.operators.Dedup.PlantOffset, 1, true)))
     // lifecycle cleans its scratch: no graft-ivf- dirs left behind
-    val tmp = new java.io.File(
-      System.getProperty("java.io.tmpdir")).listFiles()
-    assert(tmp == null ||
-      !tmp.exists(_.getName.startsWith("graft-ivf-")),
-      "lifecycle must delete its scratch index directory")
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(root) || !fs.listStatus(root)
+      .exists(_.getPath.getName.startsWith("graft-ivf-")),
+      s"lifecycle must delete its scratch index directory under $root")
   }
 
   /** Entry dir per partition key of a manifest-store table. */
@@ -873,26 +888,20 @@ class SimilaritySpec extends AnyFunSuite {
   test("materialized IVF-PQ index: no embedding column stored, probe " +
       "prunes to nProbe cell partitions, result equals the in-memory " +
       "compose") {
-    import org.apache.spark.sql.functions._
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
-    Similarity.writeIvfPqIndex(spark, TestSpark.sf, idx)
-    // the index stores ids + codes + the cell partition key ONLY — the
+    // the index stores ids + codes + the cell key ONLY — the
     // 12-bits-per-vector payload that makes billion-vector ANN fit RAM
-    val stored = spark.read.parquet(s"$idx/codes")
+    val stored = graft.store.ManifestStore.readTable(spark, pqRoot, "codes")
     assert(stored.columns.sorted.toSeq ===
       Seq("c0", "c1", "c2", "c3", "cell", "vec_id"))
-    val probe = Similarity.ivfPqProbeIndexed(spark, TestSpark.sf, idx)
+    val probe = Similarity.probeIvfPqIndex(spark, TestSpark.sf, pqRoot,
+      localQueriesBelow(1), k = 10, nProbe = 3, model = Some(pqModel))
     val rows = probe.collect()
-    val scans = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scans.nonEmpty)
-    assert(scans.head.selectedPartitions.partitionCount === 3,
-      s"expected 3 selected cell partitions, got " +
-        s"${scans.head.selectedPartitions.partitionCount}")
+    val probed = probedCells(Seq(0L), pqModel._1, 3)
+    assert(probed.size === 3)
+    assert(dirsRead(probe) === entryPaths(pqRoot, "codes", probed))
     val mem = Similarity.ivfPqTopK(spark, TestSpark.sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    assert(rows.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+    assert(rows.map(r => (r.getLong(1), r.getInt(2), r.getDouble(3)))
       .toSeq === mem.toSeq)
   }
 
@@ -920,24 +929,23 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("filtered index probe: label predicate reaches PushedFilters and " +
       "the gate relation is label-pure") {
-    // the pushdown half: a label-bearing cell-partitioned index scan
-    // must carry the label predicate as a parquet pushed filter (row
-    // groups skip on min/max stats before any vector bytes are read)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivff_").toString
-    graft.Tables.load(spark, TestSpark.sf, "embeddings")
-      .withColumn("cell",
-        org.apache.spark.sql.functions.pmod($"vec_id",
-          org.apache.spark.sql.functions.lit(4L)))
-      .write.partitionBy("cell").parquet(s"$idx/vectors")
-    val probe = spark.read.parquet(s"$idx/vectors")
-      .filter($"cell".isin(0L, 1L) && $"label" === 3)
+    // the pushdown half: a label-bearing cell-keyed index read of two
+    // cells' entries must carry a label predicate as a parquet pushed
+    // filter (row groups skip on min/max stats before any vector bytes
+    // are read)
+    val idx = storeRoot("graft_ivff_")
+    Similarity.buildIvfIndex(spark, idx, emb.select($"vec_id", $"label",
+      $"embedding", org.apache.spark.sql.functions.pmod($"vec_id",
+        org.apache.spark.sql.functions.lit(4L)).as("cell")))
+    val probe = graft.store.ManifestStore.read(spark, idx, Some(Seq("0", "1")))
+      .filter($"label" === 3)
       .select($"vec_id")
     val scans = probe.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.nonEmpty)
-    assert(scans.head.selectedPartitions.partitionCount === 2,
-      "cell predicate must prune partitions")
+    assert(dirsRead(probe) === entryPaths(idx, "t", Set("0", "1")),
+      "the cell selection must prune entries")
     assert(scans.head.metadata("PushedFilters").contains("EqualTo(label"),
       s"label must push to parquet: ${scans.head.metadata("PushedFilters")}")
     // the contract half: closed-form gate rows, label-pure top-k
