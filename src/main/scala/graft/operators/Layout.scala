@@ -597,10 +597,10 @@ object Layout {
     *    so genuine nulls can't alias null-fill);
     *  - `rows_conserved`: the merged read loses/duplicates nothing;
     *  - `compaction_bakes_schema`: after [[graft.store.ManifestStore.CompactAppend]]
-    *    the table reads identically WITHOUT the mergeSchema flag — the
-    *    one rewritten segment is schema-homogeneous, so the same op
-    *    that retires the small files retires the per-read footer-merge
-    *    cost. That is the manifest store's answer to evolution debt: a
+    *    the table reads identically from ONE segment — the rewritten
+    *    segment is schema-homogeneous, so the same op that retires the
+    *    small files retires the per-read union of schema versions.
+    *    That is the manifest store's answer to evolution debt: a
     *    bounded rewrite, not a permanent read tax.
     *
     * Scale shape: bounded scratch lifecycle; the only corpus-scale job

@@ -66,18 +66,16 @@ object Similarity {
 
   /** Recursive delete of a [[scratchDir]] lifecycle through its
     * [[org.apache.hadoop.fs.FileSystem]]; reaps the shared
-    * `.graft-scratch` root once its last child is gone (best-effort —
-    * a racing sibling lifecycle may repopulate it between the
-    * emptiness check and the delete, which is fine: the sibling's own
-    * teardown reaps it). */
+    * `.graft-scratch` root once its last child is gone (best-effort: a
+    * non-recursive delete refuses a non-empty dir, so a sibling
+    * lifecycle still running keeps it, and its own teardown reaps it). */
   private[graft] def deleteScratch(s: SparkSession,
       p: org.apache.hadoop.fs.Path): Unit = {
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
     if (fs.exists(p)) fs.delete(p, true)
     val parent = p.getParent
-    if (parent != null && parent.getName == ".graft-scratch" &&
-        fs.exists(parent))
-      try { if (fs.listStatus(parent).isEmpty) fs.delete(parent, false) }
+    if (parent != null && parent.getName == ".graft-scratch")
+      try fs.delete(parent, false)
       catch { case _: java.io.IOException => () }
   }
 
@@ -1811,7 +1809,7 @@ object Similarity {
     * band-keyed reads would match no entry and its upserts would not
     * find their key column, so both fail here instead, by name. */
   private def requireBandKeyed(s: SparkSession, rootPath: String): Long = {
-    val (v, key, _, _) = graft.store.ManifestStore.tableLayout(s, rootPath,
+    val (v, key, _) = graft.store.ManifestStore.tableLayout(s, rootPath,
       "postings", None)
     if (key != "band") throw new IllegalStateException(
       s"LSH index at $rootPath keys its postings by '$key', not 'band' " +

@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
   BoundReference, Expression, Predicate}
@@ -18,60 +15,51 @@ import graft.store.ManifestStore.Entry
 
 /** The manifest store's answer to Spark's file listing — a [[FileIndex]]
   * whose "directory listing" IS the manifest (the Delta/Iceberg
-  * architecture, library-sized). [[ManifestSource]] hands this to a
-  * real `HadoopFsRelation`, so the facade's plan is the native parquet
-  * `FileScan` — whole-stage codegen, predicate pushdown, column
-  * pruning — while partition resolution never touches the filesystem's
-  * directory tree:
+  * architecture, library-sized). [[ManifestStore]]'s one relation
+  * builder hands this to a real `HadoopFsRelation` for every read — the
+  * Scala API and the SQL facade alike — so the plan is the native
+  * parquet `FileScan` (whole-stage codegen, predicate pushdown, column
+  * pruning) while the file list never touches the filesystem:
   *
-  *  - the table's partition KEY is declared as a partition column
-  *    (`partitionSchema`), so `FileSourceStrategy` routes every
+  *  - the files are the ones each entry's manifest line RECORDS, with
+  *    their sizes: no list call at planning or at scan time, and a
+  *    file dropped into a committed leaf dir without a commit is never
+  *    read;
+  *  - the table's partition KEY, when its type parses back exactly
+  *    ([[ManifestFileIndex.supportedKeyType]]), is declared as the
+  *    partition column (`key`), so `FileSourceStrategy` routes every
   *    key predicate of a plain `WHERE` into `listFiles`'
   *    `partitionFilters` — MANIFEST-level pruning driven by SQL, no
   *    `parts` option needed. Dynamic partition pruning composes on
   *    top for free (Spark applies runtime filters to the
-  *    [[PartitionDirectory]] values this index returns);
-  *  - listing is LAZY and per-partition: only partitions surviving the
-  *    predicate have their (single) leaf dir listed — at 100 TB on an
-  *    object store a selective facade query issues list calls for the
-  *    probed partitions ONLY, the same zero-irrelevant-prefixes
-  *    contract the Scala API's `parts` pruning states;
-  *  - for `keyInData` tables the key stays in its original schema
-  *    position (`HadoopFsRelation` overlays the partition column onto
-  *    the same-named data column), and the scan no longer reads the
-  *    key's bytes from the files at all — the manifest supplies the
-  *    value, a free column prune. For layout-only-key tables the key
-  *    is RESTORED as a string partition column the Scala read cannot
-  *    offer (it was never stored in the files);
-  *  - `version`/`parts` options compose: the entry set this index is
-  *    built over is already time-travel-resolved and option-pruned.
+  *    [[PartitionDirectory]] values this index returns). The key stays
+  *    in its schema position (`HadoopFsRelation` overlays the partition
+  *    column onto the same-named data column), and the scan never reads
+  *    the key's bytes from the files — the manifest supplies the value;
+  *  - `version`/`parts` compose: the entry set this index is built over
+  *    is already time-travel-resolved and option-pruned.
   *
   * Beyond key pruning, `listFiles` intersects its DATA filters with
   * the manifest's per-segment column stats
   * ([[graft.store.ManifestStore.ColStat]]): segments provably outside
-  * a selective non-key predicate's range are skipped before their dir
-  * is listed or a footer opened — Delta-style file skipping, driven
-  * entirely by manifest metadata. `sizeInBytes` is exact and
-  * list-free from the entries' staged byte sizes (v3 manifests); for
-  * pre-v3 entries it reports the session's conservative default
-  * (never a broadcast-underestimate). A schema-fingerprint-
-  * heterogeneous selection cannot be one file relation and stays on
-  * [[ManifestSource]]'s fallback scan until CompactAppend /
-  * full-partition rewrites retire the evolution debt.
+  * a selective non-key predicate's range are skipped — Delta-style
+  * file skipping, driven entirely by manifest metadata. `sizeInBytes`
+  * is the exact sum of the recorded file sizes.
+  *
+  * Two indexes over the same (root, key, entries) are EQUAL, as two
+  * `InMemoryFileIndex`es over the same files are: two reads of one
+  * version then canonicalize to the same plan, so they share cached
+  * data and reused exchanges.
   *
   * Key-domain contract: partition keys render verbatim
   * ([[graft.store.ManifestStore]]'s write-time guards), so parsing the
   * hive rendering back to the key type is exact for the supported key
-  * types ([[ManifestFileIndex.supportedKeyType]]); unsupported key
-  * types fall back to the non-indexed relation in [[ManifestSource]].
+  * types.
   */
 private[graft] final class ManifestFileIndex(
-    spark: SparkSession,
-    fs: FileSystem,
-    storeRoot: Path,
-    keyCol: String, // "" = append-only: no partition column, one group
-    keyType: DataType,
-    entries: Seq[Entry]) extends FileIndex {
+    private val storeRoot: Path,
+    private val key: Option[StructField], // None: no partition column
+    private val entries: Seq[Entry]) extends FileIndex {
 
   /** part → its entries (one per manifest contract for keyed tables,
     * every append segment under part "" for append-only ones), sorted
@@ -84,9 +72,7 @@ private[graft] final class ManifestFileIndex(
     * the pruning gates/specs (never read by the scan itself). */
   @volatile private[graft] var lastSelectedParts: Option[Seq[String]] = None
 
-  override val partitionSchema: StructType =
-    if (keyCol.isEmpty) StructType(Nil)
-    else StructType(Seq(StructField(keyCol, keyType, nullable = false)))
+  override val partitionSchema: StructType = StructType(key.toSeq)
 
   /** DELIBERATELY two paths. Spark's `DataSourceAnalysis` refuses
     * `INSERT INTO`/`INSERT OVERWRITE` on any multi-path relation AT
@@ -101,48 +87,38 @@ private[graft] final class ManifestFileIndex(
   override def rootPaths: Seq[Path] =
     Seq(storeRoot, new Path(storeRoot, ManifestStore.ManifestDirName))
 
-  // listing cache keyed by entry DIR (not part): data-filter skipping
-  // selects entries within a part, so the cached unit must be the
-  // entry's own leaf
-  private val listed = new ConcurrentHashMap[String, Array[FileStatus]]()
-
-  private def filesOf(e: Entry): Array[FileStatus] =
-    listed.computeIfAbsent(e.dir, _ =>
-      fs.listStatus(new Path(storeRoot, e.dir)).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      })
-
-  private def partValueOf(part: String): Any =
-    ManifestFileIndex.parseKey(part, keyType)
+  /** The entry's recorded files as statuses — no file system call. */
+  private def filesOf(e: Entry): Seq[FileStatus] = {
+    val dir = new Path(storeRoot, e.dir)
+    e.files.map(f =>
+      new FileStatus(f.size, false, 0, 0L, 0L, new Path(dir, f.name)))
+  }
 
   private def valuesOf(part: String): InternalRow =
-    if (keyCol.isEmpty) InternalRow.empty
-    else InternalRow(partValueOf(part))
+    key.fold(InternalRow.empty)(k =>
+      InternalRow(ManifestFileIndex.parseKey(part, k.dataType)))
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val keyPruned =
-      if (partitionFilters.isEmpty || keyCol.isEmpty) byPart
-      else {
+    val keyPruned = key match {
+      case Some(k) if partitionFilters.nonEmpty =>
         // bind the key attribute to slot 0 of a one-column row and
         // evaluate the conjunction against each part's parsed value —
         // the standard PartitioningAwareFileIndex pruning shape
         val bound = partitionFilters.reduce(And).transform {
           case _: AttributeReference =>
-            BoundReference(0, keyType, nullable = false)
+            BoundReference(0, k.dataType, k.nullable)
         }
         val pred = Predicate.create(bound)
         pred.initialize(0)
-        byPart.filter { case (p, _) =>
-          pred.eval(InternalRow(partValueOf(p)))
-        }
-      }
+        byPart.filter { case (p, _) => pred.eval(valuesOf(p)) }
+      case _ => byPart
+    }
     // data filters intersect the entries' column stats (the manifest's
     // per-segment min/max): a segment provably outside every filter's
-    // range is dropped here, BEFORE its dir is ever listed — the
-    // Delta-style file skipping, I/O-only (Spark still applies the
-    // filters to the rows the surviving files produce)
+    // range is dropped here — the Delta-style file skipping, I/O-only
+    // (Spark still applies the filters to the rows the surviving files
+    // produce)
     val sourceFilters =
       dataFilters.flatMap(ManifestFileIndex.toSourceFilter)
     val selected = keyPruned.flatMap { case (p, es) =>
@@ -154,30 +130,32 @@ private[graft] final class ManifestFileIndex(
     }
     lastSelectedParts = Some(selected.map(_._1))
     selected.map { case (p, es) =>
-      PartitionDirectory(valuesOf(p), es.flatMap(filesOf(_)).toArray)
+      PartitionDirectory(valuesOf(p), es.flatMap(filesOf).toArray)
     }
   }
 
   override def inputFiles: Array[String] =
     entries.flatMap(e => filesOf(e).map(_.getPath.toString)).toArray
 
-  override def refresh(): Unit = listed.clear()
+  override def refresh(): Unit = ()
 
-  /** Exact with ZERO list calls when every entry carries its staged
-    * byte size (v3 manifests do); the conservative session default
-    * otherwise — a facade relation must never under-report and get
-    * itself broadcast at 100 TB. */
-  override def sizeInBytes: Long =
-    if (entries.forall(_.bytes >= 0L)) entries.map(_.bytes).sum
-    else spark.sessionState.conf.defaultSizeInBytes
+  override def sizeInBytes: Long = entries.map(_.bytes).sum
+
+  override def equals(other: Any): Boolean = other match {
+    case o: ManifestFileIndex =>
+      storeRoot == o.storeRoot && key == o.key && entries == o.entries
+    case _ => false
+  }
+
+  override lazy val hashCode: Int = (storeRoot, key, entries).##
 }
 
 private[graft] object ManifestFileIndex {
 
   /** Key types whose hive rendering parses back EXACTLY under the
-    * store's verbatim-rendering guards. Anything else (decimal, float
-    * formatting, timestamp — which the guards refuse anyway for its
-    * colons) keeps the facade on the fallback relation. */
+    * store's verbatim-rendering guards. A key of any other type
+    * (decimal, float formatting, timestamp — which the guards refuse
+    * anyway for its colons) is read from the files as a data column. */
   def supportedKeyType(t: DataType): Boolean = t match {
     case StringType | IntegerType | LongType | ShortType | ByteType |
         DateType => true

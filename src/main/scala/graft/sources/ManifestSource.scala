@@ -1,17 +1,15 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession,
   SQLContext}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation,
   CreatableRelationProvider, DataSourceRegister, RelationProvider,
   TableScan}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.store.ManifestStore
 
@@ -38,35 +36,32 @@ import graft.store.ManifestStore
   *   fix.write.format("graft-manifest").mode("overwrite").save(rootPath)
   * }}}
   *
-  * READ path. Deliberately DataSource V1, returning a real
-  * `HadoopFsRelation` whose listing is a [[ManifestFileIndex]]: the
+  * READ path. Deliberately DataSource V1, returning the SAME scan the
+  * Scala `readTable` builds: [[graft.store.ManifestStore]] resolves the
+  * version, selects the entries and builds a `HadoopFsRelation` per
+  * schema fingerprint over a [[ManifestFileIndex]] of the recorded
+  * files and schema — no listing, no schema probe, no Spark job. The
   * plan is the native parquet `FileScan` (pushdown, column pruning,
-  * whole-stage codegen), and the "directory listing" is the manifest —
-  * the table's partition KEY is a real partition column, so a plain
-  * SQL `WHERE` on it prunes at the MANIFEST level (only matching
-  * partitions' leaf dirs are listed or scanned, no `parts` option
-  * needed), and dynamic partition pruning composes on joins. For
-  * layout-only-key tables the key is RESTORED as a string partition
-  * column (derived from the manifest, never read from files — the
-  * Scala `readTable` cannot offer it because the files don't carry
-  * it); `keyInData` tables keep their exact schema and column order
-  * (the partition column overlays the same-named data column, which
-  * the scan then never reads from the files). Version resolution and
-  * option pruning happen ONCE, at relation creation — the snapshot a
-  * view captures stays stable under concurrent commits. Selections
-  * that cannot be one file relation (schema-fingerprint-heterogeneous,
-  * pruned to nothing, an unparseable key type, or a diagnostic
-  * `mergeSchema` read) fall back to a [[TableScan]] over
-  * [[graft.store.ManifestStore.readTable]]'s unioned/emptied frame —
-  * correct rows, row-based scan, retired by the same CompactAppend /
-  * full-partition rewrite that retires the evolution debt itself.
+  * whole-stage codegen), and the table's partition KEY is a real
+  * partition column, so a plain SQL `WHERE` on it prunes at the
+  * MANIFEST level (no `parts` option needed), and dynamic partition
+  * pruning composes on joins. The facade and the Scala read return
+  * the same columns in the same order. Version resolution and option
+  * pruning happen ONCE, at relation creation — the snapshot a view
+  * captures stays stable under concurrent commits. A pruned-to-nothing
+  * selection is the same file relation over no files, with the
+  * recorded schema. Only a schema-fingerprint-heterogeneous selection
+  * cannot be one file relation: it is a [[TableScan]] over the union
+  * of its per-fingerprint relations — correct rows, row-based scan,
+  * retired by the same CompactAppend / full-partition rewrite that
+  * retires the evolution debt itself.
   *
   * WRITE path. `df.write.format("graft-manifest")` routes through
   * [[graft.store.ManifestStore.commitTables]] — lease, staging,
   * atomic manifest publish, every write-time guard:
   *
   *  - a FRESH root is CREATED under any mode (`option("key", c)` keys
-  *    the table, default append-only; `keyInData`/`table` as in reads);
+  *    the table, default append-only; `table` as in reads);
   *  - `mode("append")` = add rows: keyed tables [[ManifestStore.Upsert]]
   *    (`option("mergeId", idCol)` replaces matching ids instead of
   *    keeping them), append-only tables [[ManifestStore.Append]];
@@ -105,47 +100,12 @@ class ManifestSource extends RelationProvider
     val version = parameters.get("version").map(_.toLong)
     val parts = parameters.get("parts")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val mergeSchema = parameters.get("mergeSchema").exists(_.toBoolean)
-
-    val (v, keyCol, keyInData, all) =
-      ManifestStore.tableLayout(spark, root, table, version)
-    require(all.nonEmpty,
-      s"table '$table' v$v at $root lists no data") // readTable parity
-    val sel = parts.fold(all)(ps => all.filter(e => ps.contains(e.part)))
-    val homogeneous = sel.map(_.schemaId).distinct.size == 1
-
-    if (sel.nonEmpty && homogeneous && !mergeSchema) {
-      val p = new Path(root)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val qr = fs.makeQualified(p)
-      // one representative leaf dir's footer fixes the (homogeneous)
-      // file schema; keyInData files carry the key column, layout-only
-      // files don't — which is exactly what drives the overlay below
-      val fileSchema = spark.read
-        .parquet(new Path(qr, sel.head.dir).toString).schema
-      val keyType =
-        if (keyCol.isEmpty || keyInData) {
-          if (keyCol.isEmpty) StringType // unused: no partition column
-          else fileSchema(keyCol).dataType
-        } else StringType
-      if (keyCol.isEmpty || ManifestFileIndex.supportedKeyType(keyType)) {
-        val index = new ManifestFileIndex(spark, fs, qr, keyCol, keyType,
-          sel)
-        return HadoopFsRelation(
-          location = index,
-          partitionSchema = index.partitionSchema,
-          dataSchema = fileSchema,
-          bucketSpec = None,
-          fileFormat = new ManifestReadOnlyParquetFormat,
-          options = Map.empty)(spark)
-      }
+    ManifestStore.tableRelations(spark, root, table, parts, version) match {
+      case Seq(one) => one
+      // schema-evolved selection: the union, behind a TableScan that
+      // keeps the no-raw-inserts invariant
+      case rels => ManifestFrameRelation(ManifestStore.frameOf(spark, rels))
     }
-    // fallbacks: evolved, empty, diagnostic mergeSchema, or an
-    // unparseable key type — the store's already-resolved entry
-    // selection reads directly (no second manifest GET), and the
-    // TableScan wrapper keeps the no-raw-inserts invariant
-    ManifestFrameRelation(
-      ManifestStore.readSelected(spark, root, sel, all, mergeSchema))
   }
 
   override def createRelation(ctx: SQLContext, mode: SaveMode,
@@ -154,7 +114,6 @@ class ManifestSource extends RelationProvider
     val root = rootOf(parameters)
     val table = parameters.getOrElse("table", "t")
     val keyOpt = parameters.get("key")
-    val keyInData = parameters.get("keyInData").forall(_.toBoolean)
     val mergeId = parameters.get("mergeId")
     // CDC merge surface: `deleteWhen` is a SQL boolean over the batch's
     // columns marking tombstone rows (requires `mergeId` — tombstones
@@ -178,7 +137,7 @@ class ManifestSource extends RelationProvider
         // check and the live column order cannot be moved by a
         // concurrent writer between read and stage
         ManifestStore.commitTables(spark, root) {
-          val (_, keyCol, _, _) =
+          val (_, keyCol, _) =
             ManifestStore.tableLayout(spark, root, table, None)
           keyOpt.filter(_ != keyCol).foreach(k =>
             throw new IllegalArgumentException(
@@ -232,25 +191,23 @@ class ManifestSource extends RelationProvider
       // two concurrent first appends land as create + upsert instead
       // of create + stranded error
       try ManifestStore.createTables(spark, root, Seq(
-        (ManifestStore.TableDef(table, keyOpt.getOrElse(""), keyInData),
-          data)))
+        (ManifestStore.TableDef(table, keyOpt.getOrElse("")), data)))
       catch {
         case _: ManifestStore.AlreadyInitializedException =>
           modeDispatch()
       }
     } else modeDispatch()
     createRelation(ctx,
-      parameters - "key" - "keyInData" - "mergeId" - "version" -
+      parameters - "key" - "mergeId" - "version" -
         "deleteWhen" - "envelope")
   }
 }
 
-/** Fallback relation for selections [[ManifestSource]] cannot express
-  * as one file relation (fingerprint-heterogeneous, empty, diagnostic
-  * mergeSchema, unparseable key): a plain [[TableScan]] over the
-  * store's already-correct frame. Not an `InsertableRelation`, so raw
-  * SQL INSERT stays refused on this path too. */
-private[sources] final case class ManifestFrameRelation(df: DataFrame)
+/** The relation for a schema-fingerprint-heterogeneous selection, which
+  * cannot be one file relation: a plain [[TableScan]] over the union of
+  * the store's per-fingerprint relations. Not an `InsertableRelation`,
+  * so raw SQL INSERT stays refused on this path too. */
+private[graft] final case class ManifestFrameRelation(df: DataFrame)
     extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = df.sparkSession.sqlContext
   override def schema: StructType = df.schema
@@ -264,7 +221,7 @@ private[sources] final case class ManifestFrameRelation(df: DataFrame)
   * reader yet never committed, guarded, or vacuum-tracked. The loud
   * refusal routes writers to the provider's own commit-protocol write
   * path (or the Scala API). */
-private[sources] final class ManifestReadOnlyParquetFormat
+private[graft] final class ManifestReadOnlyParquetFormat
     extends ParquetFileFormat {
   override def prepareWrite(sparkSession: SparkSession, job: Job,
       options: Map[String, String],

@@ -2,7 +2,12 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
+  StructType}
+
+import graft.sources.{ManifestFileIndex, ManifestReadOnlyParquetFormat}
 
 /** Versioned-manifest table store — the one storage and commit
   * protocol behind every maintained table and ANN index in this
@@ -59,15 +64,10 @@ import org.apache.spark.sql.functions._
   * `concat(a, '_', b)`). Keep keys coarse: every touched key is one
   * leaf dir to list, read back and rewrite per commit, so the LSH
   * postings table is keyed by `band` alone (8 partitions) and its
-  * probes select buckets inside a band by join. `keyInData` controls
-  * whether the key column is duplicated into the data files (the
-  * default — a multi-root scan keeps the column without partition
-  * inference, and every op can read a partition back and merge it) or
-  * carried by the layout only (`false` — nothing redundant is stored,
-  * but the read-merge ops [[Upsert]], [[Merge]] and [[Delete]] cannot
-  * restore the key on the live slice and refuse such a table once it
-  * holds rows to merge; [[Append]], [[Replace]] and [[DeleteKeys]]
-  * never read live rows and work on it).
+  * probes select buckets inside a band by join. The key column is
+  * duplicated into the data files (a hive layout column `<key>__p`
+  * carries the directory), so every op can read a partition back and
+  * merge it, and every read returns the key as a data column.
   * Append-only tables (`partCol = ""`) take whole segments as entries
   * and are never partition-pruned or merged — the narrow vector store
   * shape, hydrated by id join.
@@ -88,13 +88,25 @@ import org.apache.spark.sql.functions._
   * the reader contract — vacuum only against a horizon older than the
   * longest-running scan, exactly Delta's VACUUM discipline.
   *
+  * ONE READ PATH: a manifest line records everything a scan needs —
+  * the entry's data files with their byte sizes (harvested from the
+  * listing the stage already does) and, once per schema fingerprint,
+  * the schema `spark.read.parquet` would infer for those files. Every
+  * read ([[readTable]], [[read]], [[changeFeed]], the commit ops'
+  * read-backs and the SQL facade) turns its selected entries into
+  * `HadoopFsRelation`s over [[graft.sources.ManifestFileIndex]] with
+  * that recorded file list and schema: no directory listing, no
+  * schema-inference job, no `spark.read` — and a file that appears in
+  * a committed leaf dir without being committed is never read.
+  *
   * Cost shape at scale: a commit writes the touched partitions' bytes
-  * plus ONE manifest file — O(live partitions) lines of driver-side
+  * plus ONE manifest file — O(live files) lines of driver-side
   * metadata, no data moves, no apply phase, no healing. Reads pay one
-  * small-file GET to resolve the newest manifest. Manifest size is the
-  * honest limit: at millions of partitions a real table format's
-  * manifest TREES take over; the index stores here hold
-  * k-to-thousands of cells/buckets.
+  * list of the manifest dir and one small-file GET to resolve the
+  * newest manifest, and nothing per entry. Manifest size is the
+  * honest limit: at millions of files a real table format's manifest
+  * TREES take over; the index stores here hold k-to-thousands of
+  * cells/buckets.
   *
   * Partition keys must be non-null and are matched by their hive
   * directory rendering (for the integer cell and band keys the ANN
@@ -105,7 +117,7 @@ import org.apache.spark.sql.functions._
   * per-segment COLUMN STATS + byte sizes harvested from the staged
   * parquet footers ([[ColStat]], `TableDef.statsCols`) so selective
   * non-key predicates skip whole segments from manifest metadata alone
-  * ([[readTable]]'s `skip`, and the SQL facade's WHERE — see
+  * ([[readTable]]'s `skip`, and any WHERE over a read — see
   * [[graft.sources.ManifestFileIndex]]); a CHANGE FEED
   * ([[changeFeed]]) emitting the net row diff between any two retained
   * versions at touched-partition cost; and an in-commit
@@ -131,73 +143,59 @@ object ManifestStore {
   final case class ColStat(col: String, tag: String, min: String,
       max: String)
 
-  /** One manifest line: table name, partition key (hive rendering; ""
-    * for append-segment entries) → leaf data dir relative to root,
-    * plus the FINGERPRINT of the schema the segment's files carry —
-    * which is what makes schema evolution safe BY DEFAULT: a read
-    * whose selected entries disagree on the fingerprint turns on
-    * parquet schema merging automatically (union schema, null-filled
-    * old rows), while homogeneous tables — the overwhelmingly common
-    * case — pay zero footer-merge cost. No reader has to know whether
-    * the table ever evolved.
-    *
-    * `bytes` is the segment leaf's total data-file size (harvested
-    * from the stage-time listing; -1 in pre-v3 manifests), so planners
-    * — the facade's [[graft.sources.ManifestFileIndex]] `sizeInBytes`
-    * in particular — get exact relation sizing with ZERO list calls.
-    * `stats` is the per-column skipping metadata ([[ColStat]]) for the
-    * table's declared stats columns. */
-  final case class Entry(table: String, part: String, dir: String,
-      schemaId: String, bytes: Long = -1L, stats: Seq[ColStat] = Nil)
+  /** One data file of a segment leaf: its name inside the entry's
+    * dir and its byte size, both recorded at stage time. */
+  final case class DataFile(name: String, size: Long)
 
-  /** A parsed manifest: per-table RAW key spec ("" = append-only;
-    * `~`-prefixed = layout-only key, see [[keyInData]]) and the full
-    * entry list of that version. */
+  /** One manifest line: table name, partition key (hive rendering; ""
+    * for append-segment entries) → leaf data dir relative to root, the
+    * leaf's data `files`, and the FINGERPRINT of the schema those files
+    * carry with the recorded `schema` itself — which is what makes
+    * schema evolution safe BY DEFAULT: a read whose selected entries
+    * disagree on the fingerprint scans one relation per fingerprint
+    * and unions them (union schema, null-filled old rows), while
+    * homogeneous tables — the overwhelmingly common case — scan one
+    * relation. No reader has to know whether the table ever evolved.
+    *
+    * `files` is the whole read-side listing: the scan reads exactly
+    * these files, and `bytes` (their sum) gives planners — the
+    * [[graft.sources.ManifestFileIndex]] `sizeInBytes` in particular —
+    * exact relation sizing with ZERO list calls. `stats` is the
+    * per-column skipping metadata ([[ColStat]]) for the table's
+    * declared stats columns. */
+  final case class Entry(table: String, part: String, dir: String,
+      schemaId: String, schema: StructType, files: Seq[DataFile],
+      stats: Seq[ColStat] = Nil) {
+    def bytes: Long = files.map(_.size).sum
+  }
+
+  /** A parsed manifest: per-table RAW key spec ("" = append-only) and
+    * the full entry list of that version. */
   final case class Manifest(partCols: Map[String, String],
       entries: Seq[Entry])
 
-  /** The key column of a raw header spec (strips the layout-only tag
-    * and the `|`-suffixed stats-column list). */
-  private def keyColOf(raw: String): String =
-    raw.split('|').head.stripPrefix("~")
-  /** Whether the raw spec says the key is duplicated into the data. */
-  private def keyInDataOf(raw: String): Boolean = !raw.startsWith("~")
-
-  /** The read-merge ops ([[Upsert]], [[Merge]], [[Delete]]) read live
-    * rows back and rewrite them; a layout-only key is not in those
-    * rows, so they refuse such a table instead of staging keyless
-    * partitions. */
-  private def refuseReadMerge(table: String, pc: String): Nothing =
-    throw new IllegalArgumentException(
-      s"table '$table' keeps its key '$pc' in the layout only " +
-        "(keyInData = false): its live rows read back without the key, " +
-        "so Upsert, Merge and Delete cannot rewrite them — use Append, " +
-        "Replace or DeleteKeys, or create the table with the key in " +
-        "the data")
+  /** The key column of a raw header spec (strips the `|`-suffixed
+    * stats-column list). */
+  private def keyColOf(raw: String): String = raw.split('|').head
   /** The declared stats columns of a raw header spec. */
   private def statsColsOf(raw: String): Seq[String] =
     raw.split('|').toSeq.drop(1).headOption
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-  private def rawSpecOf(td: TableDef): String = {
-    val base =
-      if (td.partCol.isEmpty || td.keyInData) td.partCol
-      else "~" + td.partCol
-    if (td.statsCols.isEmpty) base
-    else base + "|" + td.statsCols.mkString(",")
-  }
+  private def rawSpecOf(td: TableDef): String =
+    if (td.statsCols.isEmpty) td.partCol
+    else td.partCol + "|" + td.statsCols.mkString(",")
 
   /** Table declaration for [[createTables]]: `partCol` names the key
-    * column ("" = append-only); `keyInData` duplicates the key into
-    * the data files (see object doc); `statsCols` declares the columns
+    * column ("" = append-only); `statsCols` declares the columns
     * whose per-segment min/max land in every manifest entry
     * ([[ColStat]]) — the skip set for selective non-key predicates.
     * Declared, not automatic: stats are footer-harvest-free to COLLECT
     * but every column inflates every manifest line, so the caller
     * names the columns its readers actually filter on. */
   final case class TableDef(name: String, partCol: String,
-      keyInData: Boolean = true, statsCols: Seq[String] = Nil) {
+      statsCols: Seq[String] = Nil) {
     // every name/column that lands in the manifest HEADER must avoid
-    // the spec's own delimiters (table=spec;… , ~key|c1,c2) — a '|'
+    // the spec's own delimiters (table=spec;… , key|c1,c2) — a '|'
     // inside partCol, say, would round-trip as a different key column
     // plus a phantom stats list on the next commit
     require(!name.exists("\t\n;=".contains(_)), s"bad table name: $name")
@@ -213,9 +211,7 @@ object ManifestStore {
   /** Merge `df` into the partitioned `table`: touched partitions (the
     * batch's distinct keys) are read back manifest-pruned, merged
     * (rows whose `idCol` appears in the batch replaced when set), and
-    * re-staged; untouched entries carry over by reference. Refused on
-    * a layout-only-key table (`keyInData = false`) once a touched
-    * partition holds live rows: they read back without the key. */
+    * re-staged; untouched entries carry over by reference. */
   final case class Upsert(table: String, df: DataFrame,
       idCol: Option[String] = None) extends TableOp
   /** REPLACE the touched partitions of `table` wholesale: every key
@@ -303,8 +299,7 @@ object ManifestStore {
     * At 100 TB this is the difference between a predicate delete that
     * rewrites a table and one that rewrites a day: name the delete
     * axis in `statsCols` (GDPR user-id, retention date) and only the
-    * overlapping segments move. Refused on a layout-only-key table
-    * with live rows (the [[Upsert]] rule). For whole-partition deletes
+    * overlapping segments move. For whole-partition deletes
     * by KEY, [[DeleteKeys]] is pure metadata — prefer it when the
     * predicate is key-membership. */
   final case class Delete(table: String, cond: Column) extends TableOp
@@ -331,15 +326,16 @@ object ManifestStore {
   private[graft] val ManifestDirName = "_manifests"
   private val SegDirName = "seg"
   private val Header = "graft-manifest"
-  /** v3 adds per-entry bytes + column stats (7-field E lines); v2
-    * manifests (5-field lines) stay readable — bytes -1, no stats. */
-  private val FormatVersion = "3"
-  private val ReadableVersions = Set("2", "3")
+  /** v4: `S` lines record each fingerprint's schema once, and every
+    * `E` line its data files with their sizes — everything a read
+    * needs. Earlier formats listed only directories and are refused
+    * with a rebuild message ([[readManifest]]). */
+  private val FormatVersion = "4"
 
-  /** Percent-encoding for stat values inside the line format: the
-    * field/record delimiters and '%' itself. Verbatim otherwise, so
-    * string stats stay comparable by eye. */
-  private def encStat(v: String): String =
+  /** Percent-encoding for stat values and file names inside the line
+    * format: the field/record delimiters and '%' itself. Verbatim
+    * otherwise, so string stats stay comparable by eye. */
+  private def enc(v: String): String =
     v.flatMap {
       case '%' => "%25"
       case ';' => "%3B"
@@ -349,7 +345,7 @@ object ManifestStore {
       case '\r' => "%0D"
       case c => c.toString
     }
-  private def decStat(v: String): String = {
+  private def dec(v: String): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < v.length) {
@@ -363,7 +359,7 @@ object ManifestStore {
 
   private def renderStats(stats: Seq[ColStat]): String =
     stats.map(cs =>
-      s"${cs.col}=${cs.tag}:${encStat(cs.min)}:${encStat(cs.max)}")
+      s"${cs.col}=${cs.tag}:${enc(cs.min)}:${enc(cs.max)}")
       .mkString(";")
 
   private def parseStats(spec: String): Seq[ColStat] =
@@ -377,10 +373,20 @@ object ManifestStore {
       // brick every later readManifest of a legally committed version
       part.drop(eq + 1).split(":", -1) match {
         case Array(tag, mn, mx) =>
-          ColStat(col, tag, decStat(mn), decStat(mx))
+          ColStat(col, tag, dec(mn), dec(mx))
         case _ => throw new IllegalStateException(
           s"corrupt stat spec: $part")
       }
+    }.toSeq
+
+  private def renderFiles(files: Seq[DataFile]): String =
+    files.map(f => s"${enc(f.name)}:${f.size}").mkString(";")
+
+  private def parseFiles(spec: String): Seq[DataFile] =
+    spec.split(';').iterator.filter(_.nonEmpty).map { f =>
+      val i = f.lastIndexOf(':')
+      require(i > 0, s"corrupt file spec: $f")
+      DataFile(dec(f.take(i)), f.drop(i + 1).toLong)
     }.toSeq
   /** Table name the single-table sugar API stores under. */
   private val DefaultTable = "t"
@@ -397,20 +403,6 @@ object ManifestStore {
     * pathological lease double-grant would race in. Never set outside
     * specs. */
   private[graft] var beforePublishRename: () => Unit = () => ()
-
-  /** Driver-phase timing seam for the scoped profiling tool
-    * ([[graft.tools.ManifestProfile]]): receives (phase, nanos) for
-    * each driver-side phase of a commit — "lease", "manifestRead",
-    * "keyCollect", "stageWrite", "publish" — so the per-commit driver
-    * overhead the task metrics cannot see is attributable. A no-op
-    * outside profiling runs. */
-  private[graft] var phaseHook: (String, Long) => Unit = (_, _) => ()
-  @inline private def phased[T](phase: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    phaseHook(phase, System.nanoTime() - t0)
-    r
-  }
 
   private def fsOf(s: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -561,35 +553,43 @@ object ManifestStore {
       (kv.take(i), kv.drop(i + 1))
     }.toMap
 
+  /** Parse manifest `v`. A manifest in an earlier format (v2, v3)
+    * lists directories without their files or schemas, so no read can
+    * be built from it: it is refused by name, with the rebuild it
+    * needs, instead of being listed and inferred at read time. */
   private def readManifest(fs: FileSystem, root: Path, v: Long): Manifest = {
     val p = manifestPath(root, v)
     val in = fs.open(p)
     val text =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+    // -1 keeps trailing empty fields (append entries have part = "",
+    // statless entries an empty stats field)
+    val lines = text.linesIterator.filter(_.nonEmpty).map(_.split("\t", -1))
+      .toSeq
     val partCols = lines.headOption match {
-      case Some(h) => h.split('\t') match {
-        case Array(Header, v, spec) if ReadableVersions.contains(v) =>
-          parsePartCols(spec)
-        case _ => throw new IllegalStateException(
-          s"corrupt manifest header in $p: $h")
-      }
+      case Some(Array(Header, FormatVersion, spec)) => parsePartCols(spec)
+      case Some(Array(Header, old, _)) => throw new IllegalStateException(
+        s"manifest $p is format v$old, which records no data files or " +
+          s"schemas; this reader needs format v$FormatVersion — rebuild " +
+          "the store (createTables, or the index's build call, over a " +
+          "fresh root)")
+      case Some(h) => throw new IllegalStateException(
+        s"corrupt manifest header in $p: ${h.mkString("\t")}")
       case None => throw new IllegalStateException(s"empty manifest $p")
     }
-    val entries = lines.tail.map { line =>
-      // -1 keeps trailing empty fields (append entries have part = "",
-      // statless entries an empty stats field)
-      line.split("\t", -1) match {
-        // v2 line: no bytes, no stats
-        case Array("E", table, part, dir, schemaId) =>
-          Entry(table, part, dir, schemaId)
-        case Array("E", table, part, dir, schemaId, bytes, stats) =>
-          Entry(table, part, dir, schemaId, bytes.toLong,
-            parseStats(stats))
-        case _ => throw new IllegalStateException(
-          s"corrupt manifest line in $p: $line")
-      }
+    val schemas = lines.tail.collect { case Array("S", id, json) =>
+      id -> DataType.fromJson(json).asInstanceOf[StructType]
+    }.toMap
+    val entries = lines.tail.flatMap {
+      case Array("S", _, _) => None
+      case Array("E", table, part, dir, schemaId, files, stats) =>
+        Some(Entry(table, part, dir, schemaId, schemas.getOrElse(schemaId,
+          throw new IllegalStateException(
+            s"manifest $p has no schema line for $schemaId")),
+          parseFiles(files), parseStats(stats)))
+      case line => throw new IllegalStateException(
+        s"corrupt manifest line in $p: ${line.mkString("\t")}")
     }
     Manifest(partCols, entries)
   }
@@ -614,8 +614,7 @@ object ManifestStore {
     * lease machinery (write-then-verify, heartbeat, O_EXCL create)
     * exists to prevent. */
   private def writeManifest(fs: FileSystem, root: Path, v: Long,
-      partCols: Map[String, String], entries: Seq[Entry]): Unit =
-    phased("publish") {
+      partCols: Map[String, String], entries: Seq[Entry]): Unit = {
     val dir = manifestDir(root)
     if (!fs.exists(dir)) fs.mkdirs(dir)
     val fin = manifestPath(root, v)
@@ -624,9 +623,12 @@ object ManifestStore {
         "this version (the writer lease should have prevented this)")
     val body = new StringBuilder
     body ++= s"$Header\t$FormatVersion\t${renderPartCols(partCols)}\n"
+    entries.groupBy(_.schemaId).toSeq.sortBy(_._1).foreach {
+      case (id, es) => body ++= s"S\t$id\t${es.head.schema.json}\n"
+    }
     entries.sortBy(e => (e.table, e.part, e.dir)).foreach { e =>
       body ++= s"E\t${e.table}\t${e.part}\t${e.dir}\t${e.schemaId}" +
-        s"\t${e.bytes}\t${renderStats(e.stats)}\n"
+        s"\t${renderFiles(e.files)}\t${renderStats(e.stats)}\n"
     }
     val tmp = new Path(dir, f".v$v%08d.mf.tmp-" +
       java.util.UUID.randomUUID().toString.take(8))
@@ -657,20 +659,36 @@ object ManifestStore {
     * declared, so hashing nullability would make a written frame and
     * its own read-back disagree — flagging spurious "evolution" on
     * every untouched-vs-rewritten segment pair. */
-  private def schemaIdOf(written: org.apache.spark.sql.types.StructType)
-      : String = {
+  private def schemaIdOf(written: StructType): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val bytes = md.digest(written.catalogString.getBytes("UTF-8"))
     bytes.take(6).map(b => f"$b%02x").mkString
   }
 
+  /** The schema `spark.read.parquet` infers for files written from a
+    * frame of schema `written`: the writer stores its schema in every
+    * footer, and the read takes it back with every field, element and
+    * map value nullable. This is what an `S` line records. */
+  private def readSchemaOf(written: StructType): StructType = {
+    def loose(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = loose(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(loose(e), containsNull = true)
+      case MapType(k, v, _) =>
+        MapType(loose(k), loose(v), valueContainsNull = true)
+      case other => other
+    }
+    loose(written).asInstanceOf[StructType]
+  }
+
   private def freshSegRel(): String =
     s"$SegDirName/seg-" + java.util.UUID.randomUUID().toString.take(13)
 
-  /** Harvest one freshly written segment leaf: total data-file bytes,
-    * row count (with `countRows`; -1 otherwise) and min/max
-    * [[ColStat]]s for the declared `cols`, read from the parquet
-    * FOOTERS the write just produced. Cost shape: one footer
+  /** Harvest one freshly written segment leaf: its data files with
+    * their sizes (the one listing the read path ever needs — recorded
+    * in the entry), row count (with `countRows`; -1 otherwise) and
+    * min/max [[ColStat]]s for the declared `cols`, read from the
+    * parquet FOOTERS the write just produced. Cost shape: one footer
     * open per NEW file — bounded by what this very commit staged (the
     * keyCollect bound: ~one file per touched partition), never a
     * second scan of the batch, and never any read-time cost; at read
@@ -683,13 +701,13 @@ object ManifestStore {
     * predicates never consult stats). */
   private def harvestLeaf(s: SparkSession, fs: FileSystem, dir: Path,
       cols: Seq[String], countRows: Boolean = false)
-      : (Long, Long, Seq[ColStat]) = {
+      : (Seq[DataFile], Long, Seq[ColStat]) = {
     val files = fs.listStatus(dir).toSeq.filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    val bytes = files.map(_.getLen).sum
-    if (cols.isEmpty && !countRows) return (bytes, -1L, Nil)
+    }.sortBy(_.getPath.getName)
+    val dataFiles = files.map(st => DataFile(st.getPath.getName, st.getLen))
+    if (cols.isEmpty && !countRows) return (dataFiles, -1L, Nil)
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.{LogicalTypeAnnotation,
@@ -789,7 +807,7 @@ object ManifestStore {
         !dead.contains(c))
       .map(c => ColStat(c, "n", "", ""))
     val stats = (ranged ++ allNullStats).sortBy(_.col)
-    (bytes, rows, stats)
+    (dataFiles, rows, stats)
   }
 
   /** Zero-cost rendering guard for freshly staged entries, used where
@@ -874,7 +892,7 @@ object ManifestStore {
     * evolution: Spark's union coercion would "handle" it by silently
     * rewriting values (a decimal column read as double loses
     * precision, numerics read as strings, with no error anywhere), so
-    * [[readEntries]] and the upsert merge refuse it loudly instead.
+    * [[relations]] and the upsert merge refuse it loudly instead.
     * Types that differ only in nullability (an `array<float>` whose
     * elements may or may not be null) are the same type: the union
     * takes the nullable side and no value changes. */
@@ -1140,93 +1158,108 @@ object ManifestStore {
     }
   }
 
-  /** Read a set of manifest entries as ONE frame, handling BOTH axes
-    * of schema evolution the store admits:
+  /** THE relation builder: `entries` of one schema fingerprint (whose
+    * recorded schema is `schema`) as a `HadoopFsRelation` over a
+    * [[ManifestFileIndex]] of their recorded files. It reads no footer,
+    * lists nothing and starts no Spark job. A keyed table's key becomes
+    * the relation's partition column when its rendering parses back
+    * exactly ([[ManifestFileIndex.supportedKeyType]]) — the scan then
+    * takes the value from the manifest and a WHERE on it prunes
+    * entries — and stays a plain data column otherwise. */
+  private def relationOf(s: SparkSession, r: Path, keyCol: String,
+      schema: StructType, entries: Seq[Entry]): HadoopFsRelation = {
+    val key = schema.find(f => f.name == keyCol &&
+      ManifestFileIndex.supportedKeyType(f.dataType))
+    val index = new ManifestFileIndex(r, key, entries)
+    HadoopFsRelation(index, index.partitionSchema, schema, None,
+      new ManifestReadOnlyParquetFormat, Map.empty)(s)
+  }
+
+  /** The relations a read of the selected entries `sel` scans, handling
+    * BOTH axes of schema evolution the store admits:
     *
     *  - ADDED columns (segments written before the column existed):
     *    union schema, pre-evolution rows read NULL;
     *  - WIDENED primitive types ([[widenOk]]: the integral chain and
     *    float→double): every row reads at the widened type.
     *
-    * Entries group by schema fingerprint; each group — internally
-    * homogeneous — reads as one merge-free multi-root parquet scan, and
-    * the groups fold through `unionByName(allowMissingColumns)`, whose
-    * set-operation type coercion performs the widening parquet's own
-    * footer merge REFUSES (`mergeSchema` fails loudly on int-vs-long
-    * files). A NON-widening type disagreement is refused loudly BEFORE
-    * the union can coerce it into silent value corruption. A
-    * single-fingerprint selection — the overwhelmingly common case —
-    * stays exactly the one merge-free scan it always was, so
-    * homogeneous tables pay nothing; an evolved table pays one extra
-    * scan node per schema version it still carries, which is also what
-    * [[CompactAppend]] and full-partition upserts retire.
+    * One relation per schema fingerprint, each internally homogeneous;
+    * [[frameOf]] folds them through `unionByName(allowMissingColumns)`,
+    * whose set-operation type coercion performs the widening. A
+    * NON-widening type disagreement is refused loudly BEFORE the union
+    * can coerce it into silent value corruption. A single-fingerprint
+    * selection — the overwhelmingly common case — is one relation; an
+    * evolved table pays one extra scan node per schema version it
+    * still carries, which is also what [[CompactAppend]] and
+    * full-partition upserts retire.
+    *
+    * An EMPTY selection scans one empty relation per fingerprint of
+    * `all` (the table's entries): no rows, but the table's union
+    * schema — an evolved table's empty slice must not lack the newest
+    * columns.
     *
     * Fold order — hence column order — is deterministic ACROSS stores
     * and versions, not just within one manifest: groups sort by (field
-    * count, field names), which under ADD-only evolution IS evolution
-    * order (the oldest, narrowest schema first, later-added columns
-    * appended) — segment-dir UUIDs never decide the layout. */
-  private def readEntries(s: SparkSession, r: Path, entries: Seq[Entry],
-      forceMerge: Boolean): DataFrame = {
-    val byId = entries.groupBy(_.schemaId)
-    val groups = entries.map(_.schemaId).distinct.map(byId)
-    if (groups.size == 1)
-      s.read.option("mergeSchema", forceMerge.toString)
-        .parquet(entries.map(e => new Path(r, e.dir).toString): _*)
-    else {
-      val frames = groups.map { es =>
-        (s.read.parquet(es.map(e => new Path(r, e.dir).toString): _*),
-          es.head.dir)
-      }.sortBy { case (f, _) =>
-        // types join the key so PURE type-widening evolution (same
-        // field count and names) also sorts content-deterministically —
-        // without them the tie would fall back to manifest-entry order,
-        // which carries segment-dir UUIDs
-        (f.schema.length, f.schema.fieldNames.mkString("\u0000"),
-          f.schema.map(_.dataType.catalogString).mkString("\u0000"))
+    * count, field names, field types), which under ADD-only evolution
+    * IS evolution order (the oldest, narrowest schema first,
+    * later-added columns appended) — segment-dir UUIDs never decide the
+    * layout. */
+  private[graft] def relations(s: SparkSession, r: Path, keyCol: String,
+      sel: Seq[Entry], all: Seq[Entry]): Seq[HadoopFsRelation] = {
+    val groups = (if (sel.nonEmpty) sel else all).groupBy(_.schemaId)
+      .values.toSeq.sortBy { es =>
+        val st = es.head.schema
+        (st.length, st.fieldNames.mkString("\u0000"),
+          st.map(_.dataType.catalogString).mkString("\u0000"))
       }
-      // refuse non-widening drift before the union coerces it away
-      val seen = scala.collection.mutable.Map
-        .empty[String, (org.apache.spark.sql.types.DataType, String)]
-      frames.foreach { case (f, where) =>
-        f.schema.fields.foreach { fld =>
-          seen.get(fld.name) match {
-            case Some((t, w0)) if !widenOk(t, fld.dataType) =>
-              throw new IllegalStateException(
-                s"segments disagree on column '${fld.name}' with a " +
-                  s"NON-widening type change: ${t.simpleString} (in $w0) " +
-                  s"vs ${fld.dataType.simpleString} (in $where). Only " +
-                  "byte→short→int→long and float→double widen on read — " +
-                  "anything else silently corrupts values under union " +
-                  "coercion and is refused. Fix the writer and rewrite " +
-                  "the affected partitions (or CompactAppend) explicitly.")
-            case Some(_) => ()
-            case None => seen(fld.name) = (fld.dataType, where)
-          }
+    // refuse non-widening drift before the union coerces it away
+    val seen = scala.collection.mutable.Map.empty[String, (DataType, String)]
+    groups.foreach { es =>
+      es.head.schema.fields.foreach { fld =>
+        seen.get(fld.name) match {
+          case Some((t, w0)) if !widenOk(t, fld.dataType) =>
+            throw new IllegalStateException(
+              s"segments disagree on column '${fld.name}' with a " +
+                s"NON-widening type change: ${t.simpleString} (in $w0) " +
+                s"vs ${fld.dataType.simpleString} (in ${es.head.dir}). " +
+                "Only byte→short→int→long and float→double widen on " +
+                "read — anything else silently corrupts values under " +
+                "union coercion and is refused. Fix the writer and " +
+                "rewrite the affected partitions (or CompactAppend) " +
+                "explicitly.")
+          case Some(_) => ()
+          case None => seen(fld.name) = (fld.dataType, es.head.dir)
         }
       }
-      frames.map(_._1).reduce(_.unionByName(_, allowMissingColumns = true))
     }
+    groups.map(es => relationOf(s, r, keyCol, es.head.schema,
+      if (sel.nonEmpty) es else Nil))
   }
 
+  /** [[relations]] as one frame: the relations unioned by name. */
+  private[graft] def frameOf(s: SparkSession,
+      rels: Seq[HadoopFsRelation]): DataFrame =
+    rels.map(s.baseRelationToDataFrame)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+
+  private def readEntries(s: SparkSession, r: Path, keyCol: String,
+      sel: Seq[Entry], all: Seq[Entry]): DataFrame =
+    frameOf(s, relations(s, r, keyCol, sel, all))
+
   /** Write `df` as a fresh immutable partitioned segment of `table`
-    * and return the manifest entries its leaf dirs become. With
-    * `keyInData` the key is hive-partitioned via a duplicate layout
-    * column and stays a data column; without it the key column itself
-    * carries the layout (dropped from the files — object doc). */
+    * and return the manifest entries its leaf dirs become. The key is
+    * hive-partitioned via a duplicate layout column and stays a data
+    * column (object doc). */
   private def writePartitionedSegment(s: SparkSession, fs: FileSystem,
       root: Path, table: String, df: DataFrame, partCol: String,
-      keyInData: Boolean, statsCols: Seq[String] = Nil,
-      nKeys: Option[Int] = None): Seq[Entry] =
-    phased("stageWrite") {
-    val layoutCol = if (keyInData) partCol + "__p" else partCol
+      statsCols: Seq[String] = Nil,
+      nKeys: Option[Int] = None): Seq[Entry] = {
+    val layoutCol = partCol + "__p"
     val segRel = freshSegRel()
     val segPath = new Path(root, segRel)
-    val toWrite =
-      if (keyInData) df.withColumn(layoutCol, col(partCol)) else df
-    // the files carry toWrite's schema minus the layout column
-    val sid = schemaIdOf(org.apache.spark.sql.types.StructType(
-      toWrite.schema.filterNot(_.name == layoutCol)))
+    // the files carry df's schema; the layout column is the dir name
+    val sid = schemaIdOf(df.schema)
+    val schema = readSchemaOf(df.schema)
     // one writer task per touched partition dir, never more (empty
     // tasks are pure commit overhead on a small staged batch) and
     // never past the session's shuffle parallelism; an explicit count
@@ -1238,7 +1271,7 @@ object ManifestStore {
     val maxTasks = s.sessionState.conf.numShufflePartitions
     val writeTasks = nKeys.fold(maxTasks)(k =>
       math.min(math.max(k, 1), maxTasks))
-    toWrite
+    df.withColumn(layoutCol, col(partCol))
       .repartition(writeTasks, col(partCol))
       .write.mode("errorifexists").partitionBy(layoutCol)
       .option("compression", "zstd")
@@ -1248,9 +1281,9 @@ object ManifestStore {
         st.getPath.getName.startsWith(layoutCol + "="))
       .map { st =>
         val name = st.getPath.getName
-        val (bytes, _, stats) = harvestLeaf(s, fs, st.getPath, statsCols)
+        val (files, _, stats) = harvestLeaf(s, fs, st.getPath, statsCols)
         Entry(table, name.stripPrefix(layoutCol + "="), s"$segRel/$name",
-          sid, bytes, stats)
+          sid, schema, files, stats)
       }
       .sortBy(_.part)
   }
@@ -1263,19 +1296,20 @@ object ManifestStore {
     * plan (for the streaming maintenance lanes that is the upsert
     * anti-join per micro-batch), while the footers are metadata read
     * once per file, without a Spark job, in the same pass that
-    * harvests the entry's bytes and stats. */
+    * harvests the entry's files and stats. */
   private def writeAppendSegment(s: SparkSession, fs: FileSystem,
       root: Path, table: String, df: DataFrame,
-      statsCols: Seq[String] = Nil): Seq[Entry] = phased("stageWrite") {
+      statsCols: Seq[String] = Nil): Seq[Entry] = {
     val segRel = freshSegRel()
     val segPath = new Path(root, segRel)
     df.write.mode("errorifexists")
       .option("compression", "zstd")
       .parquet(segPath.toString)
-    val (bytes, rows, stats) = harvestLeaf(s, fs, segPath, statsCols,
+    val (files, rows, stats) = harvestLeaf(s, fs, segPath, statsCols,
       countRows = true)
     if (rows > 0)
-      Seq(Entry(table, "", segRel, schemaIdOf(df.schema), bytes, stats))
+      Seq(Entry(table, "", segRel, schemaIdOf(df.schema),
+        readSchemaOf(df.schema), files, stats))
     else { fs.delete(segPath, true); Seq.empty }
   }
 
@@ -1317,7 +1351,7 @@ object ManifestStore {
           // create, unlike upsert, has no reason to scan the input a
           // second time just to enforce this
           val staged = writePartitionedSegment(s, fs, r, td.name, df,
-            td.partCol, td.keyInData, td.statsCols)
+            td.partCol, td.statsCols)
           requirePartsVerbatim(td.name, td.partCol, staged)
           staged
         }
@@ -1354,12 +1388,12 @@ object ManifestStore {
       maintenance: Maintenance)
       (plan: => Seq[TableOp]): Map[String, Seq[String]] = {
     val (fs, r) = fsOf(s, root)
-    val token = phased("lease")(acquireLease(fs, r))
+    val token = acquireLease(fs, r)
     try {
       val v = currentVersion(fs, r).getOrElse(
         throw new IllegalStateException(
           s"manifest store at $root is not initialized — create first"))
-      val m = phased("manifestRead")(readManifest(fs, r, v))
+      val m = readManifest(fs, r, v)
       val ops = plan
       require(ops.map(_.table).distinct.size == ops.size,
         "one op per table and commit — compose the frames instead")
@@ -1382,16 +1416,16 @@ object ManifestStore {
           val pc = keyColOf(raw)
           require(pc.nonEmpty,
             s"table '$table' is append-only — use Append")
-          val keys = phased("keyCollect")(df.select(pc).distinct()
-            .collect().map(_.get(0).toString).toSeq.sorted)
+          val keys = df.select(pc).distinct()
+            .collect().map(_.get(0).toString).toSeq.sorted
           if (keys.nonEmpty) {
             val keySet = keys.toSet
             // null-safe tombstone verdict (a NULL keeps the row an
             // upsert); tombstone-bearing keys may stage nothing
             val tomb = deleteWhen.map(dw => coalesce(dw, lit(false)))
             val tombKeys = tomb.fold(Set.empty[String])(t =>
-              phased("keyCollect")(df.filter(t).select(pc).distinct()
-                .collect().map(_.get(0).toString).toSet))
+              df.filter(t).select(pc).distinct()
+                .collect().map(_.get(0).toString).toSet)
             // envelope columns ride the batch for deleteWhen/keys but
             // never stage ([[Merge]] doc)
             val arriving = tomb.fold(df)(t => df.filter(!t))
@@ -1402,10 +1436,9 @@ object ManifestStore {
             val merged =
               if (liveE.isEmpty) arriving
               else {
-                if (!keyInDataOf(raw)) refuseReadMerge(table, pc)
                 // fingerprint-grouped read: added columns null-fill,
-                // widened types read widened ([[readEntries]])
-                val live = readEntries(s, r, liveE, forceMerge = false)
+                // widened types read widened ([[relations]])
+                val live = readEntries(s, r, pc, liveE, liveE)
                 // evolution ADDS columns and WIDENS types, never drops:
                 // a batch missing a live column would silently lose it
                 // for the touched partitions while the untouched keep
@@ -1454,8 +1487,7 @@ object ManifestStore {
                     .toSeq: _*))
               }
             val staged = writePartitionedSegment(s, fs, r, table,
-              merged, pc, keyInDataOf(raw), statsColsOf(raw),
-              nKeys = Some(keySet.size))
+              merged, pc, statsColsOf(raw), nKeys = Some(keySet.size))
             requireKeysRendered(table, pc, keySet, staged,
               mayEmpty = tombKeys)
             newEntries ++= staged
@@ -1473,29 +1505,23 @@ object ManifestStore {
           val pc = keyColOf(raw)
           val liveE = m.entries.filter(_.table == table)
           if (liveE.nonEmpty) {
-            if (!keyInDataOf(raw)) refuseReadMerge(table, pc)
-            // resolve `cond` against the table's UNION schema (one
-            // representative entry per fingerprint — metadata only, no
-            // scan) and translate its pushable conjuncts; entries whose
-            // stats prove disjointness carry over UNREAD
-            val byId = liveE.groupBy(_.schemaId)
-            val reps = liveE.map(_.schemaId).distinct.map(id =>
-              byId(id).head)
+            // resolve `cond` against the table's UNION schema (the empty
+            // read of every fingerprint — metadata only, no scan) and
+            // translate its pushable conjuncts; entries whose stats
+            // prove disjointness carry over UNREAD
             val filters = pruneFilters(
-              readEntries(s, r, reps, forceMerge = false), cond)
+              readEntries(s, r, pc, Nil, liveE), cond)
             val candidates = liveE.filter(e =>
               filters.forall(f => mayMatch(e.stats, f)))
             if (candidates.nonEmpty) {
-              val live = readEntries(s, r, candidates,
-                forceMerge = false)
+              val live = readEntries(s, r, pc, candidates, candidates)
               // SQL DELETE semantics: remove rows where cond IS TRUE —
               // a NULL verdict keeps the row
               val keptRows = live.filter(!coalesce(cond, lit(false)))
               if (pc.nonEmpty) {
                 val keySet = candidates.map(_.part).toSet
                 val staged = writePartitionedSegment(s, fs, r, table,
-                  keptRows, pc, keyInDataOf(raw), statsColsOf(raw),
-                  nKeys = Some(keySet.size))
+                  keptRows, pc, statsColsOf(raw), nKeys = Some(keySet.size))
                 // every touched key already round-tripped its hive
                 // rendering when first committed (store invariant);
                 // emptied partitions legitimately stage nothing
@@ -1528,14 +1554,13 @@ object ManifestStore {
           val pc = keyColOf(raw)
           require(pc.nonEmpty,
             s"table '$table' is append-only — use Append")
-          val keys = phased("keyCollect")(df.select(pc).distinct()
-            .collect().map(_.get(0).toString).toSeq.sorted)
+          val keys = df.select(pc).distinct()
+            .collect().map(_.get(0).toString).toSeq.sorted
           if (keys.nonEmpty) {
             // no live read at all: the touched keys' old entries simply
             // don't carry over — replacement is pure metadata
             val staged = writePartitionedSegment(s, fs, r, table,
-              df, pc, keyInDataOf(raw), statsColsOf(raw),
-              nKeys = Some(keys.size))
+              df, pc, statsColsOf(raw), nKeys = Some(keys.size))
             requireKeysRendered(table, pc, keys.toSet, staged)
             newEntries ++= staged
             dropKeys += table -> keys.toSet
@@ -1553,10 +1578,10 @@ object ManifestStore {
               "append-only tables")
           val liveE = m.entries.filter(_.table == table)
           if (liveE.size > 1) {
-            // fingerprint-grouped read ([[readEntries]]); the compacted
+            // fingerprint-grouped read ([[relations]]); the compacted
             // segment BAKES the union/widened schema (null-filled old
             // rows), retiring the per-read evolution cost
-            val live = readEntries(s, r, liveE, forceMerge = false)
+            val live = readEntries(s, r, "", liveE, liveE)
             newEntries ++= writeAppendSegment(s, fs, r, table, live,
               statsColsOf(m.partCols(table)))
             dropAllOf += table
@@ -1581,7 +1606,7 @@ object ManifestStore {
             val prospective = live.size + newEntries.count(_.table == t)
             if (prospective > maxSeg && live.size > 1) {
               newEntries ++= writeAppendSegment(s, fs, r, t,
-                readEntries(s, r, live, forceMerge = false),
+                readEntries(s, r, "", live, live),
                 statsColsOf(m.partCols(t)))
               dropAllOf += t
             }
@@ -1653,76 +1678,80 @@ object ManifestStore {
     commitTables(s, root)(Seq(Merge(table, source, idCol, deleteWhen,
       envelope))).getOrElse(table, Seq.empty)
 
-  /** Snapshot read of one table. `parts` prunes at the MANIFEST level —
-    * only the named partitions' leaf dirs reach the scan (object doc);
-    * `version` time-travels to any retained manifest. A pruned read
-    * matching nothing (and an append-only table with no segments yet)
-    * returns an empty frame with the table's schema when any segment
-    * exists to borrow it from, and fails loudly otherwise.
-    *
-    * Schema evolution — ADDED columns and WIDENED types — is handled
-    * automatically: every entry carries its segment's schema
-    * fingerprint, and [[readEntries]] groups by fingerprint exactly
-    * when the selected entries disagree (union schema, pre-evolution
-    * rows read NULL, int→long / float→double read widened).
-    * Homogeneous tables pay zero evolution cost, and no caller has to
-    * know whether the table ever evolved; an evolved table pays one
-    * scan node per schema version it still carries — which is exactly
-    * what [[CompactAppend]] reduces, baking the merged schema into its
-    * one rewritten segment. `mergeSchema = true` forces parquet's
-    * footer merge on a homogeneous selection (diagnostic override). */
-  def readTable(s: SparkSession, root: String, table: String,
-      parts: Option[Seq[String]] = None,
-      version: Option[Long] = None,
-      mergeSchema: Boolean = false,
-      skip: Seq[org.apache.spark.sql.sources.Filter] = Nil): DataFrame = {
-    val (fs, r) = fsOf(s, root)
-    val v = version.getOrElse(currentVersion(fs, r).getOrElse(
+  /** Resolve `version` (newest when None) against ONE listing of the
+    * manifest dir, require it retained, and read that manifest. */
+  private def manifestAt(fs: FileSystem, r: Path, root: String,
+      version: Option[Long]): (Long, Manifest) = {
+    val vs = listVersions(fs, r)
+    val v = version.getOrElse(vs.lastOption.getOrElse(
       throw new IllegalStateException(
         s"manifest store at $root has no committed version")))
-    require(listVersions(fs, r).contains(v),
+    require(vs.contains(v),
       s"version $v of $root is not retained (vacuumed, or never " +
-        s"committed) — retained: ${listVersions(fs, r).mkString(",")}")
-    val m = readManifest(fs, r, v)
+        s"committed) — retained: ${vs.mkString(",")}")
+    (v, readManifest(fs, r, v))
+  }
+
+  private def requireTable(m: Manifest, root: String,
+      table: String): Unit =
     require(m.partCols.contains(table),
       s"store at $root has no table '$table' " +
         s"(tables: ${m.partCols.keys.toSeq.sorted.mkString(",")})")
+
+  /** The relations a snapshot read of one table scans — [[readTable]]'s
+    * body, shared with the SQL facade ([[graft.sources.ManifestSource]])
+    * so both resolve, select and build their scans the same way. */
+  private[graft] def tableRelations(s: SparkSession, root: String,
+      table: String, parts: Option[Seq[String]], version: Option[Long],
+      skip: Seq[org.apache.spark.sql.sources.Filter] = Nil)
+      : Seq[HadoopFsRelation] = {
+    val (fs, r) = fsOf(s, root)
+    val (v, m) = manifestAt(fs, r, root, version)
+    requireTable(m, root, table)
     val all = m.entries.filter(_.table == table)
     require(all.nonEmpty, s"table '$table' v$v at $root lists no data")
     // `skip` intersects each data-source filter with the entries'
     // column stats ([[ColStat]] / [[mayMatch]]) — segments provably
-    // outside every filter's range never reach the scan (nor, on an
-    // object store, a single list/footer call). PURELY an I/O pruning:
-    // the caller still applies its predicate to the returned frame —
-    // stats bound what a segment MAY hold, they do not filter rows.
+    // outside every filter's range never reach the scan. PURELY an I/O
+    // pruning: the caller still applies its predicate to the returned
+    // frame — stats bound what a segment MAY hold, they do not filter
+    // rows.
     val sel0 = parts.fold(all)(ps => all.filter(e => ps.contains(e.part)))
     val sel =
       if (skip.isEmpty) sel0
       else sel0.filter(e => skip.forall(f => mayMatch(e.stats, f)))
-    readSelected(s, root, sel, all, mergeSchema)
+    relations(s, r, keyColOf(m.partCols(table)), sel, all)
   }
 
-  /** Read an ALREADY-selected entry set ([[readTable]]'s tail, shared
-    * with the SQL facade so its fallback relation doesn't re-resolve
-    * the version and re-read the manifest it already holds).
+  /** Snapshot read of one table. `parts` prunes at the MANIFEST level —
+    * only the named partitions' recorded files reach the scan (object
+    * doc); `version` time-travels to any retained manifest; `skip`
+    * drops entries whose column stats prove no row can match. A
+    * selection matching nothing returns an empty frame with the
+    * table's recorded (union) schema; a table with no entries at all
+    * (an append-only table with no segments yet) fails loudly.
     *
-    * Safe-by-default evolution: the manifest KNOWS whether the
-    * selected segments agree on schema — [[readEntries]] groups by
-    * fingerprint exactly when they don't, so no reader passes a flag.
-    * A pruned read matching NOTHING still carries the table's UNION
-    * schema (one representative entry per fingerprint from `all`,
-    * emptied) — an evolved table's empty slice must not lack the
-    * newest columns. */
-  private[graft] def readSelected(s: SparkSession, root: String,
-      sel: Seq[Entry], all: Seq[Entry],
-      mergeSchema: Boolean): DataFrame = {
-    val (_, r) = fsOf(s, root)
-    if (sel.isEmpty) {
-      val byId = all.groupBy(_.schemaId)
-      val reps = all.map(_.schemaId).distinct.map(id => byId(id).head)
-      readEntries(s, r, reps, mergeSchema).filter(lit(false))
-    } else readEntries(s, r, sel, mergeSchema)
-  }
+    * Resolving the frame reads the manifest and nothing else: the scan
+    * is built from the recorded files and schemas ([[relations]]), so
+    * no Spark job runs until an action does, and the file list is
+    * fixed here — a later commit or vacuum cannot change what this
+    * frame reads.
+    *
+    * Schema evolution — ADDED columns and WIDENED types — is handled
+    * automatically: every entry carries its segment's schema
+    * fingerprint, and [[relations]] scans one relation per fingerprint
+    * exactly when the selected entries disagree (union schema,
+    * pre-evolution rows read NULL, int→long / float→double read
+    * widened). Homogeneous tables pay zero evolution cost, and no
+    * caller has to know whether the table ever evolved; an evolved
+    * table pays one scan node per schema version it still carries —
+    * which is exactly what [[CompactAppend]] reduces, baking the merged
+    * schema into its one rewritten segment. */
+  def readTable(s: SparkSession, root: String, table: String,
+      parts: Option[Seq[String]] = None,
+      version: Option[Long] = None,
+      skip: Seq[org.apache.spark.sql.sources.Filter] = Nil): DataFrame =
+    frameOf(s, tableRelations(s, root, table, parts, version, skip))
 
   /** Change feed — incremental (CDC) read over the store's version
     * history, the shape Delta calls CDF: the NET row changes of
@@ -1749,11 +1778,11 @@ object ManifestStore {
     * [[Replace]] with identical content feeds nothing.
     *
     * Schema evolution inside the window is handled the usual way
-    * ([[readEntries]]): pre-evolution rows read null-filled/widened,
-    * and the feed's columns are the union across steps (a layout-only
-    * key is not among them). Requires every version in [from, to] retained —
-    * vacuum against a horizon older than the slowest consumer, the
-    * same contract as any snapshot read. */
+    * ([[relations]]): pre-evolution rows read null-filled/widened,
+    * and the feed's columns are the union across steps. Requires every
+    * version in [from, to] retained — vacuum against a horizon older
+    * than the slowest consumer, the same contract as any snapshot
+    * read. */
   def changeFeed(s: SparkSession, root: String, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion < toVersion,
@@ -1769,6 +1798,7 @@ object ManifestStore {
       .map(v => v -> readManifest(fs, r, v)).toMap
     manifests.values.foreach(m => require(m.partCols.contains(table),
       s"store at $root has no table '$table' throughout the window"))
+    val pc = keyColOf(manifests(toVersion).partCols(table))
     val steps = (fromVersion until toVersion).flatMap { v =>
       val ea = manifests(v).entries.filter(_.table == table)
       val eb = manifests(v + 1).entries.filter(_.table == table)
@@ -1778,20 +1808,13 @@ object ManifestStore {
       val removed = ea.filterNot(e => bDirs.contains(e.dir))
       if (added.isEmpty && removed.isEmpty) None
       else {
-        val reps = (added ++ removed)
-        def readSide(es: Seq[Entry]): DataFrame =
-          if (es.nonEmpty) readEntries(s, r, es, false)
-          else {
-            val byId = reps.groupBy(_.schemaId)
-            val one = reps.map(_.schemaId).distinct.map(id => byId(id).head)
-            readEntries(s, r, one, false).filter(lit(false))
-          }
-        val newRows = readSide(added)
-        val oldRows = readSide(removed)
+        // an empty side reads as the step's union schema with no rows
+        val newRows = readEntries(s, r, pc, added, added ++ removed)
+        val oldRows = readEntries(s, r, pc, removed, added ++ removed)
         // exceptAll needs identical schemas; align both sides to the
         // union schema with unionByName's own coerced types (added
-        // columns null-fill, widened types widen — the readEntries
-        // rules applied across the commit boundary)
+        // columns null-fill, widened types widen — the relations rules
+        // applied across the commit boundary)
         val union = newRows.unionByName(oldRows,
           allowMissingColumns = true).schema
         def align(df: DataFrame): DataFrame =
@@ -1809,8 +1832,8 @@ object ManifestStore {
     }
     steps.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse {
-        readTable(s, root, table, version = Some(toVersion))
-          .filter(lit(false))
+        readEntries(s, r, pc, Nil,
+          manifests(toVersion).entries.filter(_.table == table))
           .withColumn("_change_type", lit(""))
           .withColumn("_commit_version", lit(0L))
       }
@@ -1820,44 +1843,27 @@ object ManifestStore {
     * omitted) — bounded driver-side metadata, for observability and
     * gates (segment counts, pruning audits). */
   def tableEntries(s: SparkSession, root: String, table: String,
-      version: Option[Long] = None): Seq[Entry] = {
-    val (fs, r) = fsOf(s, root)
-    val v = version.getOrElse(currentVersion(fs, r).getOrElse(
-      throw new IllegalStateException(
-        s"manifest store at $root has no committed version")))
-    readManifest(fs, r, v).entries.filter(_.table == table)
-  }
+      version: Option[Long] = None): Seq[Entry] =
+    tableLayout(s, root, table, version)._3
 
-  /** Facade-side layout accessor ([[graft.sources.ManifestSource]]):
-    * resolve `version` (newest when None) and return (resolved
-    * version, key column — "" for append-only, whether the key rides
-    * in the data files, the table's entries at that version). Shares
-    * [[readTable]]'s validation so the facade and the Scala API fail
-    * identically on unknown tables and unretained versions. */
+  /** Resolve `version` (newest when None) and return (resolved
+    * version, key column — "" for append-only, the table's entries at
+    * that version). Shares [[readTable]]'s validation so every caller
+    * fails identically on unknown tables and unretained versions. */
   private[graft] def tableLayout(s: SparkSession, root: String,
       table: String, version: Option[Long])
-      : (Long, String, Boolean, Seq[Entry]) = {
+      : (Long, String, Seq[Entry]) = {
     val (fs, r) = fsOf(s, root)
-    val v = version.getOrElse(currentVersion(fs, r).getOrElse(
-      throw new IllegalStateException(
-        s"manifest store at $root has no committed version")))
-    require(listVersions(fs, r).contains(v),
-      s"version $v of $root is not retained (vacuumed, or never " +
-        s"committed) — retained: ${listVersions(fs, r).mkString(",")}")
-    val m = readManifest(fs, r, v)
-    require(m.partCols.contains(table),
-      s"store at $root has no table '$table' " +
-        s"(tables: ${m.partCols.keys.toSeq.sorted.mkString(",")})")
-    val raw = m.partCols(table)
-    (v, keyColOf(raw), keyInDataOf(raw), m.entries.filter(_.table == table))
+    val (v, m) = manifestAt(fs, r, root, version)
+    requireTable(m, root, table)
+    (v, keyColOf(m.partCols(table)), m.entries.filter(_.table == table))
   }
 
   /** Single-table snapshot read (sugar over [[readTable]]). */
   def read(s: SparkSession, root: String,
       parts: Option[Seq[String]] = None,
-      version: Option[Long] = None,
-      mergeSchema: Boolean = false): DataFrame =
-    readTable(s, root, DefaultTable, parts, version, mergeSchema)
+      version: Option[Long] = None): DataFrame =
+    readTable(s, root, DefaultTable, parts, version)
 
   /** Retire history: keep the newest `keepLast` manifests, delete the
     * older ones, then delete every segment dir no kept manifest

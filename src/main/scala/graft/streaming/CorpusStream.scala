@@ -354,23 +354,31 @@ object CorpusStream {
       // upstream: the three-commit CDC fixture
       ManifestStore.create(s, src, li, "l_returnflag")
       import s.implicits._
-      // mart init reads ONLY the snapshot-isolated v1 (immutable
-      // segments — later upstream commits never touch v1's files) and
-      // writes a DIFFERENT store, so it overlaps upstream commits 2-3
-      // (guide §2.6); the consumer loop below still starts strictly
-      // after both sides
+      // mart init reads ONLY the snapshot-isolated v1 and writes a
+      // DIFFERENT store, so it overlaps upstream commits 2-3 (guide
+      // §2.6); the consumer loop below still starts strictly after both
+      // sides. The overlap is safe because v1's scan is resolved HERE,
+      // before either side starts — its file list is fixed from the v1
+      // manifest — and the upstream commits run with a policy that
+      // vacuums nothing, so none of those files can be reaped mid-read.
+      val v1Snapshot = ManifestStore.readTable(s, src, "t",
+        version = Some(1L))
+      val srcPolicy = ManifestStore.Maintenance()
+      require(srcPolicy.vacuumKeepLast.isEmpty,
+        "the upstream commits overlap a read of v1 and must not vacuum")
       graft.operators.Par.two(
         {
-          ManifestStore.replacePartitions(s, src,
-            li.filter(col("l_returnflag") === "A")
+          ManifestStore.commitTables(s, src, srcPolicy)(Seq(
+            ManifestStore.Replace("t", li.filter(col("l_returnflag") === "A")
               .select(col("l_returnflag"),
-                (col("l_quantity") * 2).as("l_quantity")), "l_returnflag")
-          ManifestStore.commitTables(s, src)(Seq(ManifestStore.Upsert("t",
-            li.filter(col("l_returnflag") === "N"))))
+                (col("l_quantity") * 2).as("l_quantity")))))
+          ManifestStore.commitTables(s, src, srcPolicy)(Seq(
+            ManifestStore.Upsert("t",
+              li.filter(col("l_returnflag") === "N"))))
         },
         {
           // mart init: tally = the v1 snapshot aggregate; offset = 1
-          val v1 = ManifestStore.readTable(s, src, "t", version = Some(1L))
+          val v1 = v1Snapshot
             .groupBy(col("l_returnflag"))
             .agg(dec(col("l_quantity")).as("sum_q"),
               count(lit(1)).as("n"))

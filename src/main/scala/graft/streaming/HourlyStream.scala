@@ -50,18 +50,24 @@ object HourlyStream {
         } catch { case _: Throwable => () }
       }))
 
-  private[graft] def scratchDir(prefix: String): String = {
-    // a missing/read-only path (env override included) falls through to
-    // the next candidate instead of throwing mid-stream-setup
+  /** The directory every [[scratchDir]] is created under:
+    * `SPARK_GRAFT_STREAM_SCRATCH`, else `/dev/shm`, else
+    * `java.io.tmpdir`. A missing/read-only path (env override
+    * included) falls through to the next candidate instead of throwing
+    * mid-stream-setup. */
+  private[graft] def scratchBase: String = {
     def usable(p: String): Boolean = {
       val f = new java.io.File(p); f.isDirectory && f.canWrite
     }
-    val base = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH").filter(usable)
+    sys.env.get("SPARK_GRAFT_STREAM_SCRATCH").filter(usable)
       .orElse(Option("/dev/shm").filter(usable))
       .getOrElse(System.getProperty("java.io.tmpdir"))
+  }
+
+  private[graft] def scratchDir(prefix: String): String = {
     scratchCleanupHook
     val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(base), prefix)
+      java.nio.file.Paths.get(scratchBase), prefix)
     scratchDirs.add(dir)
     dir.toString
   }
@@ -345,8 +351,8 @@ object HourlyStream {
     * (count-only projection; memory sink). Dedup state holds one row per
     * distinct (event_id, ts) inside the watermark window, so unlike the
     * daily aggregate its partition count must scale with event volume —
-    * the default suits the bundled test SFs (StreamBench at sf0.1:
-    * 4 partitions ~1.3s vs ~1.9s at 8 — per-partition commit cost
+    * the default suits the bundled test SFs (measured at sf0.1, README
+    * finding 7: 4 partitions ~1.3s vs ~1.9s at 8 — per-partition commit cost
     * dominates until state is far larger; a 100 TB deployment raises
     * this with volume). */
   def runDedupOnce(s: SparkSession, srcDir: String,

@@ -12,8 +12,8 @@ import graft.store.ManifestStore
   * (b) resolve to the REAL pruned multi-root parquet scan — not a
   * wrapper operator — so filters push down and columns prune, (c)
   * honor `version` time travel, and (d) stay correct on the
-  * selections that cannot be one file relation (schema-evolved,
-  * pruned-to-nothing) via the row-scan fallback. */
+  * selections that cannot be one file relation (schema-evolved) via
+  * the row-scan relation. */
 class ManifestFacadeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
@@ -50,6 +50,45 @@ class ManifestFacadeSpec extends AnyFunSuite {
     assert(plan.contains("FileScan parquet"), plan)
     assert(plan.contains("PushedFilters: [IsNotNull(id), EqualTo(id,2)"),
       plan)
+    // a parquet file dropped into a committed leaf dir without a commit
+    // is read by neither door: the scan reads the recorded files only
+    val leaf = new java.io.File(df.inputFiles.head.stripPrefix("file:"))
+    java.nio.file.Files.copy(leaf.toPath,
+      leaf.toPath.resolveSibling("part-99999-stray.zstd.parquet"))
+    assert(ManifestStore.read(spark, root).count() === 40)
+    assert(facade(root).count() === 40)
+    assert(facade(root, "parts" -> "2").collect().map(_.toSeq).toSet
+      === viaApi)
+    // resolving either door's frame starts no Spark job: the scan is
+    // built from the manifest alone (a listener sees every job start in
+    // order, so a fence job marks the end of the window)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(
+          e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("mff-resolve", "resolve only")
+      ManifestStore.read(spark, root).schema
+      facade(root).schema
+      facade(root, "parts" -> "1").createOrReplaceTempView("mff_jobs_v")
+      spark.table("mff_jobs_v").columns
+      sc.setJobGroup("mff-fence", "fence")
+      spark.range(1).collect()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!seen.contains("mff-fence") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen.contains("mff-fence"))
+      assert(!seen.contains("mff-resolve"),
+        "resolving a manifest read must start no Spark job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("a plain SQL WHERE on the key prunes at the MANIFEST level: " +
@@ -143,32 +182,10 @@ class ManifestFacadeSpec extends AnyFunSuite {
     ManifestStore.create(spark, root, rows(0 until 8, "a"), "part")
     val viaApi = ManifestStore.read(spark, root)
     val df = facade(root)
-    assert(df.schema.fieldNames.toSeq === viaApi.schema.fieldNames.toSeq)
-    assert(df.schema("part").dataType === viaApi.schema("part").dataType)
+    // one relation builder: the same fields, types and nullability
+    assert(df.schema === viaApi.schema)
     assert(df.collect().map(_.toSeq).toSet
       === viaApi.collect().map(_.toSeq).toSet)
-  }
-
-  test("layout-only keys are RESTORED as a string partition column " +
-      "the Scala read cannot offer, and WHERE prunes on them") {
-    import spark.implicits._
-    val root = tempDir("mff-layoutonly")
-    val df0 = Seq((1L, "0_1", 1.0), (2L, "0_2", 2.0), (3L, "0_1", 3.0))
-      .toDF("id", "bb", "x")
-    ManifestStore.createTables(spark, root, Seq(
-      (ManifestStore.TableDef("postings", "bb", keyInData = false), df0)))
-    // the files don't carry bb (derivable, layout-only) — the Scala
-    // read comes back without it
-    assert(!ManifestStore.readTable(spark, root, "postings")
-      .columns.contains("bb"))
-    // the facade restores it from the manifest as a partition column
-    val f = facade(root, "table" -> "postings")
-    assert(f.columns.contains("bb"))
-    assert(f.schema("bb").dataType.typeName === "string")
-    val got = f.filter(col("bb") === "0_1")
-      .select("id", "x", "bb").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
-    assert(got === Set((1L, 1.0, "0_1"), (3L, 3.0, "0_1")))
   }
 
   test("mf_facade_pruned gate: WHERE-only pruning booleans hold and " +
@@ -197,6 +214,11 @@ class ManifestFacadeSpec extends AnyFunSuite {
       rows(20 until 30, "b"), "part")
     assert(facade(root, "version" -> "1").count() === 20)
     assert(facade(root).count() === 30)
+    // two loads of one version are the same plan; of two versions not
+    assert(facade(root, "version" -> "2").sameSemantics(
+      facade(root, "version" -> "2")))
+    assert(!facade(root, "version" -> "1").sameSemantics(
+      facade(root, "version" -> "2")))
     val e = intercept[IllegalArgumentException] {
       facade(root, "version" -> "9").collect()
     }
@@ -399,18 +421,24 @@ class ManifestFacadeSpec extends AnyFunSuite {
     assert(messages(e2).exists(_.contains("single path")),
       s"unexpected refusal: ${messages(e2)}")
     assert(ManifestStore.read(spark, root).count() === before)
-    // the append-only fallback path refuses too (TableScan relation)
+    // the evolved-table relation refuses too (TableScan relation)
     import spark.implicits._
     val root2 = tempDir("mff-insert2")
     ManifestStore.createTables(spark, root2, Seq(
       (ManifestStore.TableDef("docs", ""),
         Seq((1L, "x")).toDF("id", "v"))))
-    facade(root2, "table" -> "docs", "mergeSchema" -> "true")
-      .createOrReplaceTempView("mff_insert_docs")
+    ManifestStore.commitTables(spark, root2)(Seq(ManifestStore.Append(
+      "docs", Seq((2L, "y", 0.5)).toDF("id", "v", "score"))))
+    val evolved = facade(root2, "table" -> "docs")
+    assert(evolved.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+        if l.relation.isInstanceOf[graft.sources.ManifestFrameRelation] => l
+    }.isDefined)
+    evolved.createOrReplaceTempView("mff_insert_docs")
     intercept[Throwable] {
-      spark.sql("INSERT INTO mff_insert_docs VALUES (9, 'rogue')")
+      spark.sql("INSERT INTO mff_insert_docs VALUES (9, 'rogue', 1.0)")
     }
-    assert(ManifestStore.readTable(spark, root2, "docs").count() === 1)
+    assert(ManifestStore.readTable(spark, root2, "docs").count() === 2)
   }
 
   test("mf_facade_write gate: the three-commit replay matches the " +

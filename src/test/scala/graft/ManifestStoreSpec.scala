@@ -53,6 +53,26 @@ class ManifestStoreSpec extends AnyFunSuite {
     // duplicate is the hive dir; `part` itself rides in the files)
     assert(ManifestStore.read(spark, root).columns.toSet
       === Set("id", "part", "v"))
+    // the recorded schema is the one spark.read.parquet infers from the
+    // entry's files, for every column type the contract stores
+    import spark.implicits._
+    val typed = Seq(
+      ("a", Seq(1.5f, 2f), java.sql.Date.valueOf("2026-01-02"),
+        BigDecimal("12.345")),
+      ("b", Seq(0f), java.sql.Date.valueOf("2026-03-04"),
+        BigDecimal("-1.000")))
+      .toDF("k", "emb", "day", "amt")
+      .withColumn("amt", col("amt").cast("decimal(12,3)"))
+    val root2 = tempDir("mf-schema")
+    ManifestStore.createTables(spark, root2, Seq(
+      (ManifestStore.TableDef("keyed", "k"), typed),
+      (ManifestStore.TableDef("app", ""), typed)))
+    Seq("keyed", "app").foreach { t =>
+      ManifestStore.tableEntries(spark, root2, t).foreach { e =>
+        assert(e.schema === spark.read.parquet(s"$root2/${e.dir}").schema,
+          s"$t ${e.dir}")
+      }
+    }
   }
 
   test("upsert == rebuild; untouched segment files never rewritten") {
@@ -115,6 +135,11 @@ class ManifestStoreSpec extends AnyFunSuite {
       ManifestStore.read(spark, root, version = Some(9L))
     }
     assert(e.getMessage.contains("not retained"))
+    // two reads of one version are the same plan (shared caches and
+    // reused exchanges); reads of different versions are not
+    def v(n: Long) = ManifestStore.read(spark, root, version = Some(n))
+    assert(v(2L).sameSemantics(v(2L)))
+    assert(!v(2L).sameSemantics(v(3L)))
   }
 
   test("upsertById: re-delivered batch is content-idempotent") {
@@ -450,9 +475,9 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   // ---- multi-table commits (the LSH postings+vectors shape) ----
 
-  /** Two-table fixture: a partitioned "postings" table (layout-only
-    * composite `bb` key — also the LSH index's earlier postings layout)
-    * and an append-only "vectors" table. */
+  /** Two-table fixture: a partitioned "postings" table (composite `bb`
+    * key — also the LSH index's earlier postings layout) and an
+    * append-only "vectors" table. */
   private def twoTableStore(root: String): Unit = {
     import spark.implicits._
     val postings = (0 until 24)
@@ -461,18 +486,16 @@ class ManifestStoreSpec extends AnyFunSuite {
     val vectors = (0 until 8).map(i => (i.toLong, Seq.fill(4)(i.toFloat)))
       .toDF("vec_id", "embedding")
     ManifestStore.createTables(spark, root, Seq(
-      (ManifestStore.TableDef("postings", "bb", keyInData = false),
-        postings),
+      (ManifestStore.TableDef("postings", "bb"), postings),
       (ManifestStore.TableDef("vectors", ""), vectors)))
   }
 
-  test("multi-table: create + per-table reads; layout-only key is not " +
-      "stored in the data files") {
+  test("multi-table: create + per-table reads; pruning by composite " +
+      "key rendering") {
     val root = tempDir("mf-multi")
     twoTableStore(root)
     val p = ManifestStore.readTable(spark, root, "postings")
-    // bb carried the layout and was NOT duplicated into the files
-    assert(p.columns.toSet === Set("vec_id", "band", "bucket"))
+    assert(p.columns.toSet === Set("vec_id", "band", "bucket", "bb"))
     assert(p.count() === 24)
     val v = ManifestStore.readTable(spark, root, "vectors")
     assert(v.columns.toSet === Set("vec_id", "embedding"))
@@ -481,7 +504,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     val pruned = ManifestStore.readTable(spark, root, "postings",
       parts = Some(Seq("1_0")))
     assert(pruned.count() === 4) // i%3==1 && i%2==0: 4,10,16,22
-    assert(pruned.inputFiles.forall(_.contains("bb=1_0")))
+    assert(pruned.inputFiles.forall(_.contains("bb__p=1_0")))
   }
 
   test("multi-table commit is atomic: kill before the manifest leaves " +
@@ -543,18 +566,6 @@ class ManifestStoreSpec extends AnyFunSuite {
         Seq(ManifestStore.Append("nope", pdf)))
     }
     assert(e3.getMessage.contains("no table"))
-    // a layout-only key cannot be restored on read-back: the read-merge
-    // ops refuse a live partition of such a table, loudly and by name
-    val e4 = intercept[IllegalArgumentException] {
-      ManifestStore.commitTables(spark, root)(
-        Seq(ManifestStore.Upsert("postings", pdf)))
-    }
-    assert(e4.getMessage.contains("layout only"))
-    val e5 = intercept[IllegalArgumentException] {
-      ManifestStore.commitTables(spark, root)(
-        Seq(ManifestStore.Delete("postings", col("vec_id") === 1L)))
-    }
-    assert(e5.getMessage.contains("layout only"))
     assert(ManifestStore.currentVersion(spark, root) === Some(1L))
   }
 
@@ -641,6 +652,20 @@ class ManifestStoreSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("rebuild"))
     assert(ManifestStore.currentVersion(spark, root) === Some(1L))
+    // a store whose manifest predates format v4 (no recorded files or
+    // schemas) is refused with a rebuild message too
+    val old = tempDir("mf-v3")
+    val mdir = java.nio.file.Paths.get(old, "_manifests")
+    java.nio.file.Files.createDirectories(mdir)
+    java.nio.file.Files.write(mdir.resolve("v00000001.mf"),
+      ("graft-manifest\t3\tt=part\n" +
+        "E\tt\t0\tseg/seg-0/part__p=0\t0a1b2c3d4e5f\t10\t\n")
+        .getBytes("UTF-8"))
+    val e3 = intercept[IllegalStateException] {
+      ManifestStore.read(spark, old)
+    }
+    assert(e3.getMessage.contains("format v3") &&
+      e3.getMessage.contains("rebuild"), e3.getMessage)
   }
 
   test("publish verification: a commit whose manifest was overwritten " +
@@ -1041,9 +1066,10 @@ class ManifestStoreSpec extends AnyFunSuite {
       assert(r.getLong(1) === r.getLong(0) + graft.operators.Dedup.PlantOffset)
       assert(r.getBoolean(3) && r.getBoolean(4))
     }
-    val tmp = new java.io.File(
-      System.getProperty("java.io.tmpdir")).listFiles()
-    assert(tmp == null || !tmp.exists(_.getName.startsWith("graft_ivfmfs_")),
+    val scratch = new java.io.File(
+      graft.streaming.HourlyStream.scratchBase).listFiles()
+    assert(scratch == null ||
+      !scratch.exists(_.getName.startsWith("graft_ivfmfs_")),
       "maintenance stream lane must reap its scratch dirs")
   }
 

@@ -646,11 +646,12 @@ class StreamingSpec extends AnyFunSuite {
           "through the indexed lane")
       assert(r.getBoolean(2), "the planted match must be flagged exact")
     }
-    // lifecycle reaps its scratch index + drop dirs
-    val tmp = new java.io.File(
-      System.getProperty("java.io.tmpdir")).listFiles()
-    assert(tmp == null ||
-      !tmp.exists(f => f.getName.startsWith("graft_annidx_") ||
+    // lifecycle reaps its scratch index + drop dirs, which live under
+    // the stream scratch base (not necessarily java.io.tmpdir)
+    val scratch = new java.io.File(
+      graft.streaming.HourlyStream.scratchBase).listFiles()
+    assert(scratch == null ||
+      !scratch.exists(f => f.getName.startsWith("graft_annidx_") ||
         f.getName.startsWith("graft_probeidx_drop_")),
       "indexed stream lane must reap its scratch dirs")
   }
@@ -671,10 +672,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(r.getBoolean(4),
         "streamed maintenance top-k must equal the from-scratch rebuild")
     }
-    val tmp = new java.io.File(
-      System.getProperty("java.io.tmpdir")).listFiles()
-    assert(tmp == null ||
-      !tmp.exists(_.getName.startsWith("graft_ivfmfs_")),
+    val scratch = new java.io.File(
+      graft.streaming.HourlyStream.scratchBase).listFiles()
+    assert(scratch == null ||
+      !scratch.exists(_.getName.startsWith("graft_ivfmfs_")),
       "maintenance stream lane must reap its scratch dirs")
   }
 
