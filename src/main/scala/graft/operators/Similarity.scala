@@ -1869,22 +1869,29 @@ object Similarity {
     import graft.store.ManifestStore
     requireBandKeyed(s, rootPath)
     var pairs = Seq.empty[(Int, Int)]
-    ManifestStore.commitTables(s, rootPath) {
-      val fresh =
-        if (upsertById)
-          arriving.join(
-            ManifestStore.readTable(s, rootPath, "vectors")
-              .select("vec_id"), Seq("vec_id"), "left_anti")
-        else arriving
-      val newPostings = lshPostings(fresh, "vec_id", "embedding", planes,
-        bands)
-      pairs = newPostings.select("band", "bucket").distinct().collect()
-        .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-      Seq(
-        ManifestStore.Upsert("postings", newPostings),
-        ManifestStore.Append("vectors",
-          fresh.select(col("vec_id"), col("embedding"))))
-    }
+    // the guarded batch feeds four consumers (the pairs collect, the
+    // upsert's key collect, the postings write, the vectors append):
+    // persisted for the commit, so its anti-join runs once
+    var guarded: DataFrame = null
+    try {
+      ManifestStore.commitTables(s, rootPath) {
+        val fresh =
+          if (upsertById) {
+            guarded = arriving.join(
+              ManifestStore.readTable(s, rootPath, "vectors")
+                .select("vec_id"), Seq("vec_id"), "left_anti").persist()
+            guarded
+          } else arriving
+        val newPostings = lshPostings(fresh, "vec_id", "embedding", planes,
+          bands)
+        pairs = newPostings.select("band", "bucket").distinct().collect()
+          .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
+        Seq(
+          ManifestStore.Upsert("postings", newPostings),
+          ManifestStore.Append("vectors",
+            fresh.select(col("vec_id"), col("embedding"))))
+      }
+    } finally if (guarded != null) guarded.unpersist(blocking = false)
     pairs
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
   BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   PartitionDirectory}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -119,8 +120,9 @@ private[graft] final class ManifestFileIndex(
     // range is dropped here — the Delta-style file skipping, I/O-only
     // (Spark still applies the filters to the rows the surviving files
     // produce)
-    val sourceFilters =
-      dataFilters.flatMap(ManifestFileIndex.toSourceFilter)
+    val utcSession = SQLConf.get.sessionLocalTimeZone == "UTC"
+    val sourceFilters = dataFilters.flatMap(
+      ManifestStore.toSourceFilter(_, utcSession))
     val selected = keyPruned.flatMap { case (p, es) =>
       val kept =
         if (sourceFilters.isEmpty) es
@@ -160,83 +162,6 @@ private[graft] object ManifestFileIndex {
     case StringType | IntegerType | LongType | ShortType | ByteType |
         DateType => true
     case _ => false
-  }
-
-  /** Catalyst → data-source filter translation for the shapes the
-    * stat-skip evaluator ([[ManifestStore.mayMatch]]) understands —
-    * hand-rolled because Spark's `DataSourceStrategy.translateFilter`
-    * is `protected[sql]`. Internal literal values convert to their
-    * external renderings (UTF8String → String, epoch-day → LocalDate,
-    * micros → Instant) so `mayMatch` compares in one domain.
-    * Untranslatable shapes yield None — conservative, never-skip. */
-  private[sources] def toSourceFilter(e: org.apache.spark.sql.catalyst
-      .expressions.Expression): Option[org.apache.spark.sql.sources
-      .Filter] = {
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    import org.apache.spark.sql.{sources => sf}
-    import org.apache.spark.sql.types._
-    def ext(v: Any, t: DataType): Option[Any] = Option(v).flatMap { _ =>
-      t match {
-        case StringType => Some(v.toString)
-        case DateType =>
-          Some(java.time.LocalDate.ofEpochDay(
-            v.asInstanceOf[Int].toLong))
-        case TimestampType | TimestampNTZType =>
-          val us = v.asInstanceOf[Long]
-          Some(java.time.Instant.ofEpochSecond(
-            Math.floorDiv(us, 1000000L),
-            Math.floorMod(us, 1000000L) * 1000L))
-        case _: DecimalType =>
-          Some(v.asInstanceOf[org.apache.spark.sql.types.Decimal]
-            .toJavaBigDecimal)
-        case ByteType | ShortType | IntegerType | LongType | FloatType |
-            DoubleType => Some(v)
-        case _ => None
-      }
-    }
-    def lit(x: ce.Expression): Option[Any] = x match {
-      case l: ce.Literal => ext(l.value, l.dataType)
-      case _ => None
-    }
-    e match {
-      case ce.And(l, r) => for {
-        a <- toSourceFilter(l); b <- toSourceFilter(r)
-      } yield sf.And(a, b)
-      case ce.Or(l, r) => for {
-        a <- toSourceFilter(l); b <- toSourceFilter(r)
-      } yield sf.Or(a, b)
-      case ce.EqualTo(a: ce.AttributeReference, v) =>
-        lit(v).map(sf.EqualTo(a.name, _))
-      case ce.EqualTo(v, a: ce.AttributeReference) =>
-        lit(v).map(sf.EqualTo(a.name, _))
-      case ce.GreaterThan(a: ce.AttributeReference, v) =>
-        lit(v).map(sf.GreaterThan(a.name, _))
-      case ce.GreaterThan(v, a: ce.AttributeReference) =>
-        lit(v).map(sf.LessThan(a.name, _))
-      case ce.GreaterThanOrEqual(a: ce.AttributeReference, v) =>
-        lit(v).map(sf.GreaterThanOrEqual(a.name, _))
-      case ce.GreaterThanOrEqual(v, a: ce.AttributeReference) =>
-        lit(v).map(sf.LessThanOrEqual(a.name, _))
-      case ce.LessThan(a: ce.AttributeReference, v) =>
-        lit(v).map(sf.LessThan(a.name, _))
-      case ce.LessThan(v, a: ce.AttributeReference) =>
-        lit(v).map(sf.GreaterThan(a.name, _))
-      case ce.LessThanOrEqual(a: ce.AttributeReference, v) =>
-        lit(v).map(sf.LessThanOrEqual(a.name, _))
-      case ce.LessThanOrEqual(v, a: ce.AttributeReference) =>
-        lit(v).map(sf.GreaterThanOrEqual(a.name, _))
-      case ce.In(a: ce.AttributeReference, vs) =>
-        val ex = vs.map(lit)
-        if (ex.forall(_.isDefined)) Some(sf.In(a.name,
-          ex.map(_.get).toArray))
-        else None
-      case ce.InSet(a: ce.AttributeReference, set) =>
-        val ex = set.toSeq.map(v => ext(v, a.dataType))
-        if (ex.forall(_.isDefined)) Some(sf.In(a.name,
-          ex.map(_.get).toArray))
-        else None
-      case _ => None
-    }
   }
 
   private[sources] def parseKey(part: String, t: DataType): Any = t match {

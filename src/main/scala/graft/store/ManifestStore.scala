@@ -943,15 +943,18 @@ object ManifestStore {
     top.toSeq.flatMap(split).flatMap(e => toSourceFilter(e, utcSession))
   }
 
-  /** Minimal Catalyst → data-source filter translation covering
-    * exactly the shapes [[mayMatch]] evaluates (=, ranges, IN, AND,
-    * OR) — Spark's own `DataSourceStrategy.translateFilter` is
-    * `protected`. Literals convert to their EXTERNAL Scala renderings
-    * ([[CatalystTypeConverters]]: UTF8String→String, micros→Timestamp,
-    * days→Date) — the domains [[mayMatch]]'s `norm` expects. Anything
-    * else translates to None → contributes no pruning (conservative;
-    * the caller still applies the full predicate to rewritten rows). */
-  private def toSourceFilter(e: org.apache.spark.sql.catalyst
+  /** The one Catalyst → data-source filter translation, covering
+    * exactly the shapes [[mayMatch]] evaluates (=, ranges, IN / InSet,
+    * IS NOT NULL, prefix, AND, OR) — Spark's own
+    * `DataSourceStrategy.translateFilter` is `protected`. Used by
+    * [[pruneFilters]] (Delete / Merge) and by the SQL facade's
+    * [[graft.sources.ManifestFileIndex]] `listFiles`. Literals convert
+    * to their EXTERNAL Scala renderings ([[CatalystTypeConverters]]:
+    * UTF8String→String, micros→Timestamp, days→Date) — the domains
+    * [[mayMatch]]'s `norm` expects. Anything else translates to None →
+    * contributes no pruning (conservative; the caller still applies
+    * the full predicate to every row). */
+  private[graft] def toSourceFilter(e: org.apache.spark.sql.catalyst
       .expressions.Expression, utcSession: Boolean)
       : Option[org.apache.spark.sql.sources.Filter] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -1012,6 +1015,10 @@ object ManifestStore {
           lits <- Some(vs.map(litOf))
           if lits.forall(_.isDefined)
         } yield f.In(c, lits.map(_.get).toArray)
+      // the optimizer's form of a long IN list: internal values
+      case InSet(a, vs) =>
+        colOf(a).map(c => f.In(c, vs.toArray.map(v =>
+          CatalystTypeConverters.convertToScala(v, a.dataType))))
       case IsNotNull(a) => colOf(a).map(f.IsNotNull)
       case StartsWith(a, b) =>
         for {

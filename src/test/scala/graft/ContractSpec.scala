@@ -19,10 +19,32 @@ class ContractSpec extends AnyFunSuite {
     // The driver sorts columns by name before hashing, so names must align.
     // Verified end-to-end by tools/verify_local.py; here we just pin that
     // every query runs and yields a schema on the smallest SF.
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, TestSpark.sf)
-      assert(df.columns.nonEmpty, name)
+    ContractSweep.records.foreach { case (name, r) =>
+      assert(r.columns.nonEmpty, name)
     }
+  }
+
+  test("the contract sweep covers every query and builds each exactly " +
+      "once per test JVM") {
+    assert(ContractSweep.records.keySet == SparkEntry.queries.keySet)
+    val counts = ContractSweep.buildCounts
+    assert(counts.keySet == SparkEntry.queries.keySet)
+    val rebuilt = counts.filter(_._2 != 1)
+    assert(rebuilt.isEmpty, s"built more than once: $rebuilt")
+  }
+
+  test("README's query and oracle counts match the contract") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val nQueries = SparkEntry.queries.size
+    val nOracle = SparkEntry.oracleSql.size
+    def counts(re: String) = re.r.findAllMatchIn(readme)
+      .map(_.subgroups.map(_.toInt)).toSeq
+    assert(counts("""(\d+) named queries""") == Seq(Seq(nQueries)))
+    assert(counts("""(\d+) of (\d+) queries are oracle-checked""") ==
+      Seq(Seq(nOracle, nQueries)))
+    assert(counts("""The (\d+) that are not""") ==
+      Seq(Seq(nQueries - nOracle)))
   }
 
   test("queries are deterministic: two runs, identical results (sample)") {

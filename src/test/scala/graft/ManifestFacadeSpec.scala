@@ -129,6 +129,46 @@ class ManifestFacadeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("a facade WHERE on a stats column skips segments for every shape " +
+      "the store's translator knows: LIKE prefix, IS NOT NULL, long IN") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val root = tempDir("mff-stats")
+    // one segment per key: part 0 names "aa-*", part 1 "bb-*", part 2
+    // only nulls (its stat is the all-null tag)
+    val data = (0 until 12).map { i =>
+      val p = i % 3
+      (i.toLong, p, if (p == 2) None else Some(Seq("aa", "bb")(p) + s"-$i"))
+    }.toDF("id", "part", "name")
+    ManifestStore.createTables(spark, root, Seq((
+      ManifestStore.TableDef("t", "part", statsCols = Seq("name")), data)))
+    facade(root, "table" -> "t").createOrReplaceTempView("mff_stats_v")
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      def selected(where: String): (Set[Long], Option[Seq[String]]) = {
+        val q = spark.sql(s"SELECT id FROM mff_stats_v WHERE $where")
+        val ids = q.collect().map(_.getLong(0)).toSet
+        val index = q.queryExecution.analyzed.collectFirst {
+          case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+            h.location.asInstanceOf[graft.sources.ManifestFileIndex]
+        }.get
+        (ids, index.lastSelectedParts)
+      }
+      // prefix: only part 1's segment can hold a "bb" name
+      assert(selected("name LIKE 'bb%'") ===
+        ((Set(1L, 4L, 7L, 10L), Some(Seq("1")))))
+      // IS NOT NULL: the all-null segment holds no match
+      assert(selected("name IS NOT NULL") ===
+        ((Set(0L, 1L, 3L, 4L, 6L, 7L, 9L, 10L), Some(Seq("0", "1")))))
+      // a long IN list reaches the index as InSet
+      val names = (0 until 12).map(i => s"'bb-$i'").mkString(", ")
+      assert(selected(s"name IN ($names)") ===
+        ((Set(1L, 4L, 7L, 10L), Some(Seq("1")))))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("dynamic partition pruning reaches the manifest index through " +
       "a broadcast join: partitions the dim filter excludes are never " +
       "scanned") {

@@ -2,13 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan,
-  TakeOrderedAndProjectExec, GlobalLimitExec, LocalLimitExec}
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.window.{WindowExec,
-  WindowGroupLimitExec}
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-
 /** Repo-wide physical-plan lint over EVERY query in the public contract.
   *
   * The 100 TB rule being enforced: an unpartitioned window (`Window.orderBy`
@@ -20,52 +13,23 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   * operator. A raw corpus scan flowing into a global rank is exactly the
   * `hybrid_search` defect flagged in round 5 — this suite turns that
   * one-off judge grep into a permanent regression gate across all queries.
+  *
+  * The plan walkers live in [[ContractSweep]], which builds every contract
+  * query once per test JVM and records each lint's findings; the tests here
+  * assert over those records.
   */
 class PlanLintSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
-  /** True when `p` can stream an unbounded (corpus-proportional) row count
-    * up to its parent: a file scan with no bounding operator in between.
-    * Aggregates bound output to the group-key cardinality (all ours are
-    * vocab/day/k-sized); WindowGroupLimit bounds to k rows per partition;
-    * limits and top-k bound globally; a broadcast-side input was already
-    * admitted as executor-memory-sized by the planner.
-    */
-  private def unboundedToScan(p: SparkPlan): Boolean = p match {
-    case _: FileSourceScanExec => true
-    case _: BaseAggregateExec => false
-    case _: WindowGroupLimitExec => false
-    case _: GlobalLimitExec | _: LocalLimitExec => false
-    case _: TakeOrderedAndProjectExec => false
-    // the streamed side can still be unbounded; only the build side is
-    // known-small — keep traversing both, the rule above applies per path
-    case j: BroadcastHashJoinExec => j.children.exists(unboundedToScan)
-    case other => other.children.exists(unboundedToScan)
-  }
-
-  private def offendingWindows(p: SparkPlan): Seq[WindowExec] = p.collect {
-    case w: WindowExec if w.partitionSpec.isEmpty &&
-      unboundedToScan(w.child) => w
-  }
+  /** The lints of one ad-hoc frame, through the sweep's own per-query
+    * record function. */
+  private def lintsOf(df: org.apache.spark.sql.DataFrame) =
+    ContractSweep.record("self_check", df).lints.get
 
   test("no query ranks a corpus-sized input through an unpartitioned " +
       "window (WindowGroupLimit / aggregate / limit must bound it first)") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        // streaming queries execute eagerly and return a memory-sink
-        // result (LocalTableScan — nothing to lint, but planning them
-        // here would re-run 7 full streams); they carry their own
-        // plan/state assertions in HourlyStreamSpec.
-        if (name.startsWith("stream_")) None
-        else {
-          val plan = fn(spark, sf).queryExecution.sparkPlan
-          val bad = offendingWindows(plan)
-          if (bad.nonEmpty)
-            Some(name -> bad.map(_.windowExpression.mkString(",")))
-          else None
-        }
-    }
+    val offenders = ContractSweep.linted.filter(_._2.windows.nonEmpty)
     assert(offenders.isEmpty,
       "unpartitioned corpus-fed WindowExec in: " +
         offenders.map(_._1).mkString(", "))
@@ -101,26 +65,11 @@ class PlanLintSpec extends AnyFunSuite {
     "winnow_fingerprints" -> ("collect_set(minhash) per doc_id: bounded " +
       "by windows-per-document, a corpus-format constant"))
 
-  private def bufferingAggs(p: SparkPlan): Seq[String] = p.collect {
-    case a: BaseAggregateExec if unboundedToScan(a.child) =>
-      a.aggregateExpressions.map(_.aggregateFunction).collect {
-        case f: org.apache.spark.sql.catalyst.expressions.aggregate
-          .PercentileBase => f.prettyName
-        case f: org.apache.spark.sql.catalyst.expressions.aggregate
-          .Collect[_] => f.prettyName
-      }
-  }.flatten
-
   test("no query feeds a value-buffering aggregate (percentile / " +
       "collect_list / collect_set) with corpus-sized input, except the " +
       "documented domain/doc-bounded collects") {
-    val flagged = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        if (name.startsWith("stream_")) None
-        else {
-          val bad = bufferingAggs(fn(spark, sf).queryExecution.sparkPlan)
-          if (bad.nonEmpty) Some(name -> bad.distinct) else None
-        }
+    val flagged = ContractSweep.linted.collect {
+      case (name, l) if l.bufferingAggs.nonEmpty => name -> l.bufferingAggs
     }
     val percentileOffenders = flagged.filter(_._2.exists(
       f => f.contains("percentile") || f == "median"))
@@ -140,12 +89,12 @@ class PlanLintSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = Tables.load(spark, sf, "documents")
     val bad = docs.agg(percentile(col("n_chars"), lit(0.5)).as("p"))
-    assert(bufferingAggs(bad.queryExecution.sparkPlan).nonEmpty,
+    assert(lintsOf(bad).bufferingAggs.nonEmpty,
       "lint must flag percentile fed by a raw corpus scan")
     val bounded = docs.groupBy(col("source"))
       .agg(count(lit(1)).cast("double").as("n"))
       .agg(percentile(col("n"), lit(0.5)).as("p"))
-    assert(bufferingAggs(bounded.queryExecution.sparkPlan).isEmpty,
+    assert(lintsOf(bounded).bufferingAggs.isEmpty,
       "lint must accept percentile over an aggregate-bounded input")
   }
 
@@ -199,24 +148,10 @@ class PlanLintSpec extends AnyFunSuite {
     // estimate is a once-per-group scalar
     "HllSketchAgg", "HllUnionAgg", "HllSketchEstimate")
 
-  private def fallbackClasses(p: SparkPlan): Set[(String, Boolean)] =
-    p.collect {
-      case node => node.expressions.flatMap(_.collect {
-        case e: org.apache.spark.sql.catalyst.expressions.codegen
-          .CodegenFallback =>
-          (e.getClass.getSimpleName,
-            e.getClass.getName.startsWith("graft."))
-      })
-    }.flatten.toSet
-
   test("every CodegenFallback expression reaching a contract plan is a " +
       "documented per-row-payload trade — arithmetic hot paths stay " +
       "codegen'd (the cosine-argmax regression gate)") {
-    val flagged = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        if (name.startsWith("stream_")) Set.empty[(String, Boolean)]
-        else fallbackClasses(fn(spark, sf).queryExecution.sparkPlan)
-    }.toSet
+    val flagged = ContractSweep.linted.flatMap(_._2.fallbacks).toSet
     val graftFlagged = flagged.filter(_._2).map(_._1)
     val builtinFlagged = flagged.filterNot(_._2).map(_._1)
     // our classes: EXACT equality, so neither a regression (a custom
@@ -242,11 +177,11 @@ class PlanLintSpec extends AnyFunSuite {
     // rank filter, so InferWindowGroupLimit cannot prune anything
     val unbounded = Tables.load(spark, sf, "documents")
       .withColumn("r", row_number().over(Window.orderBy(col("doc_id"))))
-    assert(offendingWindows(unbounded.queryExecution.sparkPlan).nonEmpty,
+    assert(lintsOf(unbounded).windows.nonEmpty,
       "lint must flag a global rank fed directly by a corpus scan")
     // and the fixed shape (finite rank filter => WindowGroupLimit) passes
     val bounded = unbounded.filter(col("r") <= 1000)
-    assert(offendingWindows(bounded.queryExecution.sparkPlan).isEmpty,
+    assert(lintsOf(bounded).windows.isEmpty,
       "lint must accept a WindowGroupLimit-pruned top-k rank")
   }
 }
