@@ -69,9 +69,20 @@ private[graft] final class ManifestFileIndex(
     entries.groupBy(_.part).view.mapValues(_.sortBy(_.dir))
       .toSeq.sortBy(_._1)
 
-  /** Last `listFiles` partition selection — an observability seam for
-    * the pruning gates/specs (never read by the scan itself). */
-  @volatile private[graft] var lastSelectedParts: Option[Seq[String]] = None
+  /** Last `listFiles` entry selection — an observability seam for the
+    * pruning gates/specs (never read by the scan itself). */
+  @volatile private var lastSelected: Option[Seq[Entry]] = None
+
+  /** The leaf dirs of the last selection's entries, one per surviving
+    * segment: unlike [[lastSelectedParts]], this shows a stats skip
+    * among an append-only table's segments, which all sit under
+    * part "". */
+  private[graft] def lastSelectedDirs: Option[Seq[String]] =
+    lastSelected.map(_.map(_.dir))
+
+  /** The partitions of the last selection, in listing order. */
+  private[graft] def lastSelectedParts: Option[Seq[String]] =
+    lastSelected.map(_.map(_.part).distinct)
 
   override val partitionSchema: StructType = StructType(key.toSeq)
 
@@ -130,7 +141,7 @@ private[graft] final class ManifestFileIndex(
           sourceFilters.forall(f => ManifestStore.mayMatch(e.stats, f)))
       if (kept.isEmpty) None else Some((p, kept))
     }
-    lastSelectedParts = Some(selected.map(_._1))
+    lastSelected = Some(selected.flatMap(_._2))
     selected.map { case (p, es) =>
       PartitionDirectory(valuesOf(p), es.flatMap(filesOf).toArray)
     }

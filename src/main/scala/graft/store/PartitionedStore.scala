@@ -45,26 +45,19 @@ object PartitionedStore {
       keyCols: Seq[String]): Unit =
     dynamicOverwrite(df, path, dateCol, keyCols)
 
+  /** Dynamic mode is set on this writer only: the session's
+    * `spark.sql.sources.partitionOverwriteMode` is never touched, so a
+    * concurrent write elsewhere in the session keeps its own mode. */
   private def dynamicOverwrite(df: DataFrame, path: String, dateCol: String,
-      keyCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      df.withColumn("date", to_date(col(dateCol)))
-        .sortWithinPartitions(col("date"), col(dateCol))
-        .write
-        .mode("overwrite")
-        .partitionBy("date" +: keyCols: _*)
-        .option("compression", "zstd") // weather_hourly_pipeline.py:73
-        .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+      keyCols: Seq[String]): Unit =
+    df.withColumn("date", to_date(col(dateCol)))
+      .sortWithinPartitions(col("date"), col(dateCol))
+      .write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("date" +: keyCols: _*)
+      .option("compression", "zstd") // weather_hourly_pipeline.py:73
+      .parquet(path)
 
   /** Read the warehouse back; hive partition discovery restores `date` as a
     * column and prunes on `date` predicates. */
@@ -198,18 +191,9 @@ object PartitionedStore {
       val survivors = before.filter(col("source") === target)
         .join(broadcast(tomb), Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
-      val prev =
-        s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        survivors
-          .write.mode("overwrite").partitionBy("source").parquet(store)
-      } finally prev match {
-        case Some(v) =>
-          s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      survivors.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("source").parquet(store)
       val after = s.read.parquet(store)
       val inv1 = fileInventory(s, store)
       val untouched = (inv0.keySet - s"source=$target")

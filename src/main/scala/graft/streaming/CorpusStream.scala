@@ -84,19 +84,10 @@ object CorpusStream {
     * keying the overwrite on that id is what upgrades the sink to
     * effectively-exactly-once. */
   def upsertSurvivors(survivors: DataFrame, warehouse: String,
-      batchId: Long): Unit = {
-    val spark = survivors.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(warehouse)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      batchId: Long): Unit =
+    survivors.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(warehouse)
 
   /** Run-once harness for the streaming near-dup filter: same
     * batch/index split and planted index copies as [[runIndexDedupOnce]],

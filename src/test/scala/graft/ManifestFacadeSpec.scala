@@ -169,6 +169,49 @@ class ManifestFacadeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("a facade WHERE on a stats column skips append-only segments: " +
+      "the selected dirs show which segments survived") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val root = tempDir("mff-stats-append")
+    // three segments, all under part "": ids 0-9, 10-19, 20-29
+    ManifestStore.createTables(spark, root, Seq((
+      ManifestStore.TableDef("t", "", statsCols = Seq("id")),
+      (0L until 10L).toDF("id"))))
+    for (lo <- Seq(10L, 20L))
+      ManifestStore.commitTables(spark, root)(Seq(
+        ManifestStore.Append("t", (lo until lo + 10L).toDF("id"))))
+    val segs = ManifestStore.tableEntries(spark, root, "t").map(_.dir)
+    assert(segs.size === 3)
+    facade(root, "table" -> "t").createOrReplaceTempView("mff_append_v")
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      def selected(where: String) = {
+        val q = spark.sql(s"SELECT id FROM mff_append_v WHERE $where")
+        val ids = q.collect().map(_.getLong(0)).toSet
+        val index = q.queryExecution.analyzed.collectFirst {
+          case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+            h.location.asInstanceOf[graft.sources.ManifestFileIndex]
+        }.get
+        (ids, index.lastSelectedParts, index.lastSelectedDirs)
+      }
+      // the one segment whose id range holds 12..14 survives; the part
+      // list alone cannot tell it from a read of all three
+      val holding12 = segs.filter(d =>
+        spark.read.parquet(s"$root/$d").filter(col("id") === 12L)
+          .count() == 1L)
+      assert(holding12.size === 1)
+      assert(selected("id >= 12 AND id < 15") ===
+        ((Set(12L, 13L, 14L), Some(Seq("")), Some(holding12))))
+      val (all, allParts, allDirs) = selected("id >= 0")
+      assert(all === (0L until 30L).toSet)
+      assert(allParts === Some(Seq("")))
+      assert(allDirs.map(_.sorted) === Some(segs.sorted))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("dynamic partition pruning reaches the manifest index through " +
       "a broadcast join: partitions the dim filter excludes are never " +
       "scanned") {

@@ -45,6 +45,33 @@ class PartitionedStoreSpec extends AnyFunSuite {
     assert(back.filter($"date" === "2025-08-20").count() === 1)
   }
 
+  test("upsert overwrites only its own days under a static session " +
+      "mode, and leaves the session mode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val path = Files.createTempDirectory("graft_store_").toString
+      PartitionedStore.upsertDaily(mkDf(Seq(
+        ("2025-08-20 01:00:00", 1.0), ("2025-08-21 01:00:00", 3.0))), path)
+      // every job sees the session's own mode: dynamic is set on the
+      // writer, never in the session a concurrent write would share
+      val (_, jobs) = JobWatch.during(spark, "store-static-mode") {
+        PartitionedStore.upsertDaily(mkDf(Seq(
+          ("2025-08-21 05:00:00", 99.0))), path)
+      }
+      assert(jobs.nonEmpty)
+      assert(jobs.map(_.getProperty(key)).toSet === Set("static"))
+      val back = PartitionedStore.read(spark, path)
+      assert(back.orderBy("time").select("v").collect().map(_.getDouble(0))
+        .toSeq === Seq(1.0, 99.0))
+      assert(spark.conf.get(key) === "static")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("date predicate prunes partitions at the scan") {
     val path = Files.createTempDirectory("graft_store_").toString
     PartitionedStore.upsertDaily(mkDf(Seq(
