@@ -766,8 +766,11 @@ object Curation {
     // one lineage, one pass. The previous crossJoin(lo)/crossJoin(hi)
     // form re-executed the B×N exploded aggregation three times (rep,
     // ranked→lo, ranked→hi); a whole-frame window aggregate over the
-    // already-aggregated 32 rows costs nothing and keeps the expensive
-    // corpus scan single-shot.
+    // already-aggregated rows costs nothing and keeps the expensive
+    // corpus scan single-shot. The windows have no partition key on
+    // purpose: their input is `rep`, one row per replica, so at most
+    // `b` rows reach the single partition (WindowExec's "No Partition
+    // Defined" warning is expected here) whatever the corpus size.
     val wr = Window.orderBy(col("mean_chars"), col("replica"))
     val wAll = wr.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
@@ -121,82 +120,70 @@ object CorpusStream {
     * written through [[upsertSurvivors]] — batchId-keyed idempotent
     * overwrite, so checkpoint-replayed batches cannot double-append. */
   def runNearDupOnce(s: SparkSession, srcDir: String,
-      threshold: Double = 0.99, maxBucket: Int = 1000): DataFrame = {
-    import graft.functions.TextFunctions.tokens
-    import org.apache.spark.sql.expressions.Window
-    val docs = graft.Tables.load(s, srcDir, "documents")
-    val isBatch = col("doc_id") % 10 === 3
-    val index = docs.filter(!isBatch).select(col("doc_id"), col("text"))
-    val batchDir = HourlyStream.scratchDir("graft_neardup_drop_")
-    // The static sides PERSIST across micro-batches — the harness analog
-    // of the deployment shape the scaladoc promises (index bands and
-    // shingles materialized in the warehouse, refreshed on compaction).
-    // Without this, every micro-batch re-plans the FULL index banding:
-    // with maxFilesPerTrigger=1 a multi-file drop pays
-    // (#batches × index scan) — measured 45.9 s on the 10× rehearsal
-    // slice (~32 drop files), vs linear once cached.
-    val iBands = Dedup.bandIndex(index, 64, 16)
-      .withColumn("bsz", count(lit(1))
-        .over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("bsz") <= maxBucket)
-      .select(col("band"), col("bucket"), col("doc_id").as("i_id"))
-      .persist()
-    val shI = index.select(col("doc_id").as("i_id"),
-      graft.functions.SketchExpressions
-        .wordShingles(tokens(col("text"))).as("sh_i"))
-      .persist()
-    // stage the drop AND pre-fill the static-side caches concurrently
-    // (guide §2.6): the stream cannot start before the drop lands, so
-    // filling the banding/shingle caches on the side thread moves that
-    // work off the first micro-batch's critical path for free
-    graft.operators.Par.two(
-      docs.filter(isBatch).select(col("doc_id"), col("text"))
-        .unionByName(index
-          .filter(col("doc_id") % 100 === 0 && col("doc_id") < 500)
-          .select((col("doc_id") + Dedup.PlantOffset).as("doc_id"),
-            col("text")))
-        // a DETERMINISTIC 2-file drop at every corpus scale: with
-        // maxFilesPerTrigger=1 the file count IS the micro-batch count,
-        // and an SF-dependent drop layout would change how many
-        // micro-batches the harness runs (the 10x rehearsal slice read
-        // back as 32 files -> 32 batches x fixed per-batch cost,
-        // drowning the work being measured). Two files keep the
-        // multi-batch lane exercised; batch sizing at deployment is a
-        // source option, not an operator property.
-        .coalesce(2)
-        .write.mode("overwrite").parquet(batchDir),
-      { iBands.count(); shI.count() })
-    val whRoot = HourlyStream.scratchDir("graft_neardup_wh_")
-    val warehouse = whRoot + "/keep"
-    val ckpt = HourlyStream.scratchDir("graft_ckpt_")
-    val q = readDocuments(s, batchDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        upsertSurvivors(nearDupSurvivors(b, iBands, shI, threshold),
-          warehouse, batchId)
+      threshold: Double = 0.99, maxBucket: Int = 1000): DataFrame =
+    RunOnce(s, "graft_neardup_") { run =>
+      import graft.functions.TextFunctions.tokens
+      import org.apache.spark.sql.expressions.Window
+      val docs = graft.Tables.load(s, srcDir, "documents")
+      val isBatch = col("doc_id") % 10 === 3
+      val index = docs.filter(!isBatch).select(col("doc_id"), col("text"))
+      // The static sides PERSIST across micro-batches — the harness analog
+      // of the deployment shape the scaladoc promises (index bands and
+      // shingles materialized in the warehouse, refreshed on compaction).
+      // Without this, every micro-batch re-plans the FULL index banding:
+      // with maxFilesPerTrigger=1 a multi-file drop pays
+      // (#batches × index scan) — measured 45.9 s on the 10× rehearsal
+      // slice (~32 drop files), vs linear once cached.
+      val iBands = Dedup.bandIndex(index, 64, 16)
+        .withColumn("bsz", count(lit(1))
+          .over(Window.partitionBy(col("band"), col("bucket"))))
+        .filter(col("bsz") <= maxBucket)
+        .select(col("band"), col("bucket"), col("doc_id").as("i_id"))
+        .persist()
+      val shI = index.select(col("doc_id").as("i_id"),
+        graft.functions.SketchExpressions
+          .wordShingles(tokens(col("text"))).as("sh_i"))
+        .persist()
+      try {
+        // stage the drop AND pre-fill the static-side caches concurrently
+        // (guide §2.6): the stream cannot start before the drop lands, so
+        // filling the banding/shingle caches on the side thread moves that
+        // work off the first micro-batch's critical path for free
+        graft.operators.Par.two(
+          docs.filter(isBatch).select(col("doc_id"), col("text"))
+            .unionByName(index
+              .filter(col("doc_id") % 100 === 0 && col("doc_id") < 500)
+              .select((col("doc_id") + Dedup.PlantOffset).as("doc_id"),
+                col("text")))
+            // a DETERMINISTIC 2-file drop at every corpus scale: with
+            // maxFilesPerTrigger=1 the file count IS the micro-batch count,
+            // and an SF-dependent drop layout would change how many
+            // micro-batches the harness runs (the 10x rehearsal slice read
+            // back as 32 files -> 32 batches x fixed per-batch cost,
+            // drowning the work being measured). Two files keep the
+            // multi-batch lane exercised; batch sizing at deployment is a
+            // source option, not an operator property.
+            .coalesce(2)
+            .write.mode("overwrite").parquet(run.drop),
+          { iBands.count(); shI.count() })
+        run.foreachBatch(readDocuments(s, run.drop)) { (b, batchId) =>
+          upsertSurvivors(nearDupSurvivors(b, iBands, shI, threshold),
+            run.wh, batchId)
+        }
+      } finally {
+        iBands.unpersist(blocking = false)
+        shI.unpersist(blocking = false)
+        // the LSH lane leaves corpus-scale broadcast/shuffle state that
+        // only the ContextCleaner frees on GC; without this, back-to-back
+        // harness runs in one JVM degrade monotonically (measured
+        // 6.8 -> 11.2 s across bench reps; the repo-wide gc-between-
+        // queries discipline covers queries, not reps)
+        System.gc()
       }
-      .start()
-    try q.awaitTermination() finally {
-      q.stop()
-      iBands.unpersist(blocking = false)
-      shI.unpersist(blocking = false)
-      // the LSH lane leaves corpus-scale broadcast/shuffle state that
-      // only the ContextCleaner frees on GC; without this, back-to-back
-      // harness runs in one JVM degrade monotonically (measured
-      // 6.8 -> 11.2 s across bench reps; the repo-wide gc-between-
-      // queries discipline covers queries, not reps)
-      System.gc()
+      // the batch keep set is corpus-fraction-sized: RunOnce materializes
+      // it distributed (localCheckpoint), never as a driver collect
+      s.read.parquet(run.wh).select("doc_id").orderBy("doc_id")
     }
-    // materialize (distributed, lineage-severing — the batch keep set
-    // is corpus-fraction-sized, so never a driver collect), then reap
-    // the scratch dirs immediately instead of waiting for JVM exit
-    val out = s.read.parquet(warehouse).select("doc_id").orderBy("doc_id")
-      .localCheckpoint(true)
-    Seq(batchDir, whRoot, ckpt).foreach(HourlyStream.reapScratch)
-    out
-  }
 
   /** Streaming drift monitor — [[graft.operators.TextAnalysis.qualityPsi]]
     * run as an ingestion-time check: the arriving half of the corpus
@@ -215,43 +202,29 @@ object CorpusStream {
     * parity gate for the drift monitor. At 100 TB the warehouse keeps
     * one ≤68-row partial per ingested batch; the report is a bounded
     * rollup at read time. */
-  def runDriftOnce(s: SparkSession, srcDir: String): DataFrame = {
-    import graft.operators.TextAnalysis
-    val docs = graft.Tables.load(s, srcDir, "documents")
-    val dropDir = HourlyStream.scratchDir("graft_drift_drop_")
-    docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-      .write.mode("overwrite").parquet(dropDir)
-    val whRoot = HourlyStream.scratchDir("graft_drift_wh_")
-    val warehouse = whRoot + "/bands"
-    val ckpt = HourlyStream.scratchDir("graft_ckpt_")
-    val q = readDocuments(s, dropDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+  def runDriftOnce(s: SparkSession, srcDir: String): DataFrame =
+    RunOnce(s, "graft_drift_") { run =>
+      import graft.operators.TextAnalysis
+      val docs = graft.Tables.load(s, srcDir, "documents")
+      docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
+        .write.mode("overwrite").parquet(run.drop)
+      run.foreachBatch(readDocuments(s, run.drop)) { (b, batchId) =>
         upsertSurvivors(
           b.select(TextAnalysis.qualityBand.as("band"))
             .groupBy(col("band")).agg(count(lit(1)).as("n")),
-          warehouse, batchId)
+          run.wh, batchId)
       }
-      .start()
-    try q.awaitTermination() finally q.stop()
-    val arriving = s.read.parquet(warehouse)
-      .groupBy(col("band")).agg(sum(col("n")).as("n_new"))
-    val ref = docs.filter(col("doc_id") % 2 === 0)
-      .select(TextAnalysis.qualityBand.as("band"))
-      .groupBy(col("band")).agg(count(lit(1)).as("n_ref"))
-    val perBand = ref.join(arriving, Seq("band"), "full_outer")
-      .select(col("band"),
-        coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"))
-    // ≤68-row report: materialize it, then reap the three scratch dirs
-    // (file drop, band warehouse, checkpoint) instead of leaving them
-    // until JVM exit — bench reps in one JVM would otherwise accumulate
-    val out = TextAnalysis.psiFromBands(perBand).localCheckpoint(true)
-    Seq(dropDir, whRoot, ckpt).foreach(HourlyStream.reapScratch)
-    out
-  }
+      val arriving = s.read.parquet(run.wh)
+        .groupBy(col("band")).agg(sum(col("n")).as("n_new"))
+      val ref = docs.filter(col("doc_id") % 2 === 0)
+        .select(TextAnalysis.qualityBand.as("band"))
+        .groupBy(col("band")).agg(count(lit(1)).as("n_ref"))
+      val perBand = ref.join(arriving, Seq("band"), "full_outer")
+        .select(col("band"),
+          coalesce(col("n_ref"), lit(0L)).as("n_ref"),
+          coalesce(col("n_new"), lit(0L)).as("n_new"))
+      TextAnalysis.psiFromBands(perBand)
+    }
 
   /** Synchronous run-once harness over the bundled corpus, mirroring
     * [[graft.operators.Dedup.incrementalDedup]]'s split exactly: the
@@ -260,50 +233,34 @@ object CorpusStream {
     * and anti-joined against the index digest relation. Returns the
     * surviving doc_ids — by construction the exact-lane keep set of the
     * batch operator, which is what the oracle states closed-form. */
-  def runIndexDedupOnce(s: SparkSession, srcDir: String): DataFrame = {
-    val docs = graft.Tables.load(s, srcDir, "documents")
-    val isBatch = col("doc_id") % 10 === 3
-    val index = docs.filter(!isBatch).select(col("doc_id"), col("text"))
-    val batchDir = HourlyStream.scratchDir("graft_batch_drop_")
-    docs.filter(isBatch).select(col("doc_id"), col("text"))
-      .unionByName(index
-        .filter(col("doc_id") % 100 === 0 && col("doc_id") < 500)
-        .select((col("doc_id") + Dedup.PlantOffset).as("doc_id"),
-          col("text")))
-      // a DETERMINISTIC 2-file drop at every corpus scale: with
-      // maxFilesPerTrigger=1 the file count IS the micro-batch count,
-      // and an SF-dependent drop layout would change how many
-      // micro-batches the harness runs (the 10x rehearsal slice read
-      // back as 32 files -> 32 batches x fixed per-batch cost, drowning
-      // the work being measured). Two files keep the multi-batch lane
-      // exercised; batch sizing at deployment is a source option, not
-      // an operator property.
-      .coalesce(2)
-      .write.mode("overwrite").parquet(batchDir)
-    // persisted across micro-batches (the runNearDupOnce discipline:
-    // the static digest index would otherwise re-aggregate per batch)
-    val indexDigests = index.select(md5(col("text")).as("h")).distinct()
-      .persist()
-    val name = "graft_stream_index_dedup_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val ckpt = HourlyStream.scratchDir("graft_ckpt_")
-    val q = indexFiltered(readDocuments(s, batchDir), indexDigests)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally {
-      q.stop()
-      indexDigests.unpersist(blocking = false)
+  def runIndexDedupOnce(s: SparkSession, srcDir: String): DataFrame =
+    RunOnce(s, "graft_index_dedup_") { run =>
+      val docs = graft.Tables.load(s, srcDir, "documents")
+      val isBatch = col("doc_id") % 10 === 3
+      val index = docs.filter(!isBatch).select(col("doc_id"), col("text"))
+      docs.filter(isBatch).select(col("doc_id"), col("text"))
+        .unionByName(index
+          .filter(col("doc_id") % 100 === 0 && col("doc_id") < 500)
+          .select((col("doc_id") + Dedup.PlantOffset).as("doc_id"),
+            col("text")))
+        // a DETERMINISTIC 2-file drop at every corpus scale: with
+        // maxFilesPerTrigger=1 the file count IS the micro-batch count,
+        // and an SF-dependent drop layout would change how many
+        // micro-batches the harness runs (the 10x rehearsal slice read
+        // back as 32 files -> 32 batches x fixed per-batch cost, drowning
+        // the work being measured). Two files keep the multi-batch lane
+        // exercised; batch sizing at deployment is a source option, not
+        // an operator property.
+        .coalesce(2)
+        .write.mode("overwrite").parquet(run.drop)
+      // persisted across micro-batches (the runNearDupOnce discipline:
+      // the static digest index would otherwise re-aggregate per batch)
+      val indexDigests = index.select(md5(col("text")).as("h")).distinct()
+        .persist()
+      try run.memory(indexFiltered(readDocuments(s, run.drop), indexDigests),
+        "append").orderBy("doc_id")
+      finally indexDigests.unpersist(blocking = false)
     }
-    // the memory sink holds the result — the drop dir and checkpoint
-    // have no readers left; reap them now rather than at JVM exit
-    Seq(batchDir, ckpt).foreach(HourlyStream.reapScratch)
-    s.table(name).orderBy("doc_id")
-  }
 
   /** `stream_mf_feed` — a TRANSACTIONAL incremental mart consuming the
     * manifest store's change feed
@@ -330,13 +287,12 @@ object CorpusStream {
     * bit-for-bit. Scale shape: each application reads the feed's
     * touched partitions and replaces only the touched tally
     * partitions; nothing scales with table or history size. */
-  def runFeedMartOnce(s: SparkSession, srcDir: String): DataFrame = {
-    import graft.store.ManifestStore
-    import graft.store.ManifestStore.{Replace, TableDef}
-    val scratch = HourlyStream.scratchDir("graft_mf_feed_")
-    try {
-      val src = s"$scratch/src"
-      val mart = s"$scratch/mart"
+  def runFeedMartOnce(s: SparkSession, srcDir: String): DataFrame =
+    RunOnce(s, "graft_mf_feed_") { run =>
+      import graft.store.ManifestStore
+      import graft.store.ManifestStore.{Replace, TableDef}
+      val src = s"${run.root}/src"
+      val mart = s"${run.root}/mart"
       val li = graft.Tables.load(s, srcDir, "lineitem")
         .select(col("l_returnflag"), col("l_quantity"))
       def dec(c: org.apache.spark.sql.Column) =
@@ -419,16 +375,13 @@ object CorpusStream {
         ManifestStore.currentVersion(s, mart).contains(before)
       val exactlyOnce =
         ManifestStore.versions(s, mart) == (1L to before).toSeq
-      val out = ManifestStore.readTable(s, mart, "tally")
+      ManifestStore.readTable(s, mart, "tally")
         .select(col("l_returnflag"),
           col("sum_q").cast("double").as("sum_qty"), col("n"),
           lit(redeliveryNoop).as("redelivery_noop"),
           lit(exactlyOnce).as("exactly_once"))
         .orderBy("l_returnflag")
-        .localCheckpoint(true)
-      out
-    } finally HourlyStream.reapScratch(scratch)
-  }
+    }
 
   /** `stream_mf_merge` — TRANSACTIONAL streaming MERGE apply, the
     * UPSTREAM half of the CDC story ([[runFeedMartOnce]] being the
@@ -450,14 +403,11 @@ object CorpusStream {
     * the batch's keys name (the Merge cost model); the marker guard is
     * one metadata-sized read; nothing scales with table size or
     * history length. */
-  def runMergeApplyOnce(s: SparkSession, srcDir: String): DataFrame = {
-    import graft.store.ManifestStore
-    import graft.store.ManifestStore.{Merge, TableDef, Upsert}
-    val scratch = HourlyStream.scratchDir("graft_mf_merge_")
-    try {
-      val drop = s"$scratch/drop"
-      val store = s"$scratch/store"
-      val ckpt = s"$scratch/ckpt"
+  def runMergeApplyOnce(s: SparkSession, srcDir: String): DataFrame =
+    RunOnce(s, "graft_mf_merge_") { run =>
+      import graft.store.ManifestStore
+      import graft.store.ManifestStore.{Merge, TableDef, Upsert}
+      val store = s"${run.root}/store"
       val cust = graft.Tables.load(s, srcDir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
       import s.implicits._
@@ -483,7 +433,7 @@ object CorpusStream {
           (TableDef("applied", "bid"),
             Seq(("seed", 1L)).toDF("bid", "one")))),
         Seq(b1, b2, b3).foreach(b =>
-          b.coalesce(1).write.mode("append").parquet(drop)))
+          b.coalesce(1).write.mode("append").parquet(run.drop)))
       def applyBatch(b: DataFrame): Unit = {
         val bids = b.select("batch_id").distinct().collect()
           .map(_.getLong(0)).sorted
@@ -509,14 +459,9 @@ object CorpusStream {
           cust.schema("c_acctbal").dataType),
         StructField("_op", StringType),
         StructField("batch_id", LongType)))
-      val q = s.readStream.schema(cdcSchema)
-        .option("maxFilesPerTrigger", 1).parquet(drop)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch((b: DataFrame, _: Long) => applyBatch(b))
-        .start()
-      try q.awaitTermination() finally q.stop()
+      val cdc = s.readStream.schema(cdcSchema)
+        .option("maxFilesPerTrigger", 1).parquet(run.drop)
+      run.foreachBatch(cdc)((b, _) => applyBatch(b))
       val before = ManifestStore.currentVersion(s, store).get
       applyBatch(b3.localCheckpoint(true)) // crash-replay re-delivery
       val redeliveryNoop =
@@ -525,19 +470,12 @@ object CorpusStream {
       val exactlyOnce =
         ManifestStore.versions(s, store) == (1L to 4L).toSeq
       ManifestStore.readTable(s, store, "t")
-        .createOrReplaceTempView("mf_stream_merge_cust")
-      val rows = s.sql(
-        """SELECT c_mktsegment, count(*) AS n,
-          | CAST(sum(CAST(c_acctbal AS DECIMAL(28,6))) AS DOUBLE)
-          |   AS sum_bal
-          |FROM mf_stream_merge_cust GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin)
-        .collect().map(r => (r.getString(0), r.getLong(1),
-          r.getDouble(2), redeliveryNoop, exactlyOnce))
-      rows.toSeq
-        .toDF("c_mktsegment", "n", "sum_bal", "redelivery_noop",
-          "exactly_once")
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n"),
+          graft.operators.Relational.dsum(col("c_acctbal")).as("sum_bal"))
+        .select(col("c_mktsegment"), col("n"), col("sum_bal"),
+          lit(redeliveryNoop).as("redelivery_noop"),
+          lit(exactlyOnce).as("exactly_once"))
         .orderBy("c_mktsegment")
-    } finally HourlyStream.reapScratch(scratch)
-  }
+    }
 }

@@ -20,6 +20,20 @@ import graft.store.PartitionedStore
   * keeps one row per (window, key) in the state store, and the watermark
   * bounds state size — the properties the reference approximated with
   * whole-day delete+insert.
+  *
+  * The synchronous `run*Once` harnesses run through [[RunOnce]] as
+  * stateful runs: a constant 4 state partitions, the trailing no-data
+  * micro-batch kept on, and every checkpoint, warehouse and memory-sink
+  * view reaped before the harness returns. The state-store provider is
+  * Spark's own `spark.sql.streaming.stateStore.providerClass`, which the
+  * harnesses leave as the session has it. The default HDFS-backed
+  * provider keeps all state on the executor heap: fine for
+  * group-bounded state (days × event types), a memory wall for
+  * event-cardinality state (streaming dedup at firehose volume). RocksDB
+  * (`org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`)
+  * keeps working state off-heap and on disk with identical semantics
+  * (`StateStoreProviderSpec`), and each checkpoint pins its provider,
+  * so a restart never switches an existing stream.
   */
 object HourlyStream {
 
@@ -30,25 +44,18 @@ object HourlyStream {
     * prefers a tmpfs volume (`/dev/shm`) when one is writable, else
     * `java.io.tmpdir`; `SPARK_GRAFT_STREAM_SCRATCH` overrides both.
     * This is harness plumbing only: a production stream passes its own
-    * durable `checkpointDir`/`warehouseDir` (every runner accepts them)
-    * because a checkpoint that evaporates on reboot defeats exactly-once
-    * recovery — the default here is for the test/bench path, where the
-    * checkpoint dies with the run by design. */
-  // every scratch dir is deleted at JVM exit: /dev/shm is RAM-backed, so
-  // un-reaped checkpoints/warehouses from repeated bench/test runs would
-  // otherwise accumulate memory-resident files until reboot
+    * durable `checkpointDir`/`warehouseDir` (as `runDailyAggOnce`
+    * accepts them) because a checkpoint that evaporates on reboot
+    * defeats exactly-once recovery — the default here is for the
+    * test/bench path, where the checkpoint dies with the run by design. */
+  // a scratch dir still unreaped at JVM exit (the JVM stopped mid-run)
+  // is deleted then: /dev/shm is RAM-backed, so it would otherwise hold
+  // memory-resident files until reboot
   private val scratchDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   private lazy val scratchCleanupHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.forEach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(q => java.nio.file.Files.deleteIfExists(q))
-        } catch { case _: Throwable => () }
-      }))
+      scratchDirs.forEach(p => reapScratch(p.toString))))
 
   /** The directory every [[scratchDir]] is created under:
     * `SPARK_GRAFT_STREAM_SCRATCH`, else `/dev/shm`, else
@@ -73,11 +80,9 @@ object HourlyStream {
   }
 
   /** Eagerly delete a [[scratchDir]] (and drop it from the exit-hook
-    * queue). Run-once harnesses reap their drop/checkpoint/warehouse
-    * dirs as soon as the result is MATERIALIZED (collected or
-    * localCheckpoint'ed — a lazy DataFrame still reading the warehouse
-    * must not outlive the files), so repeated bench reps in one JVM
-    * don't accumulate RAM-backed /dev/shm files until exit. */
+    * queue). [[RunOnce]] reaps each harness call's root as soon as the
+    * result is materialized, so repeated bench reps in one JVM don't
+    * accumulate RAM-backed /dev/shm files until exit. */
   private[graft] def reapScratch(dir: String): Unit = {
     val p = java.nio.file.Paths.get(dir)
     scratchDirs.remove(p)
@@ -201,21 +206,10 @@ object HourlyStream {
     * discipline); this harness keeps the sink in-memory and the
     * reduction explicit. */
   def runHoppingOnce(s: SparkSession, srcDir: String,
-      statePartitions: Int = 4,
       maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    withStatePartitions(s, statePartitions) {
-      val name = "graft_stream_hopping_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = hoppingAgg(readEvents(s, srcDir, maxFilesPerTrigger))
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", scratchDir("graft_ckpt_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      s.table(name)
+    RunOnce(s, "graft_stream_hopping_") { run =>
+      run.memory(hoppingAgg(readEvents(s, srcDir, maxFilesPerTrigger)),
+          "update", stateful = true)
         .groupBy(col("win_start"), col("event_type"))
         .agg(max(col("n_events")).as("n_events"))
         .orderBy("win_start", "event_type")
@@ -230,30 +224,19 @@ object HourlyStream {
     * actually evicts closed windows from the state store. Complete mode —
     * the round-1 shape — never evicts state and rewrites the full history
     * every batch: O(days) state and O(history) work per batch on a
-    * long-running stream. */
+    * long-running stream.
+    *
+    * `checkpointDir`/`warehouseDir` name durable directories for a
+    * restartable stream; they are never reaped. Left out, both live
+    * under the call's scratch root and vanish with it. */
   def runDailyAggOnce(s: SparkSession, srcDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       checkpointDir: Option[String] = None,
-      warehouseDir: Option[String] = None,
-      statePartitions: Int = 4): DataFrame = {
-    val warehouse = warehouseDir.getOrElse(scratchDir("graft_stream_wh_") + "/daily")
-    // State partition count is pinned by the FIRST checkpoint, so it is a
-    // deployment decision, not a tuning afterthought. The daily aggregate
-    // keeps one state row per (day, event_type) — map-side partial
-    // aggregation collapses each micro-batch to at most that many rows
-    // before the shuffle, so reduce-side parallelism needs to cover the
-    // GROUP count, not the input size: 8 covers years of days x types;
-    // per-partition state-store commit overhead (the dominant fixed cost
-    // of a micro-batch) scales down with it.
-    withStatePartitions(s, statePartitions) {
-    val q =
-      dailyAgg(readEvents(s, srcDir, maxFilesPerTrigger))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        scratchDir("graft_ckpt_")))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      warehouseDir: Option[String] = None): DataFrame =
+    RunOnce(s, "graft_stream_daily_") { run =>
+      val warehouse = warehouseDir.getOrElse(run.wh)
+      run.foreachBatch(dailyAgg(readEvents(s, srcDir, maxFilesPerTrigger)),
+          "update", stateful = true, checkpointDir) { (batch, _) =>
         // update-mode batches hold one row per changed (day, type) — tiny
         // at ANY corpus size — so collapse to one writer task per day
         // instead of letting all shuffle partitions emit splinter files.
@@ -264,20 +247,13 @@ object HourlyStream {
           graft.plans.Writers.byKeys(batch, col("day")), warehouse, "day",
             Seq("event_type"))
       }
-      .start()
-    try {
-      q.awaitTermination()
-    } finally {
-      q.stop()
+      // event_type is a hive partition dir now; pin it back to string in
+      // case partition-column type inference sees numeric-looking values
+      s.read.parquet(warehouse)
+        .select(col("day"), col("event_type").cast("string").as("event_type"),
+          col("n_events"), col("sum_value"))
+        .orderBy("day", "event_type")
     }
-    // event_type is a hive partition dir now; pin it back to string in
-    // case partition-column type inference sees numeric-looking values
-    s.read.parquet(warehouse)
-      .select(col("day"), col("event_type").cast("string").as("event_type"),
-        col("n_events"), col("sum_value"))
-      .orderBy("day", "event_type")
-    }
-  }
 
   /** Streaming dedup with a watermark: re-delivered event_ids inside the
     * 1-day lateness bound are dropped, and state for older keys is
@@ -288,91 +264,18 @@ object HourlyStream {
       .withWatermark("ts", "1 day")
       .dropDuplicates("event_id", "ts")
 
-  /** Run `body` with the shuffle/state partition count pinned to `n`,
-    * restoring the session conf only after the stream finished (the
-    * micro-batch thread reads the conf asynchronously). State partition
-    * count is a per-query DEPLOYMENT decision (the first checkpoint pins
-    * it): size it to expected STATE VOLUME — a handful for group-bounded
-    * state like the daily aggregate or per-user sessions at test scale,
-    * hundreds for event-cardinality state (dedup) on a real firehose.
-    *
-    * `noDataBatches = false` skips the trailing empty micro-batch. It is
-    * measurably cheaper (~0.5-2 s per AvailableNow run at sf0.1) but NOT
-    * semantics-neutral: that batch is also what persists the ADVANCED
-    * watermark to the offset log, so without it a restarted stream
-    * resumes at the pre-batch watermark and stops dropping late data it
-    * should drop (measured: the cross-run late-event test fails). Every
-    * built-in harness therefore keeps it on; the knob exists for
-    * single-run, no-restart jobs where the trade is safe. */
-  /** Opt-in flag selecting the RocksDB state-store provider for every
-    * stateful harness in this object (the [[graft.plans.ApproxRewrite]]
-    * flag precedent: library behavior switches ride `spark.graft.*`
-    * session confs, defaults unchanged). The default HDFS-backed
-    * provider keeps ALL state on the executor heap — fine for
-    * group-bounded state (days × event types), a memory wall for
-    * event-cardinality state (streaming dedup at firehose volume, where
-    * the watermark window can hold billions of keys). RocksDB keeps
-    * working state off-heap/on-disk with changelog checkpointing, which
-    * is the 100 TB-scale answer. Semantics are identical — spec-pinned
-    * by running the dedup/sessions/hopping suites under both providers,
-    * checkpoint restart included; Spark pins the provider class in each
-    * checkpoint's offset-log metadata, so a restart can never silently
-    * switch an existing stream. */
-  val RocksDbFlagKey = "spark.graft.stateStore.rocksdb"
-  val RocksDbProviderClass =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withStatePartitions[T](s: SparkSession, n: Int,
-      noDataBatches: Boolean = true)(body: => T): T = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = s.conf.getOption(ndKey)
-    val rocks = s.conf.getOption(RocksDbFlagKey).contains("true")
-    val prevProv = s.conf.getOption(ProviderKey)
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    s.conf.set(ndKey, noDataBatches.toString)
-    if (rocks) s.conf.set(ProviderKey, RocksDbProviderClass)
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevNd match {
-        case Some(v) => s.conf.set(ndKey, v)
-        case None => s.conf.unset(ndKey)
-      }
-      if (rocks) prevProv match {
-        case Some(v) => s.conf.set(ProviderKey, v)
-        case None => s.conf.unset(ProviderKey)
-      }
-    }
-  }
-
   /** Run the dedup stream synchronously and return the surviving rows
     * (count-only projection; memory sink). Dedup state holds one row per
     * distinct (event_id, ts) inside the watermark window, so unlike the
     * daily aggregate its partition count must scale with event volume —
-    * the default suits the bundled test SFs (measured at sf0.1, README
-    * finding 7: 4 partitions ~1.3s vs ~1.9s at 8 — per-partition commit cost
-    * dominates until state is far larger; a 100 TB deployment raises
-    * this with volume). */
-  def runDedupOnce(s: SparkSession, srcDir: String,
-      statePartitions: Int = 4): DataFrame =
-    withStatePartitions(s, statePartitions) {
-    val name = "graft_stream_dedup_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = dedupedEvents(readEvents(s, srcDir))
-      .select(col("event_id"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation",
-        scratchDir("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.table(name).orderBy("event_id")
-  }
+    * the constant 4 suits the bundled test SFs (measured at sf0.1,
+    * README finding 7: 4 partitions ~1.3s vs ~1.9s at 8 — per-partition
+    * commit cost dominates until state is far larger). */
+  def runDedupOnce(s: SparkSession, srcDir: String): DataFrame =
+    RunOnce(s, "graft_stream_dedup_") { run =>
+      run.memory(dedupedEvents(readEvents(s, srcDir)).select(col("event_id")),
+        "append", stateful = true).orderBy("event_id")
+    }
 
   /** Static per-user cohort dimension, derived deterministically from the
     * md5 bucket of the user id (so the DuckDB oracle reproduces every
@@ -405,30 +308,20 @@ object HourlyStream {
 
   /** Run the enrichment stream synchronously (update mode + keyed upsert,
     * the runDailyAggOnce discipline) and read the warehouse back. */
-  def runEnrichOnce(s: SparkSession, srcDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val warehouse = scratchDir("graft_stream_wh_") + "/cohorts"
-    withStatePartitions(s, statePartitions) {
-      val q = cohortEnriched(readEvents(s, srcDir),
-        staticUserCohorts(s, srcDir))
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation",
-          scratchDir("graft_ckpt_"))
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+  def runEnrichOnce(s: SparkSession, srcDir: String): DataFrame =
+    RunOnce(s, "graft_stream_enrich_") { run =>
+      run.foreachBatch(cohortEnriched(readEvents(s, srcDir),
+          staticUserCohorts(s, srcDir)), "update", stateful = true) {
+        (batch, _) =>
           PartitionedStore.upsertKeyed(
-            graft.plans.Writers.byKeys(batch, col("day")), warehouse, "day",
+            graft.plans.Writers.byKeys(batch, col("day")), run.wh, "day",
               Seq("cohort"))
-        }
-        .start()
-      try q.awaitTermination() finally q.stop()
-      s.read.parquet(warehouse)
+      }
+      s.read.parquet(run.wh)
         .select(col("day"), col("cohort").cast("string").as("cohort"),
           col("n_events"), col("sum_value"))
         .orderBy("day", "cohort")
     }
-  }
 
   /** Custom streaming state (SURVEY.md §7.2 step 6 / prompt §2.8):
     * per-user cumulative event count and last-seen day maintained in a
@@ -486,30 +379,18 @@ object HourlyStream {
   }
 
   def runningUserCounts(s: SparkSession, srcDir: String,
-      retentionDays: Int = 30,
-      statePartitions: Int = 4): DataFrame = withStatePartitions(s, statePartitions) {
-    val name = "graft_stream_state_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = userCountStream(readEvents(s, srcDir), retentionDays)
-      .toDF()
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation",
-        scratchDir("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // last update per user is the final state
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    s.table(name)
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-      .orderBy("user_id")
-  }
+      retentionDays: Int = 30): DataFrame =
+    RunOnce(s, "graft_stream_state_") { run =>
+      // last update per user is the final state
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id")).orderBy(col("n_events").desc)
+      run.memory(userCountStream(readEvents(s, srcDir), retentionDays).toDF(),
+          "update", stateful = true)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .drop("rn")
+        .orderBy("user_id")
+    }
 
   /** Stream-stream interval join (click→purchase attribution): each
     * purchase joins the same user's clicks from the preceding
@@ -568,52 +449,31 @@ object HourlyStream {
   }
 
   def runAttributionOuterOnce(s: SparkSession, srcDir: String,
-      windowMinutes: Int = 30,
-      statePartitions: Int = 4): DataFrame = withStatePartitions(s, statePartitions) {
-    val name = "graft_stream_oattr_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = attributionJoinOuter(
-      readEvents(s, srcDir).filter(col("event_type") === "click"),
-      readEvents(s, srcDir).filter(col("event_type") === "purchase"),
-      windowMinutes)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation",
-        scratchDir("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.table(name).orderBy(col("purchase_id"), col("click_id"))
-  }
+      windowMinutes: Int = 30): DataFrame =
+    RunOnce(s, "graft_stream_oattr_") { run =>
+      run.memory(attributionJoinOuter(
+          readEvents(s, srcDir).filter(col("event_type") === "click"),
+          readEvents(s, srcDir).filter(col("event_type") === "purchase"),
+          windowMinutes), "append", stateful = true)
+        .orderBy(col("purchase_id"), col("click_id"))
+    }
 
   /** Run the attribution join synchronously over `srcDir` (AvailableNow,
     * memory sink). In one pass nothing is beyond the initial watermark,
     * so the emitted set equals the batch interval join — which is exactly
-    * the oracle the driver checks it against. */
+    * the oracle the driver checks it against. A stream-stream join keeps
+    * FOUR keyed state stores (two per side), so the constant 4 state
+    * partitions matter most here (measured 6.2s at 8 partitions -> ~4s
+    * at 4). */
   def runAttributionOnce(s: SparkSession, srcDir: String,
-      windowMinutes: Int = 30,
-      // a stream-stream join keeps FOUR keyed state stores (two per side);
-      // per-partition commit cost dominates until state is huge, so the
-      // default sits low (measured 6.2s at 8 partitions -> ~4s at 4)
-      statePartitions: Int = 4): DataFrame = withStatePartitions(s, statePartitions) {
-    val name = "graft_stream_attr_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val events1 = readEvents(s, srcDir).filter(col("event_type") === "click")
-    val events2 = readEvents(s, srcDir).filter(col("event_type") === "purchase")
-    val q = attributionJoin(events1, events2, windowMinutes)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation",
-        scratchDir("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.table(name).orderBy("purchase_id", "click_id")
-  }
+      windowMinutes: Int = 30): DataFrame =
+    RunOnce(s, "graft_stream_attr_") { run =>
+      run.memory(attributionJoin(
+          readEvents(s, srcDir).filter(col("event_type") === "click"),
+          readEvents(s, srcDir).filter(col("event_type") === "purchase"),
+          windowMinutes), "append", stateful = true)
+        .orderBy("purchase_id", "click_id")
+    }
 
   /** Event-time session windows via `flatMapGroupsWithState` +
     * `EventTimeTimeout` — the custom-state sessionizer shape (SURVEY.md
@@ -689,23 +549,11 @@ object HourlyStream {
   /** Run the sessionizer synchronously (AvailableNow + memory sink) and
     * return the emitted (closed or timed-out) sessions. */
   def runSessionsOnce(s: SparkSession, srcDir: String,
-      gapMinutes: Int = 30,
-      statePartitions: Int = 4): DataFrame = withStatePartitions(s, statePartitions) {
-    val name = "graft_stream_sessions_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = sessionizedStream(readEvents(s, srcDir), gapMinutes)
-      .toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation",
-        scratchDir("graft_ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.table(name).orderBy("user_id", "start_us")
-  }
+      gapMinutes: Int = 30): DataFrame =
+    RunOnce(s, "graft_stream_sessions_") { run =>
+      run.memory(sessionizedStream(readEvents(s, srcDir), gapMinutes).toDF(),
+        "append", stateful = true).orderBy("user_id", "start_us")
+    }
 
   /** Production-shaped continuous sessionizer: append-only parquet sink
     * (closed sessions are immutable facts — no upsert needed), hive

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType,
   StructField, StructType}
 
@@ -68,33 +67,20 @@ object VectorStream {
     * is_exact = TRUE is closed-form (the ann_*_planted precondition:
     * no natural pair reaches t6-cosine 0.999999). */
   def runAnnProbeOnce(s: SparkSession, srcDir: String,
-      n: Int = 5): DataFrame = {
-    val corpus = graft.Tables.load(s, srcDir, "embeddings")
-    val probeDir = HourlyStream.scratchDir("graft_probe_drop_")
-    corpus.filter(col("vec_id") < n)
-      .select((col("vec_id") + Dedup.PlantOffset).as("q_id"),
-        col("embedding"))
-      .write.mode("overwrite").parquet(probeDir)
-    val whRoot = HourlyStream.scratchDir("graft_ann_wh_")
-    val warehouse = whRoot + "/top1"
-    val ckpt = HourlyStream.scratchDir("graft_ckpt_")
-    val q = readProbes(s, probeDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        CorpusStream.upsertSurvivors(annTop1(b, corpus), warehouse, batchId)
+      n: Int = 5): DataFrame =
+    RunOnce(s, "graft_ann_") { run =>
+      val corpus = graft.Tables.load(s, srcDir, "embeddings")
+      corpus.filter(col("vec_id") < n)
+        .select((col("vec_id") + Dedup.PlantOffset).as("q_id"),
+          col("embedding"))
+        .write.mode("overwrite").parquet(run.drop)
+      run.foreachBatch(readProbes(s, run.drop)) { (b, batchId) =>
+        CorpusStream.upsertSurvivors(annTop1(b, corpus), run.wh, batchId)
       }
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // n-row result: materialize, then reap the scratch dirs eagerly
-    val out = s.read.parquet(warehouse)
-      .select(col("q_id"), col("vec_id"), col("is_exact"))
-      .orderBy("q_id")
-      .localCheckpoint(true)
-    Seq(probeDir, whRoot, ckpt).foreach(HourlyStream.reapScratch)
-    out
-  }
+      s.read.parquet(run.wh)
+        .select(col("q_id"), col("vec_id"), col("is_exact"))
+        .orderBy("q_id")
+    }
 
   /** Streaming probes against the STORED IVF index — the production
     * shape [[annTop1]]'s scaladoc promises: the corpus side is a
@@ -118,52 +104,40 @@ object VectorStream {
     * cosine ~1.0 is deterministic for any nProbe >= 1. Results upsert
     * batchId-keyed (exactly-once). */
   def runAnnIndexedOnce(s: SparkSession, srcDir: String,
-      n: Int = 5, nProbe: Int = 4): DataFrame = {
-    import graft.operators.Similarity
-    val emb = graft.Tables.load(s, srcDir, "embeddings")
-    val idxDir = HourlyStream.scratchDir("graft_annidx_")
-    val probeDir = HourlyStream.scratchDir("graft_probeidx_drop_")
-    // index build and probe-drop staging are disjoint outputs —
-    // overlap (guide §2.6); the build side returns the centroid model
-    // it sampled, so the static side needs no re-read
-    val (cents, _) = graft.operators.Par.two(
-      {
-        val tr = Similarity.ivfCentroids(emb)
-          .map { case (c, v) => (c.toInt, v.map(_.toDouble)) }
-        Similarity.buildIvfIndex(s, idxDir,
-          emb.select(col("vec_id"), col("embedding"),
-            Similarity.argmaxOver(tr).getField("cluster").as("cell")))
-        tr
-      },
-      emb.filter(col("vec_id") < n)
-        .select((col("vec_id") + Dedup.PlantOffset).as("q_id"),
-          col("embedding"))
-        .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
-        .write.mode("overwrite").parquet(probeDir))
-    val whRoot = HourlyStream.scratchDir("graft_annidx_wh_")
-    val warehouse = whRoot + "/top1"
-    val ckpt = HourlyStream.scratchDir("graft_annidx_ckpt_")
-    val q = readProbes(s, probeDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+      n: Int = 5, nProbe: Int = 4): DataFrame =
+    RunOnce(s, "graft_annidx_") { run =>
+      import graft.operators.Similarity
+      val emb = graft.Tables.load(s, srcDir, "embeddings")
+      val idxDir = s"${run.root}/idx"
+      // index build and probe-drop staging are disjoint outputs —
+      // overlap (guide §2.6); the build side returns the centroid model
+      // it sampled, so the static side needs no re-read
+      val (cents, _) = graft.operators.Par.two(
+        {
+          val tr = Similarity.ivfCentroids(emb)
+            .map { case (c, v) => (c.toInt, v.map(_.toDouble)) }
+          Similarity.buildIvfIndex(s, idxDir,
+            emb.select(col("vec_id"), col("embedding"),
+              Similarity.argmaxOver(tr).getField("cluster").as("cell")))
+          tr
+        },
+        emb.filter(col("vec_id") < n)
+          .select((col("vec_id") + Dedup.PlantOffset).as("q_id"),
+            col("embedding"))
+          .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
+          .write.mode("overwrite").parquet(run.drop))
+      run.foreachBatch(readProbes(s, run.drop)) { (b, batchId) =>
         val top1 = Similarity.probeIvfIndex(s, idxDir,
             b.select(col("q_id"), col("embedding").as("q_emb")), cents,
             k = 1, nProbe = nProbe)
           .select(col("q_id"), col("vec_id"),
             (col("cos_sim") >= 0.999999).as("is_exact"))
-        CorpusStream.upsertSurvivors(top1, warehouse, batchId)
+        CorpusStream.upsertSurvivors(top1, run.wh, batchId)
       }
-      .start()
-    try q.awaitTermination() finally q.stop()
-    val out = s.read.parquet(warehouse)
-      .select(col("q_id"), col("vec_id"), col("is_exact"))
-      .orderBy("q_id")
-      .localCheckpoint(true)
-    Seq(idxDir, probeDir, whRoot, ckpt).foreach(HourlyStream.reapScratch)
-    out
-  }
+      s.read.parquet(run.wh)
+        .select(col("q_id"), col("vec_id"), col("is_exact"))
+        .orderBy("q_id")
+    }
 
   /** The arriving-VECTOR schema (an embedding job's output drops —
     * the write side of the index, where [[probeBatchSchema]] is the
@@ -216,78 +190,68 @@ object VectorStream {
     * full top-k must equal the from-scratch rebuild reference
     * (`agrees_rebuild`) probed through the identical batch plan. */
   def runIvfCompactManifestOnce(s: SparkSession, srcDir: String,
-      n: Int = 5, k: Int = 10, nProbe: Int = 4): DataFrame = {
-    import graft.operators.Similarity
-    import graft.store.ManifestStore
-    val emb = graft.Tables.load(s, srcDir, "embeddings")
-    val isBatch = col("vec_id") % 10 === 3
-    val arriving = emb.filter(isBatch).unionByName(
-      emb.filter(col("vec_id") < n)
-        .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
-    val idxDir = HourlyStream.scratchDir("graft_ivfmfs_idx_")
-    val dropDir = HourlyStream.scratchDir("graft_ivfmfs_drop_")
-    // the whole static-side chain (Lloyd training collects + the store
-    // create it feeds) and the drop staging are independent — overlap
-    // the chain, not just the final write (guide §2.6)
-    val (trained, _) = graft.operators.Par.two(
-      {
-        // static side: frozen trained centroids, collected once
-        val tr = Similarity.collectCentroids(
-          Similarity.kmeansIterate(s, srcDir, 2), "cluster")
-        ManifestStore.create(s, idxDir,
-          emb.filter(!isBatch)
-            .select(col("vec_id"), col("embedding"),
-              Similarity.argmaxOver(tr).getField("cluster").as("cell")),
-          "cell")
-        tr
-      },
-      arriving
-        .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
-        .write.mode("overwrite").parquet(dropDir))
-    val ckpt = HourlyStream.scratchDir("graft_ivfmfs_ckpt_")
-    val q = readVectorBatches(s, dropDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
+      n: Int = 5, k: Int = 10, nProbe: Int = 4): DataFrame =
+    RunOnce(s, "graft_ivfmfs_") { run =>
+      import graft.operators.Similarity
+      import graft.store.ManifestStore
+      val emb = graft.Tables.load(s, srcDir, "embeddings")
+      val isBatch = col("vec_id") % 10 === 3
+      val arriving = emb.filter(isBatch).unionByName(
+        emb.filter(col("vec_id") < n)
+          .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
+      val idxDir = s"${run.root}/idx"
+      // the whole static-side chain (Lloyd training collects + the store
+      // create it feeds) and the drop staging are independent — overlap
+      // the chain, not just the final write (guide §2.6)
+      val (trained, _) = graft.operators.Par.two(
+        {
+          // static side: frozen trained centroids, collected once
+          val tr = Similarity.collectCentroids(
+            Similarity.kmeansIterate(s, srcDir, 2), "cluster")
+          ManifestStore.create(s, idxDir,
+            emb.filter(!isBatch)
+              .select(col("vec_id"), col("embedding"),
+                Similarity.argmaxOver(tr).getField("cluster").as("cell")),
+            "cell")
+          tr
+        },
+        arriving
+          .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
+          .write.mode("overwrite").parquet(run.drop))
+      run.foreachBatch(readVectorBatches(s, run.drop)) { (b, _) =>
         val _ = Similarity.maintainIvfIndex(s, idxDir, b, trained,
           upsertById = true)
       }
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // probe the compacted snapshot and the rebuild reference through
-    // the IDENTICAL one-join batch plan
-    val centsL = trained.map { case (c, v) => (c.toLong, v) }
-    val queries = emb.filter(col("vec_id") < n)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def keyed(df: DataFrame): Map[Long, Seq[(Long, Double)]] =
-      df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .groupBy(_._1)
-        .map { case (qid, rows) =>
-          qid -> rows.sortBy(_._4).map(t => (t._2, t._3)).toSeq
-        }
-    val (stored, rebuild) = graft.operators.Par.two(
-      keyed(Similarity.probeBatchOn(
-        ManifestStore.read(s, idxDir)
-          .select("vec_id", "embedding", "cell"), centsL, queries,
-        k, nProbe, excludeSelf = true)),
-      keyed(Similarity.probeBatchOn(
-        emb.filter(!isBatch).unionByName(arriving)
-          .select(col("vec_id"), col("embedding"),
-            Similarity.argmaxOver(trained).getField("cluster").as("cell")),
-        centsL, queries, k, nProbe, excludeSelf = true)))
-    val rows = (0L until n.toLong).map { qid =>
-      val b = stored(qid)
-      (qid, b.head._1, 1, b.head._2 >= 0.999999, b == rebuild(qid))
+      // probe the compacted snapshot and the rebuild reference through
+      // the IDENTICAL one-join batch plan
+      val centsL = trained.map { case (c, v) => (c.toLong, v) }
+      val queries = emb.filter(col("vec_id") < n)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      def keyed(df: DataFrame): Map[Long, Seq[(Long, Double)]] =
+        df.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+          .groupBy(_._1)
+          .map { case (qid, rows) =>
+            qid -> rows.sortBy(_._4).map(t => (t._2, t._3)).toSeq
+          }
+      val (stored, rebuild) = graft.operators.Par.two(
+        keyed(Similarity.probeBatchOn(
+          ManifestStore.read(s, idxDir)
+            .select("vec_id", "embedding", "cell"), centsL, queries,
+          k, nProbe, excludeSelf = true)),
+        keyed(Similarity.probeBatchOn(
+          emb.filter(!isBatch).unionByName(arriving)
+            .select(col("vec_id"), col("embedding"),
+              Similarity.argmaxOver(trained).getField("cluster").as("cell")),
+          centsL, queries, k, nProbe, excludeSelf = true)))
+      val rows = (0L until n.toLong).map { qid =>
+        val b = stored(qid)
+        (qid, b.head._1, 1, b.head._2 >= 0.999999, b == rebuild(qid))
+      }
+      s.createDataFrame(rows)
+        .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_rebuild")
+        .orderBy("q_id")
     }
-    val out = s.createDataFrame(rows)
-      .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_rebuild")
-      .orderBy("q_id")
-      .localCheckpoint(true)
-    Seq(idxDir, dropDir, ckpt).foreach(HourlyStream.reapScratch)
-    out
-  }
 
   /** Streaming IVF-PQ maintenance over the manifest store — the
     * CODES-level sibling of [[runIvfCompactManifestOnce]]: each
@@ -309,56 +273,46 @@ object VectorStream {
     * identical `ann_ivfpq_compact` oracle, because streamed compaction
     * ≡ one-shot compaction ≡ rebuild. */
   def runIvfPqCompactManifestOnce(s: SparkSession, srcDir: String,
-      n: Int = 5, k: Int = 10, nProbe: Int = 3): DataFrame = {
-    import graft.operators.Similarity
-    val emb = graft.Tables.load(s, srcDir, "embeddings")
-    val isBatch = col("vec_id") % 10 === 3
-    val arriving = emb.filter(isBatch).unionByName(
-      emb.filter(col("vec_id") < n)
-        .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
-    val idxDir = HourlyStream.scratchDir("graft_pqmfs_idx_")
-    val dropDir = HourlyStream.scratchDir("graft_pqmfs_drop_")
-    // the whole static-side chain (model collects + the index build
-    // they feed) and the drop staging are independent — overlap the
-    // chain, not just the final write (guide §2.6)
-    val ((cents, cb), _) = graft.operators.Par.two(
-      {
-        // static side: frozen centroids + codebooks, collected once
-        val c = Similarity.collectCentroids(
-          Similarity.labelCentroids(s, srcDir), "label")
-        val b = Similarity.pqCodebooks(s, srcDir)
-        Similarity.buildIvfPqIndex(s, emb.filter(!isBatch), c, b, idxDir)
-        (c, b)
-      },
-      arriving
-        .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
-        .write.mode("overwrite").parquet(dropDir))
-    val ckpt = HourlyStream.scratchDir("graft_pqmfs_ckpt_")
-    val q = readVectorBatches(s, dropDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
+      n: Int = 5, k: Int = 10, nProbe: Int = 3): DataFrame =
+    RunOnce(s, "graft_pqmfs_") { run =>
+      import graft.operators.Similarity
+      val emb = graft.Tables.load(s, srcDir, "embeddings")
+      val isBatch = col("vec_id") % 10 === 3
+      val arriving = emb.filter(isBatch).unionByName(
+        emb.filter(col("vec_id") < n)
+          .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
+      val idxDir = s"${run.root}/idx"
+      // the whole static-side chain (model collects + the index build
+      // they feed) and the drop staging are independent — overlap the
+      // chain, not just the final write (guide §2.6)
+      val ((cents, cb), _) = graft.operators.Par.two(
+        {
+          // static side: frozen centroids + codebooks, collected once
+          val c = Similarity.collectCentroids(
+            Similarity.labelCentroids(s, srcDir), "label")
+          val b = Similarity.pqCodebooks(s, srcDir)
+          Similarity.buildIvfPqIndex(s, emb.filter(!isBatch), c, b, idxDir)
+          (c, b)
+        },
+        arriving
+          .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
+          .write.mode("overwrite").parquet(run.drop))
+      run.foreachBatch(readVectorBatches(s, run.drop)) { (b, _) =>
         val _ = Similarity.maintainIvfPqIndex(s, idxDir, b, cents, cb,
           upsertById = true)
       }
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // manifest-pruned batch probe over the drained store — identical
-    // ADC math to the one-shot gate, hence the identical oracle
-    val queries = emb.filter(col("vec_id") < n)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val topk = Similarity
-      .probeIvfPqIndex(s, srcDir, idxDir, queries, k, nProbe,
-        model = Some((cents, cb)))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3), r.getInt(4)))
-    import s.implicits._
-    val out = topk.toSeq.toDF("q_id", "vec_id", "cell", "adc_dist", "rn")
-      .orderBy("q_id", "rn")
-      .localCheckpoint(true)
-    Seq(idxDir, dropDir, ckpt).foreach(HourlyStream.reapScratch)
-    out
-  }
+      // manifest-pruned batch probe over the drained store — identical
+      // ADC math to the one-shot gate, hence the identical oracle
+      val queries = emb.filter(col("vec_id") < n)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val topk = Similarity
+        .probeIvfPqIndex(s, srcDir, idxDir, queries, k, nProbe,
+          model = Some((cents, cb)))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+          r.getDouble(3), r.getInt(4)))
+      import s.implicits._
+      topk.toSeq.toDF("q_id", "vec_id", "cell", "adc_dist", "rn")
+        .orderBy("q_id", "rn")
+    }
 }

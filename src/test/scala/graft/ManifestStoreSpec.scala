@@ -1059,8 +1059,8 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("streamed manifest maintenance: one version per micro-batch, " +
       "gate closed form holds") {
-    val got = graft.streaming.VectorStream
-      .runIvfCompactManifestOnce(spark, sf).collect()
+    val got = StreamLeftovers(spark)(graft.streaming.VectorStream
+      .runIvfCompactManifestOnce(spark, sf)).collect()
     assert(got.length === 5)
     got.foreach { r =>
       assert(r.getLong(1) === r.getLong(0) + graft.operators.Dedup.PlantOffset)
@@ -1075,8 +1075,8 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("streamed IVF-PQ manifest maintenance: per-micro-batch commits " +
       "compose to the one-shot compaction — relations identical") {
-    val streamed = graft.streaming.VectorStream
-      .runIvfPqCompactManifestOnce(spark, sf).collect().toSeq
+    val streamed = StreamLeftovers(spark)(graft.streaming.VectorStream
+      .runIvfPqCompactManifestOnce(spark, sf)).collect().toSeq
     val oneShot = graft.operators.Similarity
       .ivfPqCompactManifestPlanted(spark, sf).collect().toSeq
     assert(streamed === oneShot)

@@ -6,31 +6,36 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.HourlyStream
 
-/** The RocksDB state-store option (`spark.graft.stateStore.rocksdb`):
-  * at 100 TB-scale ingestion, event-cardinality state (streaming dedup,
-  * open sessions on a firehose) outgrows the default provider's
-  * executor-heap residency — RocksDB keeps working state off-heap/
-  * on-disk. A provider is a STORAGE choice, never a semantics choice:
-  * these specs pin that every stateful harness returns identical
-  * results under both providers, that the flag actually engages the
-  * provider (checkpoint artifacts, not just conf plumbing), and that
+/** The RocksDB state store, chosen through Spark's own
+  * `spark.sql.streaming.stateStore.providerClass`: at 100 TB-scale
+  * ingestion, event-cardinality state (streaming dedup, open sessions
+  * on a firehose) outgrows the default provider's executor-heap
+  * residency — RocksDB keeps working state off-heap/on-disk. A provider
+  * is a STORAGE choice, never a semantics choice: these specs pin that
+  * every stateful harness returns identical results under both
+  * providers, that the conf actually engages the provider through the
+  * harnesses (checkpoint artifacts, not just conf plumbing), and that
   * watermark semantics survive a checkpoint restart under RocksDB. */
 class StateStoreProviderSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def withRocksFlag[T](body: => T): T = {
-    spark.conf.set(HourlyStream.RocksDbFlagKey, "true")
-    try body finally spark.conf.unset(HourlyStream.RocksDbFlagKey)
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  private def withRocksDb[T](body: => T): T = {
+    spark.conf.set(ProviderKey, RocksDbProvider)
+    try body finally spark.conf.unset(ProviderKey)
   }
 
   test("RocksDB flag engages the provider through the harness chokepoint " +
       "and the daily aggregate is unchanged") {
     val ckpt = Files.createTempDirectory("graft_rocks_ck_").toString
-    val defaultRows =
-      HourlyStream.runDailyAggOnce(spark, TestSpark.sf).collect()
-    val rocksRows = withRocksFlag {
-      HourlyStream.runDailyAggOnce(spark, TestSpark.sf,
-        checkpointDir = Some(ckpt)).collect()
+    val defaultRows = StreamLeftovers(spark)(
+      HourlyStream.runDailyAggOnce(spark, TestSpark.sf)).collect()
+    val rocksRows = withRocksDb {
+      StreamLeftovers(spark)(HourlyStream.runDailyAggOnce(spark,
+        TestSpark.sf, checkpointDir = Some(ckpt))).collect()
     }
     assert(rocksRows === defaultRows,
       "state-store provider must never change query results")
@@ -49,14 +54,12 @@ class StateStoreProviderSpec extends AnyFunSuite {
   }
 
   test("dedup, sessions, and hopping harnesses agree between providers") {
-    val dedupDef = HourlyStream.runDedupOnce(spark, TestSpark.sf).count()
-    val sessDef = HourlyStream.runSessionsOnce(spark, TestSpark.sf).collect()
-    val hopDef = HourlyStream.runHoppingOnce(spark, TestSpark.sf).collect()
-    val (dedupR, sessR, hopR) = withRocksFlag {
+    def runAll() = StreamLeftovers(spark)(
       (HourlyStream.runDedupOnce(spark, TestSpark.sf).count(),
         HourlyStream.runSessionsOnce(spark, TestSpark.sf).collect(),
-        HourlyStream.runHoppingOnce(spark, TestSpark.sf).collect())
-    }
+        HourlyStream.runHoppingOnce(spark, TestSpark.sf).collect()))
+    val (dedupDef, sessDef, hopDef) = runAll()
+    val (dedupR, sessR, hopR) = withRocksDb(runAll())
     assert(dedupR === dedupDef, "dedup keep count must match")
     assert(sessR === sessDef, "session facts must match")
     assert(hopR === hopDef, "hopping window counts must match")
@@ -85,7 +88,6 @@ class StateStoreProviderSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft_rockslate_ck_").toString
     val outDir = Files.createTempDirectory("graft_rockslate_out_")
       .toString + "/hop"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
     def run(): Unit = {
       val q = HourlyStream
         .hoppingAgg(HourlyStream.readEvents(spark, src))
@@ -99,8 +101,7 @@ class StateStoreProviderSpec extends AnyFunSuite {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    spark.conf.set(provKey, HourlyStream.RocksDbProviderClass)
-    try {
+    withRocksDb {
       // run 1 closes all day-1 windows (watermark lands at day-9 00:30)
       write("events_a.parquet", Seq(
         (1L, ns("2024-01-01T02:00:00Z"), 1L, "click", 1.0, "{}"),
@@ -116,7 +117,7 @@ class StateStoreProviderSpec extends AnyFunSuite {
         (5L, ns("2024-01-10T01:00:00Z"), 1L, "click", 1.0, "{}")),
         2000000L)
       run()
-    } finally spark.conf.unset(provKey)
+    }
     val byWin = spark.read.parquet(outDir)
       .groupBy(col("win_start"))
       .agg(max(col("n_events")).as("n"))

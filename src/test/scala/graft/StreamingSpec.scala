@@ -12,8 +12,8 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("streamed 1-day window equals the batch group-by") {
-    val streamed = HourlyStream.runDailyAggOnce(spark, TestSpark.sf)
-      .collect()
+    val streamed = StreamLeftovers(spark)(
+      HourlyStream.runDailyAggOnce(spark, TestSpark.sf)).collect()
     // batch side needs the ns->us loader; reuse Tables.load for parity
     val ev = graft.Tables.load(spark, TestSpark.sf, "events")
     ev.createOrReplaceTempView("ev_tmp")
@@ -32,15 +32,16 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dedup: duplicate event_ids collapse to the batch distinct") {
-    val streamed = HourlyStream.runDedupOnce(spark, TestSpark.sf).count()
+    val streamed = StreamLeftovers(spark)(
+      HourlyStream.runDedupOnce(spark, TestSpark.sf)).count()
     val exact = graft.Tables.load(spark, TestSpark.sf, "events")
       .select("event_id", "ts").distinct().count()
     assert(streamed === exact)
   }
 
   test("stream-stream interval join equals the batch interval join") {
-    val streamed = HourlyStream.runAttributionOnce(spark, TestSpark.sf)
-      .collect()
+    val streamed = StreamLeftovers(spark)(
+      HourlyStream.runAttributionOnce(spark, TestSpark.sf)).collect()
     val ev = graft.Tables.load(spark, TestSpark.sf, "events")
     ev.createOrReplaceTempView("ev_attr")
     val expect = spark.sql(
@@ -57,8 +58,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("outer stream join: matches + watermark-released null rows") {
-    val streamed = HourlyStream.runAttributionOuterOnce(spark, TestSpark.sf)
-      .collect()
+    val streamed = StreamLeftovers(spark)(
+      HourlyStream.runAttributionOuterOnce(spark, TestSpark.sf)).collect()
     val ev = graft.Tables.load(spark, TestSpark.sf, "events")
     ev.createOrReplaceTempView("ev_oattr")
     // the global watermark is min over BOTH sides' filtered streams
@@ -84,7 +85,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("mapGroupsWithState: final per-user counts equal the batch group-by") {
-    val stateful = HourlyStream.runningUserCounts(spark, TestSpark.sf)
+    val stateful = StreamLeftovers(spark)(
+      HourlyStream.runningUserCounts(spark, TestSpark.sf))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.Tables.load(spark, TestSpark.sf, "events")
       .groupBy("user_id").count()
@@ -122,15 +124,15 @@ class StreamingSpec extends AnyFunSuite {
       (1L, ns("2024-01-01T01:00:00Z"), 1L, "click", 1.0, "{}"),
       (2L, ns("2024-01-01T02:00:00Z"), 1L, "click", 1.0, "{}"),
       (3L, ns("2024-01-10T00:00:00Z"), 1L, "click", 1.0, "{}")), 1000000L)
-    HourlyStream.runDailyAggOnce(spark, src,
-      checkpointDir = Some(ckpt), warehouseDir = Some(wh)).collect()
+    StreamLeftovers(spark)(HourlyStream.runDailyAggOnce(spark, src,
+      checkpointDir = Some(ckpt), warehouseDir = Some(wh))).collect()
     // run 2: one event 8 days beyond the restored watermark (must be
     // dropped) and one fresh day-10 event (must merge into the open window)
     write("events_b.parquet", Seq(
       (4L, ns("2024-01-01T03:00:00Z"), 1L, "click", 100.0, "{}"),
       (5L, ns("2024-01-10T01:00:00Z"), 1L, "click", 1.0, "{}")), 2000000L)
-    val out = HourlyStream.runDailyAggOnce(spark, src,
-      checkpointDir = Some(ckpt), warehouseDir = Some(wh)).collect()
+    val out = StreamLeftovers(spark)(HourlyStream.runDailyAggOnce(spark, src,
+      checkpointDir = Some(ckpt), warehouseDir = Some(wh))).collect()
     val byDay = out.map(r => r.getDate(0).toString -> (r.getLong(2), r.getDouble(3))).toMap
     assert(byDay("2024-01-01") === ((2L, 2.0)), "late event beyond watermark dropped")
     assert(byDay("2024-01-10") === ((2L, 2.0)), "in-watermark event merged across runs")
@@ -220,16 +222,16 @@ class StreamingSpec extends AnyFunSuite {
       (1L, ns("2024-01-01T01:00:00Z"), 1L, "click", 1.0, "{}"),
       (2L, ns("2024-01-01T02:00:00Z"), 1L, "click", 1.0, "{}"),
       (3L, ns("2024-01-01T03:00:00Z"), 1L, "view", 5.0, "{}")), 1000000L)
-    HourlyStream.runDailyAggOnce(spark, src,
-      checkpointDir = Some(ckpt), warehouseDir = Some(wh)).collect()
+    StreamLeftovers(spark)(HourlyStream.runDailyAggOnce(spark, src,
+      checkpointDir = Some(ckpt), warehouseDir = Some(wh))).collect()
     // run 2: a late-but-in-watermark event touching ONLY the click group.
     // The update-mode batch then carries (day1, click) alone; the round-2
     // advisor finding was that day-granularity overwrite deleted (day1,
     // view) here.
     write("events_b.parquet", Seq(
       (4L, ns("2024-01-01T04:00:00Z"), 1L, "click", 1.0, "{}")), 2000000L)
-    val out = HourlyStream.runDailyAggOnce(spark, src,
-      checkpointDir = Some(ckpt), warehouseDir = Some(wh)).collect()
+    val out = StreamLeftovers(spark)(HourlyStream.runDailyAggOnce(spark, src,
+      checkpointDir = Some(ckpt), warehouseDir = Some(wh))).collect()
     val byType = out.map(r => r.getString(1) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(byType("click") === ((3L, 3.0)), "updated group reflects the new event")
     assert(byType("view") === ((1L, 5.0)), "untouched group must survive the upsert")
@@ -421,8 +423,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streamed hopping windows equal the batch sliding-window groupBy " +
       "and every event lands in exactly two windows") {
     import org.apache.spark.sql.functions._
-    val streamed = graft.streaming.HourlyStream
-      .runHoppingOnce(spark, TestSpark.sf)
+    val streamed = StreamLeftovers(spark)(graft.streaming.HourlyStream
+      .runHoppingOnce(spark, TestSpark.sf))
     val ev = graft.Tables.load(spark, TestSpark.sf, "events")
     val batch = ev
       .groupBy(window(col("ts"), "1 day", "12 hours").as("w"),
@@ -460,8 +462,8 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Files.copy(pf.toPath, dest.toPath)
       dest.setLastModified((i + 1) * 1000000L)
     }
-    val streamed = graft.streaming.HourlyStream
-      .runHoppingOnce(spark, src, maxFilesPerTrigger = Some(1))
+    val streamed = StreamLeftovers(spark)(graft.streaming.HourlyStream
+      .runHoppingOnce(spark, src, maxFilesPerTrigger = Some(1)))
     val batch = graft.Tables.load(spark, TestSpark.sf, "events")
       .groupBy(window(col("ts"), "1 day", "12 hours").as("w"),
         col("event_type"))
@@ -548,13 +550,14 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("stage the drop directory"),
       s"message should say how to fix it, got: ${e.getMessage}")
+    graft.streaming.HourlyStream.reapScratch(dir)
   }
 
   test("streamed index dedup equals the batch operator's keep set and " +
       "drops every planted copy") {
     import org.apache.spark.sql.functions.col
-    val streamed = graft.streaming.CorpusStream
-      .runIndexDedupOnce(spark, TestSpark.sf)
+    val streamed = StreamLeftovers(spark)(graft.streaming.CorpusStream
+      .runIndexDedupOnce(spark, TestSpark.sf))
       .collect().map(_.getLong(0)).toSet
     val batchKeep = graft.operators.Dedup
       .incrementalDedup(spark, TestSpark.sf)
@@ -571,8 +574,8 @@ class StreamingSpec extends AnyFunSuite {
       "v3 snapshot aggregate exactly, and a re-delivered version is a " +
       "provable no-op") {
     import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-    val got = graft.streaming.CorpusStream
-      .runFeedMartOnce(spark, TestSpark.sf)
+    val got = StreamLeftovers(spark)(graft.streaming.CorpusStream
+      .runFeedMartOnce(spark, TestSpark.sf))
       .collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
         r.getBoolean(3), r.getBoolean(4)))
@@ -597,8 +600,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streamed LSH near-dup filter reaches the same keep set through " +
       "banding + verification and drops every planted copy") {
     import org.apache.spark.sql.functions.col
-    val streamed = graft.streaming.CorpusStream
-      .runNearDupOnce(spark, TestSpark.sf)
+    val streamed = StreamLeftovers(spark)(graft.streaming.CorpusStream
+      .runNearDupOnce(spark, TestSpark.sf))
       .collect().map(_.getLong(0)).toSet
     // at the 0.99 threshold only exact-text groups cross the split, so
     // the LSH lane must land on the exact-lane answer — via a genuinely
@@ -617,8 +620,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streamed ANN probes retrieve their stored originals at rank 1 " +
       "and agree with the batch brute-force argmax") {
     import org.apache.spark.sql.functions.col
-    val rows = graft.streaming.VectorStream
-      .runAnnProbeOnce(spark, TestSpark.sf).collect()
+    val rows = StreamLeftovers(spark)(graft.streaming.VectorStream
+      .runAnnProbeOnce(spark, TestSpark.sf)).collect()
     assert(rows.length === 5)
     rows.foreach { r =>
       assert(r.getLong(1) === r.getLong(0) - graft.operators.Dedup.PlantOffset,
@@ -637,8 +640,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streamed probes against the stored IVF index retrieve their " +
       "originals at rank 1 through the partition-pruned plan") {
-    val rows = graft.streaming.VectorStream
-      .runAnnIndexedOnce(spark, TestSpark.sf).collect()
+    val rows = StreamLeftovers(spark)(graft.streaming.VectorStream
+      .runAnnIndexedOnce(spark, TestSpark.sf)).collect()
     assert(rows.length === 5)
     rows.foreach { r =>
       assert(r.getLong(1) === r.getLong(0) - graft.operators.Dedup.PlantOffset,
@@ -646,13 +649,13 @@ class StreamingSpec extends AnyFunSuite {
           "through the indexed lane")
       assert(r.getBoolean(2), "the planted match must be flagged exact")
     }
-    // lifecycle reaps its scratch index + drop dirs, which live under
-    // the stream scratch base (not necessarily java.io.tmpdir)
+    // lifecycle reaps its scratch root (index, drop, warehouse and
+    // checkpoint beneath it), which lives under the stream scratch base
+    // (not necessarily java.io.tmpdir)
     val scratch = new java.io.File(
       graft.streaming.HourlyStream.scratchBase).listFiles()
     assert(scratch == null ||
-      !scratch.exists(f => f.getName.startsWith("graft_annidx_") ||
-        f.getName.startsWith("graft_probeidx_drop_")),
+      !scratch.exists(_.getName.startsWith("graft_annidx_")),
       "indexed stream lane must reap its scratch dirs")
   }
 
@@ -660,8 +663,8 @@ class StreamingSpec extends AnyFunSuite {
   // through VectorStream.runIvfCompactManifestOnce
   test("streamed IVF index maintenance: planted copies reach the stored " +
       "index only through micro-batch merges, probe equals rebuild") {
-    val rows = graft.SparkEntry.queries("stream_ivf_compact")(spark,
-      TestSpark.sf).collect()
+    val rows = StreamLeftovers(spark)(graft.SparkEntry
+      .queries("stream_ivf_compact")(spark, TestSpark.sf)).collect()
     assert(rows.length === 5)
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.getLong(0) === i.toLong)
@@ -737,8 +740,8 @@ class StreamingSpec extends AnyFunSuite {
       "its checkpoint batchId does not duplicate the keep set") {
     import spark.implicits._
     import graft.streaming.CorpusStream.upsertSurvivors
-    val wh = graft.streaming.HourlyStream
-      .scratchDir("graft_replay_wh_") + "/keep"
+    val root = graft.streaming.HourlyStream.scratchDir("graft_replay_wh_")
+    val wh = root + "/keep"
     // two committed micro-batches
     upsertSurvivors(Seq(1L, 2L, 3L).toDF("doc_id"), wh, batchId = 0L)
     upsertSurvivors(Seq(10L, 11L).toDF("doc_id"), wh, batchId = 1L)
@@ -759,17 +762,50 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(wh)
       .where(org.apache.spark.sql.functions.col("batch_id") === 1L)
       .count() === 2L)
+    graft.streaming.HourlyStream.reapScratch(root)
   }
 
   test("streamed PSI drift equals the batch quality_psi relation " +
       "bit-for-bit (band-count associativity across micro-batches)") {
-    val streamed = graft.streaming.CorpusStream
-      .runDriftOnce(spark, TestSpark.sf).collect()
+    val streamed = StreamLeftovers(spark)(graft.streaming.CorpusStream
+      .runDriftOnce(spark, TestSpark.sf)).collect()
     val batch = graft.operators.TextAnalysis
       .qualityPsi(spark, TestSpark.sf).collect()
     assert(streamed.length === batch.length)
     streamed.zip(batch).foreach { case (a, b) =>
       assert(a === b, s"stream row $a != batch row $b")
     }
+  }
+
+  test("run-once driver: a failing run surfaces its exception, stops its " +
+      "query and leaves no scratch root or memory-sink view behind") {
+    import graft.streaming.RunOnce
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.expr
+    def causes(e: Throwable): Seq[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(c => String.valueOf(c.getMessage)).toSeq
+    var roots = Seq.empty[String]
+    def failing(stream: RunOnce.Run => DataFrame => Unit): Throwable =
+      StreamLeftovers(spark)(intercept[Exception] {
+        RunOnce(spark, "graft_runonce_fail_") { run =>
+          roots :+= run.root
+          spark.range(3).write.parquet(run.drop)
+          stream(run)(spark.readStream.schema("id LONG").parquet(run.drop))
+          spark.emptyDataFrame
+        }
+      })
+    val viaBatch = failing(run => df => run.foreachBatch(df) { (_, _) =>
+      throw new IllegalStateException("planted batch failure")
+    })
+    assert(causes(viaBatch).exists(_.contains("planted batch failure")),
+      s"the foreachBatch exception must surface: $viaBatch")
+    val viaSink = failing(run => df => run.memory(
+      df.select(expr("raise_error('planted sink failure')")), "append"))
+    assert(causes(viaSink).exists(_.contains("planted sink failure")),
+      s"the memory-sink query's failure must surface: $viaSink")
+    assert(spark.streams.active.isEmpty, "a failed run must stop its query")
+    assert(roots.size == 2 && roots.forall(r => !new java.io.File(r).exists),
+      s"a failed run must reap its scratch root: $roots")
   }
 }
