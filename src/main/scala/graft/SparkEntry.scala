@@ -339,15 +339,15 @@ object SparkEntry {
     // plus per-query full-top-k equality with the driver-Seq lane
     "ann_lsh_batch" -> ((s: SparkSession, d: String) =>
       Similarity.annLshBatchPlanted(s, d)),
-    // stored LSH index lifecycle: band-keyed manifest postings + vectors,
-    // broadcast (band, bucket) probe join, equality with the in-memory
-    // lane
+    // stored LSH index lifecycle: append-only manifest postings +
+    // vectors, broadcast (band, bucket) probe join, equality with the
+    // in-memory lane
     "ann_lsh_indexed" -> ((s: SparkSession, d: String) =>
       Similarity.annLshIndexedPlanted(s, d)),
-    // incremental LSH index maintenance: arriving batch merged into the
-    // frozen-hyperplane band postings and the vectors table in one
-    // manifest commit; stored probes must equal the in-memory
-    // full-corpus lane (the same lane as ann_lsh_compact_mf)
+    // incremental LSH index maintenance: the arriving batch's
+    // frozen-hyperplane postings and vectors appended in one manifest
+    // commit; stored probes must equal the in-memory full-corpus lane
+    // (the same lane as ann_lsh_compact_mf)
     "ann_lsh_compact" -> ((s: SparkSession, d: String) =>
       Similarity.lshCompactManifestPlanted(s, d)),
     "ann_ivf_planted" -> ((s: SparkSession, d: String) =>
@@ -389,9 +389,9 @@ object SparkEntry {
       Similarity.ivfCompactManifestPlanted(s, d)),
     "ann_ivf_compact_mf" -> ((s: SparkSession, d: String) =>
       Similarity.ivfCompactManifestPlanted(s, d)),
-    // LSH maintenance over the MULTI-TABLE manifest store: touched
-    // posting partitions + the vectors append land in ONE atomic
-    // manifest commit — no redo log, no healing, no mixed state
+    // LSH maintenance over the MULTI-TABLE manifest store: the postings
+    // append + the vectors append land in ONE atomic manifest commit —
+    // no redo log, no healing, no mixed state
     "ann_lsh_compact_mf" -> ((s: SparkSession, d: String) =>
       Similarity.lshCompactManifestPlanted(s, d)),
     // metadata-filtered index probe: cell-entry pruning + the label

@@ -517,12 +517,7 @@ object Dedup {
     * inside a long one has Jaccard ≈ |A|/|B| (tiny) but containment 1.0.
     * Runs over LSH candidates like the Jaccard pipelines (the expensive
     * set ops touch candidate pairs only); keeps pairs where either
-    * direction clears `threshold`. */
-  def containmentPairs(s: SparkSession, dir: String,
-      threshold: Double = 0.8): DataFrame =
-    containmentPairsOn(t(s, dir, "documents"), threshold)
-
-  /** Same pipeline over an arbitrary (doc_id, text) frame. */
+    * direction clears `threshold`. Input: a (doc_id, text) frame. */
   def containmentPairsOn(docs: DataFrame, threshold: Double): DataFrame = {
     val cands = minhashCandidates(docs)
     val sh = docs.select(col("doc_id"),

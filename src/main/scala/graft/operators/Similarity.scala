@@ -18,9 +18,10 @@ import graft.functions.Num
   * scan — O(N·d) with a top-k TakeOrdered, no shuffle. The LSH variant
   * buckets vectors by an H-bit hyperplane signature; queries probe only
   * their own bucket (plus Hamming-1 neighbors at query time if recall
-  * demands); the stored index ([[buildLshIndex]]) keys its postings by
-  * band, so a probe's candidate join reads `bands` postings entries and
-  * only the candidates reach the exact-cosine rerank.
+  * demands); the stored index ([[buildLshIndex]]) keeps its postings in
+  * an append-only table, so a commit writes only the batch's postings,
+  * and a probe's candidate join passes only the candidates to the
+  * exact-cosine rerank.
   */
 object Similarity {
 
@@ -1265,18 +1266,6 @@ object Similarity {
     cur
   }
 
-  /** Library entry: SemDeDup with the corpus-adaptive cluster count,
-    * seeded by [[kmeansParCentroids]] (round 12 — previously the
-    * deterministic hash sample; the pipeline downstream is unchanged,
-    * and the planted closed forms are centroid-set-independent by
-    * construction, so every gate hash is too). */
-  def semDedupAdaptive(s: SparkSession, dir: String,
-      threshold: Double = 0.9): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    semDedupOnCentroidRelation(emb,
-      kmeansParCentroids(emb, semDedupAdaptiveK(emb)), threshold)
-  }
-
   /** `semdedup_adaptive` gate — the [[semDedupPlanted]] closed form
     * through the adaptive-k path: exact copies land in their
     * original's cluster under any centroid set and no natural pair
@@ -1290,16 +1279,6 @@ object Similarity {
     semDedupOnCentroidRelation(emb,
       kmeansParCentroids(emb, semDedupAdaptiveK(emb)), threshold = 0.99)
   }
-
-  /** H-bit random-hyperplane signature. Plane weights are deterministic
-    * pseudo-randoms (splitmix64 of (plane, dim) mapped to [-1, 1]) — no
-    * RNG state, reproducible on any cluster. Single-pass custom
-    * expression: the earlier HOF rendering paid one interpreted
-    * xxhash64 tree-eval per (plane, dim) element per row. */
-  def lshSignature(v: Column, planes: Int = 12, planeOffset: Int = 0): Column =
-    element_at(
-      graft.functions.SketchExpressions.hyperplaneBands(v, planes, 1, planeOffset),
-      1)
 
   /** Banded LSH ANN: every vector gets `bands` independent `planes`-bit
     * signatures (disjoint hyperplane sets); a vector is a candidate for a
@@ -1316,8 +1295,8 @@ object Similarity {
     * (q_id, vec_id) before the exact-cosine join pulls vectors. On
     * clustered real corpora buckets are dense exactly where neighbors
     * are, so the candidate fraction stays small; the stored index
-    * ([[buildLshIndex]]) keys the postings by band, so a probe's
-    * candidate join reads `bands` postings entries. */
+    * ([[buildLshIndex]]) holds the same postings in an append-only
+    * table. */
   def lshTopK(s: SparkSession, dir: String, queryIds: Seq[Long],
       k: Int = 10, planes: Int = 4, bands: Int = 8): DataFrame =
     lshTopKOn(t(s, dir, "embeddings"), queryIds, k, planes, bands)
@@ -1418,7 +1397,7 @@ object Similarity {
     * composed with a scratch lifecycle over the planted corpus: the
     * copies must probe back at rank 1 cosine ~1.0 THROUGH the stored
     * index, and the full top-k must equal the in-memory batch lane's
-    * ([[lshTopKBatchOn]]) row-for-row — a broken band key, posting
+    * ([[lshTopKBatchOn]]) row-for-row — a broken signature, posting
     * write, or entry selection erases rows and fails the hash. */
   def annLshIndexedPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10): DataFrame = {
@@ -1804,34 +1783,33 @@ object Similarity {
       .select(col(idCol), col("band").cast("int").as("band"),
         col("bucket").cast("int").as("bucket"))
 
-  /** Refuse a manifest LSH index whose postings table is not keyed by
-    * `band` — a store built with the earlier `(band, bucket)` key. Its
-    * band-keyed reads would match no entry and its upserts would not
-    * find their key column, so both fail here instead, by name. */
-  private def requireBandKeyed(s: SparkSession, rootPath: String): Long = {
+  /** Refuse a manifest LSH index whose postings table is keyed — a
+    * store built with an earlier layout (one partition per `band`, or
+    * per `(band, bucket)`). Its postings cannot take an append, so
+    * maintain and probe both fail here instead, by name. */
+  private def requireAppendOnlyPostings(s: SparkSession,
+      rootPath: String): Long = {
     val (v, key, _) = graft.store.ManifestStore.tableLayout(s, rootPath,
       "postings", None)
-    if (key != "band") throw new IllegalStateException(
-      s"LSH index at $rootPath keys its postings by '$key', not 'band' " +
-        "(the earlier one-partition-per-(band, bucket) layout) — " +
-        "rebuild the index with buildLshIndex")
+    if (key.nonEmpty) throw new IllegalStateException(
+      s"LSH index at $rootPath keys its postings by '$key' (an earlier " +
+        "layout; postings are now append-only) — rebuild the index " +
+        "with buildLshIndex")
     v
   }
 
   /** Build an LSH index at `rootPath`: the banded signature postings
     * (`vec_id, band, bucket` — pure ints and longs, a fraction of the
     * vectors' bytes) and the narrow vectors table for the exact rerank,
-    * as a two-table [[graft.store.ManifestStore]] — the postings table
-    * keyed by `band` (one partition per band, so a commit or probe
-    * touches at most `bands` leaf dirs however many buckets it hits;
-    * `bucket` rides as a data column and the probe's `(band, bucket)`
-    * join selects inside a band) plus the append-only vectors table,
-    * initialized in ONE atomic version-1 commit. */
+    * as a two-table [[graft.store.ManifestStore]] of append-only tables
+    * (`band` and `bucket` are data columns; the probe's `(band, bucket)`
+    * join selects the buckets), initialized in ONE atomic version-1
+    * commit. */
   def buildLshIndex(s: SparkSession, emb: DataFrame, rootPath: String,
       planes: Int = 4, bands: Int = 8): Unit = {
     import graft.store.ManifestStore
     ManifestStore.createTables(s, rootPath, Seq(
-      (ManifestStore.TableDef("postings", "band"),
+      (ManifestStore.TableDef("postings", ""),
         lshPostings(emb, "vec_id", "embedding", planes, bands)),
       (ManifestStore.TableDef("vectors", ""),
         emb.select(col("vec_id"), col("embedding")))))
@@ -1842,11 +1820,14 @@ object Similarity {
     * FROZEN (derived from the plane/band parameters, never trained —
     * re-parameterizing invalidates every stored posting and IS a
     * rebuild), each new vector lands in exactly `bands` postings, and
-    * per-batch work scales with `batch × bands`, never with index size.
-    * The touched band partitions AND the vectors append land in ONE
-    * atomic manifest commit: a reader sees postings-new with
-    * vectors-new or postings-old with vectors-old, never the mixed
-    * state.
+    * per-batch work scales with `batch × bands`, never with index size:
+    * the commit stages one postings segment holding only the batch's
+    * postings and one vectors segment, and rewrites no live segment.
+    * Both appends land in ONE atomic manifest commit: a reader sees
+    * postings-new with vectors-new or postings-old with vectors-old,
+    * never the mixed state. Segments accumulate one per commit in each
+    * table until a `CompactAppend` commit folds them, as for any
+    * append-only [[graft.store.ManifestStore]] table.
     *
     * `upsertById`: when true, arriving rows whose `vec_id` is already
     * in the vectors table are DROPPED before anything is staged — for
@@ -1857,21 +1838,22 @@ object Similarity {
     * vectors table's `vec_id` column, run INSIDE the commit's planning
     * closure — under the writer lease, so no concurrent writer can move
     * the store between the guard read and the publish. An empty
-    * effective batch commits nothing.
+    * effective batch (a batch has no postings exactly when it has no
+    * rows) stages no op, so it runs no write job and commits nothing.
     *
     * Returns the touched (band, bucket) pairs (bounded metadata: the
     * distinct signatures of the fresh postings, at most batch × bands
     * rows). Fails with an IllegalStateException on an index whose
-    * postings are not band-keyed ([[requireBandKeyed]]). */
+    * postings table is keyed ([[requireAppendOnlyPostings]]). */
   def maintainLshIndex(s: SparkSession, rootPath: String,
       arriving: DataFrame, planes: Int = 4, bands: Int = 8,
       upsertById: Boolean = false): Seq[(Int, Int)] = {
     import graft.store.ManifestStore
-    requireBandKeyed(s, rootPath)
+    requireAppendOnlyPostings(s, rootPath)
     var pairs = Seq.empty[(Int, Int)]
-    // the guarded batch feeds four consumers (the pairs collect, the
-    // upsert's key collect, the postings write, the vectors append):
-    // persisted for the commit, so its anti-join runs once
+    // the guarded batch feeds three consumers (the pairs collect and
+    // the two appends): persisted for the commit, so its anti-join runs
+    // once
     var guarded: DataFrame = null
     try {
       ManifestStore.commitTables(s, rootPath) {
@@ -1886,8 +1868,9 @@ object Similarity {
           bands)
         pairs = newPostings.select("band", "bucket").distinct().collect()
           .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-        Seq(
-          ManifestStore.Upsert("postings", newPostings),
+        if (pairs.isEmpty) Nil
+        else Seq(
+          ManifestStore.Append("postings", newPostings),
           ManifestStore.Append("vectors",
             fresh.select(col("vec_id"), col("embedding"))))
       }
@@ -1898,21 +1881,21 @@ object Similarity {
   /** Query-relation probe of a [[buildLshIndex]] index: the probe
     * signatures are computed by the SAME distributed expression as the
     * build (bit-identical buckets) and broadcast-joined on
-    * `(band, bucket)` against the band-keyed postings. Every query
-    * hashes into every band, so the scan covers the table's `bands`
-    * entries and needs no key collect; the join keeps only the probed
-    * buckets. Candidates dedup before any vector byte is read; the
+    * `(band, bucket)` against the append-only postings. Every query
+    * hashes into every band, so the scan covers every postings segment
+    * and needs no key collect; the join keeps only the probed buckets.
+    * Candidates dedup before any vector byte is read; the
     * exact-cosine rerank hydrates from the vectors table of the SAME
     * manifest version by `vec_id` join. Row semantics are exactly
     * [[lshTopKBatchOn]]'s over the same corpus. Past broadcast capacity
     * pass `broadcastProbes = false` and both joins run as shuffles
     * ([[probeHint]]). Fails with an IllegalStateException on an index
-    * whose postings are not band-keyed ([[requireBandKeyed]]). */
+    * whose postings table is keyed ([[requireAppendOnlyPostings]]). */
   def probeLshIndex(s: SparkSession, rootPath: String,
       queries: DataFrame, k: Int = 10, planes: Int = 4,
       bands: Int = 8, broadcastProbes: Boolean = true): DataFrame = {
     import graft.store.ManifestStore
-    val v = Some(requireBandKeyed(s, rootPath))
+    val v = Some(requireAppendOnlyPostings(s, rootPath))
     val qsig = lshPostings(queries, "q_id", "q_emb", planes, bands)
     val cands = ManifestStore.readTable(s, rootPath, "postings", version = v)
       .join(probeHint(qsig, broadcastProbes), Seq("band", "bucket"))
@@ -1934,8 +1917,8 @@ object Similarity {
   /** `ann_lsh_compact` / `ann_lsh_compact_mf` gate — the LSH index
     * maintenance lifecycle: base index built from the historical corpus
     * (vec_id % 10 != 3), an arriving batch (the % 10 == 3 slice PLUS
-    * planted exact copies of the `n` probe queries) merged through ONE
-    * atomic postings+vectors commit, probed through the band-keyed
+    * planted exact copies of the `n` probe queries) appended through ONE
+    * atomic postings+vectors commit, probed through the append-only
     * postings. Reference: the in-memory batch lane over the full
     * corpus — identical frozen hyperplanes ⇒ identical signatures ⇒ a
     * rebuild holds exactly these postings. Closed form: the planted

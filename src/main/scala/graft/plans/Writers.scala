@@ -28,23 +28,4 @@ object Writers {
   def byKeys(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
       keys: _*)
-
-  /** [[byKeys]] with a KNOWN distinct-key bound: at most `nKeys`
-    * writer tasks — on a small staged batch the empty tasks of a
-    * full-parallelism exchange are pure scheduling + task-commit
-    * overhead (measured: a 5-dir staged upsert at 32 writer tasks cost
-    * ~0.2 s/commit over key-bounded). Still capped at the session's
-    * shuffle parallelism so a wide layout spreads across the cluster.
-    *
-    * This bounds the task count; it does not guarantee one task PER
-    * dir: hash-partitioning `nKeys` distinct keys into `nKeys` buckets
-    * leaves birthday collisions (~1/e of buckets empty at the limit),
-    * so a tail task can write a few dirs sequentially. Layout and file
-    * count are unaffected (each key still lands wholly in one task);
-    * the residual serialization is bounded by the collision factor,
-    * which measured smaller than the empty-task overhead it removes. */
-  def byKeysN(df: DataFrame, nKeys: Int, keys: Column*): DataFrame = {
-    val cap = df.sparkSession.sessionState.conf.numShufflePartitions
-    df.repartition(math.min(math.max(nKeys, 1), cap), keys: _*)
-  }
 }

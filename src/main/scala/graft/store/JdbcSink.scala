@@ -1,6 +1,6 @@
 package graft.store
 
-import java.sql.{Connection, DriverManager}
+import java.sql.Connection
 
 import org.apache.spark.sql.DataFrame
 
@@ -210,16 +210,5 @@ object JdbcSink {
         c.close()
       }
     }
-  }
-
-  /** Env-var connection factory, mirroring `pg.py:5-14`. */
-  def envConnection(): Connection = {
-    val host = sys.env.getOrElse("POSTGRES_HOST", "localhost")
-    val port = sys.env.getOrElse("POSTGRES_PORT", "5432")
-    val db = sys.env.getOrElse("POSTGRES_DB", "warehouse")
-    val user = sys.env.getOrElse("POSTGRES_USER", "postgres")
-    val pass = sys.env.getOrElse("POSTGRES_PASSWORD", "")
-    DriverManager.getConnection(
-      s"jdbc:postgresql://$host:$port/$db", user, pass)
   }
 }

@@ -24,8 +24,8 @@ import graft.sources.{ManifestFileIndex, ManifestReadOnlyParquetFormat}
   * A manifest file IS a store version: the authoritative list of
   * (table, partition key → segment leaf directory) making up that
   * snapshot. A store holds one or more named TABLES — e.g. the LSH
-  * index's `band`-keyed postings table and its append-only vectors
-  * table — and one commit covers ALL of them atomically:
+  * index's append-only postings and vectors tables — and one commit
+  * covers ALL of them atomically:
   * writers stage new immutable segments (only the touched partitions'
   * merged rows, plus any append segments), then publish manifest
   * N+1 = untouched entries of N ++ the new entries, across every
@@ -62,9 +62,10 @@ import graft.sources.{ManifestFileIndex, ManifestReadOnlyParquetFormat}
   * Partitioned tables are keyed by ONE key column (`TableDef.partCol`);
   * a composite key is a caller-synthesized rendering (e.g.
   * `concat(a, '_', b)`). Keep keys coarse: every touched key is one
-  * leaf dir to list, read back and rewrite per commit, so the LSH
-  * postings table is keyed by `band` alone (8 partitions) and its
-  * probes select buckets inside a band by join. The key column is
+  * leaf dir to list, read back and rewrite per commit. A table whose
+  * every commit would touch every key (the LSH postings: each vector
+  * posts once per band) is better append-only, so a commit writes
+  * only its own rows. The key column is
   * duplicated into the data files (a hive layout column `<key>__p`
   * carries the directory), so every op can read a partition back and
   * merge it, and every read returns the key as a data column.

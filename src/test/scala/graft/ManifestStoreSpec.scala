@@ -26,12 +26,11 @@ import graft.store.ManifestStore
   * Plus the shared maintenance contracts: upsert == rebuild,
   * upsertById re-delivery idempotence, empty-batch no-op, crashed
   * writer's lease stolen by the next writer, vacuum retention. */
-class ManifestStoreSpec extends AnyFunSuite {
+class ManifestStoreSpec extends AnyFunSuite with SuiteTempDirs {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/store"
+  private def tempDir(tag: String): String = suiteTempDir(tag) + "/store"
 
   /** Small typed fixture: (id, part, payload). Deterministic. */
   private def rows(ids: Range, tag: String): DataFrame = {
@@ -612,27 +611,81 @@ class ManifestStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("LSH postings are keyed by band: 8 entries, a commit replaces " +
-      "each once, and returns the batch's (band, bucket) signatures") {
+  test("LSH postings are append-only: a commit adds one postings entry " +
+      "holding only the batch's postings and one vectors entry, carries " +
+      "every earlier entry over, and returns the batch's (band, bucket) " +
+      "signatures") {
     import graft.operators.Similarity
     val emb = Tables.load(spark, sf, "embeddings")
     val isBatch = col("vec_id") % 10 === 3
-    val root = tempDir("mf-lsh-bands")
+    val root = tempDir("mf-lsh-append")
     Similarity.buildLshIndex(spark, emb.filter(!isBatch), root)
-    val built = ManifestStore.tableEntries(spark, root, "postings")
-    assert(built.map(_.part).sorted === (0 until 8).map(_.toString))
+    def dirs(table: String) =
+      ManifestStore.tableEntries(spark, root, table).map(_.dir)
+    val built = Seq("postings", "vectors").map(t => t -> dirs(t)).toMap
+    assert(built("postings").size === 1)
     val pairs = Similarity.maintainLshIndex(spark, root, emb.filter(isBatch))
-    val after = ManifestStore.tableEntries(spark, root, "postings")
-    assert(after.map(_.part).sorted === (0 until 8).map(_.toString))
-    // every band partition was rewritten by the commit, none carried over
-    assert(after.map(_.dir).toSet.intersect(built.map(_.dir).toSet).isEmpty)
+    // per table: every earlier entry carried over by the same dir, plus
+    // exactly one new entry
+    val added = Seq("postings", "vectors").map { t =>
+      val after = dirs(t)
+      assert(built(t).toSet.subsetOf(after.toSet), t)
+      assert(after.size === built(t).size + 1, t)
+      t -> after.filterNot(built(t).contains).head
+    }.toMap
+    // the new postings entry holds the batch's postings and nothing
+    // else: batch × bands rows, the commit's whole postings write
     val batchIds = emb.filter(isBatch).select("vec_id")
+    val batch = batchIds.collect().map(_.getLong(0)).toSet
+    val newPostings = spark.read.parquet(s"$root/${added("postings")}")
+      .select("vec_id").collect().map(_.getLong(0))
+    assert(newPostings.length === batch.size * 8)
+    assert(newPostings.toSet === batch)
     val expected = ManifestStore.readTable(spark, root, "postings")
       .join(batchIds, Seq("vec_id"))
       .select("band", "bucket").distinct().collect()
       .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
     assert(pairs.nonEmpty)
     assert(pairs === expected)
+  }
+
+  test("maintainLshIndex job budget: a batch commits in at most 6 jobs, " +
+      "a re-delivered one runs only its pairs collect, and a probe frame " +
+      "builds with none") {
+    import graft.operators.Similarity
+    val emb = Tables.load(spark, sf, "embeddings")
+    val isBatch = col("vec_id") % 10 === 3
+    val root = tempDir("mf-lsh-budget")
+    Similarity.buildLshIndex(spark, emb.filter(!isBatch), root)
+    // each SQL action runs as one execution: the pairs collect is one,
+    // and each append's write is one more
+    def executions(jobs: Seq[java.util.Properties]) =
+      jobs.map(_.getProperty("spark.sql.execution.id")).distinct
+    val (pairs, jobs) = JobWatch.during(spark, "lsh-maintain-budget") {
+      Similarity.maintainLshIndex(spark, root, emb.filter(isBatch),
+        upsertById = true)
+    }
+    assert(pairs.nonEmpty)
+    assert(jobs.size <= 6, s"the commit submitted ${jobs.size} jobs")
+    assert(executions(jobs).size === 3,
+      "one pairs collect and two append writes, nothing else")
+    val (again, replayJobs) = JobWatch.during(spark, "lsh-replay-budget") {
+      Similarity.maintainLshIndex(spark, root, emb.filter(isBatch),
+        upsertById = true)
+    }
+    assert(again.isEmpty)
+    assert(ManifestStore.currentVersion(spark, root) === Some(2L))
+    assert(replayJobs.nonEmpty && executions(replayJobs).size === 1,
+      s"a re-delivered batch must run its pairs collect and no write: " +
+        s"${replayJobs.size} jobs in ${executions(replayJobs).size} actions")
+    val queries = emb.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val (probe, probeJobs) = JobWatch.during(spark, "lsh-probe-frame") {
+      Similarity.probeLshIndex(spark, root, queries)
+    }
+    assert(probeJobs.isEmpty,
+      s"building the probe frame submitted ${probeJobs.size} jobs")
+    assert(probe.collect().nonEmpty)
   }
 
   test("an LSH index with the earlier (band, bucket)-keyed postings " +
@@ -652,6 +705,22 @@ class ManifestStoreSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("rebuild"))
     assert(ManifestStore.currentVersion(spark, root) === Some(1L))
+    // the band-keyed postings layout is refused the same way
+    val banded = tempDir("mf-lsh-band-layout")
+    ManifestStore.createTables(spark, banded, Seq(
+      (ManifestStore.TableDef("postings", "band"),
+        Seq((1L, 0, 0), (1L, 1, 1)).toDF("vec_id", "band", "bucket")),
+      (ManifestStore.TableDef("vectors", ""),
+        Seq((1L, Seq.fill(4)(1f))).toDF("vec_id", "embedding"))))
+    val e4 = intercept[IllegalStateException] {
+      Similarity.probeLshIndex(spark, banded, queries)
+    }
+    assert(e4.getMessage.contains("rebuild"), e4.getMessage)
+    val e5 = intercept[IllegalStateException] {
+      Similarity.maintainLshIndex(spark, banded, arriving)
+    }
+    assert(e5.getMessage.contains("rebuild"), e5.getMessage)
+    assert(ManifestStore.currentVersion(spark, banded) === Some(1L))
     // a store whose manifest predates format v4 (no recorded files or
     // schemas) is refused with a rebuild message too
     val old = tempDir("mf-v3")

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 
 /** Similarity-search invariants: exact top-k, LSH bucket consistency. */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with SuiteTempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -102,7 +102,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("identical vectors share an LSH bucket and rank first (cos 1.0)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sim_").toString
+    val dir = suiteTempDir("graft_sim_")
     val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
     // plant vec 9999 = copy of vec 0
     val dup = emb.filter($"vec_id" === 0L)
@@ -130,7 +130,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("near-dup pairs: planted duplicate detected at cos >= 0.9") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sim_").toString
+    val dir = suiteTempDir("graft_sim_")
     val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
     val dup = emb.filter($"vec_id" === 7L)
       .withColumn("vec_id", org.apache.spark.sql.functions.lit(8888L))
@@ -140,7 +140,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF: planted duplicate shares the query's cell and ranks first") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
+    val dir = suiteTempDir("graft_ivf_")
     val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
     // an identical vector gets identical centroid similarities -> same cell
     val dup = emb.filter($"vec_id" === 3L)
@@ -182,7 +182,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("recall of a planted identical vector is perfect for both ANN paths") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rec_").toString
+    val dir = suiteTempDir("graft_rec_")
     val emb = graft.Tables.load(spark, TestSpark.sf, "embeddings")
     val dup = emb.filter($"vec_id" === 5L)
       .withColumn("vec_id", org.apache.spark.sql.functions.lit(6666L))
@@ -411,11 +411,12 @@ class SimilaritySpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("materialized LSH index: the probe reads the 8 band entries and " +
+  test("materialized LSH index: the probe reads every postings entry and " +
       "equals the in-memory batch lane") {
-    // one postings entry per band, however many buckets it holds
-    val bands = entryPaths(lshRoot, "postings")
-    assert(bands.size === 8, s"expected 8 band entries, got $bands")
+    // the append-only postings: a build writes one segment, and each
+    // commit would add one more
+    val segments = entryPaths(lshRoot, "postings")
+    assert(segments.size === 1, s"expected 1 postings entry, got $segments")
     val qDf = queriesBelow(3)
     val probe = Similarity.probeLshIndex(spark, lshRoot, qDf, k = 10)
     val rowsStored = probe.collect().toSeq
@@ -425,11 +426,11 @@ class SimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(rowsStored === rowsMem,
       "stored-index probe must equal the in-memory lane row-for-row")
-    // every query hashes into every band, so all 8 entries are read;
-    // the (band, bucket) join keeps only the probed buckets
+    // every query hashes into every band, so every postings entry is
+    // read; the (band, bucket) join keeps only the probed buckets
     val read = dirsRead(probe)
-    assert(bands.subsetOf(read),
-      s"expected all band entries among the scanned dirs: $read")
+    assert(segments.subsetOf(read),
+      s"expected every postings entry among the scanned dirs: $read")
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"expected a broadcast probe join in:\n${plan.take(1500)}")
@@ -520,8 +521,7 @@ class SimilaritySpec extends AnyFunSuite {
     graft.store.ManifestStore.tableEntries(spark, root, table)
       .map(e => e.part -> e.dir).toMap
 
-  private def storeRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/store"
+  private def storeRoot(tag: String): String = suiteTempDir(tag) + "/store"
 
   test("maintainIvfIndex rewrites only the touched cells and merges old " +
       "with new") {
